@@ -86,7 +86,12 @@ object GraftSession {
       // atomic; object-store deployments override at submit.
       .config("spark.sql.streaming.checkpointFileManagerClass",
         "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
+      // per-process warehouse: two JVMs on one machine (two test runs, a
+      // bench beside tests) must never share the managed `events` table's
+      // files. Static conf: it only takes effect when this call creates
+      // the session, so a new in-memory catalog always starts with an
+      // empty warehouse and the `events` CTAS never meets leftover files
+      .config("spark.sql.warehouse.dir", scratchDir("graft-warehouse-"))
       // reliable-checkpoint files (dedup pair materialization, CC rounds)
       // are written per call; without this they live until the app dies —
       // with it, the ContextCleaner removes a checkpoint's files once its
@@ -107,45 +112,53 @@ object GraftSession {
         s"${spark.conf.get("spark.sql.codegen.cache.maxEntries")} (expected 2000) — " +
         "another session was built first in this JVM; suite-scale re-runs will " +
         "re-pay whole-stage-codegen compile+JIT")
-    // a reliable checkpoint location makes Dedup.connectedComponents /
-    // dedupCorpus default to fault-tolerant lineage truncation (an executor
-    // loss under localCheckpoint kills an iterative job on a real cluster).
-    // Honor an externally-set dir (spark.graft.checkpoint.dir, or a dir a
-    // caller already set); otherwise a per-app temp dir — on a cluster this
-    // conf would point at DFS
+    // a reliable checkpoint location makes eagerPin (and with it every
+    // pair pin and connected-components round) fault-tolerant lineage
+    // truncation (an executor loss under localCheckpoint kills an
+    // iterative job on a real cluster). Honor an externally-set dir
+    // (spark.graft.checkpoint.dir, or a dir a caller already set — the
+    // caller's to manage); otherwise a per-app scratch dir — on a cluster
+    // this conf would point at DFS. The cleaner conf above bounds it
+    // DURING the session; the scratch dir's exit hook stops repeated
+    // sessions littering /tmp.
     if (spark.sparkContext.getCheckpointDir.isEmpty) {
-      val external = spark.conf.getOption("spark.graft.checkpoint.dir")
-      val dir = external.getOrElse {
-        val tmp = java.nio.file.Files.createTempDirectory("graft-ckpt-")
-        // WE created this scratch dir, so we also remove it at JVM exit
-        // (the cleaner conf above bounds it DURING the session; this stops
-        // repeated sessions littering /tmp). An externally-configured dir
-        // is the caller's to manage.
-        Runtime.getRuntime.addShutdownHook(new Thread(() =>
-          try {
-            java.nio.file.Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
-              .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-          } catch { case _: Exception => () }))
-        tmp.toString
-      }
-      spark.sparkContext.setCheckpointDir(dir)
+      spark.sparkContext.setCheckpointDir(spark.conf.getOption("spark.graft.checkpoint.dir")
+        .getOrElse(scratchDir("graft-ckpt-")))
     }
     spark
   }
 
+  /** A fresh temp dir of this JVM's, removed with its contents at exit. */
+  private def scratchDir(prefix: String): String = {
+    val tmp = java.nio.file.Files.createTempDirectory(prefix)
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      try {
+        java.nio.file.Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
+          .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
+      } catch { case _: Exception => () }))
+    tmp.toString
+  }
+
   /** Eagerly pin a (small) frame: reliable checkpoint when the session has
-    * a checkpoint dir, localCheckpoint otherwise — the shared idiom the
-    * multi-consumer entries use so an expensive subtree executes once.
+    * a checkpoint dir, localCheckpoint otherwise — the one pin every
+    * multi-consumer entry, every gated/eager pair set
+    * ([[graft.operators.CandidateGate]]) and every connected-components /
+    * PageRank round uses, so an expensive subtree executes once and the
+    * operator's internal caches can be released before it returns
+    * (disk-backed persisted blocks are not LRU-evicted, so a lazy return
+    * would leak one cached frame per call across a long session).
     *
     * `df.checkpoint(true)` executes the plan twice (eager count + the
     * checkpoint-write job's recompute). Round 20 tried persisting first so
-    * the write job reads cached blocks, and measurement reverted it: a
-    * persisted plan executes WITHOUT AQE (cached-plan output partitioning
-    * is pinned), so the pinned subtree lost its runtime broadcasts and
-    * partition coalescing and the columnar cache build added CPU — in-sweep
-    * task time went up 3-15× across the pin consumers (see
-    * Dedup.eagerReliableCheckpoint for the measured numbers). The double
-    * compute is the cheaper side of that trade at every site measured.
+    * the write job reads cached blocks, and MEASUREMENT REVERTED IT: a
+    * persisted plan is executed without AQE
+    * (`spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` defaults
+    * false), so every round's join lost its runtime broadcast / coalescing
+    * and the columnar cache build added CPU — the CC/PageRank family's
+    * in-sweep task time went UP 4-15× (d31 3.5k → 60.8k ms, d05-family
+    * similar; reverting restored d31 to 4.1k same-session). The double
+    * compute is the cheaper side of that trade at every site measured; do
+    * not "fix" it back without per-family sweep-context numbers.
     */
   def eagerPin(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
@@ -461,14 +474,6 @@ object GraftSession {
     if (existsInCatalog("events") && !eventsCatalogFresh(spark, dir))
       spark.sql("DROP TABLE default.events")
     if (!existsInCatalog("events")) {
-      // the in-memory catalog forgets tables at session end but the
-      // warehouse directory survives, and CTAS refuses a non-empty managed
-      // location (LOCATION_ALREADY_EXISTS) — remove the previous session's
-      // leftover files first
-      val leftover = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), "events")
-      val fs = leftover.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(leftover)) fs.delete(leftover, true)
       table(spark, dir, "events").write.saveAsTable("default.events")
       spark.sql(s"ALTER TABLE default.events SET TBLPROPERTIES ('$eventsSrcProp' = '$dir')")
       // after the CTAS `ts` is a µs TIMESTAMP (stats kept — event queries

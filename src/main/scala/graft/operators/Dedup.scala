@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.engine.GraftSession.eagerPin
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -289,34 +290,6 @@ object Dedup {
         sum(expr("__n * (__n - 1) DIV 2")).as("n_candidate_pairs"))
   }
 
-  /** Materialize the (small) pair result eagerly so the operator's internal
-    * signature caches can be released before returning — disk-backed
-    * persisted blocks are not LRU-evicted, so a lazy return would leak one
-    * cached signature frame per call across a long-running session. The
-    * checkpoint is reliable (DFS) when the session has a checkpoint dir,
-    * local otherwise — the same rule as [[connectedComponents]].
-    */
-  private[operators] def eagerPairs(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      eagerReliableCheckpoint(df)
-    else df.localCheckpoint(true)
-
-  /** Eager RELIABLE checkpoint. `df.checkpoint(true)` executes the plan
-    * twice (the eager count, then the checkpoint-write job's recompute) —
-    * round 20 tried a persist-before-checkpoint variant so the write job
-    * reads cached blocks, and MEASUREMENT REVERTED IT: a persisted plan is
-    * executed without AQE (`spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`
-    * defaults false), so every round's join lost its runtime broadcast /
-    * coalescing and the columnar cache build added CPU — the CC/PageRank
-    * family's in-sweep task time went UP 4-15× (d31 3.5k → 60.8k ms,
-    * d05-family similar; reverting restored d31 to 4.1k same-session).
-    * The double compute of a checkpoint-truncated round frame is the
-    * cheaper side of that trade at every site measured; do not "fix" it
-    * back without per-family sweep-context numbers.
-    */
-  private[operators] def eagerReliableCheckpoint(df: DataFrame): DataFrame =
-    df.checkpoint(true)
-
   /** Near-duplicate pairs via MinHash + LSH banding.
     *
     * EAGER: the pair set is computed and checkpointed before this returns
@@ -363,7 +336,7 @@ object Dedup {
         .filter(col("doc_a") < col("doc_b"))
         .select(col("doc_a"), col("doc_b"))
         .distinct()
-      eagerPairs(cands
+      eagerPin(cands
         .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), "doc_a")
         .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), "doc_b")
         .select(col("doc_a"), col("doc_b"),
@@ -516,7 +489,7 @@ object Dedup {
       val cands = tB.join(eB, Seq("band", "bucket"))
         .select(col("train_id"), col("eval_id"))
         .distinct()
-      eagerPairs(cands
+      eagerPin(cands
         .join(tSigs, "train_id")
         .join(eSigs, "eval_id")
         .select(col("train_id"), col("eval_id"),
@@ -744,7 +717,7 @@ object Dedup {
           (count(lit(1)) + lit(n - 1)).as("span_tokens"))
         .filter(col("span_tokens") >= minSpanTokens)
         .select(col("doc_a"), col("doc_b"), col("start_a"), col("start_b"), col("span_tokens"))
-      eagerPairs(spans)
+      eagerPin(spans)
     } finally positional.unpersist(false)
   }
 
@@ -858,31 +831,30 @@ object Dedup {
     *
     * @return (doc_a, doc_b, hamming) with doc_a < doc_b
     */
-  /** The hamming engine casts `sigCol` to long; a fractional type would
+  def hammingNearDuplicates(sigs: DataFrame, idCol: String, sigCol: String,
+      maxHamming: Int = 3, blockBits: Int = 16): DataFrame =
+    simhashPairs(simhashFrame(sigs, idCol, sigCol, blockBits), blockBits, maxHamming)
+
+  /** The validated (doc_id, simhash) projection every hamming entry point
+    * reads. The engine casts `sigCol` to long; a fractional type would
     * TRUNCATE instead of erroring and the bound + gated join would run
     * over corrupted signatures without any loud failure (round-20
     * advisor find) — require an integral input, the family's
     * fail-loudly discipline.
     */
-  private def requireIntegralSig(sigs: DataFrame, sigCol: String): Unit = {
+  private def simhashFrame(sigs: DataFrame, idCol: String, sigCol: String,
+      blockBits: Int): DataFrame = {
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    require(blockBits >= 1 && blockBits <= 16,
+      s"blockBits must be in [1, 16] (4 blocks cover <= 64 bits), got $blockBits")
     val dt = sigs.schema(sigCol).dataType
     require(Set[org.apache.spark.sql.types.DataType](
         ByteType, ShortType, IntegerType, LongType)(dt),
       s"hamming signature column '$sigCol' must be an integral type " +
         s"(byte/short/int/long), got ${dt.simpleString} — a fractional cast " +
         "would silently truncate the signature bits")
-  }
-
-  def hammingNearDuplicates(sigs: DataFrame, idCol: String, sigCol: String,
-      maxHamming: Int = 3, blockBits: Int = 16): DataFrame = {
-    require(blockBits >= 1 && blockBits <= 16,
-      s"blockBits must be in [1, 16] (4 blocks cover <= 64 bits), got $blockBits")
-    requireIntegralSig(sigs, sigCol)
-    simhashPairs(
-      sigs.filter(col(s"`$idCol`").isNotNull && col(s"`$sigCol`").isNotNull)
-        .select(col(s"`$idCol`").as("doc_id"), col(s"`$sigCol`").cast("long").as("simhash")),
-      blockBits, maxHamming)
+    sigs.filter(col(s"`$idCol`").isNotNull && col(s"`$sigCol`").isNotNull)
+      .select(col(s"`$idCol`").as("doc_id"), col(s"`$sigCol`").cast("long").as("simhash"))
   }
 
   /** EXACT per-block upper bound on [[hammingNearDuplicates]]' pigeonhole
@@ -900,15 +872,9 @@ object Dedup {
     *         pigeonhole block (always ≤ 4 rows)
     */
   def hammingCandidateBound(sigs: DataFrame, idCol: String, sigCol: String,
-      blockBits: Int = 16): DataFrame = {
-    require(blockBits >= 1 && blockBits <= 16,
-      s"blockBits must be in [1, 16] (4 blocks cover <= 64 bits), got $blockBits")
-    requireIntegralSig(sigs, sigCol)
+      blockBits: Int = 16): DataFrame =
     hammingCandidateBoundFrom(simhashBlocks(
-      sigs.filter(col(s"`$idCol`").isNotNull && col(s"`$sigCol`").isNotNull)
-        .select(col(s"`$idCol`").as("doc_id"), col(s"`$sigCol`").cast("long").as("simhash")),
-      blockBits))
-  }
+      simhashFrame(sigs, idCol, sigCol, blockBits), blockBits))
 
   /** [[hammingCandidateBound]] over a pre-built banded frame — the split
     * that lets the budget gates read their own persisted projection
@@ -923,20 +889,12 @@ object Dedup {
         count(lit(1)).as("n_buckets"))
 
   /** Budget-gated [[hammingNearDuplicates]] — the d40 contract on the
-    * hamming engine: the EXACT pre-verify candidate bound
-    * ([[hammingCandidateBound]]) is evaluated first (one aggregate, ~free
-    * next to the join), and the operator refuses to walk into a
-    * band-skew cliff instead of discovering it as a multi-hour stage.
-    * Within budget the result is BIT-IDENTICAL to the ungated operator
-    * (same banded join, same verify). Over budget, `onExceed`:
-    *  - `"fail"` (default): throw `IllegalStateException` naming the
-    *    bound, the budget, and the worst (block, bucket) skew;
-    *  - `"guard"`: return the 1-row guard frame
-    *    (candidate_pairs, max_bucket_n, budget) — the decision as data,
-    *    schema intentionally distinct from the pairs schema.
-    * (No third fallback branch: unlike PPJoin→MinHash there is no
-    * cheaper estimator with the same contract under a ≤64-bit exact
-    * hamming radius — the honest answers are re-key or don't run.)
+    * hamming engine through [[CandidateGate]] (which documents the
+    * fail/guard branches): the bound is [[hammingCandidateBound]]'s, over
+    * the persisted projected signatures both self-join sides read. (No
+    * fallback branch: unlike PPJoin→MinHash there is no cheaper
+    * estimator with the same contract under a ≤64-bit exact hamming
+    * radius — the honest answers are re-key or don't run.)
     *
     * @param maxCandidates total pre-verify pair budget summed across the
     *        4 blocks; `Long.MaxValue` skips the bound job entirely
@@ -944,49 +902,17 @@ object Dedup {
   def hammingNearDuplicatesBudgeted(sigs: DataFrame, idCol: String, sigCol: String,
       maxHamming: Int = 3, blockBits: Int = 16, maxCandidates: Long = Long.MaxValue,
       onExceed: String = "fail"): DataFrame = {
-    require(Set("fail", "guard")(onExceed),
-      s"onExceed must be fail|guard, got $onExceed")
-    requireIntegralSig(sigs, sigCol)
-    if (maxCandidates == Long.MaxValue)
-      return hammingNearDuplicates(sigs, idCol, sigCol, maxHamming, blockBits)
-    // the d40 persist discipline (round-19 review find): the projected
-    // signature frame feeds the bound read AND (within budget) both
-    // self-join sides — uncached, each consumer would re-derive the
-    // caller's signature expression (often a tokenize+hash pipeline)
-    // from scratch, three scans per call. Pairs materialize eagerly so
-    // the cache is released before returning.
-    val sh = sigs.filter(col(s"`$idCol`").isNotNull && col(s"`$sigCol`").isNotNull)
-      .select(col(s"`$idCol`").as("doc_id"), col(s"`$sigCol`").cast("long").as("simhash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try hammingGated(sh, maxHamming, blockBits, maxCandidates, onExceed,
-      sigs.sparkSession)
-    finally sh.unpersist(false)
-  }
-
-  private def hammingGated(sh: DataFrame, maxHamming: Int, blockBits: Int,
-      maxCandidates: Long, onExceed: String,
-      spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    // one row per pigeonhole block (<= 4) — driver read is constant-size
-    val rows = hammingCandidateBoundFrom(simhashBlocks(sh, blockBits))
-      .select(col("blk"), col("candidate_pairs"), col("max_bucket_n")).collect()
-    val total = rows.map(_.getLong(1)).sum
-    if (total <= maxCandidates)
-      eagerPairs(simhashPairs(sh, blockBits, maxHamming))
-    else {
-      val worst = rows.maxBy(_.getLong(1))
-      onExceed match {
-        case "fail" => throw new IllegalStateException(
-          s"hamming candidate bound $total exceeds budget $maxCandidates " +
-            s"(worst block ${worst.getInt(0)}: ${worst.getLong(1)} pairs, " +
-            s"max bucket ${worst.getLong(2)} signatures); the signatures are " +
-            "band-skewed — use a wider/better hash, pre-dedup constant payloads, " +
-            "or route the decision as data (onExceed=\"guard\")")
-        case "guard" =>
-          import spark.implicits._
-          Seq((total, rows.map(_.getLong(2)).max, maxCandidates))
-            .toDF("candidate_pairs", "max_bucket_n", "budget")
-      }
-    }
+    // the signature frame is the caller's expression (often a
+    // tokenize+hash pipeline): uncached, the bound read and both join
+    // sides would each re-derive it
+    val sh = simhashFrame(sigs, idCol, sigCol, blockBits)
+    CandidateGate("hamming", maxCandidates, onExceed, Seq(sh), "max_bucket_n",
+      w => s"worst block ${w.getInt(0)}: ${w.getLong(1)} pairs, " +
+        s"max bucket ${w.getLong(2)} signatures",
+      "the signatures are band-skewed — use a wider/better hash, pre-dedup " +
+        "constant payloads, or route the decision as data (onExceed=\"guard\")")(
+      bound = hammingCandidateBoundFrom(simhashBlocks(sh, blockBits)),
+      pairs = simhashPairs(sh, blockBits, maxHamming))
   }
 
   /** Survivor selection with a QUALITY policy: near-dup connected
@@ -1122,28 +1048,17 @@ object Dedup {
     * @return (id, component) with component = min doc id in the cluster;
     *         only vertices that appear in `pairs`.
     */
-  /** @param reliableCheckpoint truncate lineage via `df.checkpoint` to the
-    *        session's checkpoint dir instead of `localCheckpoint`.
-    *        localCheckpoint stores blocks on executors and is NOT
-    *        fault-tolerant — on a real cluster a lost executor kills the
-    *        job mid-iteration; reliable checkpointing survives it at the
-    *        cost of a DFS write per round. Default (None) resolves to
-    *        reliable whenever the session has a checkpoint dir configured
-    *        (GraftSession.build always sets one), falling back to
-    *        localCheckpoint only when there is nowhere reliable to write.
-    */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 10, reliableCheckpoint: Option[Boolean] = None): DataFrame = {
-    val useReliable = reliableCheckpoint.getOrElse(
-      pairs.sparkSession.sparkContext.getCheckpointDir.isDefined)
+      maxIter: Int = 10): DataFrame = {
     // checkpoint after every round: iterative joins otherwise compound
-    // the logical plan exponentially (persist caches data, not lineage)
-    def ckpt(df: DataFrame): DataFrame =
-      if (useReliable) eagerReliableCheckpoint(df) else df.localCheckpoint(true)
-    val edges = ckpt(pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+    // the logical plan exponentially (persist caches data, not lineage).
+    // eagerPin is reliable whenever the session has a checkpoint dir
+    // (GraftSession.build always sets one): localCheckpoint stores blocks
+    // on executors, and a lost executor kills the job mid-iteration
+    val edges = eagerPin(pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .distinct())
-    var labels = ckpt(edges.select(col("src").as("id")).distinct()
+    var labels = eagerPin(edges.select(col("src").as("id")).distinct()
       .withColumn("component", col("id")))
     var iter = 0
     var converged = false
@@ -1157,7 +1072,7 @@ object Dedup {
       // new labels (a label changes iff some neighbor's beats its own), so
       // the probe is a scan of the just-checkpointed blocks — not the extra
       // shuffle join per round that `next JOIN labels` would cost
-      val next = ckpt(labels.join(neighborMin, Seq("id"), "left")
+      val next = eagerPin(labels.join(neighborMin, Seq("id"), "left")
         .select(col("id"),
           least(col("component"), coalesce(col("n_comp"), col("component"))).as("component"),
           (coalesce(col("n_comp"), col("component")) < col("component")).as("chg")))
@@ -1202,30 +1117,25 @@ object Dedup {
     * @return (node, rank_scaled) — rank in units of 1/scale
     */
   def rankPropagation(pairs: DataFrame, aCol: String, bCol: String,
-      iters: Int = 5, dampingPct: Int = 85, scale: Long = 1000000000L,
-      reliableCheckpoint: Option[Boolean] = None): DataFrame = {
+      iters: Int = 5, dampingPct: Int = 85, scale: Long = 1000000000L): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters must be in [1, 50], got $iters")
     require(dampingPct >= 1 && dampingPct <= 99,
       s"dampingPct must be in [1, 99], got $dampingPct")
     require(scale >= 100 && scale % 100 == 0,
       s"scale must be a positive multiple of 100, got $scale")
-    val useReliable = reliableCheckpoint.getOrElse(
-      pairs.sparkSession.sparkContext.getCheckpointDir.isDefined)
-    def ckpt(df: DataFrame): DataFrame =
-      if (useReliable) eagerReliableCheckpoint(df) else df.localCheckpoint(true)
-    val edges = ckpt(pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+    val edges = eagerPin(pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .distinct())
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val withDeg = ckpt(edges.join(deg, "src"))
+    val withDeg = eagerPin(edges.join(deg, "src"))
     val base = scale / 100 * (100 - dampingPct)
-    var pr = ckpt(deg.select(col("src").as("node"), lit(scale).as("pr")))
+    var pr = eagerPin(deg.select(col("src").as("node"), lit(scale).as("pr")))
     for (_ <- 1 to iters) {
       val contrib = withDeg.join(pr, withDeg("src") === pr("node"))
         .select(col("dst").as("node"),
           expr(s"(pr * ${dampingPct}L) div (100L * deg)").as("__c"))
         .groupBy(col("node")).agg(sum(col("__c")).as("__cin"))
-      pr = ckpt(pr.select(col("node")).join(contrib, Seq("node"), "left")
+      pr = eagerPin(pr.select(col("node")).join(contrib, Seq("node"), "left")
         .select(col("node"),
           (lit(base) + coalesce(col("__cin"), lit(0L))).as("pr")))
     }
@@ -1250,11 +1160,8 @@ object Dedup {
     */
   def dedupCorpus(docs: DataFrame, idCol: String, textCol: String,
       minhashThreshold: Double = 0.7, transitive: Boolean = false,
-      reliableCheckpoint: Option[Boolean] = None,
       k: Int = 64, bands: Int = 16,
       signature: Option[Column => Column] = None): DataFrame = {
-    val useReliable = reliableCheckpoint.getOrElse(
-      docs.sparkSession.sparkContext.getCheckpointDir.isDefined)
     val keepExact = fingerprintClusters(docs, idCol, textCol)
       .select(col("keep_id").as(idCol))
     // survivors feed BOTH the near-dup pair generation and the final
@@ -1269,14 +1176,15 @@ object Dedup {
       // a bare inner join on keep_id would silently drop them all
       val joined = docs.join(keepExact, Seq(idCol), "left_semi")
         .unionByName(docs.filter(col(textCol).isNull))
-      if (useReliable) joined.checkpoint(false) else joined.localCheckpoint(false)
+      if (docs.sparkSession.sparkContext.getCheckpointDir.isDefined)
+        joined.checkpoint(false)
+      else joined.localCheckpoint(false)
     }
     val pairs = minhashNearDuplicates(exactSurvivors, idCol, textCol,
       k = k, bands = bands, threshold = minhashThreshold, signature = signature)
     val nearDupDrops =
       if (transitive)
-        connectedComponents(pairs, "doc_a", "doc_b",
-          reliableCheckpoint = Some(useReliable))
+        connectedComponents(pairs, "doc_a", "doc_b")
           .filter(col("id") =!= col("component"))
           .select(col("id").as(idCol))
       else pairs.select(col("doc_b").as(idCol)).distinct()
@@ -1466,51 +1374,21 @@ object Dedup {
   }
 
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-      blockCol: String, threshold: Double): DataFrame = {
-    // persist both double-consumed frames: the sorted-token verify frame
-    // feeds BOTH verify-side joins, and the ranked-prefix frame feeds
-    // BOTH candidate-join sides; without the persists their compute-once
-    // cost rides on AQE exchange reuse, which flaps with JVM history in
-    // long sessions (the reason d25 carries a checkpoint pin). Same
-    // idiom as the minhash signature frame above: MEMORY_AND_DISK
-    // (spills, never recomputes), eager pair materialization, caches
-    // released in the finally — the pair set is tiny next to the cached
-    // frames, so repeated calls in a long-lived session do not
-    // accumulate persisted blocks.
-    val arrs = sortedTokenArrays(docs, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val prefix = ppjoinPrefix(docs, idCol, textCol, blockCol, threshold)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try eagerPairs(ngramJaccardVerified(arrs, prefix, threshold))
-    finally {
-      arrs.unpersist(false)
-      prefix.unpersist(false)
-    }
-  }
+      blockCol: String, threshold: Double): DataFrame =
+    ngramJaccardPairsBudgeted(docs, idCol, textCol, blockCol, threshold,
+      maxCandidates = Long.MaxValue)
 
   /** Budget-gated [[ngramJaccardPairs]] — the enforcement end of
-    * [[ppjoinCandidateBound]] (round 18): PPJoin's prefix filter assumes
-    * rare tokens stay rare, and on a no-vocabulary-growth corpus the
-    * candidate join turns quadratic (measured at copies=100: 8 s → 483 s
-    * wall, 34 GB shuffle — BENCH_NOTES round 17). This variant evaluates
-    * the EXACT pre-filter candidate bound from the SAME persisted prefix
-    * frame the join would read (one aggregate, ~free next to the join) and
-    * refuses to walk into the cliff: the "read the budget BEFORE paying
-    * the join" rule lives in the operator, not in caller discipline.
-    *
-    * Within budget the result is BIT-IDENTICAL to [[ngramJaccardPairs]]
-    * (same frames, same plan — the gate only adds the bound aggregate).
-    * Over budget, `onExceed` picks the response:
-    *  - `"fail"` (default): throw `IllegalStateException` naming the
-    *    bound, the budget, and the worst (block, max_prefix_df) offender —
-    *    the production default: a 100 TB pipeline wants the outage at
-    *    plan time with a re-block/re-threshold hint, not 483 s in.
-    *  - `"guard"`: return the 1-row guard frame
-    *    (candidate_pairs, max_prefix_df, budget) instead of pairs — for
-    *    pipelines that route the decision as data. NOTE the schema
-    *    differs from the pairs schema by design; the bound is evaluated
-    *    eagerly, so the returned frame's schema is known to the caller by
-    *    checking `columns`.
+    * [[ppjoinCandidateBound]] (round 18) through [[CandidateGate]]:
+    * PPJoin's prefix filter assumes rare tokens stay rare, and on a
+    * no-vocabulary-growth corpus the candidate join turns quadratic
+    * (measured at copies=100: 8 s → 483 s wall, 34 GB shuffle —
+    * BENCH_NOTES round 17). The bound is read from the SAME persisted
+    * prefix frame the join would read, so the "read the budget BEFORE
+    * paying the join" rule lives in the operator, not in caller
+    * discipline. Over budget, besides the gate's `"fail"` (naming the
+    * worst (block, max_prefix_df) offender) and `"guard"`
+    * (candidate_pairs, max_prefix_df, budget):
     *  - `"minhash"`: fall back to the MinHash sibling
     *    ([[minhashNearDuplicates]], default k=64/bands=16 banding at the
     *    same threshold) whose banded-LSH candidate volume does not
@@ -1524,47 +1402,24 @@ object Dedup {
   def ngramJaccardPairsBudgeted(docs: DataFrame, idCol: String, textCol: String,
       blockCol: String, threshold: Double, maxCandidates: Long,
       onExceed: String = "fail"): DataFrame = {
-    require(Set("fail", "guard", "minhash")(onExceed),
-      s"onExceed must be fail|guard|minhash, got $onExceed")
-    if (maxCandidates == Long.MaxValue)
-      return ngramJaccardPairs(docs, idCol, textCol, blockCol, threshold)
+    // both frames are double-consumed: the sorted-token verify frame by
+    // BOTH verify-side joins, the ranked-prefix frame by the bound and
+    // BOTH candidate-join sides; without the gate's persist their
+    // compute-once cost rides on AQE exchange reuse, which flaps with JVM
+    // history in long sessions (the reason d25 carries a checkpoint pin)
     val arrs = sortedTokenArrays(docs, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val prefix = ppjoinPrefix(docs, idCol, textCol, blockCol, threshold)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val perBlock = ppjoinCandidateBoundFrom(prefix)
-      // driver-side read of the per-block bound: one row per BLOCK (source/
-      // shard count, not doc count) — bounded the way crossSourceDupMatrix's
-      // matrix is
-      val rows = perBlock.select(col("blk"), col("candidate_pairs"),
-        col("max_prefix_df")).collect()
-      val total = rows.map(_.getLong(1)).sum
-      if (total <= maxCandidates)
-        eagerPairs(ngramJaccardVerified(arrs, prefix, threshold))
-      else {
-        val worst = rows.maxBy(_.getLong(1))
-        onExceed match {
-          case "fail" => throw new IllegalStateException(
-            s"ppjoin candidate bound $total exceeds budget $maxCandidates " +
-              s"(worst block '${worst.get(0)}': ${worst.getLong(1)} pairs, " +
-              s"max prefix df ${worst.getLong(2)}); re-block on a " +
-              "finer key, raise the threshold, or fall back to MinHash " +
-              "banding (onExceed=\"minhash\")")
-          case "guard" =>
-            val spark = docs.sparkSession
-            import spark.implicits._
-            Seq((total, rows.map(_.getLong(2)).max, maxCandidates))
-              .toDF("candidate_pairs", "max_prefix_df", "budget")
-          case "minhash" =>
-            minhashNearDuplicates(docs, idCol, textCol, threshold = threshold)
-              .withColumnRenamed("est_jaccard", "jaccard")
-        }
-      }
-    } finally {
-      arrs.unpersist(false)
-      prefix.unpersist(false)
-    }
+    CandidateGate("ppjoin", maxCandidates, onExceed, Seq(arrs, prefix),
+      "max_prefix_df",
+      w => s"worst block '${w.get(0)}': ${w.getLong(1)} pairs, " +
+        s"max prefix df ${w.getLong(2)}",
+      "re-block on a finer key, raise the threshold, or fall back to " +
+        "MinHash banding (onExceed=\"minhash\")",
+      fallback = Some("minhash" -> (() =>
+        minhashNearDuplicates(docs, idCol, textCol, threshold = threshold)
+          .withColumnRenamed("est_jaccard", "jaccard"))))(
+      bound = ppjoinCandidateBoundFrom(prefix),
+      pairs = ngramJaccardVerified(arrs, prefix, threshold))
   }
 
   /** LSH banding auto-tuner — the actionable end of d23's S-curve audit:
@@ -1714,41 +1569,24 @@ object Dedup {
     // the d05 discipline (round 16): the ranked token frame feeds BOTH
     // candidate sides (the prefix-filtered probes AND the full
     // directional index) and the sorted-token frame both verify sides —
-    // persist each for the call's duration so the single-compute cost
-    // is structural, not AQE-exchange-reuse weather
+    // the gate persists each for the call's duration so the
+    // single-compute cost is structural, not AQE-exchange-reuse weather.
+    // Budget gate (round 18, d05's discipline applied to d28): the exact
+    // asymmetric candidate bound from the SAME persisted ranked frame,
+    // before paying a join the sf10 run measured going quadratic on a
+    // no-vocabulary-growth corpus (6.5 s → 403 s, 20 GB shuffle).
+    // Fail-loud only: containment has no cheap estimating sibling
+    // (MinHash estimates the SYMMETRIC Jaccard), so the honest
+    // over-budget responses are re-block / raise threshold.
     val ranked = ppjoinPrefixRanked(docs, idCol, textCol, blockCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val arrs = sortedTokenArrays(docs, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // budget gate (round 18, d05's discipline applied to d28): evaluate
-      // the exact asymmetric candidate bound from the SAME persisted
-      // ranked frame before paying a join the sf10 run measured going
-      // quadratic on a no-vocabulary-growth corpus (6.5 s → 403 s, 20 GB
-      // shuffle). Fail-loud only: containment has no cheap estimating
-      // sibling (MinHash estimates the SYMMETRIC Jaccard), so the honest
-      // over-budget responses are re-block / raise threshold, named in
-      // the error. Long.MaxValue (default) skips the bound job entirely.
-      if (maxCandidates != Long.MaxValue) {
-        val rows = containmentCandidateBoundFrom(ranked, threshold)
-          .select(col("blk"), col("candidate_pairs"), col("max_index_df"))
-          .collect()
-        val total = rows.map(_.getLong(1)).sum
-        if (total > maxCandidates) {
-          val worst = rows.maxBy(_.getLong(1))
-          throw new IllegalStateException(
-            s"containment candidate bound $total exceeds budget " +
-              s"$maxCandidates (worst block '${worst.get(0)}': " +
-              s"${worst.getLong(1)} pairs, max index df " +
-              s"${worst.getLong(2)}); re-block on a finer key or raise " +
-              "the threshold")
-        }
-      }
-      eagerPairs(containmentVerified(ranked, arrs, threshold))
-    } finally {
-      ranked.unpersist(false)
-      arrs.unpersist(false)
-    }
+    CandidateGate("containment", maxCandidates, "fail", Seq(ranked, arrs),
+      "max_index_df",
+      w => s"worst block '${w.get(0)}': ${w.getLong(1)} pairs, " +
+        s"max index df ${w.getLong(2)}",
+      "re-block on a finer key or raise the threshold")(
+      bound = containmentCandidateBoundFrom(ranked, threshold),
+      pairs = containmentVerified(ranked, arrs, threshold))
   }
 
   /** The full ranked token frame (blk, tok, doc_id, sz, pos) — rare-first

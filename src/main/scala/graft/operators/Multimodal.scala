@@ -546,19 +546,13 @@ object Multimodal {
   }
 
   /** Budget-gated [[videoNearDupPairs]] (round 19) — the d40 contract
+    * through [[CandidateGate]] (which documents the fail/guard branches),
     * propagated to the multimodal pair generator the round-18 verdict
     * flagged: constant frame payloads (stills, filler, boilerplate
     * intros) collapse the pigeonhole bands into one bucket and the
-    * "banded" frame join silently turns all-pairs. The EXACT pre-verify
-    * candidate bound ([[graft.operators.Dedup.hammingCandidateBound]]
-    * over the SAME packed frame the join reads) is evaluated first;
-    * within budget the result is BIT-IDENTICAL to the ungated operator.
-    * Over budget, `onExceed`:
-    *  - `"fail"` (default): `IllegalStateException` naming bound, budget
-    *    and the worst (block, bucket) skew — the plan-time outage;
-    *  - `"guard"`: the 1-row guard frame
-    *    (candidate_pairs, max_bucket_n, budget), schema intentionally
-    *    distinct from the pairs schema — the decision as data.
+    * "banded" frame join silently turns all-pairs. The bound is
+    * [[graft.operators.Dedup.hammingCandidateBound]] over the SAME
+    * packed frame the join reads.
     *
     * @param maxCandidates total pre-verify frame-pair budget summed
     *        across the 4 pigeonhole blocks; `Long.MaxValue` skips the
@@ -567,45 +561,17 @@ object Multimodal {
   def videoNearDupPairsBudgeted(sigs: DataFrame, maxHamming: Int = 2,
       blockBits: Int = 15, maxCandidates: Long = Long.MaxValue,
       onExceed: String = "fail"): DataFrame = {
-    require(Set("fail", "guard")(onExceed),
-      s"onExceed must be fail|guard, got $onExceed")
-    if (maxCandidates == Long.MaxValue)
-      return videoPairsFromPacked(packFrameIds(sigs), maxHamming, blockBits)
-    // the d40 persist discipline: the packed frame feeds the bound read
-    // AND (within budget) the pair join — uncached, each consumer would
-    // re-derive every frame signature from scratch. MEMORY_AND_DISK,
-    // result materialized eagerly (it is a per-video-pair aggregate,
-    // tiny next to the frames), cache released in the finally.
+    // the packed frame feeds the bound read AND the pair join — uncached,
+    // each consumer would re-derive every frame signature from scratch.
+    // The result is a per-video-pair aggregate, tiny next to the frames.
     val packed = packFrameIds(sigs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try videoNearDupGated(packed, maxHamming, blockBits, maxCandidates, onExceed,
-      sigs.sparkSession)
-    finally packed.unpersist(false)
-  }
-
-  private def videoNearDupGated(packed: DataFrame,
-      maxHamming: Int, blockBits: Int, maxCandidates: Long,
-      onExceed: String, spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    // <= 4 rows (one per pigeonhole block) — constant-size driver read
-    val rows = Dedup.hammingCandidateBound(packed, "fid", "sig", blockBits)
-      .select(col("blk"), col("candidate_pairs"), col("max_bucket_n")).collect()
-    val total = rows.map(_.getLong(1)).sum
-    if (total <= maxCandidates)
-      Dedup.eagerPairs(videoPairsFromPacked(packed, maxHamming, blockBits))
-    else {
-      val worst = rows.maxBy(_.getLong(1))
-      onExceed match {
-        case "fail" => throw new IllegalStateException(
-          s"video frame-pair candidate bound $total exceeds budget $maxCandidates " +
-            s"(worst block ${worst.getInt(0)}: ${worst.getLong(1)} pairs, max bucket " +
-            s"${worst.getLong(2)} frames); the frame signatures are band-skewed — " +
-            "drop constant/filler frames first, or route the decision as data " +
-            "(onExceed=\"guard\")")
-        case "guard" =>
-          import spark.implicits._
-          Seq((total, rows.map(_.getLong(2)).max, maxCandidates))
-            .toDF("candidate_pairs", "max_bucket_n", "budget")
-      }
-    }
+    CandidateGate("video frame-pair", maxCandidates, onExceed, Seq(packed),
+      "max_bucket_n",
+      w => s"worst block ${w.getInt(0)}: ${w.getLong(1)} pairs, " +
+        s"max bucket ${w.getLong(2)} frames",
+      "the frame signatures are band-skewed — drop constant/filler frames " +
+        "first, or route the decision as data (onExceed=\"guard\")")(
+      bound = Dedup.hammingCandidateBound(packed, "fid", "sig", blockBits),
+      pairs = videoPairsFromPacked(packed, maxHamming, blockBits))
   }
 }

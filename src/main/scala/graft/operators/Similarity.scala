@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.engine.GraftSession
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -121,18 +122,8 @@ object Similarity {
     * [[Dedup.minhashNearDuplicates]].
     */
   def cosineNearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
-      blockCol: String, threshold: Double, maxBlockSize: Long = 1000000L): DataFrame = {
-    // persist the normalized+keyed frame: it feeds BOTH self-join sides,
-    // and uncached each side would re-scan the corpus and re-unit-normalize
-    // every vector (the dominant cost here). Same discipline as
-    // minhashNearDuplicates' signature cache: MEMORY_AND_DISK (spills,
-    // never recomputes), released in the finally once the (tiny,
-    // threshold-filtered) pair set is eagerly checkpointed.
-    val keyed = keyedBlocks(emb, idCol, vecCol, blockCol, maxBlockSize)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try Dedup.eagerPairs(pairsOf(keyed, threshold))
-    finally keyed.unpersist(false)
-  }
+      blockCol: String, threshold: Double, maxBlockSize: Long = 1000000L): DataFrame =
+    cosineNearDupPairsBudgeted(emb, idCol, vecCol, blockCol, threshold, maxBlockSize)
 
   /** The lazy keyed/sub-bucketed frame [[cosineNearDupPairs]] persists:
     * (blk, sub, vec_id, unit). `private[graft]` so the plan-shape spec can
@@ -197,19 +188,11 @@ object Similarity {
         count(lit(1)).as("n_buckets"))
 
   /** Budget-gated [[cosineNearDupPairs]] — the d40 contract on the
-    * blocked-cosine engine (round 20, the last pair-generating path
-    * without it): the EXACT pre-join candidate bound
-    * ([[cosineCandidateBound]], one aggregate over the persisted keyed
-    * frame both self-join sides read) is evaluated first, and the
-    * operator refuses to walk into a block-skew cliff instead of
-    * discovering it as a multi-hour stage. Within budget the result is
-    * BIT-IDENTICAL to the ungated operator (same keyed join, same
-    * threshold filter). Over budget, `onExceed`:
-    *  - `"fail"` (default): `IllegalStateException` naming the bound,
-    *    the budget and the worst-bucket size;
-    *  - `"guard"`: the 1-row guard frame
-    *    (candidate_pairs, max_bucket_n, budget) — the decision as data,
-    *    schema intentionally distinct from the pairs schema.
+    * blocked-cosine engine through [[CandidateGate]] (which documents the
+    * fail/guard branches): the bound is [[cosineCandidateBound]]'s, one
+    * aggregate over the persisted keyed frame both self-join sides read,
+    * so the operator refuses to walk into a block-skew cliff instead of
+    * discovering it as a multi-hour stage.
     *
     * @param maxCandidates total pre-filter pair budget summed across all
     *        (block, sub) buckets; `Long.MaxValue` skips the bound job
@@ -217,35 +200,17 @@ object Similarity {
   def cosineNearDupPairsBudgeted(emb: DataFrame, idCol: String, vecCol: String,
       blockCol: String, threshold: Double, maxBlockSize: Long = 1000000L,
       maxCandidates: Long = Long.MaxValue, onExceed: String = "fail"): DataFrame = {
-    require(Set("fail", "guard")(onExceed),
-      s"onExceed must be fail|guard, got $onExceed")
-    if (maxCandidates == Long.MaxValue)
-      return cosineNearDupPairs(emb, idCol, vecCol, blockCol, threshold, maxBlockSize)
-    // the d40 persist discipline: the keyed/normalized frame feeds the
-    // bound read AND (within budget) both self-join sides — uncached,
-    // each consumer would re-scan the corpus and re-unit-normalize every
-    // vector. Pairs materialize eagerly so the cache releases before
-    // returning.
+    // the keyed/normalized frame feeds the bound read AND both self-join
+    // sides — uncached, each consumer would re-scan the corpus and
+    // re-unit-normalize every vector (the dominant cost here)
     val keyed = keyedBlocks(emb, idCol, vecCol, blockCol, maxBlockSize)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val row = cosineCandidateBoundFrom(keyed).head()
-      val total = row.getLong(0)
-      if (total <= maxCandidates)
-        Dedup.eagerPairs(pairsOf(keyed, threshold))
-      else onExceed match {
-        case "fail" => throw new IllegalStateException(
-          s"cosine candidate bound $total exceeds budget $maxCandidates " +
-            s"(max bucket ${row.getLong(1)} vectors across ${row.getLong(2)} buckets); " +
-            "the blocks are skewed past what sign-LSH subdivision breaks — " +
-            "pre-dedup template embeddings, re-key the blocks, or route the " +
-            "decision as data (onExceed=\"guard\")")
-        case "guard" =>
-          import emb.sparkSession.implicits._
-          Seq((total, row.getLong(1), maxCandidates))
-            .toDF("candidate_pairs", "max_bucket_n", "budget")
-      }
-    } finally keyed.unpersist(false)
+    CandidateGate("cosine", maxCandidates, onExceed, Seq(keyed), "max_bucket_n",
+      w => s"max bucket ${w.getLong(1)} vectors across ${w.getLong(2)} buckets",
+      "the blocks are skewed past what sign-LSH subdivision breaks — " +
+        "pre-dedup template embeddings, re-key the blocks, or route the " +
+        "decision as data (onExceed=\"guard\")")(
+      bound = cosineCandidateBoundFrom(keyed),
+      pairs = pairsOf(keyed, threshold))
   }
 
   /** SemDeDup-style semantic deduplication: embedding-cosine near-dup
@@ -334,7 +299,7 @@ object Similarity {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val e = keyed(eval, "eval_id", "u_e")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try Dedup.eagerPairs(
+    try GraftSession.eagerPin(
       t.join(e, Seq("blk", "sub"))
         .select(col("train_id"), col("eval_id"), dot(col("u_t"), col("u_e")).as("cos"))
         .filter(col("cos") >= threshold))

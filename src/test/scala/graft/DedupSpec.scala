@@ -235,7 +235,7 @@ class DedupSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
-    val comp = Dedup.connectedComponents(pairs, "doc_a", "doc_b", reliableCheckpoint = Some(true))
+    val comp = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comp == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
   }
