@@ -338,7 +338,7 @@ object Bench {
     * executor keeps it near core count on a quiet machine. −1.0 where
     * the platform bean can't say.
     */
-  private def externalCores(): Double = osBean.map { b =>
+  private[graft] def externalCores(): Double = osBean.map { b =>
     val sysLoad = b.getCpuLoad
     val selfLoad = b.getProcessCpuLoad
     if (sysLoad < 0 || selfLoad < 0) -1.0
@@ -351,7 +351,7 @@ object Bench {
     * a busy query keeps saturated, so contention is diagnosable from the
     * artifact itself instead of by cross-referencing quiet-session bands.
     */
-  private class TaskTimeListener extends org.apache.spark.scheduler.SparkListener {
+  private[graft] class TaskTimeListener extends org.apache.spark.scheduler.SparkListener {
     val runTimeMs = new java.util.concurrent.atomic.AtomicLong(0L)
     // shuffle volume + per-task peak execution memory (round 17): the
     // sf10 section's scale evidence — wall alone can't distinguish
@@ -375,7 +375,7 @@ object Bench {
     * latency, so read until two consecutive polls agree (bounded wait —
     * attribution skew beats an unbounded stall if the bus stays busy).
     */
-  private def settledTaskMs(l: TaskTimeListener, maxWaitMs: Long = 500L): Long = {
+  private[graft] def settledTaskMs(l: TaskTimeListener, maxWaitMs: Long = 500L): Long = {
     val deadline = System.nanoTime() + maxWaitMs * 1000000L
     var prev = l.runTimeMs.get()
     var cur = prev

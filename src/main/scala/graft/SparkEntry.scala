@@ -69,9 +69,15 @@ object SparkEntry {
     * approximate path.
     */
   private def annRecall: Boolean =
-    sys.props.get("graft.ann.recall")
-      .orElse(sys.env.get("SPARK_GRAFT_ANN_RECALL"))
-      .forall(_ != "off")
+    sys.props.get("graft.ann.recall").forall(_ != "off")
+
+  /** `approx` with each query's recall@k against the exact top-k of the
+    * shared `vec_id < 10` query set attached, while [[annRecall]] is on.
+    */
+  private def withRecall(emb: DataFrame, approx: DataFrame, k: Int): DataFrame =
+    if (!annRecall) approx
+    else Similarity.withRecallAtK(approx,
+      Similarity.bruteForceTopK(emb, "vec_id", "embedding", col("vec_id") < 10, k = k), k = k)
 
   /** Generated DuckDB replay of d08's full approximate pipeline. Embeds the
     * exact hyperplane constants the Spark plan uses
@@ -2045,10 +2051,7 @@ object SparkEntry {
       (s, d) => {
         val emb = t(s, d, "embeddings")
         val approx = Similarity.lshTopK(emb, "vec_id", "embedding", col("vec_id") < 10, k = 5)
-        if (!annRecall) approx
-        else Similarity.withRecallAtK(approx,
-          Similarity.bruteForceTopK(emb, "vec_id", "embedding", col("vec_id") < 10, k = 5),
-          k = 5)
+        withRecall(emb, approx, k = 5)
       },
       lshOracleSql(nPlanes = 4, dim = 64, nTables = 8, k = 5)),
 
@@ -2062,10 +2065,7 @@ object SparkEntry {
       (s, d) => {
         val emb = t(s, d, "embeddings")
         val approx = Similarity.ivfTopK(emb, "vec_id", "embedding", col("vec_id") < 10, k = 5)
-        if (!annRecall) approx
-        else Similarity.withRecallAtK(approx,
-          Similarity.bruteForceTopK(emb, "vec_id", "embedding", col("vec_id") < 10, k = 5),
-          k = 5)
+        withRecall(emb, approx, k = 5)
       }),
 
     // IVF probe-budget tuning curve (round 12): per-query recall@k for
@@ -2161,19 +2161,16 @@ object SparkEntry {
           nCentroids = 8, m = 4, ksub = 8, iters = 3)
         val approx = Similarity.ivfPqProbe(emb, "vec_id", "embedding", model,
           col("vec_id") < 10, k = k, nProbe = 2, shortlist = 4)
-        if (!annRecall) approx
-        else Similarity.withRecallAtK(approx,
-          Similarity.bruteForceTopK(emb, "vec_id", "embedding", col("vec_id") < 10, k = k),
-          k = k)
+        withRecall(emb, approx, k = k)
       }),
 
-    // broadcast-centroid assignment (round 19): kmeansAssign past its
-    // plan-literal ceiling — centroids ship as a broadcast TABLE and one
-    // map-side-combined aggregate keeps the (negSim, cell)-minimal
-    // struct per vector, so nothing k-sized rides the plan or the
-    // generated code. Same training as d42, same oracle SQL verbatim:
-    // the two assignment shapes must be bit-identical (also pinned
-    // directly in SimilaritySpec).
+    // broadcast-centroid assignment (round 19): the table shape
+    // kmeansAssign picks past its plan-literal ceiling, forced here at
+    // fixture size — centroids ship as a broadcast TABLE and one
+    // map-side-combined aggregate per row keeps the (negSim, cell)-minimal
+    // struct, so nothing k-sized rides the plan or the generated code.
+    // Same training as d42, same oracle SQL verbatim: the two assignment
+    // shapes must be bit-identical (also pinned directly in SimilaritySpec).
     "d44_kmeans_assign_join" -> noOracle(
       (s, d) => {
         val emb = t(s, d, "embeddings")
@@ -2183,14 +2180,13 @@ object SparkEntry {
       }),
 
     // broadcast-table IVF-PQ encode + probe (round 20): the d44 shape
-    // propagated to the WHOLE query stack — the round-19 verdict's top
-    // item. Same distributed trainers and config as d43, but the encode
-    // decides cell + all m sub-codes in ONE aggregate over a combined
-    // broadcast (centroid ∪ codebook) table, the probe list comes from a
-    // per-query window over the broadcast centroid table, and the ADC
-    // LUTs are reshaped from a broadcast-codebook join — nothing k- or
-    // book-sized rides the plan, so the stack runs past the k·dim ≤ 10⁶
-    // plan-literal ceiling where d43's literal form require-fails.
+    // propagated to the WHOLE query stack, forced at fixture size (the
+    // public stages pick it themselves past the k·dim ≤ 10⁶ plan-literal
+    // ceiling). Same distributed trainers and config as d43, but the
+    // encode decides cell + all m sub-codes in ONE aggregate over a
+    // combined broadcast (centroid ∪ codebook) table, and the probe list
+    // and the ADC LUTs come from per-row aggregates over the same
+    // broadcast table — nothing k- or book-sized rides the plan.
     // Bit-identical under the ceiling: shares d43's oracle VERBATIM (the
     // full generated DuckDB replay of both trainings + probe/ADC/
     // re-rank), and SimilaritySpec pins literal-vs-join equality per
@@ -2207,10 +2203,7 @@ object SparkEntry {
           cents, books)
         val approx = Similarity.ivfPqProbeJoin(emb, "vec_id", "embedding", model,
           col("vec_id") < 10, k = k, nProbe = 2, shortlist = 4)
-        if (!annRecall) approx
-        else Similarity.withRecallAtK(approx,
-          Similarity.bruteForceTopK(emb, "vec_id", "embedding", col("vec_id") < 10, k = k),
-          k = k)
+        withRecall(emb, approx, k = k)
       }),
 
     // product-quantization ANN (round 12): the compressed-scan path —
@@ -2224,10 +2217,7 @@ object SparkEntry {
       (s, d) => {
         val emb = t(s, d, "embeddings")
         val approx = Similarity.pqTopK(emb, "vec_id", "embedding", col("vec_id") < 10, k = 5)
-        if (!annRecall) approx
-        else Similarity.withRecallAtK(approx,
-          Similarity.bruteForceTopK(emb, "vec_id", "embedding", col("vec_id") < 10, k = 5),
-          k = 5)
+        withRecall(emb, approx, k = 5)
       }),
 
     // PQ + exact re-rank (round 13, the standard production ANN
@@ -2275,10 +2265,7 @@ object SparkEntry {
         val k = 5
         val approx = Similarity.ivfPqTopK(emb, "vec_id", "embedding",
           col("vec_id") < 10, k = k)
-        if (!annRecall) approx
-        else Similarity.withRecallAtK(approx,
-          Similarity.bruteForceTopK(emb, "vec_id", "embedding", col("vec_id") < 10, k = k),
-          k = k)
+        withRecall(emb, approx, k = k)
       }),
 
     // IVF-PQ cost/recall curve (round 14): the d25 multi-config discipline

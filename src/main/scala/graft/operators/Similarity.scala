@@ -63,10 +63,7 @@ object Similarity {
     val scored = all.join(queries, col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"),
         dot(col("q_unit"), col("unit")).as("cos"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank"))
+    rankTopK(scored, "cos", k)
   }
 
   /** Exact FILTERED cosine top-k (round 17): [[bruteForceTopK]] with the
@@ -87,10 +84,7 @@ object Similarity {
     val scored = cands.join(queries, col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"),
         dot(col("q_unit"), col("unit")).as("cos"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank"))
+    rankTopK(scored, "cos", k)
   }
 
   /** Sign bits of the first `bits` components — a dimension-free axis-
@@ -454,15 +448,12 @@ object Similarity {
       val dim = centroids.head.length
       // each iteration's assignment inlines the current centroids as plan
       // literals (the map-only shape that makes the training affordable),
-      // so the kmeansAssign ceiling applies per iteration too
+      // so the plan-literal ceiling applies per iteration too
       requireLiteralCeiling(nCentroids, dim, "kmeansDistributed",
         "train hierarchically (coarse cells first, then per-cell sub-k-means)")
       for (_ <- 0 until iters) {
-        val cells = array(centroids.zipWithIndex.map { case (c, i) =>
-          struct((-dot(col("unit"), typedlit(c.toSeq))).as("negSim"), lit(i).as("cell"))
-        }: _*)
         // k x dim rows — bounded by configuration, never by data
-        val sums = all.withColumn("cell", array_min(cells).getField("cell"))
+        val sums = all.withColumn("cell", array_min(cellScores(centroids)).getField("cell"))
           .select(col("cell"), posexplode(col("unit")).as(Seq("dim", "v")))
           .groupBy(col("cell"), col("dim"))
           .agg(sum(floor(col("v") * lit(1e6))).as("s"))
@@ -485,117 +476,234 @@ object Similarity {
     }
   }
 
-  /** Final cell assignment from [[kmeansDistributed]] centroids: one scan,
-    * (vec_id, cell), same argmax/tie rule as training's assignment step.
-    *
-    * CEILING — the centroids ride the plan as k literal arrays and every
-    * row scores all k inline in one codegen'd projection: right up to a
-    * few thousand cells (k·dim doubles serialized with the plan, k dots
-    * per row in one generated method), wrong at production cell counts
-    * (k ≳ 10⁴, dim ≳ 10³ is 10⁷⁺ plan constants and a codegen method
-    * past JIT limits). Past the ceiling use [[kmeansAssignJoin]] — same
-    * argmax/tie rule, centroids shipped as a broadcast TABLE instead of
-    * plan text. Enforced loudly below rather than discovered as a driver
-    * OOM / codegen fallback at submit time.
+  /** The plan-literal ceiling: how many model doubles (k·dim for a
+    * centroid set, ksub·dim for a codebook set) one stage may inline as
+    * plan constants. Past it the serialized plan and the generated scoring
+    * method hit driver-memory / JIT-limit cliffs. Below it the literal
+    * shape is faster at every ANN stage (BENCH_NOTES "Literal vs table
+    * shape"), so both shapes stay and [[fitsLiteral]] picks one.
     */
-  /** The plan-literal ceiling shared by every stage that inlines a
-    * centroid/codebook set as plan constants (round 19, one level deeper
-    * than the kmeansAssign-only guard the verdict asked for): past 10⁶
-    * embedded doubles the serialized plan and the generated scoring
-    * method hit driver-memory / JIT-limit cliffs — fail loudly at
-    * construction, naming the scale-safe alternative, instead of at
-    * submit time.
+  private val LiteralCeiling = 1000000L
+
+  /** The one size rule every ANN stage applies to its own model: the
+    * literal shape iff each given model set fits under [[LiteralCeiling]],
+    * the table shape ([[withModelCols]]) otherwise.
+    */
+  private def fitsLiteral(sets: Array[Array[Double]]*): Boolean =
+    sets.forall(s => s.isEmpty || s.length.toLong * s.head.length <= LiteralCeiling)
+
+  /** The ceiling as a hard limit, for the two distributed trainers only:
+    * their per-iteration assignment is literal-only, so past the ceiling
+    * they fail loudly at construction, naming the scale-safe alternative.
     */
   private def requireLiteralCeiling(k: Long, dim: Long, stage: String,
       alternative: String): Unit =
-    require(k * dim <= 1000000L,
+    require(k * dim <= LiteralCeiling,
       s"$stage embeds k x dim = $k x $dim doubles as plan literals; past 10^6 $alternative")
 
-  def kmeansAssign(emb: DataFrame, idCol: String, vecCol: String,
-      centroids: Array[Array[Double]]): DataFrame = {
-    require(centroids.nonEmpty, "kmeansAssign: no centroids")
-    requireLiteralCeiling(centroids.length, centroids.head.length, "kmeansAssign",
-      "use kmeansAssignJoin (broadcast centroid table)")
-    val cells = array(centroids.zipWithIndex.map { case (c, i) =>
+  private val NoCentroids = Array.empty[Array[Double]]
+  private val NoBooks = Array.empty[Array[Array[Double]]]
+
+  private def sub(u: Column, j: Int, subDim: Int): Column = slice(u, j * subDim + 1, subDim)
+
+  /** Literal cell scorer: per row, one (negSim, cell) struct per centroid
+    * inlined as a plan constant. Struct order makes array_min/array_sort
+    * pick by similarity first, ties to the lowest cell.
+    */
+  private def cellScores(centroids: Array[Array[Double]]): Column =
+    array(centroids.zipWithIndex.map { case (c, i) =>
       struct((-dot(col("unit"), typedlit(c.toSeq))).as("negSim"), lit(i).as("cell"))
     }: _*)
-    normalized(emb, idCol, vecCol).filter(col("unit").isNotNull)
-      .select(col("vec_id"), array_min(cells).getField("cell").as("cell"))
+
+  /** Literal PQ encoder: per subspace j, argmin_c (‖c‖² − 2·sub_j·c) with
+    * the ‖c‖² term a plan constant — array_min on (dist, code) structs
+    * ties to the lower code.
+    */
+  private def pqCodes(books: Array[Array[Array[Double]]]): Column = {
+    val subDim = books(0)(0).length
+    array(books.indices.map { j =>
+      array_min(array(books(j).zipWithIndex.map { case (c, ci) =>
+        val cc = c.map(x => x * x).sum
+        struct((lit(cc) - lit(2.0) * dot(sub(col("unit"), j, subDim), typedlit(c.toSeq))).as("dist"),
+          lit(ci).as("code"))
+      }: _*)).getField("code")
+    }: _*)
   }
 
-  /** [[kmeansAssign]] past the plan-literal ceiling (round 19): the
-    * centroids ship as a BROADCAST TABLE, each vector meets all k cells
-    * through a broadcast cross join, and one hash aggregate keeps the
-    * (negSim, cell)-minimal struct per vector — bit-identical assignment
-    * (same [[dot]] fold over the same doubles, same struct tie order;
-    * SimilaritySpec pins equality against the literal form) with nothing
-    * k-sized in the plan or the generated code.
-    *
-    * Scale shape: the cross join is map-side (centroid table broadcast,
-    * corpus never shuffles for it) and the k-row-per-vector blowup is
-    * collapsed by the aggregate's map-side partials BEFORE the one
-    * vec_id-keyed exchange — at k = 10⁴ over 10⁹ vectors no stage ever
-    * materializes the 10¹³-row product beyond streaming it through the
-    * partial aggregate.
-    *
-    * `idCol` must identify rows uniquely (the [[SampleOps.stratifiedCap]]
-    * precondition family): the aggregate emits ONE row per id, so rows
-    * SHARING an id — which [[kmeansAssign]] would keep as separate output
-    * rows — collapse here to a single assignment mixing their scores.
-    * Bit-identity with the literal form holds exactly up to id
-    * uniqueness.
+  /** Literal per-query ADC lookup tables: luts[j][c] = dot(q_sub_j, c). */
+  private def pqLuts(books: Array[Array[Array[Double]]]): Column = {
+    val subDim = books(0)(0).length
+    array(books.indices.map { j =>
+      array(books(j).map(c => dot(sub(col("unit"), j, subDim), typedlit(c.toSeq))): _*)
+    }: _*)
+  }
+
+  /** ADC score of a candidate's `codes` against a query's `luts`:
+    * Σ_j luts[j][codes[j]], summed in fixed subspace order.
     */
-  /** The (cell, cvec) broadcast-side frame shared by every join-shaped
-    * ANN stage ([[kmeansAssignJoin]], [[ivfAssignJoin]], [[ivfProbeJoin]],
-    * [[ivfPqEncodeJoin]], [[ivfPqProbeJoin]]): the SAME Double values the
-    * literal stages inline as `typedlit` plan constants, shipped as a
-    * single-partition table instead — so every dot runs the same IEEE
-    * fold over the same operands and the two shapes stay bit-identical.
+  private def adc(m: Int): Column = (0 until m).map { j =>
+    element_at(element_at(col("luts"), j + 1), element_at(col("codes"), j + 1) + 1)
+  }.reduce(_ + _)
+
+  /** A per-row column scored against a trained model, in both shapes:
+    * `inline` reads the model's doubles as plan literals; in the table
+    * shape `score` is evaluated once per (row, [[modelTable]] row) pair and
+    * `fold` aggregates a row's scores into the same value.
     */
-  private def centroidTable(spark: org.apache.spark.sql.SparkSession,
+  private final case class ModelCol(name: String, inline: Column, score: Column,
+      fold: Column => Column)
+
+  private def tableCellScore: Column = when(col("t_cell").isNotNull,
+    struct((-dot(col("unit"), col("t_vec"))).as("negSim"), col("t_cell").as("cell")))
+
+  /** Per code row: (j, (value, code)) with `value` a dot of sub-vector j. */
+  private def tableCodeScore(subDim: Int, value: Column => Column): Column =
+    when(col("t_j").isNotNull, struct(col("t_j").as("j"), struct(
+      value(dot(slice(col("unit"), col("t_j") * lit(subDim) + lit(1), lit(subDim)), col("t_vec")))
+        .as("v"), col("t_code").as("code")).as("vc")))
+
+  private def nearestCell(centroids: Array[Array[Double]]): ModelCol =
+    ModelCol("cell", array_min(cellScores(centroids)).getField("cell"),
+      tableCellScore, s => min(s).getField("cell"))
+
+  private def rankedCells(centroids: Array[Array[Double]]): ModelCol =
+    ModelCol("ranked", array_sort(cellScores(centroids)),
+      tableCellScore, s => array_sort(collect_list(s)))
+
+  private def codesCol(books: Array[Array[Array[Double]]]): ModelCol =
+    ModelCol("codes", pqCodes(books),
+      tableCodeScore(books(0)(0).length, d => col("t_cc") - lit(2.0) * d),
+      s => array(books.indices.map { j =>
+        min(when(s.getField("j") === j, s.getField("vc"))).getField("code")
+      }: _*))
+
+  // (code, value) entries are code-unique per subspace, so sorting them
+  // restores luts[j][c] order deterministically
+  private def lutsCol(books: Array[Array[Array[Double]]]): ModelCol =
+    ModelCol("luts", pqLuts(books), tableCodeScore(books(0)(0).length, identity),
+      s => array(books.indices.map { j =>
+        transform(array_sort(collect_list(when(s.getField("j") === j,
+          struct(s.getField("vc").getField("code").as("code"),
+            s.getField("vc").getField("v").as("v"))))), e => e.getField("v"))
+      }: _*))
+
+  /** The broadcast side of the table shape: one row per centroid (`t_cell`
+    * set) and one per (subspace, code) (`t_j`, `t_code` and the
+    * driver-precomputed ‖c‖² `t_cc` set), each with its vector `t_vec` and
+    * a row index `t_idx` — the SAME doubles the literal shape inlines, so
+    * every dot runs the same IEEE fold over the same operands and the two
+    * shapes agree bit for bit.
+    */
+  private def modelTable(spark: org.apache.spark.sql.SparkSession,
+      centroids: Array[Array[Double]], books: Array[Array[Array[Double]]]): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rows = centroids.toSeq.zipWithIndex.map { case (c, i) => (i, null, null, null, c) } ++
+      (for { j <- books.indices; (c, ci) <- books(j).zipWithIndex }
+        yield (null, j, ci, c.map(x => x * x).sum, c))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows.zipWithIndex.map {
+      case ((cell, j, code, cc, v), idx) => Row(idx, cell, j, code, cc, v.toSeq)
+    }, 1), StructType(Seq(
+      StructField("t_idx", IntegerType, nullable = false), StructField("t_cell", IntegerType),
+      StructField("t_j", IntegerType), StructField("t_code", IntegerType),
+      StructField("t_cc", DoubleType),
+      StructField("t_vec", ArrayType(DoubleType, containsNull = false), nullable = false))))
+  }
+
+  /** `rows` (which carry `unit`) plus the model-scored `cols`, in the shape
+    * `literal` selects.
+    *  - Literal: one projection over the inlined constants.
+    *  - Table: every row meets every [[modelTable]] row through a map-side
+    *    cross join against the broadcast model, each pair is scored in a
+    *    projection, and one aggregate per row folds the scores back. It
+    *    groups on a per-ROW key, not `vec_id`, so rows sharing an id stay
+    *    separate rows, as in the literal shape. The row's own columns ride
+    *    only its pair with model row 0, so the aggregate's input holds one
+    *    copy of each vector, not one per model row. Nothing model-sized
+    *    rides the plan or the generated code.
+    */
+  private def withModelCols(rows: DataFrame, literal: Boolean,
+      centroids: Array[Array[Double]], books: Array[Array[Array[Double]]],
+      cols: ModelCol*): DataFrame =
+    if (literal) rows.select(col("*") +: cols.map(c => c.inline.as(c.name)): _*)
+    else {
+      val keep = rows.columns.toSeq
+      val aggs = keep.map(c => first(col(c), ignoreNulls = true).as(c)) ++
+        cols.map(c => c.fold(col(c.name)).as(c.name))
+      rows.withColumn("rk", monotonically_increasing_id())
+        .crossJoin(broadcast(modelTable(rows.sparkSession, centroids, books)))
+        .select(col("rk") +: keep.map(c => when(col("t_idx") === 0, col(c)).as(c)) ++:
+          cols.map(c => c.score.as(c.name)): _*)
+        .groupBy(col("rk")).agg(aggs.head, aggs.tail: _*)
+        .drop("rk")
+    }
+
+  /** Each query row once per probed cell, as (cell, vec_id, unit): its
+    * `nProbe` nearest cells by (negSim, cell).
+    */
+  private def probeRows(q: DataFrame, centroids: Array[Array[Double]], nProbe: Int,
+      literal: Boolean): DataFrame = {
+    val ranked = rankedCells(centroids)
+    // the literal shape ranks inside the generator itself, with no extra
+    // projection below it
+    val (rows, order) =
+      if (literal) (q, ranked.inline)
+      else (withModelCols(q, literal, centroids, NoBooks, ranked), col(ranked.name))
+    rows.withColumn("probe", explode(slice(order, 1, nProbe)))
+      .select(col("probe.cell").as("cell"), col("vec_id"), col("unit"))
+  }
+
+  private def requireProbe(k: Int, nProbe: Int, nCentroids: Int): Unit = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    require(nProbe >= 1 && nProbe <= nCentroids,
+      s"need 1 <= nProbe <= nCentroids, got nProbe=$nProbe nCentroids=$nCentroids")
+  }
+
+  /** Per-query top-k of `scored` (q_id, n_id, score) by (score desc,
+    * n_id asc): (q_id, n_id, rank).
+    */
+  private def rankTopK(scored: DataFrame, score: String, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("q_id")).orderBy(col(score).desc, col("n_id").asc)
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("q_id"), col("n_id"), col("rank"))
+  }
+
+  /** The probe tail shared by IVF and IVF-PQ: the cell-keyed candidate join
+    * of the model's corpus frame against the per-probe query rows, one
+    * `score` per pair, top `n` per query. One assigned cell per vector and
+    * distinct probe cells per query mean a (q, n) pair matches on at most
+    * one cell, so no dedup aggregate (and its exchange) is needed.
+    */
+  private def probeTopN(corpus: DataFrame, queries: DataFrame, score: Column,
+      scoreName: String, n: Int): DataFrame =
+    rankTopK(corpus.join(queries, Seq("cell"))
+      .filter(col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("vec_id").as("n_id"), score.as(scoreName)), scoreName, n)
+
+  /** Final cell assignment from trained centroids: one scan, (vec_id,
+    * cell), same argmax/tie rule as training's assignment step. The shape
+    * follows [[fitsLiteral]]: k literal arrays scored in one codegen'd
+    * projection up to the ceiling, a broadcast centroid table past it.
+    */
+  def kmeansAssign(emb: DataFrame, idCol: String, vecCol: String,
       centroids: Array[Array[Double]]): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        centroids.toSeq.zipWithIndex.map { case (c, i) => org.apache.spark.sql.Row(i, c.toSeq) }, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("cell",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("cvec",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType, containsNull = false), nullable = false))))
+    kmeansAssignAs(emb, idCol, vecCol, centroids, fitsLiteral(centroids))
 
-  /** The (bj, bcode, cc, bvec) broadcast-side codebook frame for the
-    * join-shaped PQ stages: one row per (subspace, code) with the
-    * driver-precomputed ‖c‖² — the same double the literal form embeds
-    * as `lit(cc)`.
+  /** [[kmeansAssign]] in the table shape at any size: d44's entry point and
+    * the equality specs' handle on the shape that otherwise runs only past
+    * the ceiling.
     */
-  private def codebookTable(spark: org.apache.spark.sql.SparkSession,
-      books: Array[Array[Array[Double]]]): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        (for {
-          j <- books.indices
-          (c, ci) <- books(j).zipWithIndex
-        } yield org.apache.spark.sql.Row(j, ci, c.map(x => x * x).sum, c.toSeq)).toSeq, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("bj",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("bcode",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("cc",
-          org.apache.spark.sql.types.DoubleType, nullable = false),
-        org.apache.spark.sql.types.StructField("bvec",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType, containsNull = false), nullable = false))))
+  private[graft] def kmeansAssignJoin(emb: DataFrame, idCol: String, vecCol: String,
+      centroids: Array[Array[Double]]): DataFrame =
+    kmeansAssignAs(emb, idCol, vecCol, centroids, literal = false)
 
-  def kmeansAssignJoin(emb: DataFrame, idCol: String, vecCol: String,
-      centroids: Array[Array[Double]]): DataFrame = {
-    require(centroids.nonEmpty, "kmeansAssignJoin: no centroids")
-    normalized(emb, idCol, vecCol).filter(col("unit").isNotNull)
-      .crossJoin(broadcast(centroidTable(emb.sparkSession, centroids)))
-      .groupBy(col("vec_id"))
-      .agg(min(struct((-dot(col("unit"), col("cvec"))).as("negSim"),
-        col("cell").as("cell"))).getField("cell").as("cell"))
+  private def kmeansAssignAs(emb: DataFrame, idCol: String, vecCol: String,
+      centroids: Array[Array[Double]], literal: Boolean): DataFrame = {
+    require(centroids.nonEmpty, "kmeansAssign: no centroids")
+    withModelCols(normalized(emb, idCol, vecCol).filter(col("unit").isNotNull), literal,
+        centroids, NoBooks, nearestCell(centroids))
+      .select(col("vec_id"), col("cell"))
   }
 
   def ivfTopK(emb: DataFrame, idCol: String, vecCol: String, queryPred: Column,
@@ -647,49 +755,41 @@ object Similarity {
     val centroids =
       if (distributedTrainer) kmeansDistributed(emb, idCol, vecCol, nCentroids, iters)
       else ivfCentroids(emb, idCol, vecCol, nCentroids, sampleSize, iters)
-    requireLiteralCeiling(centroids.length, centroids.head.length, "ivfAssign",
-      "assign via a broadcast centroid table (the kmeansAssignJoin shape)")
-    // per-row cell assignment from broadcast centroid constants (struct
-    // ordering makes array_min pick by similarity first)
-    val cells = array(centroids.zipWithIndex.map { case (c, i) =>
-      struct((-dot(col("unit"), typedlit(c.toSeq))).as("negSim"), lit(i).as("cell"))
-    }: _*)
-    IvfModel(centroids, all.withColumn("cell", array_min(cells).getField("cell")))
+    IvfModel(centroids, withModelCols(all, fitsLiteral(centroids), centroids, NoBooks,
+      nearestCell(centroids)))
+  }
+
+  /** [[ivfAssign]]'s cell assignment in the table shape at any size, from
+    * the given centroids: the table-shape handle the equality specs use.
+    */
+  private[graft] def ivfAssignJoin(emb: DataFrame, idCol: String, vecCol: String,
+      centroids: Array[Array[Double]]): IvfModel = {
+    require(centroids.nonEmpty, "ivfAssignJoin: no centroids")
+    IvfModel(centroids, withModelCols(normalized(emb, idCol, vecCol).filter(col("unit").isNotNull),
+      literal = false, centroids, NoBooks, nearestCell(centroids)))
   }
 
   /** Query stage of [[ivfTopK]] against a pre-trained [[IvfModel]]: probe
-    * list from the model's centroids, equi-join on cell, exact dot on the
-    * probed candidates, per-query top-k.
+    * list from the model's centroids (shape by [[fitsLiteral]]), equi-join
+    * on cell, exact dot on the probed candidates, per-query top-k.
     */
   def ivfProbe(emb: DataFrame, idCol: String, vecCol: String, model: IvfModel,
-      queryPred: Column, k: Int, nProbe: Int = 2): DataFrame = {
-    val nCentroids = model.centroids.length
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(nProbe >= 1 && nProbe <= nCentroids,
-      s"need 1 <= nProbe <= nCentroids, got nProbe=$nProbe nCentroids=$nCentroids")
-    requireLiteralCeiling(nCentroids, model.centroids.head.length, "ivfProbe",
-      "rank probe cells via a broadcast centroid table")
-    val cells = array(model.centroids.zipWithIndex.map { case (c, i) =>
-      struct((-dot(col("unit"), typedlit(c.toSeq))).as("negSim"), lit(i).as("cell"))
-    }: _*)
+      queryPred: Column, k: Int, nProbe: Int = 2): DataFrame =
+    ivfProbeAs(emb, idCol, vecCol, model, queryPred, k, nProbe, fitsLiteral(model.centroids))
+
+  /** [[ivfProbe]] with its probe list in the table shape at any size. */
+  private[graft] def ivfProbeJoin(emb: DataFrame, idCol: String, vecCol: String,
+      model: IvfModel, queryPred: Column, k: Int, nProbe: Int = 2): DataFrame =
+    ivfProbeAs(emb, idCol, vecCol, model, queryPred, k, nProbe, literal = false)
+
+  private def ivfProbeAs(emb: DataFrame, idCol: String, vecCol: String, model: IvfModel,
+      queryPred: Column, k: Int, nProbe: Int, literal: Boolean): DataFrame = {
+    requireProbe(k, nProbe, model.centroids.length)
     // queryPred targets the caller's columns: filter emb BEFORE the rename
-    val queries = normalized(emb.filter(queryPred), idCol, vecCol)
-      .filter(col("unit").isNotNull)
-      .withColumn("probe", explode(slice(array_sort(cells), 1, nProbe)))
-      .select(col("probe.cell").as("cell"), col("vec_id").as("q_id"), col("unit").as("q_unit"))
-    val scored = model.assigned.join(queries, Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"),
-        dot(col("q_unit"), col("unit")).as("cos"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id").asc)
-    // no pair-dedup aggregate here (unlike [[lshTopK]]): every vector has
-    // exactly ONE assigned cell and a query's probe cells are distinct, so
-    // a (q, n) pair matches on at most one cell — the extra exchange a
-    // dedup groupBy would force on the candidate hot path buys nothing
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank"))
+    val q = normalized(emb.filter(queryPred), idCol, vecCol).filter(col("unit").isNotNull)
+    val queries = probeRows(q, model.centroids, nProbe, literal)
+      .select(col("cell"), col("vec_id").as("q_id"), col("unit").as("q_unit"))
+    probeTopN(model.assigned, queries, dot(col("q_unit"), col("unit")), "cos", k)
   }
 
   /** METADATA-FILTERED IVF search (round 17): [[ivfProbe]] with the
@@ -720,66 +820,6 @@ object Similarity {
     ivfProbe(emb, idCol, vecCol,
       model.copy(assigned = model.assigned.join(allowed, Seq("vec_id"), "left_semi")),
       queryPred, k, nProbe)
-  }
-
-  /** [[ivfAssign]]'s cell-assignment stage past the plan-literal ceiling
-    * (round 20): centroids from ANY trainer ship as a broadcast TABLE
-    * ([[kmeansAssignJoin]]'s shape) and the unit vector rides the same
-    * single aggregate (`first` — group-constant by construction, the
-    * cross join replicates one corpus row per cell), so the model frame
-    * has the (vec_id, unit, cell) columns [[ivfProbe]]/[[ivfProbeJoin]]
-    * read with nothing k-sized in the plan. Bit-identical to
-    * [[ivfAssign]]'s literal assignment (same [[dot]] fold, same struct
-    * tie order; SimilaritySpec pins it).
-    */
-  def ivfAssignJoin(emb: DataFrame, idCol: String, vecCol: String,
-      centroids: Array[Array[Double]]): IvfModel = {
-    require(centroids.nonEmpty, "ivfAssignJoin: no centroids")
-    val assigned = normalized(emb, idCol, vecCol).filter(col("unit").isNotNull)
-      .crossJoin(broadcast(centroidTable(emb.sparkSession, centroids)))
-      .groupBy(col("vec_id"))
-      .agg(first(col("unit")).as("unit"),
-        min(struct((-dot(col("unit"), col("cvec"))).as("negSim"),
-          col("cell").as("cell"))).getField("cell").as("cell"))
-    IvfModel(centroids, assigned)
-  }
-
-  /** [[ivfProbe]] past the plan-literal ceiling (round 20): the query's
-    * probe list comes from a broadcast centroid TABLE — each query meets
-    * all k cells through a map-side cross join and a per-query window
-    * keeps the nProbe nearest — instead of k inlined `typedlit` arrays.
-    * Ranking order (negSim ASC, cell ASC) is exactly the literal form's
-    * `array_sort` over (negSim, cell) structs, so the probed cell sets —
-    * and therefore the results — are bit-identical under the ceiling
-    * (SimilaritySpec pins it). The window's exchange is |Q|·k rows (the
-    * query batch, never the corpus); the candidate join and top-k tail
-    * are [[ivfProbe]]'s own stages unchanged.
-    */
-  def ivfProbeJoin(emb: DataFrame, idCol: String, vecCol: String,
-      model: IvfModel, queryPred: Column, k: Int, nProbe: Int = 2): DataFrame = {
-    val nCentroids = model.centroids.length
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(nProbe >= 1 && nProbe <= nCentroids,
-      s"need 1 <= nProbe <= nCentroids, got nProbe=$nProbe nCentroids=$nCentroids")
-    val q = normalized(emb.filter(queryPred), idCol, vecCol)
-      .filter(col("unit").isNotNull)
-    val wp = Window.partitionBy(col("q_id")).orderBy(col("negSim").asc, col("cell").asc)
-    val queries = broadcast(
-      q.crossJoin(broadcast(centroidTable(emb.sparkSession, model.centroids)))
-        .select(col("vec_id").as("q_id"), col("unit").as("q_unit"), col("cell"),
-          (-dot(col("unit"), col("cvec"))).as("negSim"))
-        .withColumn("pr", row_number().over(wp))
-        .filter(col("pr") <= nProbe)
-        .select(col("cell"), col("q_id"), col("q_unit")))
-    val scored = model.assigned.join(queries, Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"),
-        dot(col("q_unit"), col("unit")).as("cos"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank"))
   }
 
   /** Attach per-query recall@k to an approximate top-k result, measured
@@ -845,13 +885,9 @@ object Similarity {
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("n_id"),
         dot(col("q_unit"), col("unit")).as("cos"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id").asc)
     // a pair found in several tables must count once: max(cos) is a no-op
     // on the value (cos is pair-determined) and dedups the candidate set
-    scored.groupBy(col("q_id"), col("n_id")).agg(max(col("cos")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank"))
+    rankTopK(scored.groupBy(col("q_id"), col("n_id")).agg(max(col("cos")).as("cos")), "cos", k)
   }
 
   /** The deterministic product-quantization codebooks: bounded
@@ -963,21 +999,12 @@ object Similarity {
       var books: Array[Array[Array[Double]]] = Array.tabulate(m) { j =>
         initVecs.map(v => java.util.Arrays.copyOfRange(v, j * subDim, (j + 1) * subDim))
       }
-      def sub(u: Column, j: Int): Column = slice(u, j * subDim + 1, subDim)
       for (_ <- 0 until iters) {
         // one projection: per row, the m sub-code argmins over the current
-        // (broadcast-constant) books — the same (dist, code) struct order
-        // the encode expression uses
-        val codes = array((0 until m).map { j =>
-          array_min(array(books(j).zipWithIndex.map { case (c, ci) =>
-            val cc = c.map(x => x * x).sum
-            struct((lit(cc) - lit(2.0) * dot(sub(col("unit"), j), typedlit(c.toSeq))).as("dist"),
-              lit(ci).as("code"))
-          }: _*)).getField("code")
-        }: _*)
-        // one (subspace, code, sub-dim)-keyed shuffle of exact-integer
+        // (constant) books — the literal encoder every encode stage uses —
+        // then one (subspace, code, sub-dim)-keyed shuffle of exact-integer
         // partials; dim·ksub rows collected — config-bounded
-        val sums = all.select(codes.as("codes"), posexplode(col("unit")).as(Seq("d0", "v")))
+        val sums = all.select(pqCodes(books).as("codes"), posexplode(col("unit")).as(Seq("d0", "v")))
           .select((col("d0") / lit(subDim)).cast("int").as("j"),
             element_at(col("codes"), (col("d0") / lit(subDim)).cast("int") + 1).as("code"),
             pmod(col("d0"), lit(subDim)).cast("int").as("t"), col("v"))
@@ -1019,7 +1046,8 @@ object Similarity {
     * approximate (quantization error); the d26 entry measures recall@k
     * against [[bruteForceTopK]] via [[withRecallAtK]].
     *
-    * Determinism: codebooks are plan constants ([[pqCodebooks]]); encode
+    * Determinism: codebooks are deterministic ([[pqCodebooks]]), plan
+    * constants up to the [[fitsLiteral]] ceiling; encode
     * argmin orders by (distance, code); the ADC sum runs in fixed
     * subspace order — every double on both engines derives from the same
     * operands in the same sequence.
@@ -1034,36 +1062,16 @@ object Similarity {
       s"sampleSize=$sampleSize out of [4*ksub, 2^20]: the training sample is " +
         "collected to the driver; codebook quality saturates long before the cap")
     val books = pqCodebooks(emb, idCol, vecCol, m, ksub, sampleSize, iters)
-    val subDim = books(0)(0).length
-    val all = corpusNormalized(emb, idCol, vecCol).filter(col("unit").isNotNull)
-    def sub(u: Column, j: Int): Column = slice(u, j * subDim + 1, subDim)
-    // encode: per subspace, argmin_c (||c||² − 2·q_sub·c) with the ‖c‖²
-    // term a plan constant — array_min on (dist, code) structs ties to
-    // the lower code
-    val codes = array((0 until m).map { j =>
-      array_min(array(books(j).zipWithIndex.map { case (c, ci) =>
-        val cc = c.map(x => x * x).sum
-        struct((lit(cc) - lit(2.0) * dot(sub(col("unit"), j), typedlit(c.toSeq))).as("dist"),
-          lit(ci).as("code"))
-      }: _*)).getField("code")
-    }: _*)
-    val encoded = all.select(col("vec_id"), codes.as("codes"))
+    val literal = fitsLiteral(books.flatten)
+    val encoded = withModelCols(corpusNormalized(emb, idCol, vecCol).filter(col("unit").isNotNull),
+        literal, NoCentroids, books, codesCol(books))
+      .select(col("vec_id"), col("codes"))
     // per-query LUTs: m×ksub sub-dots, once per query row
-    val luts = array((0 until m).map { j =>
-      array(books(j).map(c => dot(sub(col("unit"), j), typedlit(c.toSeq))): _*)
-    }: _*)
-    val queries = broadcast(normalized(emb.filter(queryPred), idCol, vecCol)
-      .filter(col("unit").isNotNull)
-      .select(col("vec_id").as("q_id"), luts.as("luts")))
-    val adc = (0 until m).map { j =>
-      element_at(element_at(col("luts"), j + 1), element_at(col("codes"), j + 1) + 1)
-    }.reduce(_ + _)
-    val scored = encoded.join(queries, col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"), adc.as("score"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("n_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank"))
+    val queries = broadcast(withModelCols(normalized(emb.filter(queryPred), idCol, vecCol)
+        .filter(col("unit").isNotNull), literal, NoCentroids, books, lutsCol(books))
+      .select(col("vec_id").as("q_id"), col("luts")))
+    rankTopK(encoded.join(queries, col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("vec_id").as("n_id"), adc(m).as("score")), "score", k)
   }
 
   /** The shared exact re-rank stage behind [[pqTopKReranked]] and
@@ -1080,10 +1088,7 @@ object Similarity {
       .join(units.select(col("vec_id").as("q_id"), col("unit").as("q_unit")), "q_id")
       .join(units.select(col("vec_id").as("n_id"), col("unit").as("n_unit")), "n_id")
       .select(col("q_id"), col("n_id"), dot(col("q_unit"), col("n_unit")).as("cos"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id").asc)
-    rescored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank"))
+    rankTopK(rescored, "cos", k)
   }
 
   /** IVF-PQ with exact re-rank — the full production ANN stack in one
@@ -1148,36 +1153,33 @@ object Similarity {
 
   /** Corpus-encode stage shared by [[ivfPqEncode]] and
     * [[ivfPqEncodeDistributed]]: ONE full scan labeling every vector with
-    * its nearest cell and its m sub-codes from the given (plan-constant)
-    * centroids/books — the trainer supplies the constants, this stage is
-    * trainer-agnostic.
+    * its nearest cell and its m sub-codes from the given centroids/books —
+    * the trainer supplies the constants, this stage is trainer-agnostic.
+    * Literal shape while both sets fit under the ceiling, else one
+    * aggregate over a combined broadcast (centroid ∪ codebook) table.
     */
   private[graft] def encodeCorpus(emb: DataFrame, idCol: String, vecCol: String,
       centroids: Array[Array[Double]],
-      books: Array[Array[Array[Double]]]): IvfPqModel = {
-    val m = books.length
-    val all = normalized(emb, idCol, vecCol).filter(col("unit").isNotNull)
-    val subDim = books(0)(0).length
-    // the encode inlines k·dim centroid doubles AND ksub·dim codebook
-    // doubles as plan literals — both sets get the assignment ceiling
-    requireLiteralCeiling(centroids.length, centroids.head.length,
-      "IVF-PQ encode (centroids)", "assign via a broadcast centroid table")
-    requireLiteralCeiling(books(0).length, m.toLong * subDim,
-      "IVF-PQ encode (codebooks)", "encode via a broadcast codebook table")
-    def sub(u: Column, j: Int): Column = slice(u, j * subDim + 1, subDim)
-    val cells = array(centroids.zipWithIndex.map { case (c, i) =>
-      struct((-dot(col("unit"), typedlit(c.toSeq))).as("negSim"), lit(i).as("cell"))
-    }: _*)
-    val codes = array((0 until m).map { j =>
-      array_min(array(books(j).zipWithIndex.map { case (c, ci) =>
-        val cc = c.map(x => x * x).sum
-        struct((lit(cc) - lit(2.0) * dot(sub(col("unit"), j), typedlit(c.toSeq))).as("dist"),
-          lit(ci).as("code"))
-      }: _*)).getField("code")
-    }: _*)
-    val assigned = all.select(col("vec_id"),
-      array_min(cells).getField("cell").as("cell"), codes.as("codes"))
-    IvfPqModel(centroids, books, assigned)
+      books: Array[Array[Array[Double]]]): IvfPqModel =
+    encodeCorpusAs(emb, idCol, vecCol, centroids, books, fitsLiteral(centroids, books.flatten))
+
+  /** [[encodeCorpus]] in the table shape at any size (d45's encode). */
+  private[graft] def ivfPqEncodeJoin(emb: DataFrame, idCol: String, vecCol: String,
+      centroids: Array[Array[Double]],
+      books: Array[Array[Array[Double]]]): IvfPqModel =
+    encodeCorpusAs(emb, idCol, vecCol, centroids, books, literal = false)
+
+  private def encodeCorpusAs(emb: DataFrame, idCol: String, vecCol: String,
+      centroids: Array[Array[Double]], books: Array[Array[Array[Double]]],
+      literal: Boolean): IvfPqModel = {
+    require(centroids.nonEmpty && books.nonEmpty, "IVF-PQ encode: empty model")
+    require(books.length * books(0)(0).length == centroids.head.length,
+      s"IVF-PQ encode: m x subDim = ${books.length} x ${books(0)(0).length} " +
+        s"!= dim ${centroids.head.length}")
+    val encoded = withModelCols(normalized(emb, idCol, vecCol).filter(col("unit").isNotNull),
+        literal, centroids, books, nearestCell(centroids), codesCol(books))
+      .select(col("vec_id"), col("cell"), col("codes"))
+    IvfPqModel(centroids, books, encoded)
   }
 
   /** [[ivfPqEncode]] with BOTH trainers distributed (round 19): coarse
@@ -1221,157 +1223,33 @@ object Similarity {
     * codes, keep a `shortlist`·k shortlist, re-rank exactly. Everything
     * config-specific lives here — nothing in this stage touches the
     * corpus beyond the model's encoded frame and the |shortlist| ids the
-    * re-rank reads at full precision.
+    * re-rank reads at full precision. Probe lists and LUTs take the
+    * literal shape while both model sets fit under the ceiling, the table
+    * shape otherwise; everything query-sized broadcasts either way.
     */
   def ivfPqProbe(emb: DataFrame, idCol: String, vecCol: String,
       model: IvfPqModel, queryPred: Column, k: Int,
-      nProbe: Int = 2, shortlist: Int = 4): DataFrame = {
-    val nCentroids = model.centroids.length
-    val m = model.books.length
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(nProbe >= 1 && nProbe <= nCentroids,
-      s"need 1 <= nProbe <= nCentroids, got nProbe=$nProbe nCentroids=$nCentroids")
-    require(shortlist >= 1, s"shortlist factor must be >= 1, got $shortlist")
-    requireLiteralCeiling(nCentroids, model.centroids.head.length,
-      "ivfPqProbe (centroids)", "rank probe cells via a broadcast centroid table")
-    requireLiteralCeiling(model.books(0).length,
-      m.toLong * model.books(0)(0).length,
-      "ivfPqProbe (codebooks)", "build the per-query LUTs via a broadcast codebook table")
-    val subDim = model.books(0)(0).length
-    def sub(u: Column, j: Int): Column = slice(u, j * subDim + 1, subDim)
-    val cells = array(model.centroids.zipWithIndex.map { case (c, i) =>
-      struct((-dot(col("unit"), typedlit(c.toSeq))).as("negSim"), lit(i).as("cell"))
-    }: _*)
-    val luts = array((0 until m).map { j =>
-      array(model.books(j).map(c => dot(sub(col("unit"), j), typedlit(c.toSeq))): _*)
-    }: _*)
-    val queries = broadcast(normalized(emb.filter(queryPred), idCol, vecCol)
-      .filter(col("unit").isNotNull)
-      .withColumn("probe", explode(slice(array_sort(cells), 1, nProbe)))
-      .select(col("probe.cell").as("cell"), col("vec_id").as("q_id"), luts.as("luts")))
-    val adc = (0 until m).map { j =>
-      element_at(element_at(col("luts"), j + 1), element_at(col("codes"), j + 1) + 1)
-    }.reduce(_ + _)
-    // one assigned cell per vector + distinct probe cells per query ⇒ a
-    // (q, n) pair matches at most once — no dedup exchange (d09's note)
-    val scored = model.encoded.join(queries, Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"), adc.as("score"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("n_id").asc)
-    val short = scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k * shortlist)
-    rerankExact(emb, idCol, vecCol, short, k)
-  }
+      nProbe: Int = 2, shortlist: Int = 4): DataFrame =
+    ivfPqProbeAs(emb, idCol, vecCol, model, queryPred, k, nProbe, shortlist,
+      fitsLiteral(model.centroids, model.books.flatten))
 
-  /** [[encodeCorpus]] past the plan-literal ceiling (round 20, the d44
-    * discipline applied to the IVF-PQ encode): centroids AND codebooks
-    * ship as ONE combined broadcast table (kind 0 = centroid rows, kind 1
-    * = (subspace, code) rows) and a single hash aggregate per vector
-    * decides the cell (min over (negSim, cell) structs) and all m
-    * sub-codes (per-subspace min over (dist, code) structs) — nothing
-    * k- or book-sized rides the plan or the generated code, and the
-    * k+m·ksub-per-vector cross-join blowup collapses in the aggregate's
-    * map-side partials BEFORE the one vec_id exchange. Bit-identical to
-    * the literal encode (same dots, same ‖c‖² doubles, same struct tie
-    * orders; SimilaritySpec pins frame equality).
-    */
-  def ivfPqEncodeJoin(emb: DataFrame, idCol: String, vecCol: String,
-      centroids: Array[Array[Double]],
-      books: Array[Array[Array[Double]]]): IvfPqModel = {
-    require(centroids.nonEmpty && books.nonEmpty, "ivfPqEncodeJoin: empty model")
-    val m = books.length
-    val subDim = books(0)(0).length
-    require(m * subDim == centroids.head.length,
-      s"ivfPqEncodeJoin: m x subDim = $m x $subDim != dim ${centroids.head.length}")
-    val spark = emb.sparkSession
-    val cents = centroidTable(spark, centroids)
-      .select(lit(0).as("kind"), col("cell"), lit(null).cast("int").as("bj"),
-        lit(null).cast("int").as("bcode"), lit(null).cast("double").as("cc"),
-        col("cvec"))
-    val bks = codebookTable(spark, books)
-      .select(lit(1).as("kind"), lit(null).cast("int").as("cell"), col("bj"),
-        col("bcode"), col("cc"), col("bvec").as("cvec"))
-    val cellAgg = min(when(col("kind") === 0,
-      struct((-dot(col("unit"), col("cvec"))).as("negSim"), col("cell").as("cell"))))
-      .getField("cell").as("cell")
-    val codeAggs = (0 until m).map { j =>
-      min(when(col("kind") === 1 && col("bj") === j,
-        struct((col("cc") - lit(2.0) *
-          dot(slice(col("unit"), lit(j * subDim + 1), lit(subDim)), col("cvec"))).as("dist"),
-          col("bcode").as("code")))).getField("code")
-    }
-    val encoded = normalized(emb, idCol, vecCol).filter(col("unit").isNotNull)
-      .crossJoin(broadcast(cents.unionByName(bks)))
-      .groupBy(col("vec_id"))
-      .agg(cellAgg, array(codeAggs: _*).as("codes"))
-    IvfPqModel(centroids, books, encoded)
-  }
-
-  /** [[ivfPqProbe]] past the plan-literal ceiling (round 20, the round-19
-    * verdict's top item): every stage that inlined model constants is
-    * re-expressed over broadcast TABLES, bit-identical under the ceiling
-    * (SimilaritySpec pins literal-vs-join probe equality; d45 shares
-    * d43's full generated DuckDB replay):
-    *  - probe list: query × broadcast centroid table, per-query window
-    *    ordered (negSim ASC, cell ASC) — exactly the literal form's
-    *    `array_sort` over (negSim, cell) structs;
-    *  - per-query ADC LUTs: query × broadcast codebook table (m·ksub
-    *    rows per query), one per-query aggregate reshaping the sorted
-    *    (subspace, code, dot) entries into the same luts[j][c]
-    *    array-of-arrays the literal form builds inline — the dots are
-    *    the same [[dot]] folds over the same doubles, so every LUT value
-    *    is bit-identical;
-    *  - ADC scan, c·k shortlist and exact re-rank: [[ivfPqProbe]]'s own
-    *    trainer-agnostic stages unchanged.
-    * Everything query-sized (probe lists, LUTs) broadcasts; the corpus
-    * meets only the cell-keyed candidate join, as in the literal form.
-    */
-  def ivfPqProbeJoin(emb: DataFrame, idCol: String, vecCol: String,
+  /** [[ivfPqProbe]] in the table shape at any size (d45's probe). */
+  private[graft] def ivfPqProbeJoin(emb: DataFrame, idCol: String, vecCol: String,
       model: IvfPqModel, queryPred: Column, k: Int,
-      nProbe: Int = 2, shortlist: Int = 4): DataFrame = {
-    val nCentroids = model.centroids.length
-    val m = model.books.length
-    val ksub = model.books(0).length
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(nProbe >= 1 && nProbe <= nCentroids,
-      s"need 1 <= nProbe <= nCentroids, got nProbe=$nProbe nCentroids=$nCentroids")
+      nProbe: Int = 2, shortlist: Int = 4): DataFrame =
+    ivfPqProbeAs(emb, idCol, vecCol, model, queryPred, k, nProbe, shortlist, literal = false)
+
+  private def ivfPqProbeAs(emb: DataFrame, idCol: String, vecCol: String,
+      model: IvfPqModel, queryPred: Column, k: Int, nProbe: Int, shortlist: Int,
+      literal: Boolean): DataFrame = {
+    requireProbe(k, nProbe, model.centroids.length)
     require(shortlist >= 1, s"shortlist factor must be >= 1, got $shortlist")
-    val subDim = model.books(0)(0).length
-    val spark = emb.sparkSession
-    val q = normalized(emb.filter(queryPred), idCol, vecCol)
-      .filter(col("unit").isNotNull)
-    val wp = Window.partitionBy(col("q_id")).orderBy(col("negSim").asc, col("cell").asc)
-    val probed = q.crossJoin(broadcast(centroidTable(spark, model.centroids)))
-      .select(col("vec_id").as("q_id"), col("cell"),
-        (-dot(col("unit"), col("cvec"))).as("negSim"))
-      .withColumn("pr", row_number().over(wp))
-      .filter(col("pr") <= nProbe)
-      .select(col("cell"), col("q_id"))
-    // LUT entries land (bj, bcode)-unique per query, so the sorted-struct
-    // reshape below is deterministic; m·ksub rows per query, never
-    // corpus-sized
-    val luts = q.crossJoin(broadcast(codebookTable(spark, model.books)))
-      .select(col("vec_id").as("q_id"), col("bj"), col("bcode"),
-        dot(slice(col("unit"), col("bj") * lit(subDim) + lit(1), lit(subDim)),
-          col("bvec")).as("v"))
-      .groupBy(col("q_id"))
-      .agg(array_sort(collect_list(struct(col("bj"), col("bcode"), col("v")))).as("flat"))
-      .select(col("q_id"),
-        transform(sequence(lit(0), lit(m - 1)), j =>
-          transform(sequence(lit(0), lit(ksub - 1)), c =>
-            element_at(col("flat"), j * lit(ksub) + c + lit(1)).getField("v"))).as("luts"))
-    val queries = broadcast(probed.join(luts, Seq("q_id"))
-      .select(col("cell"), col("q_id"), col("luts")))
-    val adc = (0 until m).map { j =>
-      element_at(element_at(col("luts"), j + 1), element_at(col("codes"), j + 1) + 1)
-    }.reduce(_ + _)
-    val scored = model.encoded.join(queries, Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"), adc.as("score"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("n_id").asc)
-    val short = scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k * shortlist)
-    rerankExact(emb, idCol, vecCol, short, k)
+    val q = normalized(emb.filter(queryPred), idCol, vecCol).filter(col("unit").isNotNull)
+    val queries = broadcast(withModelCols(probeRows(q, model.centroids, nProbe, literal),
+        literal, NoCentroids, model.books, lutsCol(model.books))
+      .select(col("cell"), col("vec_id").as("q_id"), col("luts")))
+    rerankExact(emb, idCol, vecCol,
+      probeTopN(model.encoded, queries, adc(model.books.length), "score", k * shortlist), k)
   }
 
   /** [[pqTopK]] with the standard ANN re-rank stage: the ADC scan keeps a

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-import graft.SparkEntry
+import graft.{Bench, SparkEntry}
 import graft.engine.GraftSession
 
 /** Quiet-session adjudicator for sf1 band stamps (BENCH_NOTES protocol,
@@ -19,41 +19,13 @@ import graft.engine.GraftSession
   */
 object QuietRetime {
 
-  private class Listener extends org.apache.spark.scheduler.SparkListener {
-    val runTimeMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) runTimeMs.addAndGet(m.executorRunTime)
-    }
-  }
-
-  private def settled(l: Listener, maxWaitMs: Long = 500L): Long = {
-    val deadline = System.nanoTime() + maxWaitMs * 1000000L
-    var prev = l.runTimeMs.get(); var cur = prev
-    do { prev = cur; Thread.sleep(20L); cur = l.runTimeMs.get() }
-    while (cur != prev && System.nanoTime() < deadline)
-    cur
-  }
-
-  private val osBean: Option[com.sun.management.OperatingSystemMXBean] =
-    java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-      case b: com.sun.management.OperatingSystemMXBean => Some(b)
-      case _ => None
-    }
-
-  private def externalCores(): Double = osBean.map { b =>
-    val sys = b.getCpuLoad; val self = b.getProcessCpuLoad
-    if (sys < 0 || self < 0) -1.0
-    else math.max(0.0, (sys - self) * Runtime.getRuntime.availableProcessors())
-  }.getOrElse(-1.0)
-
   def main(args: Array[String]): Unit = {
     val names = args.headOption.getOrElse("d03_dedup_minhash,d05_ngram_jaccard")
       .split(',').map(_.trim).filter(_.nonEmpty).toSeq
     val runs = args.lift(1).map(_.toInt).getOrElse(3)
     val cpus = GraftSession.envCpus(32)
     val spark: SparkSession = GraftSession.build(cpus, "graft-quiet-retime")
-    val listener = new Listener
+    val listener = new Bench.TaskTimeListener
     spark.sparkContext.addSparkListener(listener)
     val sf1Dir = new java.io.File(
       sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "benchdata/sf1")).getAbsolutePath
@@ -62,13 +34,13 @@ object QuietRetime {
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown entry $name"))
       (1 to runs).foreach { i =>
-        externalCores()
-        val t0 = settled(listener)
+        Bench.externalCores()
+        val t0 = Bench.settledTaskMs(listener)
         val start = System.nanoTime()
         fn(spark, sf1Dir).write.format("noop").mode("overwrite").save()
         val wall = (System.nanoTime() - start) / 1e9
-        val ext = externalCores()
-        val task = settled(listener) - t0
+        val ext = Bench.externalCores()
+        val task = Bench.settledTaskMs(listener) - t0
         spark.catalog.clearCache()
         println(f"RETIME $name run=$i wall=$wall%.2f task_ms=$task ext_cores=$ext%.1f")
       }
