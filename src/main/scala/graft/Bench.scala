@@ -800,12 +800,10 @@ object Bench {
             case None => sys.props.remove("graft.ann.recall")
           }
         // ANN recall at scale (round 20, verdict item 5): d43's
-        // recall@k was measured at oracle SF only — here the DISTRIBUTED
-        // stack (d43/d45's trainers) and the sample-trained stack run at
-        // sf1 against the exact brute-force baseline, so "no-sample
-        // training" is shown quality-neutral at 10× volume, not assumed.
-        // Direct operator calls (the entry-level recall toggle is off for
-        // the timed sweep); the exact baseline is |Q|·|N| = 10·~50k dots.
+        // recall@k was measured at oracle SF only — here d43's stack runs
+        // at sf1 against the exact brute-force baseline. Direct operator
+        // calls (the entry-level recall toggle is off for the timed
+        // sweep); the exact baseline is |Q|·|N| = 10·~50k dots.
         val annRecallSf1: Seq[(String, Double)] = try {
           import org.apache.spark.sql.functions.{avg, col, max}
           import graft.operators.Similarity
@@ -819,12 +817,8 @@ object Bench {
               .agg(avg(col("recall"))).head().getDouble(0)
           val res = Seq(
             "d43_distributed" -> mean(Similarity.ivfPqProbe(emb, "vec_id", "embedding",
-              Similarity.ivfPqEncodeDistributed(emb, "vec_id", "embedding",
-                nCentroids = 8, m = 4, ksub = 8, iters = 3),
-              q, k, nProbe = 2, shortlist = 4)),
-            "sample_trained" -> mean(Similarity.ivfPqProbe(emb, "vec_id", "embedding",
               Similarity.ivfPqEncode(emb, "vec_id", "embedding",
-                nCentroids = 8, m = 4, ksub = 8, sampleSize = 512, iters = 3),
+                nCentroids = 8, m = 4, ksub = 8, iters = 3),
               q, k, nProbe = 2, shortlist = 4)))
           spark.catalog.clearCache()
           res

@@ -116,220 +116,108 @@ object SparkEntry {
        ${annOracleTail(k)}"""
   }
 
-  /** Shared tail of the d08/d09 replays: the exact baseline (d07-proven
-    * DuckDB-equal), recall@k with [[Similarity.withRecallAtK]]'s exact-
-    * side-driven left join and least(n_exact, k) denominator, and the
-    * final (q_id, n_id, rank, recall) projection. Expects CTEs `n`
-    * (vec_id, v) and `ap` (q_id, n_id, rank) upstream.
+  /** The exact baseline of the ANN replays (d07-proven DuckDB-equal):
+    * `ex(q_id, n_id)`, each `vec_id < 10` query's exact top-k neighbors
+    * (restricted to `cand`, a predicate over the candidate's embeddings
+    * row aliased `l`, when given), and `n_ex(q_id, n_exact)`.
     */
-  private def annOracleTail(k: Int): String =
+  private def exactCtes(k: Int, cand: Option[String] = None): String = {
+    val (join, filter) = cand.fold(("", ""))(c =>
+      (" JOIN embeddings l ON l.vec_id = nb.vec_id", s" AND ($c)"))
     s"""ex AS (SELECT q_id, n_id FROM (
                 SELECT q.vec_id AS q_id, nb.vec_id AS n_id,
                   ROW_NUMBER() OVER (PARTITION BY q.vec_id
                     ORDER BY list_cosine_similarity(q.v, nb.v) DESC, nb.vec_id ASC) AS rank
-                FROM n q JOIN n nb ON nb.vec_id <> q.vec_id WHERE q.vec_id < 10)
+                FROM n q JOIN n nb ON nb.vec_id <> q.vec_id$join WHERE q.vec_id < 10$filter)
               WHERE rank <= $k),
-       n_ex AS (SELECT q_id, COUNT(*) AS n_exact FROM ex GROUP BY q_id),
-       hits AS (SELECT a.q_id, COUNT(*) AS n_hit
-                FROM ap a JOIN ex e ON a.q_id = e.q_id AND a.n_id = e.n_id GROUP BY a.q_id),
-       perq AS (SELECT n_ex.q_id,
+       n_ex AS (SELECT q_id, COUNT(*) AS n_exact FROM ex GROUP BY q_id)"""
+  }
+
+  /** Per-query recall of the top-k CTE `ap$g` against `ex`/`n_ex`:
+    * `perq$g(q_id, recall)` with [[Similarity.withRecallAtK]]'s
+    * exact-side-driven left join and least(n_exact, k) denominator.
+    */
+  private def recallCtes(g: String, k: Int): String =
+    s"""hits$g AS (SELECT a.q_id, COUNT(*) AS n_hit
+                FROM ap$g a JOIN ex e ON a.q_id = e.q_id AND a.n_id = e.n_id GROUP BY a.q_id),
+       perq$g AS (SELECT n_ex.q_id,
                   CAST(COALESCE(h.n_hit, 0) AS DOUBLE) / LEAST(n_ex.n_exact, $k) AS recall
-                FROM n_ex LEFT JOIN hits h ON h.q_id = n_ex.q_id)
+                FROM n_ex LEFT JOIN hits$g h ON h.q_id = n_ex.q_id)"""
+
+  /** Shared tail of the single-config ANN replays: the exact baseline,
+    * recall@k of CTE `ap` (q_id, n_id, rank) and the final (q_id, n_id,
+    * rank, recall) projection. Expects CTE `n` (vec_id, v) upstream.
+    */
+  private def annOracleTail(k: Int, cand: Option[String] = None): String =
+    s"""${exactCtes(k, cand)},
+       ${recallCtes("", k)}
        SELECT p.q_id, a.n_id, a.rank, p.recall
        FROM perq p LEFT JOIN ap a ON a.q_id = p.q_id"""
 
-  /** Generated DuckDB replay of d09's IVF pipeline — the data-dependent
-    * sibling of [[lshOracleSql]]. The centroids are deterministic plan
-    * constants ([[Similarity.ivfCentroids]]: seeded-order sample + local
-    * k-means), so the generator trains the IDENTICAL set on the dump dir
-    * and embeds it. Cell assignment (argmax sim, cell-index tiebreak) and
-    * the nProbe probe list replay Spark's array_min/array_sort-over-struct
-    * ordering as ROW_NUMBER ties; assignment on raw vectors is valid
-    * because argmax of dot(raw, c) = argmax of dot(unit, c) (positive
-    * per-row scale). Generated only when Verify supplies the oracle
-    * context — a static string cannot embed centroids it has not seen.
+  /** Shared tail of the d25/d35 curve replays: one (key, q_id, recall,
+    * n_returned) branch per config `(g, key)` whose top-k is CTE `ap$g`,
+    * UNION ALL'd, all against one exact baseline.
     */
-  private def ivfOracleSql(spark: SparkSession, dir: String, nCentroids: Int,
-      nProbe: Int, sampleSize: Int, iters: Int, k: Int): String = {
-    val centroids = graft.operators.Similarity.ivfCentroids(
-      t(spark, dir, "embeddings"), "vec_id", "embedding", nCentroids, sampleSize, iters)
-    val cellSims = centroids.zipWithIndex.map { case (c, i) =>
-      s"SELECT vec_id, $i AS cell, list_dot_product(v, ${c.mkString("[", ", ", "]")}) AS sim FROM n"
-    }.mkString("\n       UNION ALL\n       ")
-    s"""WITH n AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-                   WHERE embedding IS NOT NULL),
-       sims AS (
-       $cellSims),
-       ranked AS (SELECT vec_id, cell,
-                    ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell ASC) AS rn
-                  FROM sims),
-       assign AS (SELECT vec_id, cell FROM ranked WHERE rn = 1),
-       probes AS (SELECT vec_id AS q_id, cell FROM ranked WHERE rn <= $nProbe AND vec_id < 10),
-       cand AS (SELECT DISTINCT p.q_id, a.vec_id AS n_id
-                FROM probes p JOIN assign a ON a.cell = p.cell AND a.vec_id <> p.q_id),
-       scored AS (SELECT c.q_id, c.n_id, list_cosine_similarity(qa.v, nb.v) AS cos
-                  FROM cand c JOIN n qa ON qa.vec_id = c.q_id JOIN n nb ON nb.vec_id = c.n_id),
-       ap AS (SELECT q_id, n_id, CAST(rank AS INT) AS rank FROM (
-                SELECT q_id, n_id,
-                  ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) AS rank
-                FROM scored) WHERE rank <= $k),
-       ${annOracleTail(k)}"""
-  }
-
-  /** Generated DuckDB replay of d25's nProbe → recall curve: the same
-    * deterministic centroid set as [[ivfOracleSql]] (trained ONCE, shared
-    * across the probe configs), then one flat CTE chain per nProbe —
-    * probe list, cell-candidate join, cosine re-rank, recall@k against
-    * the shared exact baseline — UNION ALL'd into the (n_probe, q_id,
-    * recall, n_returned) curve. Replays [[Similarity.withRecallAtK]]'s
-    * exact-side-driven join and least(n_exact, k) denominator per config.
-    */
-  private def ivfCurveOracleSql(spark: SparkSession, dir: String, nProbes: Seq[Int],
-      nCentroids: Int, sampleSize: Int, iters: Int, k: Int): String = {
-    val centroids = graft.operators.Similarity.ivfCentroids(
-      t(spark, dir, "embeddings"), "vec_id", "embedding", nCentroids, sampleSize, iters)
-    val cellSims = centroids.zipWithIndex.map { case (c, i) =>
-      s"SELECT vec_id, $i AS cell, list_dot_product(v, ${c.mkString("[", ", ", "]")}) AS sim FROM n"
-    }.mkString("\n       UNION ALL\n       ")
-    val perNp = nProbes.map { np =>
-      s"""probes$np AS (SELECT vec_id AS q_id, cell FROM ranked WHERE rn <= $np AND vec_id < 10),
-       cand$np AS (SELECT DISTINCT p.q_id, a.vec_id AS n_id
-                   FROM probes$np p JOIN assign a ON a.cell = p.cell AND a.vec_id <> p.q_id),
-       scored$np AS (SELECT c.q_id, c.n_id, list_cosine_similarity(qa.v, nb.v) AS cos
-                     FROM cand$np c JOIN n qa ON qa.vec_id = c.q_id
-                       JOIN n nb ON nb.vec_id = c.n_id),
-       ap$np AS (SELECT q_id, n_id FROM (
-                   SELECT q_id, n_id,
-                     ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) AS rank
-                   FROM scored$np) WHERE rank <= $k),
-       hits$np AS (SELECT a.q_id, COUNT(*) AS n_hit
-                   FROM ap$np a JOIN ex e ON a.q_id = e.q_id AND a.n_id = e.n_id GROUP BY 1),
-       ret$np AS (SELECT q_id, CAST(COUNT(*) AS BIGINT) AS n_returned
-                  FROM ap$np GROUP BY 1)"""
+  private def curveTail(k: Int, configs: Seq[(String, String)]): String = {
+    val ctes = configs.map { case (g, _) =>
+      s"""${recallCtes(g, k)},
+       ret$g AS (SELECT q_id, CAST(COUNT(*) AS BIGINT) AS n_returned FROM ap$g GROUP BY 1)"""
     }.mkString(",\n       ")
-    val branches = nProbes.map { np =>
-      s"""SELECT $np AS n_probe, n_ex.q_id,
-           CAST(COALESCE(h.n_hit, 0) AS DOUBLE) / LEAST(n_ex.n_exact, $k) AS recall,
-           COALESCE(r.n_returned, 0) AS n_returned
-         FROM n_ex LEFT JOIN hits$np h ON h.q_id = n_ex.q_id
-           LEFT JOIN ret$np r ON r.q_id = n_ex.q_id"""
+    val branches = configs.map { case (g, key) =>
+      s"""SELECT $key, p.q_id, p.recall, COALESCE(r.n_returned, 0) AS n_returned
+         FROM perq$g p LEFT JOIN ret$g r ON r.q_id = p.q_id"""
     }.mkString("\n       UNION ALL\n       ")
-    s"""WITH n AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-                   WHERE embedding IS NOT NULL),
-       sims AS (
-       $cellSims),
-       ranked AS (SELECT vec_id, cell,
-                    ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell ASC) AS rn
-                  FROM sims),
-       assign AS (SELECT vec_id, cell FROM ranked WHERE rn = 1),
-       ex AS (SELECT q_id, n_id FROM (
-                SELECT q.vec_id AS q_id, nb.vec_id AS n_id,
-                  ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                    ORDER BY list_cosine_similarity(q.v, nb.v) DESC, nb.vec_id ASC) AS rank
-                FROM n q JOIN n nb ON nb.vec_id <> q.vec_id WHERE q.vec_id < 10)
-              WHERE rank <= $k),
-       n_ex AS (SELECT q_id, COUNT(*) AS n_exact FROM ex GROUP BY q_id),
-       $perNp
+    s"""${exactCtes(k)},
+       $ctes
        $branches"""
   }
 
-  /** Generated DuckDB replay of d39's FILTERED IVF search — the filtered
-    * sibling of [[ivfOracleSql]]: same deterministic centroids, same probe
-    * list, but candidates are restricted by `candSql` (over the `n` CTE's
-    * columns, here carrying `label`) BEFORE scoring, and the recall tail's
-    * exact baseline ranks only FILTERED neighbors — [[annOracleTail]]
-    * cannot be reused because its `ex` is unfiltered by construction.
-    * Queries stay unfiltered (a query outside the filter still searches
-    * the filtered corpus), replaying [[Similarity.ivfProbeFiltered]].
-    *
-    * `candSql` takes the candidate-side table ALIAS and renders the
-    * predicate against it — the approximate branch applies it to `nn`,
-    * the exact baseline to `nb` (round 18, advisor find: the previous
-    * `String` + blind `.replace("nn.", "nb.")` would silently corrupt
-    * any future predicate containing "nn." inside a literal or another
-    * identifier, producing a wrong recall baseline).
+  /** Top-`k` CTE `name(q_id, n_id, rank)` of `from` by (`score` desc,
+    * n_id asc) — [[Similarity]]'s rankTopK order.
     */
-  private def ivfFilteredOracleSql(spark: SparkSession, dir: String, nCentroids: Int,
-      nProbe: Int, sampleSize: Int, iters: Int, k: Int,
-      candSql: String => String): String = {
-    val centroids = graft.operators.Similarity.ivfCentroids(
-      t(spark, dir, "embeddings"), "vec_id", "embedding", nCentroids, sampleSize, iters)
-    val cellSims = centroids.zipWithIndex.map { case (c, i) =>
-      s"SELECT vec_id, $i AS cell, list_dot_product(v, ${c.mkString("[", ", ", "]")}) AS sim FROM n"
-    }.mkString("\n       UNION ALL\n       ")
-    s"""WITH n AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label FROM embeddings
-                   WHERE embedding IS NOT NULL),
-       sims AS (
-       $cellSims),
-       ranked AS (SELECT vec_id, cell,
-                    ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell ASC) AS rn
-                  FROM sims),
-       fassign AS (SELECT r.vec_id, r.cell FROM ranked r JOIN n nn ON nn.vec_id = r.vec_id
-                   WHERE r.rn = 1 AND (${candSql("nn")})),
-       probes AS (SELECT vec_id AS q_id, cell FROM ranked WHERE rn <= $nProbe AND vec_id < 10),
-       cand AS (SELECT DISTINCT p.q_id, a.vec_id AS n_id
-                FROM probes p JOIN fassign a ON a.cell = p.cell AND a.vec_id <> p.q_id),
-       scored AS (SELECT c.q_id, c.n_id, list_cosine_similarity(qa.v, nb.v) AS cos
-                  FROM cand c JOIN n qa ON qa.vec_id = c.q_id JOIN n nb ON nb.vec_id = c.n_id),
-       ap AS (SELECT q_id, n_id, CAST(rank AS INT) AS rank FROM (
+  private def topKCte(name: String, from: String, score: String, k: Int): String =
+    s"""$name AS (SELECT q_id, n_id, CAST(rank AS INT) AS rank FROM (
                 SELECT q_id, n_id,
-                  ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) AS rank
-                FROM scored) WHERE rank <= $k),
-       ex AS (SELECT q_id, n_id FROM (
-                SELECT q.vec_id AS q_id, nb.vec_id AS n_id,
-                  ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                    ORDER BY list_cosine_similarity(q.v, nb.v) DESC, nb.vec_id ASC) AS rank
-                FROM n q JOIN n nb ON nb.vec_id <> q.vec_id
-                WHERE q.vec_id < 10 AND (${candSql("nb")}))
-              WHERE rank <= $k),
-       n_ex AS (SELECT q_id, COUNT(*) AS n_exact FROM ex GROUP BY q_id),
-       hits AS (SELECT a.q_id, COUNT(*) AS n_hit
-                FROM ap a JOIN ex e ON a.q_id = e.q_id AND a.n_id = e.n_id GROUP BY a.q_id),
-       perq AS (SELECT n_ex.q_id,
-                  CAST(COALESCE(h.n_hit, 0) AS DOUBLE) / LEAST(n_ex.n_exact, $k) AS recall
-                FROM n_ex LEFT JOIN hits h ON h.q_id = n_ex.q_id)
-       SELECT p.q_id, a.n_id, a.rank, p.recall
-       FROM perq p LEFT JOIN ap a ON a.q_id = p.q_id"""
-  }
+                  ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY $score DESC, n_id ASC) AS rank
+                FROM $from) WHERE rank <= $k)"""
 
-  /** Generated DuckDB replay of d26's full PQ/ADC pipeline: embeds the
-    * deterministic per-subspace codebooks ([[Similarity.pqCodebooks]],
-    * trained on the dump dir exactly as the Spark plan trains them) and
-    * recomputes unit-normalization (bit-identical: sequential squared
-    * sum, one sqrt, per-element divide — [[graft.functions
-    * .UnitNormExpr]]'s order), the per-subspace encode argmin over
-    * `‖c‖² − 2·sub·c` with (dist, code) tie order (list_min + first
-    * list_position = lowest code, matching array_min on structs), the
-    * ADC score as the same left-assoc sum of sub-dots in subspace order,
-    * and recall@k against the shared exact baseline. ‖c‖² constants are
-    * folded in Scala with the same left fold the Spark literal uses.
+  /** The embedding dim of the dump dir's corpus: the one fact the ANN
+    * replays read from the data. Everything else in their SQL is a pure
+    * function of the entry's config.
     */
-  /** The two PQ SQL fragments shared by the d26/d32/d34 replays: the
-    * per-subspace encode columns (`code0..code{m-1}` over a CTE aliased
-    * `u`) and the ADC score expression (expects table aliases `q` for
-    * the query units and `e` for the encoded candidates).
+  private def embDim(spark: SparkSession, dir: String): Int =
+    t(spark, dir, "embeddings")
+      .select(size(col("embedding")).as("d")).filter(col("d") > 0)
+      .head().getInt(0)
+
+  /** The raw (`n`: vec_id, v) and unit (`un`: vec_id, u) corpus CTEs the
+    * training replays start from; `un` recomputes unit-normalization bit
+    * for bit ([[graft.functions.UnitNormExpr]]'s order: sequential
+    * squared sum, one sqrt, per-element divide).
     */
-  /** Generated DuckDB replay of d42's FULL distributed k-means TRAINING —
-    * unlike the other ANN replays (which embed Spark-trained constants
-    * and replay only the query stage), every Lloyd's iteration is
-    * re-derived in SQL from the raw table: init = the k lowest-id unit
-    * vectors; per iteration, assignment by sequential-fold
+  private val unitCtes =
+    """n AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+                   WHERE embedding IS NOT NULL),
+       un AS MATERIALIZED (SELECT vec_id,
+                CASE WHEN list_dot_product(v, v) = 0 THEN v
+                     ELSE list_transform(v, x -> x / sqrt(list_dot_product(v, v))) END AS u
+              FROM n)"""
+
+  /** The WITH-body of every replay over [[Similarity.kmeansDistributed]]
+    * (d09, d25, d34, d35, d39, d42-d45, x20, p27): the FULL training
+    * re-derived in SQL, never Spark-trained constants. Init = the k
+    * lowest-id unit vectors; per iteration, assignment by sequential-fold
     * `list_dot_product` argmax (ties to the lowest cell — the Spark
     * side's array_min struct order) and re-estimation by EXACT integer
     * sums of floor(u·1e6) per (cell, dim), normalized directly (the
     * mean's division cancels under normalization, so no decimal-rounding
-    * divergence exists between engines). Only `dim` is read from the
-    * data; the SQL itself is a pure function of (k, iters, dim).
+    * divergence exists between engines). Ends with the final centroids
+    * `c{iters}` and the final assignment `fa(vec_id, cell)`. Each
+    * iteration reads the previous centroids twice (assignment, and the
+    * keep-previous join for empty cells), so the model CTEs are
+    * MATERIALIZED: inlined, iteration i would be re-derived 2^i times.
     */
-  /** The WITH-body shared by the d42 and x20 replays: normalization, k
-    * lowest-id init, `iters` unrolled Lloyd's iterations, and the final
-    * assignment as CTE `fa(vec_id, cell)`.
-    */
-  private def kmeansAssignCtes(spark: SparkSession, dir: String,
-      k: Int, iters: Int): String = {
-    val dim = t(spark, dir, "embeddings")
-      .select(size(col("embedding")).as("d")).filter(col("d") > 0)
-      .head().getInt(0)
+  private def kmeansAssignCtes(dim: Int, k: Int, iters: Int): String = {
     def assignSql(from: String): String =
       s"""SELECT vec_id, cell FROM (
          SELECT un.vec_id, c.cell,
@@ -345,18 +233,13 @@ object SparkEntry {
          GROUP BY 1, 2),
        v$i AS (SELECT cell, list(CAST(s AS DOUBLE) ORDER BY dim) AS sv
          FROM s$i GROUP BY cell),
-       c$i AS (SELECT c.cell,
+       c$i AS MATERIALIZED (SELECT c.cell,
            CASE WHEN v.cell IS NULL OR list_dot_product(v.sv, v.sv) = 0 THEN c.cvec
                 ELSE list_transform(v.sv, x -> x / sqrt(list_dot_product(v.sv, v.sv))) END AS cvec
          FROM $prev c LEFT JOIN v$i v ON v.cell = c.cell)"""
     }.mkString(",\n       ")
-    s"""WITH n AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-                   WHERE embedding IS NOT NULL),
-       un AS (SELECT vec_id,
-                CASE WHEN list_dot_product(v, v) = 0 THEN v
-                     ELSE list_transform(v, x -> x / sqrt(list_dot_product(v, v))) END AS u
-              FROM n),
-       c0 AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell, u AS cvec
+    s"""WITH $unitCtes,
+       c0 AS MATERIALIZED (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell, u AS cvec
               FROM (SELECT vec_id, u FROM un ORDER BY vec_id LIMIT $k)),
        $iterBlocks,
        fa AS (${assignSql(s"c$iters")})"""
@@ -364,7 +247,7 @@ object SparkEntry {
 
   private def kmeansOracleSql(spark: SparkSession, dir: String,
       k: Int, iters: Int): String =
-    s"""${kmeansAssignCtes(spark, dir, k, iters)}
+    s"""${kmeansAssignCtes(embDim(spark, dir), k, iters)}
        SELECT vec_id, CAST(cell AS INT) AS cell FROM fa"""
 
   /** Generated DuckDB replay of x20: the d42 training CTEs plus the
@@ -373,7 +256,7 @@ object SparkEntry {
     */
   private def clusterSplitOracleSql(spark: SparkSession, dir: String,
       k: Int, iters: Int, trainPct: Int): String =
-    s"""${kmeansAssignCtes(spark, dir, k, iters)},
+    s"""${kmeansAssignCtes(embDim(spark, dir), k, iters)},
        rk AS (SELECT cell,
            ROW_NUMBER() OVER (PARTITION BY cell ORDER BY
              CAST(('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15)) AS BIGINT) ASC,
@@ -391,7 +274,7 @@ object SparkEntry {
     */
   private def clusterProfileOracleSql(spark: SparkSession, dir: String,
       k: Int, iters: Int): String =
-    s"""${kmeansAssignCtes(spark, dir, k, iters)},
+    s"""${kmeansAssignCtes(embDim(spark, dir), k, iters)},
        j AS (SELECT fa.cell, d.source, length(d.text) AS len,
                $langCaseSql AS lang
              FROM documents d JOIN fa ON fa.vec_id = d.doc_id),
@@ -408,18 +291,73 @@ object SparkEntry {
          st.n_sources, tl.lang AS top_lang
        FROM st JOIN tl ON tl.cell = st.cell"""
 
-  /** Per-subspace DISTRIBUTED PQ training CTEs for the d43 replay —
-    * [[kmeansAssignCtes]]' discipline applied to
-    * [[Similarity.pqCodebooksDistributed]]'s Euclidean Lloyd's: per
-    * subspace j, init = slices of the ksub lowest-id unit vectors;
-    * per iteration, assignment by argmin ‖c‖² − 2·sub·c (both terms
-    * sequential list_dot_product folds, ties to the lowest code) and
-    * re-estimation as EXACT integer sums of floor(u·1e6) per (code,
-    * sub-dim) divided by n·1e6 in ONE IEEE double division (exact
-    * operands → bit-identical on any engine; an empty code keeps its
-    * previous centroid). `penc{j}` is the final per-subspace encode —
-    * one more assignment pass over the final books. Expects CTE `un`
-    * upstream.
+  /** Every query's (`vec_id < 10`) cells against the final centroids
+    * `c{iters}`, ranked by (dot desc, cell asc) — the Spark probe list's
+    * array_sort struct order: `qrank(q_id, cell, rn)`.
+    */
+  private def qrankCte(iters: Int): String =
+    s"""qrank AS (SELECT un.vec_id AS q_id, c.cell,
+           ROW_NUMBER() OVER (PARTITION BY un.vec_id
+             ORDER BY list_dot_product(un.u, c.cvec) DESC, c.cell ASC) AS rn
+         FROM un CROSS JOIN c$iters c WHERE un.vec_id < 10)"""
+
+  /** [[Similarity.ivfProbe]] replayed as top-k CTE `ap$g`: candidates of
+    * `assign(vec_id, cell)` in each query's `nProbe` best cells, scored by
+    * the exact unit dot.
+    */
+  private def ivfProbeCtes(g: String, assign: String, nProbe: Int, k: Int): String =
+    s"""scored$g AS (SELECT p.q_id, a.vec_id AS n_id, list_dot_product(qu.u, nu.u) AS cos
+                FROM qrank p JOIN $assign a ON a.cell = p.cell AND a.vec_id <> p.q_id
+                  JOIN un qu ON qu.vec_id = p.q_id JOIN un nu ON nu.vec_id = a.vec_id
+                WHERE p.rn <= $nProbe),
+       ${topKCte(s"ap$g", s"scored$g", "cos", k)}"""
+
+  /** Generated DuckDB replay of d09: [[kmeansAssignCtes]]' training, the
+    * nProbe probe list, exact scoring of the probed cells, recall@k.
+    */
+  private def ivfOracleSql(spark: SparkSession, dir: String, nCentroids: Int,
+      nProbe: Int, iters: Int, k: Int): String =
+    s"""${kmeansAssignCtes(embDim(spark, dir), nCentroids, iters)},
+       ${qrankCte(iters)},
+       ${ivfProbeCtes("", "fa", nProbe, k)},
+       ${annOracleTail(k)}"""
+
+  /** Generated DuckDB replay of d25's nProbe → recall curve: one training,
+    * one probe chain per nProbe against the shared assignment.
+    */
+  private def ivfCurveOracleSql(spark: SparkSession, dir: String, nProbes: Seq[Int],
+      nCentroids: Int, iters: Int, k: Int): String =
+    s"""${kmeansAssignCtes(embDim(spark, dir), nCentroids, iters)},
+       ${qrankCte(iters)},
+       ${nProbes.map(np => ivfProbeCtes(s"$np", "fa", np, k)).mkString(",\n       ")},
+       ${curveTail(k, nProbes.map(np => (s"$np", s"$np AS n_probe")))}"""
+
+  /** Generated DuckDB replay of d39's FILTERED IVF search: the d09 chain
+    * with candidates restricted by `cand` (over the embeddings row aliased
+    * `l`) BEFORE scoring, and an exact baseline that ranks only filtered
+    * neighbors. Queries stay unfiltered (a query outside the filter still
+    * searches the filtered corpus), replaying [[Similarity.ivfProbeFiltered]].
+    */
+  private def ivfFilteredOracleSql(spark: SparkSession, dir: String, nCentroids: Int,
+      nProbe: Int, iters: Int, k: Int, cand: String): String =
+    s"""${kmeansAssignCtes(embDim(spark, dir), nCentroids, iters)},
+       fassign AS (SELECT fa.vec_id, fa.cell FROM fa JOIN embeddings l ON l.vec_id = fa.vec_id
+                   WHERE ($cand)),
+       ${qrankCte(iters)},
+       ${ivfProbeCtes("", "fassign", nProbe, k)},
+       ${annOracleTail(k, Some(cand))}"""
+
+  /** Per-subspace PQ training CTEs of every replay over
+    * [[Similarity.pqCodebooksDistributed]] — [[kmeansAssignCtes]]'
+    * discipline applied to its Euclidean Lloyd's: per subspace j, init =
+    * slices of the ksub lowest-id unit vectors; per iteration, assignment
+    * by argmin ‖c‖² − 2·sub·c (both terms sequential list_dot_product
+    * folds, ties to the lowest code) and re-estimation as EXACT integer
+    * sums of floor(u·1e6) per (code, sub-dim) divided by n·1e6 in ONE IEEE
+    * double division (exact operands → bit-identical on any engine; an
+    * empty code keeps its previous centroid). `pb{j}_{iters}` are the
+    * final books (MATERIALIZED, as in [[kmeansAssignCtes]]) and `penc{j}`
+    * the final per-subspace encode. Expects CTE `un` upstream.
     */
   private def pqTrainCtes(dim: Int, m: Int, ksub: Int, iters: Int): String = {
     require(dim % m == 0, s"dim=$dim not divisible by m=$m")
@@ -436,7 +374,7 @@ object SparkEntry {
                  b.code ASC) AS rn
            FROM un CROSS JOIN $from b) WHERE rn = 1)"""
       val init =
-        s"""pb${j}_0 AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code,
+        s"""pb${j}_0 AS MATERIALIZED (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code,
              u[$lo:$hi] AS bvec
            FROM (SELECT vec_id, u FROM un ORDER BY vec_id LIMIT $ksub))"""
       val iterBlocks = (1 to iters).map { i =>
@@ -446,7 +384,7 @@ object SparkEntry {
            COUNT(*) AS n
          FROM pa${j}_$i a JOIN un ON un.vec_id = a.vec_id, range(1, ${subDim + 1}) d(i)
          GROUP BY 1, 2),
-       pb${j}_$i AS (SELECT b.code,
+       pb${j}_$i AS MATERIALIZED (SELECT b.code,
            CASE WHEN v.code IS NULL THEN b.bvec ELSE v.bvec END AS bvec
          FROM pb${j}_${i - 1} b LEFT JOIN (
            SELECT code, list(CAST(s AS DOUBLE) / (n * 1e6) ORDER BY t) AS bvec
@@ -458,294 +396,137 @@ object SparkEntry {
     }.mkString(",\n       ")
   }
 
-  /** Generated DuckDB replay of d43's FULLY-DISTRIBUTED-TRAINING IVF-PQ
-    * stack — the d34 probe/ADC/re-rank chain with BOTH trainings
-    * re-derived in SQL instead of embedded as Spark-trained constants:
-    * coarse spherical k-means via [[kmeansAssignCtes]] (d42's unrolled
-    * Lloyd's), per-subspace Euclidean codebooks via [[pqTrainCtes]],
-    * then probe lists off the final centroid CTE, ADC as the same
-    * left-assoc sum of sub-dots against the final book CTEs, c·k
-    * shortlist, exact re-rank, recall@k against the shared exact
-    * baseline. Nothing in this SQL came from the Spark run — a
-    * divergence anywhere in either training or the query stack flips
-    * the hash.
+  /** The encoded corpus `enc(vec_id[, cell], code0..code{m-1})` over the
+    * final encodes `penc{j}` (with each vector's final cell from `fa` when
+    * `cells`), plus the query units `q(q_id, u)`.
     */
-  private def ivfPqDistOracleSql(spark: SparkSession, dir: String,
-      nCentroids: Int, m: Int, ksub: Int, iters: Int, nProbe: Int, k: Int,
-      shortlist: Int): String = {
-    val dim = t(spark, dir, "embeddings")
-      .select(size(col("embedding")).as("d")).filter(col("d") > 0)
-      .head().getInt(0)
+  private def encCtes(m: Int, cells: Boolean): String = {
+    val (from, cell) = if (cells) ("fa", ", f.cell") else ("un", "")
+    val codes = (0 until m).map(j => s"penc$j.code AS code$j").mkString(", ")
+    val joins = (0 until m).map(j => s"JOIN penc$j ON penc$j.vec_id = f.vec_id")
+      .mkString("\n            ")
+    s"""enc AS (SELECT f.vec_id$cell, $codes
+               FROM $from f $joins),
+       q AS (SELECT vec_id AS q_id, u FROM un WHERE vec_id < 10)"""
+  }
+
+  /** The ADC score of query `q` against encoded candidate `e` — the
+    * left-assoc sum, in subspace order, of dot(q_sub_j, book_j[code_j])
+    * (the Spark LUT lookups' order) — and the joins to the final books it
+    * reads.
+    */
+  private def adcSql(dim: Int, m: Int, iters: Int): (String, String) = {
     val subDim = dim / m
-    val encCols = (0 until m).map(j => s"penc$j.code AS code$j").mkString(", ")
-    val encJoins = (0 until m)
-      .map(j => s"JOIN penc$j ON penc$j.vec_id = fa.vec_id").mkString("\n            ")
-    val adc = (0 until m).map { j =>
+    ((0 until m).map { j =>
       s"list_dot_product(q.u[${j * subDim + 1}:${(j + 1) * subDim}], b$j.bvec)"
-    }.mkString("\n            + ")
-    val bookJoins = (0 until m)
-      .map(j => s"JOIN pb${j}_$iters b$j ON b$j.code = e.code$j").mkString("\n            ")
-    s"""${kmeansAssignCtes(spark, dir, nCentroids, iters)},
-       ${pqTrainCtes(dim, m, ksub, iters)},
-       enc AS (SELECT fa.vec_id, fa.cell, $encCols
-               FROM fa $encJoins),
-       qrank AS (SELECT un.vec_id AS q_id, c.cell,
-           ROW_NUMBER() OVER (PARTITION BY un.vec_id
-             ORDER BY list_dot_product(un.u, c.cvec) DESC, c.cell ASC) AS rn
-         FROM un CROSS JOIN c$iters c WHERE un.vec_id < 10),
-       probes AS (SELECT q_id, cell FROM qrank WHERE rn <= $nProbe),
-       q AS (SELECT vec_id AS q_id, u FROM un WHERE vec_id < 10),
-       sc AS (SELECT p.q_id, e.vec_id AS n_id,
-            ($adc) AS score
-          FROM probes p
-            JOIN enc e ON e.cell = p.cell AND e.vec_id <> p.q_id
-            JOIN q ON q.q_id = p.q_id
-            $bookJoins),
-       adcrk AS (SELECT q_id, n_id,
-                   ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY score DESC, n_id ASC) AS r
-                 FROM sc),
-       short AS (SELECT q_id, n_id FROM adcrk WHERE r <= ${k * shortlist}),
-       rr AS (SELECT s.q_id, s.n_id, list_dot_product(qu.u, nu.u) AS cos
-              FROM short s JOIN un qu ON qu.vec_id = s.q_id
-                           JOIN un nu ON nu.vec_id = s.n_id),
-       ap AS (SELECT q_id, n_id, CAST(rank AS INT) AS rank FROM (
-                SELECT q_id, n_id,
-                  ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) AS rank
-                FROM rr) WHERE rank <= $k),
-       ${annOracleTail(k)}"""
+    }.mkString("\n            + "),
+      (0 until m).map(j => s"JOIN pb${j}_$iters b$j ON b$j.code = e.code$j")
+        .mkString("\n            "))
   }
 
-  private def pqSqlParts(spark: SparkSession, dir: String, m: Int, ksub: Int,
-      sampleSize: Int, iters: Int): (String, String) = {
-    val books = graft.operators.Similarity.pqCodebooks(
-      t(spark, dir, "embeddings"), "vec_id", "embedding", m, ksub, sampleSize, iters)
-    val subDim = books(0)(0).length
-    def lo(j: Int) = j * subDim + 1
-    def hi(j: Int) = (j + 1) * subDim
-    def subCol(src: String, j: Int) = s"$src[${lo(j)}:${hi(j)}]"
-    def lits(c: Array[Double]) = c.mkString("[", ", ", "]")
-    val codeCols = (0 until m).map { j =>
-      val dl = books(j).map { c =>
-        val cc = c.map(x => x * x).sum
-        s"($cc - 2.0 * list_dot_product(${subCol("u", j)}, ${lits(c)}))"
-      }.mkString("[", ",\n              ", "]")
-      s"list_position($dl, list_min($dl)) - 1 AS code$j"
-    }.mkString(",\n            ")
-    val adc = (0 until m).map { j =>
-      val bookLit = books(j).map(lits).mkString("[", ", ", "]")
-      s"list_dot_product(${subCol("q.u", j)}, $bookLit[e.code$j + 1])"
-    }.mkString("\n            + ")
-    (codeCols, adc)
-  }
-
-  /** Shared prefix of the d26/d32 PQ replays: CTEs `n`/`un`/`enc`/`q`/`sc`
-    * (normalized vectors, per-subspace codes from the embedded codebooks,
-    * queries, FULL-corpus ADC scores — d34 routes candidates instead and
-    * composes [[pqSqlParts]] with the centroid CTEs directly).
+  /** The WITH-body of the d26/d32 replays: the PQ training, the encoded
+    * corpus and the full-corpus ADC scores `sc(q_id, n_id, score)`.
     */
-  private def pqScoreCtes(spark: SparkSession, dir: String, m: Int, ksub: Int,
-      sampleSize: Int, iters: Int): String = {
-    val (codeCols, adc) = pqSqlParts(spark, dir, m, ksub, sampleSize, iters)
-    s"""n AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-                   WHERE embedding IS NOT NULL),
-       un AS (SELECT vec_id, v,
-                CASE WHEN list_dot_product(v, v) = 0 THEN v
-                     ELSE list_transform(v, x -> x / sqrt(list_dot_product(v, v))) END AS u
-              FROM n),
-       enc AS (SELECT vec_id,
-            $codeCols
-          FROM un),
-       q AS (SELECT vec_id AS q_id, u FROM un WHERE vec_id < 10),
-       sc AS (SELECT q.q_id, e.vec_id AS n_id,
-            $adc AS score
-          FROM q JOIN enc e ON e.vec_id <> q.q_id)"""
+  private def pqCtes(spark: SparkSession, dir: String, m: Int, ksub: Int, iters: Int): String = {
+    val dim = embDim(spark, dir)
+    val (adc, bookJoins) = adcSql(dim, m, iters)
+    s"""WITH $unitCtes,
+       ${pqTrainCtes(dim, m, ksub, iters)},
+       ${encCtes(m, cells = false)},
+       sc AS (SELECT q.q_id, e.vec_id AS n_id, ($adc) AS score
+          FROM q JOIN enc e ON e.vec_id <> q.q_id
+            $bookJoins)"""
   }
 
+  /** Generated DuckDB replay of d26's PQ/ADC pipeline: codebook training,
+    * encode, ADC top-k, recall@k.
+    */
   private def pqOracleSql(spark: SparkSession, dir: String, m: Int, ksub: Int,
-      sampleSize: Int, iters: Int, k: Int): String =
-    s"""WITH ${pqScoreCtes(spark, dir, m, ksub, sampleSize, iters)},
-       ap AS (SELECT q_id, n_id, CAST(rank AS INT) AS rank FROM (
-                SELECT q_id, n_id,
-                  ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY score DESC, n_id ASC) AS rank
-                FROM sc) WHERE rank <= $k),
+      iters: Int, k: Int): String =
+    s"""${pqCtes(spark, dir, m, ksub, iters)},
+       ${topKCte("ap", "sc", "score", k)},
        ${annOracleTail(k)}"""
 
-  /** Generated DuckDB replay of d32: the SAME ADC pipeline as
-    * [[pqOracleSql]], then BOTH variants — top-k straight off the ADC
-    * order, and top-k after the exact-cosine re-rank of the c·k
-    * shortlist — each with its own recall against the shared exact
-    * baseline, unioned under a `variant` tag (the d25 multi-config
-    * pattern).
+  /** Generated DuckDB replay of d32: the d26 pipeline, then BOTH variants
+    * — top-k straight off the ADC order, and top-k after the exact-cosine
+    * re-rank of the c·k shortlist — each with its own recall, unioned
+    * under a `variant` tag.
     */
   private def pqRerankOracleSql(spark: SparkSession, dir: String, m: Int, ksub: Int,
-      sampleSize: Int, iters: Int, k: Int, shortlist: Int): String =
-    s"""WITH ${pqScoreCtes(spark, dir, m, ksub, sampleSize, iters)},
-       ranked AS (SELECT q_id, n_id,
-                    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY score DESC, n_id ASC) AS r
-                  FROM sc),
-       adc_ap AS (SELECT q_id, n_id, CAST(r AS INT) AS rank FROM ranked WHERE r <= $k),
-       short AS (SELECT q_id, n_id FROM ranked WHERE r <= ${k * shortlist}),
+      iters: Int, k: Int, shortlist: Int): String =
+    s"""${pqCtes(spark, dir, m, ksub, iters)},
+       ${topKCte("short", "sc", "score", k * shortlist)},
+       ap_adc AS (SELECT q_id, n_id, rank FROM short WHERE rank <= $k),
        rr AS (SELECT s.q_id, s.n_id, list_dot_product(qu.u, nu.u) AS cos
               FROM short s JOIN un qu ON qu.vec_id = s.q_id
                            JOIN un nu ON nu.vec_id = s.n_id),
-       rr_ap AS (SELECT q_id, n_id, CAST(rank AS INT) AS rank FROM (
-                   SELECT q_id, n_id,
-                     ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) AS rank
-                   FROM rr) WHERE rank <= $k),
-       ex AS (SELECT q_id, n_id FROM (
-                SELECT q.vec_id AS q_id, nb.vec_id AS n_id,
-                  ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                    ORDER BY list_cosine_similarity(q.v, nb.v) DESC, nb.vec_id ASC) AS rank
-                FROM n q JOIN n nb ON nb.vec_id <> q.vec_id WHERE q.vec_id < 10)
-              WHERE rank <= $k),
-       n_ex AS (SELECT q_id, COUNT(*) AS n_exact FROM ex GROUP BY q_id),
-       hits_a AS (SELECT a.q_id, COUNT(*) AS n_hit
-                  FROM adc_ap a JOIN ex e ON a.q_id = e.q_id AND a.n_id = e.n_id GROUP BY a.q_id),
-       perq_a AS (SELECT n_ex.q_id,
-                    CAST(COALESCE(h.n_hit, 0) AS DOUBLE) / LEAST(n_ex.n_exact, $k) AS recall
-                  FROM n_ex LEFT JOIN hits_a h ON h.q_id = n_ex.q_id),
-       hits_r AS (SELECT a.q_id, COUNT(*) AS n_hit
-                  FROM rr_ap a JOIN ex e ON a.q_id = e.q_id AND a.n_id = e.n_id GROUP BY a.q_id),
-       perq_r AS (SELECT n_ex.q_id,
-                    CAST(COALESCE(h.n_hit, 0) AS DOUBLE) / LEAST(n_ex.n_exact, $k) AS recall
-                  FROM n_ex LEFT JOIN hits_r h ON h.q_id = n_ex.q_id)
+       ${topKCte("ap_rr", "rr", "cos", k)},
+       ${exactCtes(k)},
+       ${recallCtes("_adc", k)},
+       ${recallCtes("_rr", k)}
        SELECT 'adc' AS variant, p.q_id, a.n_id, a.rank, p.recall
-       FROM perq_a p LEFT JOIN adc_ap a ON a.q_id = p.q_id
+       FROM perq_adc p LEFT JOIN ap_adc a ON a.q_id = p.q_id
        UNION ALL
        SELECT 'rerank' AS variant, p.q_id, a.n_id, a.rank, p.recall
-       FROM perq_r p LEFT JOIN rr_ap a ON a.q_id = p.q_id"""
+       FROM perq_rr p LEFT JOIN ap_rr a ON a.q_id = p.q_id"""
 
-  /** Generated DuckDB replay of d34's complete IVF-PQ + re-rank stack:
-    * the d09 centroid CTEs (cell sims on raw v, ROW_NUMBER assignment +
-    * probe lists) route candidates, the d26 PQ fragments encode and
-    * ADC-score ONLY the routed candidates, the c·k shortlist re-ranks by
-    * exact unit cosine (d32), and recall@k closes against the shared
-    * exact baseline. Centroids and codebooks are the identical
-    * deterministic constants the Spark plan trains.
+  /** The WITH-body of the IVF-PQ replays (d34, d35, d43, d45): BOTH
+    * trainings re-derived in SQL ([[kmeansAssignCtes]], [[pqTrainCtes]]),
+    * the encoded corpus `enc(vec_id, cell, code..)`, the query units `q`
+    * and their ranked cells `qrank`; plus the ADC pieces ([[adcSql]]).
     */
-  private def ivfPqOracleSql(spark: SparkSession, dir: String, nCentroids: Int,
-      nProbe: Int, m: Int, ksub: Int, sampleSize: Int, iters: Int, k: Int,
-      shortlist: Int): String = {
-    val centroids = graft.operators.Similarity.ivfCentroids(
-      t(spark, dir, "embeddings"), "vec_id", "embedding", nCentroids, sampleSize, iters)
-    val (codeCols, adc) = pqSqlParts(spark, dir, m, ksub, sampleSize, iters)
-    val cellSims = centroids.zipWithIndex.map { case (c, i) =>
-      s"SELECT vec_id, $i AS cell, list_dot_product(v, ${c.mkString("[", ", ", "]")}) AS sim FROM n"
-    }.mkString("\n       UNION ALL\n       ")
-    s"""WITH n AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-                   WHERE embedding IS NOT NULL),
-       un AS (SELECT vec_id, v,
-                CASE WHEN list_dot_product(v, v) = 0 THEN v
-                     ELSE list_transform(v, x -> x / sqrt(list_dot_product(v, v))) END AS u
-              FROM n),
-       enc AS (SELECT vec_id,
-            $codeCols
-          FROM un),
-       sims AS (
-       $cellSims),
-       ranked AS (SELECT vec_id, cell,
-                    ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell ASC) AS rn
-                  FROM sims),
-       assign AS (SELECT vec_id, cell FROM ranked WHERE rn = 1),
-       probes AS (SELECT vec_id AS q_id, cell FROM ranked WHERE rn <= $nProbe AND vec_id < 10),
-       q AS (SELECT vec_id AS q_id, u FROM un WHERE vec_id < 10),
-       sc AS (SELECT p.q_id, e.vec_id AS n_id,
-            $adc AS score
-          FROM probes p
-            JOIN assign a ON a.cell = p.cell AND a.vec_id <> p.q_id
-            JOIN enc e ON e.vec_id = a.vec_id
-            JOIN q ON q.q_id = p.q_id),
-       adcrk AS (SELECT q_id, n_id,
-                   ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY score DESC, n_id ASC) AS r
-                 FROM sc),
-       short AS (SELECT q_id, n_id FROM adcrk WHERE r <= ${k * shortlist}),
-       rr AS (SELECT s.q_id, s.n_id, list_dot_product(qu.u, nu.u) AS cos
-              FROM short s JOIN un qu ON qu.vec_id = s.q_id
-                           JOIN un nu ON nu.vec_id = s.n_id),
-       ap AS (SELECT q_id, n_id, CAST(rank AS INT) AS rank FROM (
-                SELECT q_id, n_id,
-                  ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) AS rank
-                FROM rr) WHERE rank <= $k),
-       ${annOracleTail(k)}"""
+  private def ivfPqCtes(spark: SparkSession, dir: String, nCentroids: Int, m: Int,
+      ksub: Int, iters: Int): (String, (String, String)) = {
+    val dim = embDim(spark, dir)
+    (s"""${kmeansAssignCtes(dim, nCentroids, iters)},
+       ${pqTrainCtes(dim, m, ksub, iters)},
+       ${encCtes(m, cells = true)},
+       ${qrankCte(iters)}""", adcSql(dim, m, iters))
   }
 
-  /** Generated DuckDB replay of d35's (nProbe, shortlist) → recall curve
-    * for the COMPLETE IVF-PQ + re-rank stack: centroids and codebooks are
-    * trained ONCE and shared (they are pure functions of the data — the
-    * Spark side trains identical constants per config), then one d34-style
-    * CTE chain per config — probe list, routed ADC scoring, c·k shortlist,
-    * exact re-rank, recall@k against the one shared exact baseline —
-    * UNION ALL'd under (n_probe, shortlist). The d25 multi-config pattern
-    * applied to the production stack, so the artifact measures the two
-    * cost knobs (cells read, shortlist re-ranked) jointly.
+  /** [[Similarity.ivfPqProbe]] replayed as top-k CTE `ap$g`: ADC scores of
+    * the encoded candidates in each query's `nProbe` best cells, the
+    * `shortlist`·k best of them re-ranked by exact unit dot.
     */
-  private def ivfPqCurveOracleSql(spark: SparkSession, dir: String,
-      configs: Seq[(Int, Int)], nCentroids: Int, m: Int, ksub: Int,
-      sampleSize: Int, iters: Int, k: Int): String = {
-    val centroids = graft.operators.Similarity.ivfCentroids(
-      t(spark, dir, "embeddings"), "vec_id", "embedding", nCentroids, sampleSize, iters)
-    val (codeCols, adc) = pqSqlParts(spark, dir, m, ksub, sampleSize, iters)
-    val cellSims = centroids.zipWithIndex.map { case (c, i) =>
-      s"SELECT vec_id, $i AS cell, list_dot_product(v, ${c.mkString("[", ", ", "]")}) AS sim FROM n"
-    }.mkString("\n       UNION ALL\n       ")
-    val perCfg = configs.map { case (np, sl) =>
-      val g = s"${np}_$sl"
-      s"""probes$g AS (SELECT vec_id AS q_id, cell FROM ranked WHERE rn <= $np AND vec_id < 10),
-       sc$g AS (SELECT p.q_id, e.vec_id AS n_id,
-            $adc AS score
-          FROM probes$g p
-            JOIN assign a ON a.cell = p.cell AND a.vec_id <> p.q_id
-            JOIN enc e ON e.vec_id = a.vec_id
-            JOIN q ON q.q_id = p.q_id),
-       adcrk$g AS (SELECT q_id, n_id,
-                     ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY score DESC, n_id ASC) AS r
-                   FROM sc$g),
-       short$g AS (SELECT q_id, n_id FROM adcrk$g WHERE r <= ${k * sl}),
+  private def ivfPqProbeCtes(g: String, adc: (String, String), nProbe: Int,
+      shortlist: Int, k: Int): String =
+    s"""sc$g AS (SELECT p.q_id, e.vec_id AS n_id, (${adc._1}) AS score
+          FROM qrank p
+            JOIN enc e ON e.cell = p.cell AND e.vec_id <> p.q_id
+            JOIN q ON q.q_id = p.q_id
+            ${adc._2}
+          WHERE p.rn <= $nProbe),
+       ${topKCte(s"short$g", s"sc$g", "score", k * shortlist)},
        rr$g AS (SELECT s.q_id, s.n_id, list_dot_product(qu.u, nu.u) AS cos
               FROM short$g s JOIN un qu ON qu.vec_id = s.q_id
                              JOIN un nu ON nu.vec_id = s.n_id),
-       ap$g AS (SELECT q_id, n_id FROM (
-                  SELECT q_id, n_id,
-                    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id ASC) AS rank
-                  FROM rr$g) WHERE rank <= $k),
-       hits$g AS (SELECT a.q_id, COUNT(*) AS n_hit
-                  FROM ap$g a JOIN ex e ON a.q_id = e.q_id AND a.n_id = e.n_id GROUP BY 1),
-       ret$g AS (SELECT q_id, CAST(COUNT(*) AS BIGINT) AS n_returned
-                 FROM ap$g GROUP BY 1)"""
-    }.mkString(",\n       ")
-    val branches = configs.map { case (np, sl) =>
-      val g = s"${np}_$sl"
-      s"""SELECT $np AS n_probe, $sl AS shortlist, n_ex.q_id,
-           CAST(COALESCE(h.n_hit, 0) AS DOUBLE) / LEAST(n_ex.n_exact, $k) AS recall,
-           COALESCE(r.n_returned, 0) AS n_returned
-         FROM n_ex LEFT JOIN hits$g h ON h.q_id = n_ex.q_id
-           LEFT JOIN ret$g r ON r.q_id = n_ex.q_id"""
-    }.mkString("\n       UNION ALL\n       ")
-    s"""WITH n AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-                   WHERE embedding IS NOT NULL),
-       un AS (SELECT vec_id, v,
-                CASE WHEN list_dot_product(v, v) = 0 THEN v
-                     ELSE list_transform(v, x -> x / sqrt(list_dot_product(v, v))) END AS u
-              FROM n),
-       enc AS (SELECT vec_id,
-            $codeCols
-          FROM un),
-       sims AS (
-       $cellSims),
-       ranked AS (SELECT vec_id, cell,
-                    ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell ASC) AS rn
-                  FROM sims),
-       assign AS (SELECT vec_id, cell FROM ranked WHERE rn = 1),
-       q AS (SELECT vec_id AS q_id, u FROM un WHERE vec_id < 10),
-       ex AS (SELECT q_id, n_id FROM (
-                SELECT qq.vec_id AS q_id, nb.vec_id AS n_id,
-                  ROW_NUMBER() OVER (PARTITION BY qq.vec_id
-                    ORDER BY list_cosine_similarity(qq.v, nb.v) DESC, nb.vec_id ASC) AS rank
-                FROM n qq JOIN n nb ON nb.vec_id <> qq.vec_id WHERE qq.vec_id < 10)
-              WHERE rank <= $k),
-       n_ex AS (SELECT q_id, COUNT(*) AS n_exact FROM ex GROUP BY q_id),
-       $perCfg
-       $branches"""
+       ${topKCte(s"ap$g", s"rr$g", "cos", k)}"""
+
+  /** Generated DuckDB replay of the IVF-PQ + re-rank stack (d34, d43,
+    * d45): both trainings, probe list, routed ADC scoring, c·k shortlist,
+    * exact re-rank, recall@k. Nothing in this SQL came from a Spark run.
+    */
+  private def ivfPqOracleSql(spark: SparkSession, dir: String,
+      nCentroids: Int, m: Int, ksub: Int, iters: Int, nProbe: Int, k: Int,
+      shortlist: Int): String = {
+    val (ctes, adc) = ivfPqCtes(spark, dir, nCentroids, m, ksub, iters)
+    s"""$ctes,
+       ${ivfPqProbeCtes("", adc, nProbe, shortlist, k)},
+       ${annOracleTail(k)}"""
+  }
+
+  /** Generated DuckDB replay of d35's (nProbe, shortlist) → recall curve:
+    * one training and encode shared by every config, one d34 probe chain
+    * per config, UNION ALL'd under (n_probe, shortlist).
+    */
+  private def ivfPqCurveOracleSql(spark: SparkSession, dir: String,
+      configs: Seq[(Int, Int)], nCentroids: Int, m: Int, ksub: Int,
+      iters: Int, k: Int): String = {
+    val (ctes, adc) = ivfPqCtes(spark, dir, nCentroids, m, ksub, iters)
+    val named = configs.map { case (np, sl) => (s"${np}_$sl", np, sl) }
+    s"""$ctes,
+       ${named.map { case (g, np, sl) => ivfPqProbeCtes(g, adc, np, sl, k) }.mkString(",\n       ")},
+       ${curveTail(k, named.map { case (g, np, sl) => (g, s"$np AS n_probe, $sl AS shortlist") })}"""
   }
 
   /** Shared frame prep for the j01/j03 as-of entries: purchases vs clicks
@@ -764,10 +545,11 @@ object SparkEntry {
         col("asof_ts").as("click_ts"), col("asof_click_value").as("click_value"))
   }
 
-  /** Data-dependent oracle context: d09's replay embeds centroids trained
-    * on the ACTUAL dump dir, so its SQL exists only once that dir is
-    * known. Verify sets this before reading [[oracleSql]]; a consumer that
-    * never does gets the static map and d09 stays a rows-only entry.
+  /** Data-dependent oracle context: the ANN replays read the ACTUAL dump
+    * dir's embedding dim ([[embDim]]), so their SQL exists only once that
+    * dir is known. Verify sets this before reading [[oracleSql]]; a
+    * consumer that never does gets the static map and those entries stay
+    * rows-only.
     */
   @volatile private var oracleCtx: Option[(SparkSession, String)] = None
   private[graft] def setOracleContext(spark: SparkSession, dir: String): Unit =
@@ -2055,12 +1837,12 @@ object SparkEntry {
       },
       lshOracleSql(nPlanes = 4, dim = 64, nTables = 8, k = 5)),
 
-    // IVF approximate top-k: sampled spherical k-means cells + nProbe
-    // search; recall@k vs the exact baseline attached per row as in d08.
-    // Oracled DYNAMICALLY: the centroids depend on the data, so Verify
-    // injects the dump dir ([[setOracleContext]]) and [[ivfOracleSql]]
-    // trains the identical centroid set and emits a full DuckDB replay —
-    // noOracle here covers only a consumer that never supplies the context
+    // IVF approximate top-k: spherical k-means cells + nProbe search;
+    // recall@k vs the exact baseline attached per row as in d08.
+    // Oracled DYNAMICALLY: Verify injects the dump dir
+    // ([[setOracleContext]]) and [[ivfOracleSql]] replays the whole
+    // training and probe in DuckDB — noOracle here covers only a consumer
+    // that never supplies the context
     "d09_ann_ivf" -> noOracle(
       (s, d) => {
         val emb = t(s, d, "embeddings")
@@ -2075,7 +1857,7 @@ object SparkEntry {
     // ivfAssign training + cell-assignment scan — each nProbe config is
     // probe-only against the shared assigned frame; recall is
     // withRecallAtK's rational, so the full curve replays in the
-    // generated DuckDB oracle (same deterministic centroids as d09's)
+    // generated DuckDB oracle (the same training replay as d09's)
     "d25_ivf_nprobe_curve" -> noOracle(
       (s, d) => {
         val emb = t(s, d, "embeddings")
@@ -2111,8 +1893,7 @@ object SparkEntry {
     // against the exact FILTERED baseline — post-filtering an unfiltered
     // top-k would return short lists and miss true filtered neighbors
     // (SimilaritySpec pins a concrete miss). Oracled dynamically like d09:
-    // [[ivfFilteredOracleSql]] embeds the identical centroids and replays
-    // probe + filter + recall in full
+    // [[ivfFilteredOracleSql]] replays training, probe, filter and recall
     "d39_filtered_ann" -> noOracle(
       (s, d) => {
         val emb = t(s, d, "embeddings")
@@ -2127,10 +1908,10 @@ object SparkEntry {
           k = 5)
       }),
 
-    // DISTRIBUTED k-means (round 18): the upgrade past ivfCentroids'
-    // documented driver-sample bound — Lloyd's over the FULL corpus,
-    // every iteration one scan + one k·dim-row shuffle, no vector ever
-    // collected. The oracle replays the ENTIRE training (not just the
+    // Full-corpus k-means (round 18): Lloyd's over EVERY vector, on the
+    // driver while the corpus holds n·dim ≤ 10⁶ doubles, else one scan +
+    // one k·dim-row shuffle per iteration. The oracle replays the ENTIRE
+    // training (not just the
     // final assignment): init from the k lowest-id unit vectors, 4
     // unrolled Lloyd's iterations with exact integer re-estimation sums
     // (unit components quantized floor(u·1e6) so partial-sum order can't
@@ -2145,20 +1926,21 @@ object SparkEntry {
             nCentroids = 8, iters = 4))
       }),
 
-    // IVF-PQ with BOTH trainers distributed (round 19): coarse cells
-    // from d42's full-corpus spherical Lloyd's, codebooks from the new
+    // IVF-PQ with BOTH trainings in the Spark shape (round 19): coarse
+    // cells from d42's full-corpus spherical Lloyd's, codebooks from the
     // per-subspace Euclidean Lloyd's (exact-integer re-estimation sums,
-    // one IEEE division per component) — no stage of the ANN stack reads
-    // a driver-side sample any more. The oracle re-derives BOTH
-    // trainings in SQL (not Spark-trained constants: every Lloyd's
-    // iteration of both k-means runs is unrolled CTE algebra) and
-    // replays probe/ADC/shortlist/re-rank/recall on top of them.
+    // one IEEE division per component), each iteration one Spark job —
+    // forced here, where the size rule would train this corpus on the
+    // driver, so that shape stays oracle-checked. The oracle re-derives
+    // BOTH trainings in SQL (every Lloyd's iteration of both k-means runs
+    // is unrolled CTE algebra) and replays probe/ADC/shortlist/re-rank/
+    // recall on top of them.
     "d43_ann_ivfpq_distributed" -> noOracle(
       (s, d) => {
         val emb = t(s, d, "embeddings")
         val k = 5
-        val model = Similarity.ivfPqEncodeDistributed(emb, "vec_id", "embedding",
-          nCentroids = 8, m = 4, ksub = 8, iters = 3)
+        val model = Similarity.ivfPqEncodeAs(emb, "vec_id", "embedding",
+          nCentroids = 8, m = 4, ksub = 8, iters = 3, Some(Similarity.Lloyds.Spark))
         val approx = Similarity.ivfPqProbe(emb, "vec_id", "embedding", model,
           col("vec_id") < 10, k = k, nProbe = 2, shortlist = 4)
         withRecall(emb, approx, k = k)
@@ -2182,11 +1964,12 @@ object SparkEntry {
     // broadcast-table IVF-PQ encode + probe (round 20): the d44 shape
     // propagated to the WHOLE query stack, forced at fixture size (the
     // public stages pick it themselves past the k·dim ≤ 10⁶ plan-literal
-    // ceiling). Same distributed trainers and config as d43, but the
-    // encode decides cell + all m sub-codes in ONE aggregate over a
-    // combined broadcast (centroid ∪ codebook) table, and the probe list
-    // and the ADC LUTs come from per-row aggregates over the same
-    // broadcast table — nothing k- or book-sized rides the plan.
+    // ceiling). Same trainers and config as d43, but both trainings run
+    // their Spark iterations in the table shape too, the encode decides
+    // cell + all m sub-codes in ONE aggregate over a combined broadcast
+    // (centroid ∪ codebook) table, and the probe list and the ADC LUTs
+    // come from per-row aggregates over the same broadcast table —
+    // nothing k- or book-sized rides the plan.
     // Bit-identical under the ceiling: shares d43's oracle VERBATIM (the
     // full generated DuckDB replay of both trainings + probe/ADC/
     // re-rank), and SimilaritySpec pins literal-vs-join equality per
@@ -2195,10 +1978,11 @@ object SparkEntry {
       (s, d) => {
         val emb = t(s, d, "embeddings")
         val k = 5
-        val cents = Similarity.kmeansDistributed(emb, "vec_id", "embedding",
-          nCentroids = 8, iters = 3)
-        val books = Similarity.pqCodebooksDistributed(emb, "vec_id", "embedding",
-          m = 4, ksub = 8, iters = 3)
+        val table = Some(Similarity.Lloyds.SparkTable)
+        val cents = Similarity.kmeansDistributedAs(emb, "vec_id", "embedding",
+          nCentroids = 8, iters = 3, table)
+        val books = Similarity.pqCodebooksDistributedAs(emb, "vec_id", "embedding",
+          m = 4, ksub = 8, iters = 3, table)
         val model = Similarity.ivfPqEncodeJoin(emb, "vec_id", "embedding",
           cents, books)
         val approx = Similarity.ivfPqProbeJoin(emb, "vec_id", "embedding", model,
@@ -2210,9 +1994,9 @@ object SparkEntry {
     // unit vectors encoded as m per-subspace centroid codes (32× smaller
     // than the floats), queries score candidates via per-query lookup
     // tables (asymmetric distance). Oracle is a FULL generated DuckDB
-    // replay embedding the deterministic codebooks
-    // ([[pqOracleSql]] via the d09 oracle-context mechanism), recall@k
-    // recomputed against the d07-proven exact baseline
+    // replay of codebook training, encode and ADC ([[pqOracleSql]] via
+    // the d09 oracle-context mechanism), recall@k recomputed against the
+    // d07-proven exact baseline
     "d26_ann_pq" -> noOracle(
       (s, d) => {
         val emb = t(s, d, "embeddings")
@@ -6628,9 +6412,9 @@ object SparkEntry {
     all.map { case (n, (fn, _)) => n -> fn }.toMap
 
   /** Memoized dynamic-oracle generation per (spark, dir): [[oracleSql]] is
-    * a getter, and regenerating the d09/d25 SQL on every call would
-    * re-train the IVF centroids (a driver-side collect plus k-means Spark
-    * jobs) as a hidden side effect of reading a Map.
+    * a getter, and regenerating the ANN replays on every call would re-read
+    * the embeddings (one Spark job per generator) as a hidden side effect
+    * of reading a Map.
     */
   @volatile private var dynOracleCache
       : Option[((SparkSession, String), Map[String, String], Map[String, String])] = None
@@ -6645,32 +6429,30 @@ object SparkEntry {
         val (dyn, errs) = dynOracleCache match {
           case Some((c, e, er)) if c == ctx => (e, er)
           case _ =>
-            // a generator failure (unreadable embeddings, sample <
-            // nCentroids) must degrade ITS entry to rows-only, not take
+            // a generator failure (unreadable or empty embeddings) must
+            // degrade ITS entry to rows-only, not take
             // down the whole dump — the static map carries the other
             // entries either way. NonFatal: an OOM mid-collect must still
             // fail the dump fast, not serialize from a broken heap
             val attempts: Seq[(String, () => String)] = Seq(
               "d09_ann_ivf" -> (() => ivfOracleSql(s, d, nCentroids = 16, nProbe = 2,
-                sampleSize = 1024, iters = 5, k = 5)),
+                iters = 5, k = 5)),
               "d25_ivf_nprobe_curve" -> (() => ivfCurveOracleSql(s, d, Seq(1, 2, 4),
-                nCentroids = 16, sampleSize = 1024, iters = 5, k = 5)),
+                nCentroids = 16, iters = 5, k = 5)),
               "d39_filtered_ann" -> (() => ivfFilteredOracleSql(s, d, nCentroids = 16,
-                nProbe = 2, sampleSize = 1024, iters = 5, k = 5,
-                candSql = a => s"$a.label % 2 = 0")),
+                nProbe = 2, iters = 5, k = 5, cand = "l.label % 2 = 0")),
               "d26_ann_pq" -> (() => pqOracleSql(s, d, m = 8, ksub = 16,
-                sampleSize = 1024, iters = 5, k = 5)),
+                iters = 5, k = 5)),
               "d32_ann_pq_rerank" -> (() => pqRerankOracleSql(s, d, m = 8, ksub = 16,
-                sampleSize = 1024, iters = 5, k = 5, shortlist = 4)),
+                iters = 5, k = 5, shortlist = 4)),
               "d34_ann_ivfpq" -> (() => ivfPqOracleSql(s, d, nCentroids = 16,
-                nProbe = 2, m = 8, ksub = 16, sampleSize = 1024, iters = 5,
-                k = 5, shortlist = 4)),
+                m = 8, ksub = 16, iters = 5, nProbe = 2, k = 5, shortlist = 4)),
               "d35_ivfpq_curve" -> (() => ivfPqCurveOracleSql(s, d,
                 Seq((1, 4), (2, 2), (2, 4), (4, 4)), nCentroids = 16, m = 8,
-                ksub = 16, sampleSize = 1024, iters = 5, k = 5)),
+                ksub = 16, iters = 5, k = 5)),
               "d42_kmeans_distributed" -> (() => kmeansOracleSql(s, d,
                 k = 8, iters = 4)),
-              "d43_ann_ivfpq_distributed" -> (() => ivfPqDistOracleSql(s, d,
+              "d43_ann_ivfpq_distributed" -> (() => ivfPqOracleSql(s, d,
                 nCentroids = 8, m = 4, ksub = 8, iters = 3, nProbe = 2,
                 k = 5, shortlist = 4)),
               // d45 is the broadcast-table twin of d43's literal stack:
@@ -6678,7 +6460,7 @@ object SparkEntry {
               // (both trainings re-derived in SQL) is its oracle — a
               // divergence between the two Spark shapes OR either engine
               // flips the hash
-              "d45_ann_ivfpq_join" -> (() => ivfPqDistOracleSql(s, d,
+              "d45_ann_ivfpq_join" -> (() => ivfPqOracleSql(s, d,
                 nCentroids = 8, m = 4, ksub = 8, iters = 3, nProbe = 2,
                 k = 5, shortlist = 4)),
               "d44_kmeans_assign_join" -> (() => kmeansOracleSql(s, d,

@@ -1488,27 +1488,49 @@ object QueryEngine {
 
   /** One line per parquet scan whose predicates reached the file format as
     * pushed filters — the Spark analog of the reference CLI's "indexes
-    * used" report. Parsed from the formatted explain text, which is stable
-    * across AQE wrapping of the physical plan.
+    * used" report. Read off the scan nodes of the executed plan in the
+    * order the formatted EXPLAIN lists them: the main plan's scans left to
+    * right (through AQE, query-stage and cached-relation wrappers), then
+    * each subquery's, with a reused subquery or scan listed once.
     */
   def pushedFilterReport(qe: org.apache.spark.sql.execution.QueryExecution): Seq[String] = {
-    val text =
-      try qe.explainString(org.apache.spark.sql.execution.FormattedMode)
+    import org.apache.spark.sql.catalyst.expressions.PlanExpression
+    import org.apache.spark.sql.catalyst.plans.QueryPlan
+    import org.apache.spark.sql.execution.{BaseSubqueryExec, FileSourceScanExec,
+      ReusedSubqueryExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val root =
+      try qe.executedPlan
       catch { case NonFatal(_) => return Nil }
-    val tableRe = "([^/\\]\\[, ]+)\\.parquet".r
-    var current: Option[String] = None
-    val out = Seq.newBuilder[String]
-    text.linesIterator.foreach { ln =>
-      val t = ln.trim
-      if (t.startsWith("Location:"))
-        current = tableRe.findFirstMatchIn(t).map(_.group(1))
-      else if (t.startsWith("PushedFilters:")) {
-        val fs = t.stripPrefix("PushedFilters:").trim
-        if (fs.nonEmpty && fs != "[]")
-          out += s"used pushed filters (${current.getOrElse("?")}): $fs"
-      }
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[FileSourceScanExec, java.lang.Boolean])
+    def scans(p: QueryPlan[_]): Seq[FileSourceScanExec] = p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case _: BaseSubqueryExec => Nil
+      case s: FileSourceScanExec => if (seen.add(s)) Seq(s) else Nil
+      case o => (o.children ++ o.innerChildren).flatMap(c => scans(c.asInstanceOf[QueryPlan[_]]))
     }
-    out.result()
+    // each subquery in plan pre-order, followed by the ones nested in it
+    def subqueries(p: SparkPlan): Seq[BaseSubqueryExec] = p match {
+      case a: AdaptiveSparkPlanExec => subqueries(a.executedPlan)
+      case q: QueryStageExec => subqueries(q.plan)
+      case _ =>
+        p.expressions.flatMap(_.collect { case e: PlanExpression[_] => e.plan })
+          .collect { case s: BaseSubqueryExec => s +: subqueries(s) }.flatten ++
+          p.children.flatMap(subqueries)
+    }
+    val tableRe = "([^/\\]\\[, ]+)\\.parquet".r
+    (scans(root) ++ subqueries(root).flatMap {
+      case _: ReusedSubqueryExec => Nil
+      case s => scans(s.child)
+    }).flatMap { s =>
+      val fs = s.metadata.getOrElse("PushedFilters", "[]")
+      val table = s.relation.location.rootPaths.headOption
+        .flatMap(r => tableRe.findFirstMatchIn(r.toString)).map(_.group(1))
+      if (fs.isEmpty || fs == "[]") None
+      else Some(s"used pushed filters (${table.getOrElse("?")}): $fs")
+    }
   }
 
   // ------------------------------------------------------------------

@@ -208,13 +208,6 @@ object Multimodal {
     spark.createDataFrame(rdd, schema)
   }
 
-  /** Historical name from when the resample path was a stub — forwards to
-    * [[resize]].
-    */
-  @deprecated("use resize - the image path really resamples now", "round 9")
-  def resizeStub(withBinary: DataFrame, targetW: Int, targetH: Int): DataFrame =
-    resize(withBinary, targetW, targetH)
-
   private val phashSchema = StructType(Seq(
     StructField("doc_id", LongType),
     StructField("phash", LongType),

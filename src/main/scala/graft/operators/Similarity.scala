@@ -331,73 +331,102 @@ object Similarity {
           size(unit).cast("string"))).cast("int"))
   }
 
-  /** IVF-style approximate top-k: spherical k-means centroids trained on a
-    * bounded driver-side sample (deterministic seed/order), broadcast as
-    * plan constants; every vector is assigned to its nearest centroid in a
-    * codegen'd projection, and each query probes only its `nProbe` nearest
-    * cells. The join shuffles on the cell id — at 100 TB the sample stays
-    * bounded, the centroid set is tiny, and candidate comparison is
-    * 1/nCentroids·nProbe of brute force.
-    *
-    * Sizing at scale (the defaults are FIXTURE-sized: 16 cells / 1024
-    * samples fit the ~500-vector test corpus): per-query work is
-    * `nCentroids` centroid dots + `nProbe·n/nCentroids` cell-candidate
-    * dots, so the standard balance point is `nCentroids ≈ sqrt(n)` — at
-    * n = 10⁹ vectors that is ~3·10⁴ cells, probing a few. The k-means
-    * training sample is COLLECTED to the driver (sampleSize × dim × 8
-    * bytes — 1M × 768-dim doubles ≈ 6 GB): keep `sampleSize` around
-    * 40·nCentroids (k-means stability rule of thumb) and never past the
-    * enforced 2²⁰ cap — centroid quality saturates long before the driver
-    * heap does. Both bounds are require()d below so a fixture-sized config
-    * cannot silently ship to a 100 TB corpus.
+  /** Where a trainer runs its Lloyd's iterations. Every shape runs the
+    * same Lloyd's and returns the same doubles bit for bit; the size rule
+    * in [[trainingHead]] picks `Driver` or `Spark`, and the
+    * `private[graft]` `*As` handles force a shape (d43, d45 and the
+    * equality specs).
     */
-  /** The deterministic IVF centroid set: bounded seeded-order sample →
-    * local spherical k-means. Extracted (and `private[graft]`) so
-    * SparkEntry can train the IDENTICAL centroids at oracle-generation
-    * time and embed them into d09's generated DuckDB replay, the same way
-    * d08 embeds [[hyperplanes]] — the centroids are pure functions of the
-    * data, not of any run-time randomness.
-    */
-  private[graft] def ivfCentroids(emb: DataFrame, idCol: String, vecCol: String,
-      nCentroids: Int, sampleSize: Int, iters: Int): Array[Array[Double]] = {
-    // NULL units excluded (null row / null element — unitNorm propagates):
-    // a null in the sample would NPE the driver-side k-means; skip-not-
-    // abort, same policy as lshTopK's null buckets
-    val all = normalized(emb, idCol, vecCol).filter(col("unit").isNotNull)
-    // bounded, deterministic sample → local spherical k-means
-    val sample = all.orderBy(col("vec_id")).limit(sampleSize)
-      .collect().map(_.getSeq[Double](1).toArray)
-    require(sample.length >= nCentroids, "sample smaller than nCentroids")
-    var centroids = sample.take(nCentroids)
-    for (_ <- 0 until iters) {
-      val sums = Array.fill(nCentroids)(new Array[Double](sample.head.length))
-      val counts = new Array[Int](nCentroids)
-      sample.foreach { v =>
-        val best = centroids.indices.maxBy(i =>
-          centroids(i).zip(v).map { case (a, b) => a * b }.sum)
-        counts(best) += 1
-        v.indices.foreach(j => sums(best)(j) += v(j))
-      }
-      centroids = centroids.indices.map { i =>
-        if (counts(i) == 0) centroids(i)
-        else {
-          val m = sums(i).map(_ / counts(i))
-          val n = math.sqrt(m.map(x => x * x).sum)
-          if (n == 0) centroids(i) else m.map(_ / n)
-        }
-      }.toArray
-    }
-    centroids
+  private[graft] sealed trait Lloyds
+  private[graft] object Lloyds {
+    /** On the driver, over the collected corpus: no job per iteration. */
+    case object Driver extends Lloyds
+    /** One corpus-scan job per iteration, the model scored in the shape
+      * [[fitsLiteral]] picks. */
+    case object Spark extends Lloyds
+    /** As `Spark`, with the model in the table shape at any size. */
+    case object SparkTable extends Lloyds
   }
 
-  /** DISTRIBUTED spherical k-means over the FULL corpus — the upgrade
-    * path for [[ivfCentroids]]' documented ≤2²⁰ driver-sample bound
-    * (round 18): at 100 TB a bounded sample trains fine-enough IVF cells,
-    * but cluster structure in the sample's tail is invisible; Lloyd's
-    * over every vector sees it, and each iteration is one corpus-scan
-    * aggregate (assign = broadcast-centroid argmax per row; re-estimate =
-    * one (cell, dim)-keyed shuffle of k·dim running sums — never a
-    * collect of vectors).
+  /** The lowest-id units of a normalized corpus; `whole` when they are all
+    * of it and hold at most [[LiteralCeiling]] doubles.
+    */
+  private[graft] final case class TrainingHead(units: Array[Array[Double]], whole: Boolean)
+
+  /** The size rule shared by both trainers. One bounded collect takes the
+    * lowest-id units of the persisted normalized corpus `all`: at least
+    * `minRows` (the init rows) and one more than the ceiling holds at this
+    * dim. Fewer rows than that limit means the whole corpus has
+    * n·dim ≤ [[LiteralCeiling]], which trains on the driver: past it, each
+    * Spark iteration costs far more in per-job latency than the
+    * arithmetic it distributes (BENCH_NOTES "One ANN trainer").
+    */
+  private[graft] def trainingHead(all: DataFrame, minRows: Int): TrainingHead = {
+    val dim = all.select(size(col("unit"))).head(1).headOption.fold(1)(r => math.max(r.getInt(0), 1))
+    val units = all.orderBy(col("vec_id"))
+      .limit(math.max(minRows.toLong, LiteralCeiling / dim + 1).toInt)
+      .collect().map(_.getSeq[Double](1).toArray)
+    TrainingHead(units, units.length.toLong * dim <= LiteralCeiling)
+  }
+
+  /** `train` over `emb`'s normalized non-null units, persisted for the
+    * training's repeated reads and released after.
+    */
+  private def withCorpus[A](emb: DataFrame, idCol: String, vecCol: String)(train: DataFrame => A): A = {
+    val all = normalized(emb, idCol, vecCol).filter(col("unit").isNotNull)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try train(all) finally all.unpersist(false)
+  }
+
+  /** The shape to train in, and for `Driver` the units to train over (the
+    * whole corpus: a forced `Driver` past the bound collects all of it).
+    */
+  private def lloydsFor(all: DataFrame, head: TrainingHead,
+      shape: Option[Lloyds]): (Lloyds, Array[Array[Double]]) =
+    shape.getOrElse(if (head.whole) Lloyds.Driver else Lloyds.Spark) match {
+      case Lloyds.Driver => (Lloyds.Driver,
+        if (head.whole) head.units
+        else all.orderBy(col("vec_id")).collect().map(_.getSeq[Double](1).toArray))
+      case s => (s, Array.empty)
+    }
+
+  /** dot(u[off, off + c.length), c) as the same sequential fold [[dot]]
+    * runs, so driver-side scores equal Spark-side ones bit for bit.
+    */
+  private def dotAt(u: Array[Double], off: Int, c: Array[Double]): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < c.length) { acc += u(off + i) * c(i); i += 1 }
+    acc
+  }
+
+  /** Index of the least `score`, ties to the lowest index: the driver-side
+    * twin of `array_min` over (score, index) structs.
+    */
+  private def argminOf(n: Int)(score: Int => Double): Int = {
+    var best = 0
+    var bestScore = score(0)
+    var i = 1
+    while (i < n) {
+      val s = score(i)
+      if (s < bestScore) { best = i; bestScore = s }
+      i += 1
+    }
+    best
+  }
+
+  /** Σ floor(u·10⁶) of `u[off, off + sums.length)` added into `sums`. */
+  private def addQuantized(sums: Array[Long], u: Array[Double], off: Int): Unit = {
+    var t = 0
+    while (t < sums.length) { sums(t) += math.floor(u(off + t) * 1e6).toLong; t += 1 }
+  }
+
+  /** Spherical k-means over the FULL corpus: the one IVF trainer. Small
+    * corpora (n·dim ≤ 10⁶, see [[trainingHead]]) train on the driver over
+    * the collected units; larger ones run each iteration as one corpus
+    * scan plus one (cell, dim)-keyed shuffle of k·dim integer sums
+    * ([[kmeansStep]]), never collecting a vector. Both shapes run the same
+    * steps, so they return the same doubles.
     *
     * Engine-replayable BY CONSTRUCTION — every arithmetic step is either
     * exact or a sequential fold any engine reproduces bit-for-bit:
@@ -420,68 +449,69 @@ object Similarity {
     *         cell id)
     */
   def kmeansDistributed(emb: DataFrame, idCol: String, vecCol: String,
-      nCentroids: Int, iters: Int): Array[Array[Double]] = {
-    val all = normalized(emb, idCol, vecCol).filter(col("unit").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try kmeansDistributedOn(all, nCentroids, iters)
-    finally all.unpersist(false)
-  }
+      nCentroids: Int, iters: Int): Array[Array[Double]] =
+    kmeansDistributedAs(emb, idCol, vecCol, nCentroids, iters, None)
 
-  /** [[kmeansDistributed]] over a caller-managed (already persisted)
-    * normalized `(vec_id, unit)` frame — the variant
-    * [[ivfPqEncodeDistributed]] uses so the coarse and PQ trainings can
-    * share ONE cached corpus scan and run CONCURRENTLY (guide §2.6:
-    * their per-iteration jobs are tiny at bench scale, so the wall is
-    * driver/stage-barrier latency that overlapping hides). Caller owns
-    * the persist lifecycle; identical algebra and results to the public
-    * form (it delegates here).
+  /** [[kmeansDistributed]] in a forced [[Lloyds]] shape (`None`: the size
+    * rule's).
     */
-  private[operators] def kmeansDistributedOn(all: DataFrame,
-      nCentroids: Int, iters: Int): Array[Array[Double]] = {
+  private[graft] def kmeansDistributedAs(emb: DataFrame, idCol: String, vecCol: String,
+      nCentroids: Int, iters: Int, shape: Option[Lloyds]): Array[Array[Double]] =
+    withCorpus(emb, idCol, vecCol)(all =>
+      kmeansOn(all, trainingHead(all, nCentroids), nCentroids, iters, shape))
+
+  private def kmeansOn(all: DataFrame, head: TrainingHead, nCentroids: Int, iters: Int,
+      shape: Option[Lloyds]): Array[Array[Double]] = {
     require(nCentroids >= 1, s"nCentroids must be >= 1, got $nCentroids")
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    locally {
-      var centroids: Array[Array[Double]] = all.orderBy(col("vec_id"))
-        .limit(nCentroids).collect().map(_.getSeq[Double](1).toArray)
-      require(centroids.length == nCentroids,
-        s"corpus has ${centroids.length} non-null vectors < nCentroids=$nCentroids")
-      val dim = centroids.head.length
-      // each iteration's assignment inlines the current centroids as plan
-      // literals (the map-only shape that makes the training affordable),
-      // so the plan-literal ceiling applies per iteration too
-      requireLiteralCeiling(nCentroids, dim, "kmeansDistributed",
-        "train hierarchically (coarse cells first, then per-cell sub-k-means)")
-      for (_ <- 0 until iters) {
-        // k x dim rows — bounded by configuration, never by data
-        val sums = all.withColumn("cell", array_min(cellScores(centroids)).getField("cell"))
-          .select(col("cell"), posexplode(col("unit")).as(Seq("dim", "v")))
-          .groupBy(col("cell"), col("dim"))
-          .agg(sum(floor(col("v") * lit(1e6))).as("s"))
-          .collect()
-        val acc = Array.fill(nCentroids)(new Array[Double](dim))
-        val seen = new Array[Boolean](nCentroids)
-        sums.foreach { r =>
-          acc(r.getInt(0))(r.getInt(1)) = r.getLong(2).toDouble
-          seen(r.getInt(0)) = true
-        }
-        centroids = centroids.indices.map { i =>
-          if (!seen(i)) centroids(i)
-          else {
-            val n = math.sqrt(acc(i).map(x => x * x).sum)
-            if (n == 0) centroids(i) else acc(i).map(_ / n)
-          }
-        }.toArray
+    require(head.units.length >= nCentroids,
+      s"corpus has ${head.units.length} non-null vectors < nCentroids=$nCentroids")
+    var centroids = head.units.take(nCentroids)
+    val dim = centroids.head.length
+    val (lloyds, units) = lloydsFor(all, head, shape)
+    for (_ <- 0 until iters) {
+      // per cell, the exact integer sums of its members; null = empty cell
+      val sums = new Array[Array[Long]](nCentroids)
+      def cellSums(c: Int): Array[Long] = {
+        if (sums(c) == null) sums(c) = new Array[Long](dim)
+        sums(c)
       }
-      centroids
+      if (lloyds == Lloyds.Driver) units.foreach { u =>
+        addQuantized(cellSums(argminOf(nCentroids)(i => -dotAt(u, 0, centroids(i)))), u, 0)
+      }
+      else kmeansStep(all, centroids, lloyds == Lloyds.Spark && fitsLiteral(centroids))
+        .collect().foreach(r => cellSums(r.getInt(0))(r.getInt(1)) = r.getLong(2))
+      centroids = centroids.indices.map { i =>
+        if (sums(i) == null) centroids(i)
+        else {
+          val acc = sums(i).map(_.toDouble)
+          val n = math.sqrt(acc.map(x => x * x).sum)
+          if (n == 0) centroids(i) else acc.map(_ / n)
+        }
+      }.toArray
     }
+    centroids
   }
+
+  /** One Spark Lloyd's iteration of [[kmeansDistributed]]: each unit's
+    * nearest cell, scored once per vector below the `posexplode` (in the
+    * shape `literal` selects), then (cell, dim, Σ floor(u·10⁶)) — k·dim
+    * rows, bounded by configuration, never by data.
+    */
+  private[graft] def kmeansStep(all: DataFrame, centroids: Array[Array[Double]],
+      literal: Boolean): DataFrame =
+    withModelCols(all, literal, centroids, NoBooks, nearestCell(centroids))
+      .select(col("cell"), posexplode(col("unit")).as(Seq("dim", "v")))
+      .groupBy(col("cell"), col("dim"))
+      .agg(sum(floor(col("v") * lit(1e6))).as("s"))
 
   /** The plan-literal ceiling: how many model doubles (k·dim for a
     * centroid set, ksub·dim for a codebook set) one stage may inline as
     * plan constants. Past it the serialized plan and the generated scoring
     * method hit driver-memory / JIT-limit cliffs. Below it the literal
     * shape is faster at every ANN stage (BENCH_NOTES "Literal vs table
-    * shape"), so both shapes stay and [[fitsLiteral]] picks one.
+    * shape"), so both shapes stay and [[fitsLiteral]] picks one. The
+    * trainers reuse it as their driver-local bound on n·dim.
     */
   private val LiteralCeiling = 1000000L
 
@@ -491,15 +521,6 @@ object Similarity {
     */
   private def fitsLiteral(sets: Array[Array[Double]]*): Boolean =
     sets.forall(s => s.isEmpty || s.length.toLong * s.head.length <= LiteralCeiling)
-
-  /** The ceiling as a hard limit, for the two distributed trainers only:
-    * their per-iteration assignment is literal-only, so past the ceiling
-    * they fail loudly at construction, naming the scale-safe alternative.
-    */
-  private def requireLiteralCeiling(k: Long, dim: Long, stage: String,
-      alternative: String): Unit =
-    require(k * dim <= LiteralCeiling,
-      s"$stage embeds k x dim = $k x $dim doubles as plan literals; past 10^6 $alternative")
 
   private val NoCentroids = Array.empty[Array[Double]]
   private val NoBooks = Array.empty[Array[Array[Double]]]
@@ -706,11 +727,21 @@ object Similarity {
       .select(col("vec_id"), col("cell"))
   }
 
+  /** IVF-style approximate top-k: spherical k-means centroids
+    * ([[kmeansDistributed]]) as plan constants; every vector is assigned
+    * to its nearest centroid in a codegen'd projection, and each query
+    * probes only its `nProbe` nearest cells. The join shuffles on the cell
+    * id, so candidate comparison is 1/nCentroids·nProbe of brute force.
+    *
+    * Sizing at scale (the defaults are FIXTURE-sized: 16 cells fit the
+    * ~500-vector test corpus): per-query work is `nCentroids` centroid
+    * dots + `nProbe·n/nCentroids` cell-candidate dots, so the standard
+    * balance point is `nCentroids ≈ sqrt(n)` — at n = 10⁹ vectors that is
+    * ~3·10⁴ cells, probing a few.
+    */
   def ivfTopK(emb: DataFrame, idCol: String, vecCol: String, queryPred: Column,
-      k: Int, nCentroids: Int = 16, nProbe: Int = 2, sampleSize: Int = 1024,
-      iters: Int = 5): DataFrame =
-    ivfProbe(emb, idCol, vecCol,
-      ivfAssign(emb, idCol, vecCol, nCentroids, sampleSize, iters),
+      k: Int, nCentroids: Int = 16, nProbe: Int = 2, iters: Int = 5): DataFrame =
+    ivfProbe(emb, idCol, vecCol, ivfAssign(emb, idCol, vecCol, nCentroids, iters),
       queryPred, k, nProbe)
 
   /** A trained IVF index: centroid plan constants plus the cell-assigned
@@ -720,43 +751,19 @@ object Similarity {
     */
   final case class IvfModel(centroids: Array[Array[Double]], assigned: DataFrame)
 
-  /** Training + cell-assignment stage of [[ivfTopK]]: one bounded-sample
-    * driver k-means and ONE corpus scan labeling every vector with its
-    * nearest cell. A probe-budget sweep ([[ivfProbe]] per nProbe, d25)
-    * pays this once; checkpoint `assigned` to pin the single scan.
+  /** Training + cell-assignment stage of [[ivfTopK]]: [[kmeansDistributed]]
+    * and ONE corpus scan labeling every vector with its nearest cell. A
+    * probe-budget sweep ([[ivfProbe]] per nProbe, d25) pays this once;
+    * checkpoint `assigned` to pin the single scan.
     */
   def ivfAssign(emb: DataFrame, idCol: String, vecCol: String,
-      nCentroids: Int = 16, sampleSize: Int = 1024, iters: Int = 5,
-      distributedTrainer: Boolean = false): IvfModel = {
-    require(nCentroids >= 1, s"nCentroids must be >= 1, got $nCentroids")
-    // sampleSize is validated ONLY on the trainer that reads it (round 19,
-    // advisor find): the distributed path trains on the full corpus and a
-    // caller asking for e.g. 512 distributed cells with the default
-    // sampleSize=1024 must not trip a bound that governs nothing there
-    if (!distributedTrainer) {
-      require(sampleSize >= 4 * nCentroids,
-        s"sampleSize=$sampleSize cannot train nCentroids=$nCentroids cells: k-means needs " +
-          "several samples per centroid (rule of thumb ~40x; 4x enforced). For a big corpus " +
-          "size nCentroids ~ sqrt(n) and sampleSize ~ 40*nCentroids.")
-      require(sampleSize <= (1 << 20),
-        s"sampleSize=$sampleSize: the training sample is collected to the driver " +
-          "(sampleSize x dim x 8 bytes); centroid quality saturates long before 2^20 samples")
-    }
-    // null units skipped (as in [[ivfCentroids]]/[[lshTopK]]): a null unit
-    // would otherwise fall through every null negSim to an arbitrary cell
-    // and could surface as a fabricated NULL-cos neighbor
-    val all = normalized(emb, idCol, vecCol).filter(col("unit").isNotNull)
-    // distributedTrainer (round 18): swap the bounded driver-sample
-    // trainer for [[kmeansDistributed]] — full-corpus Lloyd's whose per-
-    // iteration cost is one scan + a k·dim-integer-sum shuffle, for
-    // corpora whose tail cluster structure a 2^20 sample can't see.
-    // sampleSize is unused on this path; the probe/assignment stages are
-    // trainer-agnostic (an IvfModel is just centroids + assigned cells).
-    val centroids =
-      if (distributedTrainer) kmeansDistributed(emb, idCol, vecCol, nCentroids, iters)
-      else ivfCentroids(emb, idCol, vecCol, nCentroids, sampleSize, iters)
-    IvfModel(centroids, withModelCols(all, fitsLiteral(centroids), centroids, NoBooks,
-      nearestCell(centroids)))
+      nCentroids: Int = 16, iters: Int = 5): IvfModel = {
+    val centroids = kmeansDistributed(emb, idCol, vecCol, nCentroids, iters)
+    // null units skipped (as in [[lshTopK]]): a null unit would otherwise
+    // fall through every null negSim to an arbitrary cell and could
+    // surface as a fabricated NULL-cos neighbor
+    IvfModel(centroids, withModelCols(normalized(emb, idCol, vecCol).filter(col("unit").isNotNull),
+      fitsLiteral(centroids), centroids, NoBooks, nearestCell(centroids)))
   }
 
   /** [[ivfAssign]]'s cell assignment in the table shape at any size, from
@@ -890,61 +897,14 @@ object Similarity {
     rankTopK(scored.groupBy(col("q_id"), col("n_id")).agg(max(col("cos")).as("cos")), "cos", k)
   }
 
-  /** The deterministic product-quantization codebooks: bounded
-    * seeded-order sample → per-subspace local Euclidean k-means.
-    * `result(j)(c)` is centroid `c` of subspace `j` (dim/m doubles).
-    * Extracted (and `private[graft]`) exactly like [[ivfCentroids]] so
-    * SparkEntry can train the IDENTICAL codebooks at oracle-generation
-    * time and embed them into d26's generated DuckDB replay — pure
-    * functions of the data, no run-time randomness.
-    */
-  private[graft] def pqCodebooks(emb: DataFrame, idCol: String, vecCol: String,
-      m: Int, ksub: Int, sampleSize: Int, iters: Int): Array[Array[Array[Double]]] = {
-    val all = normalized(emb, idCol, vecCol).filter(col("unit").isNotNull)
-    val sample = all.orderBy(col("vec_id")).limit(sampleSize)
-      .collect().map(_.getSeq[Double](1).toArray)
-    require(sample.nonEmpty, "no non-null vectors to train on")
-    val dim = sample.head.length
-    require(dim % m == 0, s"dim=$dim must be divisible by m=$m subspaces")
-    require(sample.length >= ksub, "sample smaller than ksub")
-    val subDim = dim / m
-    Array.tabulate(m) { j =>
-      val subs = sample.map(v => java.util.Arrays.copyOfRange(v, j * subDim, (j + 1) * subDim))
-      var cents = subs.take(ksub)
-      for (_ <- 0 until iters) {
-        val sums = Array.fill(ksub)(new Array[Double](subDim))
-        val counts = new Array[Int](ksub)
-        subs.foreach { v =>
-          // argmin squared distance; minBy keeps the FIRST minimum, so
-          // ties resolve to the lowest code — the same (dist, code)
-          // order the encode expression and the DuckDB replay use
-          val best = cents.indices.minBy { i =>
-            var d2 = 0.0; var t = 0
-            while (t < subDim) { val d = v(t) - cents(i)(t); d2 += d * d; t += 1 }
-            d2
-          }
-          counts(best) += 1
-          v.indices.foreach(t => sums(best)(t) += v(t))
-        }
-        cents = cents.indices.map { i =>
-          if (counts(i) == 0) cents(i) else sums(i).map(_ / counts(i))
-        }.toArray
-      }
-      cents
-    }
-  }
-
-  /** DISTRIBUTED per-subspace PQ codebook training (round 19) — the
-    * upgrade path for [[pqCodebooks]]' driver-sample bound, closing the
-    * last sample-trained stage in the ANN stack (coarse centroids got
-    * theirs in [[kmeansDistributed]]): Euclidean Lloyd's over EVERY
-    * vector's subspace slices, all `m` subspaces trained in the SAME
-    * per-iteration corpus scan. Per iteration: one projection assigns
-    * each row its m sub-codes (argmin ‖c‖² − 2·sub·c over broadcast
-    * codebook constants), one posexplode of the unit vector keyed by
-    * (subspace, code, sub-dim) feeds a map-side-combined aggregate, and
-    * only m·ksub·subDim = dim·ksub sum rows reach the driver — bounded
-    * by configuration, never by data.
+  /** Per-subspace product-quantization codebook training over the FULL
+    * corpus: the one PQ trainer. Euclidean Lloyd's over every vector's
+    * subspace slices, all `m` subspaces trained in the same pass. The size
+    * rule of [[trainingHead]] picks the shape, as for
+    * [[kmeansDistributed]]: small corpora train on the driver; larger ones
+    * run each iteration as one corpus scan that assigns each row its m
+    * sub-codes and one (subspace, code, sub-dim)-keyed aggregate
+    * ([[pqStep]]), so only dim·ksub sum rows reach the driver.
     *
     * Engine-replayable BY CONSTRUCTION, the [[kmeansDistributed]]
     * discipline adapted to Euclidean re-estimation (where the mean's
@@ -961,70 +921,83 @@ object Similarity {
     *    bit-exact everywhere); an empty code keeps its previous
     *    centroid.
     *
-    * @return `result(j)(c)` = centroid c of subspace j ([[pqCodebooks]]'
-    *         shape — drop-in for the encode/ADC stages)
+    * @return `result(j)(c)` = centroid c of subspace j (dim/m doubles)
     */
   def pqCodebooksDistributed(emb: DataFrame, idCol: String, vecCol: String,
-      m: Int, ksub: Int, iters: Int): Array[Array[Array[Double]]] = {
-    val all = normalized(emb, idCol, vecCol).filter(col("unit").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try pqCodebooksDistributedOn(all, m, ksub, iters)
-    finally all.unpersist(false)
-  }
+      m: Int, ksub: Int, iters: Int): Array[Array[Array[Double]]] =
+    pqCodebooksDistributedAs(emb, idCol, vecCol, m, ksub, iters, None)
 
-  /** [[pqCodebooksDistributed]] over a caller-managed (already persisted)
-    * normalized frame — see [[kmeansDistributedOn]]. Caller owns the
-    * persist lifecycle; identical algebra and results to the public form.
+  /** [[pqCodebooksDistributed]] in a forced [[Lloyds]] shape (`None`: the
+    * size rule's).
     */
-  private[operators] def pqCodebooksDistributedOn(all: DataFrame,
-      m: Int, ksub: Int, iters: Int): Array[Array[Array[Double]]] = {
+  private[graft] def pqCodebooksDistributedAs(emb: DataFrame, idCol: String, vecCol: String,
+      m: Int, ksub: Int, iters: Int, shape: Option[Lloyds]): Array[Array[Array[Double]]] =
+    withCorpus(emb, idCol, vecCol)(all => pqOn(all, trainingHead(all, ksub), m, ksub, iters, shape))
+
+  private def pqOn(all: DataFrame, head: TrainingHead, m: Int, ksub: Int, iters: Int,
+      shape: Option[Lloyds]): Array[Array[Array[Double]]] = {
     require(m >= 1 && ksub >= 2, s"need m >= 1 and ksub >= 2, got m=$m ksub=$ksub")
     require(ksub <= 256, s"ksub=$ksub: a PQ code is a byte per subspace by design")
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    locally {
-      val initVecs = all.orderBy(col("vec_id")).limit(ksub)
-        .collect().map(_.getSeq[Double](1).toArray)
-      require(initVecs.length == ksub,
-        s"corpus has ${initVecs.length} non-null vectors < ksub=$ksub")
-      val dim = initVecs.head.length
-      require(dim % m == 0, s"dim=$dim must be divisible by m=$m subspaces")
-      // the per-iteration assignment projection below embeds ALL m books
-      // as plan constants — m·ksub·subDim = dim·ksub doubles per
-      // iteration — so the shared ceiling applies to the TRAINING loop
-      // too (round 20, closing the round-19 verdict's last unguarded
-      // literal site): at ksub=256 it slips past 10⁶ once dim > 3906
-      requireLiteralCeiling(ksub, dim, "pqCodebooksDistributed",
-        "train subspaces in separate passes (each pass embeds only its own ksub x subDim book)")
-      val subDim = dim / m
-      var books: Array[Array[Array[Double]]] = Array.tabulate(m) { j =>
-        initVecs.map(v => java.util.Arrays.copyOfRange(v, j * subDim, (j + 1) * subDim))
-      }
-      for (_ <- 0 until iters) {
-        // one projection: per row, the m sub-code argmins over the current
-        // (constant) books — the literal encoder every encode stage uses —
-        // then one (subspace, code, sub-dim)-keyed shuffle of exact-integer
-        // partials; dim·ksub rows collected — config-bounded
-        val sums = all.select(pqCodes(books).as("codes"), posexplode(col("unit")).as(Seq("d0", "v")))
-          .select((col("d0") / lit(subDim)).cast("int").as("j"),
-            element_at(col("codes"), (col("d0") / lit(subDim)).cast("int") + 1).as("code"),
-            pmod(col("d0"), lit(subDim)).cast("int").as("t"), col("v"))
-          .groupBy(col("j"), col("code"), col("t"))
-          .agg(sum(floor(col("v") * lit(1e6))).cast("long").as("s"),
-            count(lit(1)).as("n"))
-          .collect()
-        val acc = Array.tabulate(m)(_ => Array.fill(ksub)(new Array[Double](subDim)))
-        val seen = Array.fill(m)(new Array[Boolean](ksub))
-        sums.foreach { r =>
-          val (j, c, t) = (r.getInt(0), r.getInt(1), r.getInt(2))
-          acc(j)(c)(t) = r.getLong(3).toDouble / (r.getLong(4) * 1e6)
-          seen(j)(c) = true
-        }
-        books = Array.tabulate(m) { j =>
-          Array.tabulate(ksub)(c => if (seen(j)(c)) acc(j)(c) else books(j)(c))
-        }
-      }
-      books
+    require(head.units.length >= ksub,
+      s"corpus has ${head.units.length} non-null vectors < ksub=$ksub")
+    val initVecs = head.units.take(ksub)
+    val dim = initVecs.head.length
+    require(dim % m == 0, s"dim=$dim must be divisible by m=$m subspaces")
+    val subDim = dim / m
+    var books: Array[Array[Array[Double]]] = Array.tabulate(m) { j =>
+      initVecs.map(v => java.util.Arrays.copyOfRange(v, j * subDim, (j + 1) * subDim))
     }
+    val (lloyds, units) = lloydsFor(all, head, shape)
+    for (_ <- 0 until iters) {
+      // per (subspace, code): exact integer sums per sub-dim (null = empty
+      // code) and the member count
+      val sums = Array.fill(m)(new Array[Array[Long]](ksub))
+      val counts = Array.fill(m)(new Array[Long](ksub))
+      def codeSums(j: Int, c: Int): Array[Long] = {
+        if (sums(j)(c) == null) sums(j)(c) = new Array[Long](subDim)
+        sums(j)(c)
+      }
+      if (lloyds == Lloyds.Driver) {
+        val cc = books.map(_.map(c => c.map(x => x * x).sum))
+        units.foreach { u =>
+          for (j <- 0 until m) {
+            val c = argminOf(ksub)(ci => cc(j)(ci) - 2.0 * dotAt(u, j * subDim, books(j)(ci)))
+            counts(j)(c) += 1
+            addQuantized(codeSums(j, c), u, j * subDim)
+          }
+        }
+      } else pqStep(all, books, lloyds == Lloyds.Spark && fitsLiteral(books.flatten))
+        .collect().foreach { r =>
+          val (j, c) = (r.getInt(0), r.getInt(1))
+          codeSums(j, c)(r.getInt(2)) = r.getLong(3)
+          counts(j)(c) = r.getLong(4)
+        }
+      books = Array.tabulate(m) { j =>
+        Array.tabulate(ksub) { c =>
+          if (sums(j)(c) == null) books(j)(c) else sums(j)(c).map(_.toDouble / (counts(j)(c) * 1e6))
+        }
+      }
+    }
+    books
+  }
+
+  /** One Spark Lloyd's iteration of [[pqCodebooksDistributed]]: each
+    * unit's m sub-codes, scored once per vector below the `posexplode`
+    * (in the shape `literal` selects), then (subspace, code, sub-dim,
+    * Σ floor(u·10⁶), n) — dim·ksub rows, bounded by configuration.
+    */
+  private[graft] def pqStep(all: DataFrame, books: Array[Array[Array[Double]]],
+      literal: Boolean): DataFrame = {
+    val subDim = books(0)(0).length
+    withModelCols(all, literal, NoCentroids, books, codesCol(books))
+      .select(col("codes"), posexplode(col("unit")).as(Seq("d0", "v")))
+      .select((col("d0") / lit(subDim)).cast("int").as("j"),
+        element_at(col("codes"), (col("d0") / lit(subDim)).cast("int") + 1).as("code"),
+        pmod(col("d0"), lit(subDim)).cast("int").as("t"), col("v"))
+      .groupBy(col("j"), col("code"), col("t"))
+      .agg(sum(floor(col("v") * lit(1e6))).cast("long").as("s"),
+        count(lit(1)).as("n"))
   }
 
   /** Product-quantization approximate top-k (asymmetric distance
@@ -1046,22 +1019,16 @@ object Similarity {
     * approximate (quantization error); the d26 entry measures recall@k
     * against [[bruteForceTopK]] via [[withRecallAtK]].
     *
-    * Determinism: codebooks are deterministic ([[pqCodebooks]]), plan
-    * constants up to the [[fitsLiteral]] ceiling; encode
+    * Determinism: codebooks are deterministic ([[pqCodebooksDistributed]]),
+    * plan constants up to the [[fitsLiteral]] ceiling; encode
     * argmin orders by (distance, code); the ADC sum runs in fixed
     * subspace order — every double on both engines derives from the same
     * operands in the same sequence.
     */
   def pqTopK(emb: DataFrame, idCol: String, vecCol: String, queryPred: Column,
-      k: Int, m: Int = 8, ksub: Int = 16, sampleSize: Int = 1024,
-      iters: Int = 5): DataFrame = {
+      k: Int, m: Int = 8, ksub: Int = 16, iters: Int = 5): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    require(m >= 1 && ksub >= 2, s"need m >= 1 and ksub >= 2, got m=$m ksub=$ksub")
-    require(ksub <= 256, s"ksub=$ksub: a PQ code is a byte per subspace by design")
-    require(sampleSize >= 4 * ksub && sampleSize <= (1 << 20),
-      s"sampleSize=$sampleSize out of [4*ksub, 2^20]: the training sample is " +
-        "collected to the driver; codebook quality saturates long before the cap")
-    val books = pqCodebooks(emb, idCol, vecCol, m, ksub, sampleSize, iters)
+    val books = pqCodebooksDistributed(emb, idCol, vecCol, m, ksub, iters)
     val literal = fitsLiteral(books.flatten)
     val encoded = withModelCols(corpusNormalized(emb, idCol, vecCol).filter(col("unit").isNotNull),
         literal, NoCentroids, books, codesCol(books))
@@ -1104,17 +1071,17 @@ object Similarity {
     * what a read costs, and the re-rank touches full-precision vectors
     * only for |Q|·c·k ids.
     *
-    * Determinism: centroids and codebooks are the same deterministic
-    * plan constants d09/d26 embed ([[ivfCentroids]]/[[pqCodebooks]]),
-    * cell assignment and probe lists replay d09's struct ordering, ADC
-    * replays d26's fixed-order sum, the re-rank d32's — so the d34
-    * oracle is a generated full DuckDB replay of the complete stack.
+    * Determinism: centroids and codebooks come from the two
+    * engine-replayable trainers ([[ivfPqEncode]]), cell assignment and
+    * probe lists replay d09's struct ordering, ADC replays d26's
+    * fixed-order sum, the re-rank d32's — so the d34 oracle is a
+    * generated full DuckDB replay of the complete stack, trainings
+    * included.
     */
   def ivfPqTopK(emb: DataFrame, idCol: String, vecCol: String, queryPred: Column,
       k: Int, nCentroids: Int = 16, nProbe: Int = 2, m: Int = 8, ksub: Int = 16,
-      sampleSize: Int = 1024, iters: Int = 5, shortlist: Int = 4): DataFrame =
-    ivfPqProbe(emb, idCol, vecCol,
-      ivfPqEncode(emb, idCol, vecCol, nCentroids, m, ksub, sampleSize, iters),
+      iters: Int = 5, shortlist: Int = 4): DataFrame =
+    ivfPqProbe(emb, idCol, vecCol, ivfPqEncode(emb, idCol, vecCol, nCentroids, m, ksub, iters),
       queryPred, k, nProbe, shortlist)
 
   /** A trained IVF-PQ index: the driver-side plan constants (`centroids`,
@@ -1132,29 +1099,46 @@ object Similarity {
       books: Array[Array[Array[Double]]],
       encoded: DataFrame)
 
-  /** Training + corpus-encode stage of [[ivfPqTopK]]: spherical-k-means
-    * cell centroids, per-subspace PQ codebooks (both deterministic
-    * driver-side constants from a bounded sample), and ONE full-corpus
-    * scan producing the encoded frame. Callers that sweep probe configs
-    * (or serve repeated query batches) should persist/checkpoint
-    * `encoded` so the scan is paid exactly once.
+  /** Training + corpus-encode stage of [[ivfPqTopK]]: cell centroids
+    * from [[kmeansDistributed]], per-subspace codebooks from
+    * [[pqCodebooksDistributed]], and ONE full-corpus scan producing the
+    * encoded frame. Callers that sweep probe configs (or serve repeated
+    * query batches) should persist/checkpoint `encoded` so the scan is
+    * paid exactly once.
     */
   def ivfPqEncode(emb: DataFrame, idCol: String, vecCol: String,
-      nCentroids: Int = 16, m: Int = 8, ksub: Int = 16,
-      sampleSize: Int = 1024, iters: Int = 5): IvfPqModel = {
+      nCentroids: Int = 16, m: Int = 8, ksub: Int = 16, iters: Int = 5): IvfPqModel =
+    ivfPqEncodeAs(emb, idCol, vecCol, nCentroids, m, ksub, iters, None)
+
+  /** [[ivfPqEncode]] with both trainings in a forced [[Lloyds]] shape
+    * (`None`: the size rule's).
+    */
+  private[graft] def ivfPqEncodeAs(emb: DataFrame, idCol: String, vecCol: String,
+      nCentroids: Int, m: Int, ksub: Int, iters: Int, shape: Option[Lloyds]): IvfPqModel = {
     require(nCentroids >= 1, s"nCentroids must be >= 1, got $nCentroids")
     require(m >= 1 && ksub >= 2 && ksub <= 256, s"bad PQ config m=$m ksub=$ksub")
-    require(sampleSize >= 4 * math.max(nCentroids, ksub) && sampleSize <= (1 << 20),
-      s"sampleSize=$sampleSize out of range (driver-collected training sample)")
-    val centroids = ivfCentroids(emb, idCol, vecCol, nCentroids, sampleSize, iters)
-    val books = pqCodebooks(emb, idCol, vecCol, m, ksub, sampleSize, iters)
+    // the two trainings are INDEPENDENT (both read only the normalized
+    // corpus, persisted and head-collected ONCE here), so they run
+    // concurrently: in the Spark shape each is a chain of small
+    // per-iteration jobs whose wall is stage-barrier latency, and the
+    // scheduler back-fills one training's gaps with the other's tasks
+    // (guide §2.6). Neither reads the other's output, so the results are
+    // bit-identical to training them one after the other.
+    val (centroids, books) = withCorpus(emb, idCol, vecCol) { all =>
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration.Duration
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val head = trainingHead(all, math.max(nCentroids, ksub))
+      val centroidsF = Future(kmeansOn(all, head, nCentroids, iters, shape))
+      val books = pqOn(all, head, m, ksub, iters, shape)
+      (Await.result(centroidsF, Duration.Inf), books)
+    }
     encodeCorpus(emb, idCol, vecCol, centroids, books)
   }
 
-  /** Corpus-encode stage shared by [[ivfPqEncode]] and
-    * [[ivfPqEncodeDistributed]]: ONE full scan labeling every vector with
-    * its nearest cell and its m sub-codes from the given centroids/books —
-    * the trainer supplies the constants, this stage is trainer-agnostic.
+  /** Corpus-encode stage of [[ivfPqEncode]]: ONE full scan labeling every
+    * vector with its nearest cell and its m sub-codes from the given
+    * centroids/books — the trainers supply the constants.
     * Literal shape while both sets fit under the ceiling, else one
     * aggregate over a combined broadcast (centroid ∪ codebook) table.
     */
@@ -1180,42 +1164,6 @@ object Similarity {
         literal, centroids, books, nearestCell(centroids), codesCol(books))
       .select(col("vec_id"), col("cell"), col("codes"))
     IvfPqModel(centroids, books, encoded)
-  }
-
-  /** [[ivfPqEncode]] with BOTH trainers distributed (round 19): coarse
-    * cells from [[kmeansDistributed]] (full-corpus spherical Lloyd's),
-    * codebooks from [[pqCodebooksDistributed]] (full-corpus per-subspace
-    * Euclidean Lloyd's) — no stage of the IVF-PQ stack reads a
-    * driver-side sample any more. The encode scan, probe join, ADC and
-    * re-rank are the trainer-agnostic stages unchanged; d43's oracle
-    * re-derives BOTH trainings in SQL and replays the full stack against
-    * them bit-exactly.
-    */
-  def ivfPqEncodeDistributed(emb: DataFrame, idCol: String, vecCol: String,
-      nCentroids: Int = 8, m: Int = 4, ksub: Int = 8, iters: Int = 3): IvfPqModel = {
-    require(nCentroids >= 1, s"nCentroids must be >= 1, got $nCentroids")
-    // the two trainings are INDEPENDENT (coarse cells and per-subspace
-    // books both read only the normalized corpus) and each is a chain of
-    // tiny per-iteration jobs whose wall is driver/stage-barrier latency,
-    // not compute — overlap them (guide §2.6: the scheduler back-fills
-    // one training's barrier gaps with the other's tasks). Results are
-    // bit-identical to the sequential form: each trainer's own job
-    // sequence is unchanged and neither reads the other's output. The
-    // shared normalized frame is persisted ONCE out here — the public
-    // trainers each persist the same canonical plan and unpersist in
-    // `finally`, which under concurrency would yank the shared cache
-    // entry mid-use by the twin.
-    val all = normalized(emb, idCol, vecCol).filter(col("unit").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val centroidsF = Future(kmeansDistributedOn(all, nCentroids, iters))
-      val books = pqCodebooksDistributedOn(all, m, ksub, iters)
-      val centroids = Await.result(centroidsF, Duration.Inf)
-      encodeCorpus(emb, idCol, vecCol, centroids, books)
-    } finally all.unpersist(false)
   }
 
   /** Query stage of [[ivfPqTopK]] against a pre-trained [[IvfPqModel]]:
@@ -1265,10 +1213,9 @@ object Similarity {
     */
   def pqTopKReranked(emb: DataFrame, idCol: String, vecCol: String,
       queryPred: Column, k: Int, shortlist: Int = 4, m: Int = 8,
-      ksub: Int = 16, sampleSize: Int = 1024, iters: Int = 5): DataFrame = {
+      ksub: Int = 16, iters: Int = 5): DataFrame = {
     require(shortlist >= 1, s"shortlist factor must be >= 1, got $shortlist")
-    val cand = pqTopK(emb, idCol, vecCol, queryPred, k * shortlist,
-      m, ksub, sampleSize, iters)
+    val cand = pqTopK(emb, idCol, vecCol, queryPred, k * shortlist, m, ksub, iters)
     rerankExact(emb, idCol, vecCol, cand, k)
   }
 }

@@ -227,6 +227,37 @@ class QueryEngineSpec extends AnyFunSuite {
     assert(point.planTree.contains("used pushed filters (customer)"), point.planTree)
   }
 
+  test("pushed-filter report matches the formatted EXPLAIN over the registry") {
+    // the report reads the scan nodes; the formatted EXPLAIN text it used
+    // to parse is the reference: same scans, tables, filters and order,
+    // over every Spark-runnable registry oracle (the coverage-ratchet set)
+    def fromExplain(qe: org.apache.spark.sql.execution.QueryExecution): Seq[String] = {
+      val tableRe = "([^/\\]\\[, ]+)\\.parquet".r
+      var current: Option[String] = None
+      qe.explainString(org.apache.spark.sql.execution.FormattedMode).linesIterator
+        .map(_.trim).flatMap { t =>
+          if (t.startsWith("Location:")) {
+            current = tableRe.findFirstMatchIn(t).map(_.group(1)); None
+          } else if (t.startsWith("PushedFilters:")) {
+            val fs = t.stripPrefix("PushedFilters:").trim
+            if (fs.nonEmpty && fs != "[]") Some(s"used pushed filters (${current.getOrElse("?")}): $fs")
+            else None
+          } else None
+        }.toList
+    }
+    val plans = SparkEntry.oracleSql.toSeq.sortBy(_._1).flatMap { case (name, sql) =>
+      try { val qe = spark.sql(sql).queryExecution; qe.executedPlan; Some(name -> qe) }
+      catch { case _: Throwable => None }
+    }
+    assert(plans.size >= 80, s"corpus shrank to ${plans.size}")
+    val reports = plans.map { case (name, qe) =>
+      val got = QueryEngine.pushedFilterReport(qe)
+      assert(got == fromExplain(qe), name)
+      got
+    }
+    assert(reports.count(_.nonEmpty) >= 40, "too few plans push a filter to pin anything")
+  }
+
   test("rewritten SQL is None, never a lie, for unsupported plan shapes") {
     // a Generate (lateral explode) node has no rendering in the supported
     // family — must answer None, not a best-effort guess

@@ -37,7 +37,7 @@ class SimilaritySpec extends AnyFunSuite {
     val q = col("vec_id") === 100L
     val cand = col("label") === 1
     val model = Similarity.ivfAssign(df, "vec_id", "embedding",
-      nCentroids = 1, sampleSize = 4, iters = 1)
+      nCentroids = 1, iters = 1)
     // post-filtering: unfiltered top-2 = {2, 4}, then the filter drops
     // BOTH — zero rows, the true filtered neighbor lost
     val post = Similarity.ivfProbe(df, "vec_id", "embedding", model, q,
@@ -60,7 +60,7 @@ class SimilaritySpec extends AnyFunSuite {
     // full probe over the shared fixture: filtered IVF == filtered exact
     // for every query (recall 1.0 at nProbe = nCentroids)
     val modelV = Similarity.ivfAssign(vecs, "vec_id", "embedding",
-      nCentroids = 2, sampleSize = 8, iters = 2)
+      nCentroids = 2, iters = 2)
     val allQ = col("vec_id") >= 0
     val candV = col("label") === 0
     val ivfAll = Similarity.ivfProbeFiltered(vecs, "vec_id", "embedding",
@@ -111,7 +111,7 @@ class SimilaritySpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).groupBy(_._1)
       .view.mapValues(_.map(_._2).toSet).toMap
     val ivf = Similarity.ivfTopK(emb, "vec_id", "embedding", col("vec_id") < 5, k = 5,
-      nCentroids = 8, nProbe = 3, sampleSize = 256)
+      nCentroids = 8, nProbe = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
     val byQ = ivf.groupBy(_._1)
     assert(byQ.keySet == (0L until 5L).toSet, s"all queries answered: ${byQ.keySet}")
@@ -149,15 +149,6 @@ class SimilaritySpec extends AnyFunSuite {
     // probe count cannot exceed the cell count
     intercept[IllegalArgumentException](Similarity.ivfTopK(
       emb, "vec_id", "embedding", col("vec_id") < 5, k = 5, nCentroids = 4, nProbe = 5))
-    // sample too small to train the requested cells (sqrt(n)-sized
-    // nCentroids with a fixture-sized sample is exactly the 100 TB misuse)
-    intercept[IllegalArgumentException](Similarity.ivfTopK(
-      emb, "vec_id", "embedding", col("vec_id") < 5, k = 5,
-      nCentroids = 512, nProbe = 2, sampleSize = 1024))
-    // sample is driver-collected: the cap must hold
-    intercept[IllegalArgumentException](Similarity.ivfTopK(
-      emb, "vec_id", "embedding", col("vec_id") < 5, k = 5,
-      nCentroids = 1024, nProbe = 2, sampleSize = (1 << 20) + 1))
   }
 
   test("lshBucket fails loudly on dimension mismatch (silent bucket-0 collapse is O(n^2))") {
@@ -253,28 +244,6 @@ class SimilaritySpec extends AnyFunSuite {
     assert(minMargin > 1e-6, s"min |dot(unit, plane)| = $minMargin — too close to a sign flip")
   }
 
-  test("d09 oracle margin: cell assignment and probe cut can't flip between engines at sf0.01") {
-    // The d09 DuckDB oracle ranks cells by dot(raw, centroid); Spark by
-    // dot(unit, centroid) — same order up to the positive per-row scale,
-    // UNLESS two cell similarities sit within double-rounding distance
-    // (~1e-13). Assignment uses rank 1, the probe list ranks 1..2: assert
-    // every row's rank-1/2 and rank-2/3 similarity gaps clear that by
-    // orders of magnitude, with the exact centroids the oracle embeds.
-    assume(TestSpark.hasOracleSf, s"oracle-scale dataset ${TestSpark.oracleSfDir} not present")
-    val emb = graft.engine.GraftSession.table(spark, TestSpark.oracleSfDir, "embeddings")
-    val cents = Similarity.ivfCentroids(emb, "vec_id", "embedding",
-      nCentroids = 16, sampleSize = 1024, iters = 5)
-    val unit = Similarity.normalized(emb, "vec_id", "embedding")
-    val sims = array_sort(array(cents.map(c =>
-      Similarity.dot(col("unit"), typedlit(c.toSeq))): _*), (a, b) => when(a < b, 1).when(a > b, -1).otherwise(0))
-    val gaps = unit.select(
-        (element_at(sims, 1) - element_at(sims, 2)).as("g12"),
-        (element_at(sims, 2) - element_at(sims, 3)).as("g23"))
-      .agg(min(col("g12")), min(col("g23"))).head
-    assert(gaps.getDouble(0) > 1e-6, s"min rank-1/2 sim gap ${gaps.getDouble(0)}")
-    assert(gaps.getDouble(1) > 1e-6, s"min rank-2/3 sim gap ${gaps.getDouble(1)}")
-  }
-
   test("diversitySample: every sign cell capped at perBucket, sparse cells kept whole") {
     val emb = graft.engine.GraftSession.table(spark, TestSpark.sfDir, "embeddings")
     val kept = Similarity.diversitySample(emb, "vec_id", "embedding", bits = 4, perBucket = 10)
@@ -310,7 +279,7 @@ class SimilaritySpec extends AnyFunSuite {
       val rows = Similarity.withRecallAtK(
           Similarity.ivfTopK(emb, "vec_id", "embedding",
             org.apache.spark.sql.functions.col("vec_id") < 5, k = 3,
-            nCentroids = 8, nProbe = np, sampleSize = 64, iters = 3),
+            nCentroids = 8, nProbe = np, iters = 3),
           exact, k = 3)
         .select("q_id", "recall").distinct().collect().map(_.getDouble(1))
       rows.sum / rows.length
@@ -339,7 +308,7 @@ class SimilaritySpec extends AnyFunSuite {
         col("vec_id") < 2, k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val pq = Similarity.pqTopK(emb, "vec_id", "embedding", col("vec_id") < 2,
-        k = 3, m = 2, ksub = 8, sampleSize = 64, iters = 3)
+        k = 3, m = 2, ksub = 8, iters = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(pq == exact, s"lossless PQ must match exact: pq=$pq exact=$exact")
     // real embeddings: a lossy codebook still recovers most of the exact set
@@ -362,8 +331,6 @@ class SimilaritySpec extends AnyFunSuite {
       emb, "vec_id", "embedding", col("vec_id") < 2, k = 3, m = 3)) // 4 % 3 != 0
     intercept[IllegalArgumentException](Similarity.pqTopK(
       emb, "vec_id", "embedding", col("vec_id") < 2, k = 3, ksub = 512))
-    intercept[IllegalArgumentException](Similarity.pqTopK(
-      emb, "vec_id", "embedding", col("vec_id") < 2, k = 3, sampleSize = 8))
   }
 
   test("pqTopKReranked: full-corpus shortlist recovers exact ranking under a LOSSY codebook; recall never drops") {
@@ -384,8 +351,7 @@ class SimilaritySpec extends AnyFunSuite {
         col("vec_id") < 2, k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val rr = Similarity.pqTopKReranked(emb, "vec_id", "embedding",
-        col("vec_id") < 2, k = 3, shortlist = 3, m = 2, ksub = 2,
-        sampleSize = 8, iters = 3)
+        col("vec_id") < 2, k = 3, shortlist = 3, m = 2, ksub = 2, iters = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(rr == exact, s"full-shortlist re-rank must equal exact: rr=$rr exact=$exact")
     // real embeddings, production-shaped config: the re-rank can only
@@ -429,8 +395,7 @@ class SimilaritySpec extends AnyFunSuite {
         col("vec_id") < 2, k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val full = Similarity.ivfPqTopK(emb, "vec_id", "embedding", col("vec_id") < 2,
-        k = 3, nCentroids = 2, nProbe = 2, m = 2, ksub = 2,
-        sampleSize = 8, iters = 3, shortlist = 3)
+        k = 3, nCentroids = 2, nProbe = 2, m = 2, ksub = 2, iters = 3, shortlist = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(full == exact, s"full-probe/full-shortlist must equal exact: got=$full exact=$exact")
     // production-shaped defaults on the real embeddings: every query
@@ -484,7 +449,7 @@ class SimilaritySpec extends AnyFunSuite {
     import graft.engine.GraftSession
     val real = GraftSession.table(spark, TestSpark.sfDir, "embeddings")
     val model = Similarity.ivfAssign(real, "vec_id", "embedding",
-      nCentroids = 4, iters = 3, distributedTrainer = true)
+      nCentroids = 4, iters = 3)
     val direct = Similarity.kmeansDistributed(real, "vec_id", "embedding", 4, 3)
     assert(model.centroids.map(_.toSeq).toSeq == direct.map(_.toSeq).toSeq,
       "ivfAssign must delegate training verbatim to kmeansDistributed")
@@ -547,20 +512,6 @@ class SimilaritySpec extends AnyFunSuite {
     assert(viaLit == viaJoin)
   }
 
-  test("ivfAssign distributedTrainer ignores sampleSize (round-19 advisor find)") {
-    import graft.engine.GraftSession
-    val real = GraftSession.table(spark, TestSpark.sfDir, "embeddings")
-    // 100 cells with the default-sized sampleSize=128 would trip the
-    // 4x-per-centroid require on the SAMPLE trainer; the distributed
-    // trainer never reads it and must not throw
-    val model = Similarity.ivfAssign(real, "vec_id", "embedding",
-      nCentroids = 100, sampleSize = 128, iters = 1, distributedTrainer = true)
-    assert(model.centroids.length == 100)
-    // the sample trainer still validates
-    intercept[IllegalArgumentException](Similarity.ivfAssign(real, "vec_id",
-      "embedding", nCentroids = 100, sampleSize = 128, iters = 1))
-  }
-
   test("pqCodebooksDistributed: partitioning-independent, empty code keeps its centroid, loud on bad dims") {
     // 3 tight clusters in dim 8 (divisible by m=2) — the d42 fixture
     // idiom adapted to subspace training
@@ -592,50 +543,26 @@ class SimilaritySpec extends AnyFunSuite {
         "vec_id", "embedding", 2, 4, 2))
   }
 
-  test("distributed-trained IVF-PQ stack: recall at least matches the sample-trained stack on the real embeddings") {
-    import graft.engine.GraftSession
-    val real = GraftSession.table(spark, TestSpark.sfDir, "embeddings")
-    val q = col("vec_id") < 10
-    val k = 5
-    val exact = Similarity.bruteForceTopK(real, "vec_id", "embedding", q, k)
-      .localCheckpoint(true)
-    def meanRecall(model: Similarity.IvfPqModel): Double = {
-      val r = Similarity.withRecallAtK(
-          Similarity.ivfPqProbe(real, "vec_id", "embedding", model, q,
-            k = k, nProbe = 2, shortlist = 4), exact, k)
-        .groupBy(col("q_id")).agg(max(col("recall")).as("recall"))
-        .agg(avg(col("recall"))).head().getDouble(0)
-      r
-    }
-    val sample = meanRecall(Similarity.ivfPqEncode(real, "vec_id", "embedding",
-      nCentroids = 8, m = 4, ksub = 8, sampleSize = 512, iters = 3))
-    val dist = meanRecall(Similarity.ivfPqEncodeDistributed(real, "vec_id",
-      "embedding", nCentroids = 8, m = 4, ksub = 8, iters = 3))
-    // full-corpus training sees everything the 512-sample trainer saw and
-    // more — on this corpus it must not LOSE recall (small slack for
-    // quantization-boundary flips), and both stacks must be usable
-    assert(dist >= sample - 0.05, s"distributed $dist vs sample $sample")
-    assert(dist >= 0.5, s"distributed-trained stack unusable: recall $dist")
-  }
-
-  test("pqCodebooksDistributed enforces the training-loop plan-literal ceiling (round-19 verdict item 2)") {
-    // ksub x dim = 256 x 4096 = 1,048,576 > 10^6: the per-iteration
-    // assignment projection would embed that many doubles as plan
-    // constants — the require must fire BEFORE any Lloyd's iteration runs
-    val big = (0 until 256).map(i => (i.toLong, Array.fill(4096)(i.toFloat)))
+  test("pqCodebooksDistributed trains past the literal ceiling, equal to driver-local") {
+    // ksub x dim = 256 x 4096 = 1,048,576 > 10^6: each Spark iteration
+    // scores the codebooks in the table shape, and the result must equal
+    // the driver-local Lloyd's bit for bit
+    // eight distinct directions, so most codes go empty and keep their init
+    val big = (0 until 256).map(i =>
+        (i.toLong, Array.tabulate(4096)(d => (((i % 8) * 13 + d) % 17 + 1).toFloat)))
       .toDF("vec_id", "embedding")
-    val e = intercept[IllegalArgumentException](
-      Similarity.pqCodebooksDistributed(big, "vec_id", "embedding",
-        m = 8, ksub = 256, iters = 1))
-    assert(e.getMessage.contains("pqCodebooksDistributed"))
-    assert(e.getMessage.contains("separate passes"))
+    val viaSpark = Similarity.pqCodebooksDistributed(big, "vec_id", "embedding",
+      m = 8, ksub = 256, iters = 1)
+    val viaDriver = Similarity.pqCodebooksDistributedAs(big, "vec_id", "embedding",
+      m = 8, ksub = 256, iters = 1, Some(Similarity.Lloyds.Driver))
+    assert(bits(viaSpark) == bits(viaDriver))
   }
 
   test("ivfAssignJoin + ivfProbeJoin: bit-identical to the literal IVF stack") {
     import graft.engine.GraftSession
     val real = GraftSession.table(spark, TestSpark.sfDir, "embeddings")
     val litModel = Similarity.ivfAssign(real, "vec_id", "embedding",
-      nCentroids = 4, iters = 3, distributedTrainer = true)
+      nCentroids = 4, iters = 3)
     val joinModel = Similarity.ivfAssignJoin(real, "vec_id", "embedding",
       litModel.centroids)
     // assignment equality: same cells for every vector
@@ -683,7 +610,7 @@ class SimilaritySpec extends AnyFunSuite {
     // and the join stack is self-consistent with the one-shot distributed
     // entry path (d43 == d45 at the result level)
     val d43 = Similarity.ivfPqProbe(real, "vec_id", "embedding",
-        Similarity.ivfPqEncodeDistributed(real, "vec_id", "embedding",
+        Similarity.ivfPqEncode(real, "vec_id", "embedding",
           nCentroids = 8, m = 4, ksub = 8, iters = 3),
         col("vec_id") < 10, k = 5, nProbe = 2, shortlist = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
@@ -816,7 +743,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(got.count(_._1 == 0L) == 2 && got.contains((0L, 5)))
 
     val model = Similarity.ivfAssign(df, "vec_id", "embedding",
-      nCentroids = 16, sampleSize = 64, iters = 1)
+      nCentroids = 16, iters = 1)
     val assigned = model.assigned.collect().toSeq
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getInt(2)))
     assert(bnljs(model.assigned) == 1, "ivfAssign did not switch to the table shape")
@@ -828,7 +755,7 @@ class SimilaritySpec extends AnyFunSuite {
     val dim = 62504
     val df = planted(dim, plantedIds(24))
     val model = Similarity.ivfAssign(df, "vec_id", "embedding",
-      nCentroids = 16, sampleSize = 64, iters = 1)
+      nCentroids = 16, iters = 1)
     val corpus = model.assigned.collect().toSeq
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getInt(2)))
     val queries = units(df).filter(_._1 < 4)
@@ -850,7 +777,7 @@ class SimilaritySpec extends AnyFunSuite {
     // centroids and codebooks both hold 16 x 62504 doubles
     val dups = planted(dim, plantedIds(24) ++ Seq((0L, 5), (1L, 6)))
     val model = Similarity.ivfPqEncode(dups, "vec_id", "embedding",
-      nCentroids = 16, m = 4, ksub = 16, sampleSize = 64, iters = 1)
+      nCentroids = 16, m = 4, ksub = 16, iters = 1)
     val encoded = model.encoded.collect().toSeq
       .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Int](2).toSeq))
     assert(bnljs(model.encoded) == 1, "the encode did not switch to the table shape")
@@ -862,7 +789,7 @@ class SimilaritySpec extends AnyFunSuite {
     // the exact top-k of the probed cells
     val df = planted(dim, plantedIds(24))
     val pq = Similarity.ivfPqEncode(df, "vec_id", "embedding",
-      nCentroids = 16, m = 4, ksub = 16, sampleSize = 64, iters = 1)
+      nCentroids = 16, m = 4, ksub = 16, iters = 1)
     val byId = units(df).toMap
     val corpus = pq.encoded.collect().toSeq.map(r => (r.getLong(0), byId(r.getLong(0)), r.getInt(1)))
     val probe = Similarity.ivfPqProbe(df, "vec_id", "embedding", pq,
@@ -878,11 +805,11 @@ class SimilaritySpec extends AnyFunSuite {
     val dim = 62504
     val df = planted(dim, plantedIds(24))
     val pq = Similarity.pqTopK(df, "vec_id", "embedding", col("vec_id") < 4, k = 3,
-      m = 4, ksub = 16, sampleSize = 64, iters = 1)
+      m = 4, ksub = 16, iters = 1)
     val got = triples(pq)
     // the encode's and the LUTs' cross joins, plus the ADC scan's own
     assert(bnljs(pq) == 3, "pqTopK did not switch to the table shape")
-    val books = Similarity.pqCodebooks(df, "vec_id", "embedding", 4, 16, 64, 1)
+    val books = Similarity.pqCodebooksDistributed(df, "vec_id", "embedding", 4, 16, 1)
     val subDim = books(0)(0).length
     val rows = units(df)
     val codes = rows.map { case (id, u) => (id, pqCodesRef(u, books)) }
@@ -900,9 +827,9 @@ class SimilaritySpec extends AnyFunSuite {
     val df = planted(dim, plantedIds(24))
     val q = col("vec_id") < 4
     val ivf = Similarity.ivfAssign(df, "vec_id", "embedding",
-      nCentroids = 16, sampleSize = 64, iters = 1)
+      nCentroids = 16, iters = 1)
     val pq = Similarity.ivfPqEncode(df, "vec_id", "embedding",
-      nCentroids = 16, m = 4, ksub = 16, sampleSize = 64, iters = 1)
+      nCentroids = 16, m = 4, ksub = 16, iters = 1)
     Seq(
       "kmeansAssign" -> Similarity.kmeansAssign(df, "vec_id", "embedding", axes(dim)),
       "ivfAssign" -> ivf.assigned,
@@ -912,6 +839,90 @@ class SimilaritySpec extends AnyFunSuite {
     ).foreach { case (stage, out) =>
       assert(out.collect().nonEmpty, stage)
       assert(bnljs(out) == 0, s"$stage left the literal shape at the ceiling")
+    }
+  }
+
+  // The trainers' size rule and their three shapes. Every shape runs the
+  // same Lloyd's, so the centroids and codebooks must agree in their raw
+  // double bits, not just approximately.
+
+  private def bits(c: Array[Array[Double]]): Seq[Seq[Long]] =
+    c.map(_.map(java.lang.Double.doubleToRawLongBits).toSeq).toSeq
+
+  private def bits(b: Array[Array[Array[Double]]]): Seq[Seq[Seq[Long]]] = b.map(bits).toSeq
+
+  /** Three planted clusters in dim 8 whose two lowest ids are the same
+    * vector. Init takes both, so in the first iteration cell 1 (k = 4) and
+    * code 1 of each subspace (m = 2, ksub = 4) lose every tie to 0 and
+    * stay empty. */
+  private def plantedTwins = (Seq((0L, 0), (1L, 0)) ++ (2L until 30L).map(i => (i, (i % 3).toInt))).map {
+    case (id, axis) =>
+      val v = Array.fill(8)(0.0f)
+      v(axis) = 1.0f
+      v(axis + 4) = if (id < 2) 0.0f else 0.01f * (id / 3)
+      (id, v)
+  }.toDF("vec_id", "embedding")
+
+  test("trainer shapes: driver-local, Spark literal and Spark table are bit-identical") {
+    import Similarity.Lloyds._
+    val sf0001 = TestSpark.spark.read.parquet(s"${TestSpark.sfDir}/embeddings.parquet")
+    val shapes = Seq(Driver, Spark, SparkTable)
+    Seq(("sf0.001", sf0001, 4, 4, 8), ("planted", plantedTwins, 4, 2, 4)).foreach {
+      case (name, df, k, m, ksub) =>
+        val cents = shapes.map(sh =>
+          bits(Similarity.kmeansDistributedAs(df, "vec_id", "embedding", k, 3, Some(sh))))
+        assert(cents.distinct.size == 1, s"$name: k-means shapes diverged")
+        assert(cents.head == bits(Similarity.kmeansDistributed(df, "vec_id", "embedding", k, 3)))
+        val books = shapes.map(sh =>
+          bits(Similarity.pqCodebooksDistributedAs(df, "vec_id", "embedding", m, ksub, 3, Some(sh))))
+        assert(books.distinct.size == 1, s"$name: PQ shapes diverged")
+        assert(books.head ==
+          bits(Similarity.pqCodebooksDistributed(df, "vec_id", "embedding", m, ksub, 3)))
+    }
+  }
+
+  test("size rule: n*dim = 10^6 trains on the driver, one row more in Spark") {
+    def frame(n: Int) = (0 until n).map(i =>
+        (i.toLong, Array.tabulate(1000)(d => ((i * 7 + d) % 11 + 1).toFloat)))
+      .toDF("vec_id", "embedding")
+    def head(df: org.apache.spark.sql.DataFrame) = Similarity.trainingHead(
+      Similarity.normalized(df, "vec_id", "embedding").filter(col("unit").isNotNull), 4)
+    val at = head(frame(1000))
+    assert(at.whole && at.units.length == 1000)
+    val past = frame(1001)
+    val over = head(past)
+    assert(!over.whole && over.units.length == 1001)
+    assert(bits(Similarity.kmeansDistributed(past, "vec_id", "embedding", 4, 2)) ==
+      bits(Similarity.kmeansDistributedAs(past, "vec_id", "embedding", 4, 2,
+        Some(Similarity.Lloyds.Driver))))
+  }
+
+  test("Lloyd's step: the scored cell/codes column is computed below the Generate") {
+    import org.apache.spark.sql.catalyst.expressions.Alias
+    import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan}
+    // a scan, not a local frame the optimizer would fold away
+    val all = Similarity.normalized(
+      TestSpark.spark.read.parquet(s"${TestSpark.sfDir}/embeddings.parquet"), "vec_id", "embedding")
+    val cents = Array.tabulate(4)(a => Array.tabulate(64)(d => if (d == a) 1.0 else 0.0))
+    val books = Array.tabulate(2)(_ => cents.map(_.take(32)))
+    def definers(p: LogicalPlan, name: String): Seq[LogicalPlan] = p.collect {
+      case n if n.expressions.exists(_.exists {
+        case a: Alias => a.name == name
+        case _ => false
+      }) => n
+    }
+    Seq(true, false).foreach { literal =>
+      Seq("cell" -> Similarity.kmeansStep(all, cents, literal),
+          "codes" -> Similarity.pqStep(all, books, literal)).foreach { case (name, step) =>
+        val plan = step.queryExecution.optimizedPlan
+        val gens = plan.collect { case g: Generate => g }
+        assert(gens.size == 1, plan)
+        // every node computing the column sits under the Generate: once per
+        // vector, never once per exploded component
+        val below = definers(gens.head.child, name)
+        assert(below.nonEmpty && below.size == definers(plan, name).size,
+          s"$name (literal=$literal) is computed above the Generate:\n$plan")
+      }
     }
   }
 }
