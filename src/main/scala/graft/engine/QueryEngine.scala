@@ -2,9 +2,11 @@ package graft.engine
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{Expression, ScalarSubquery}
 import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.execution.SQLExecution
 
 /** Query facade reproducing the reference CLI's observable behavior
   * (`engine/src/cli.cpp:63-326`): EXPLAIN-prefix handling (`cli.cpp:201`),
@@ -120,14 +122,8 @@ object QueryEngine {
           val rewritten = rewrittenSql(qe.optimizedPlan)
           if (isExplain) QueryReport("EXPLAIN", log, tree, Nil, 0, None, None, Some(df), rewritten)
           else {
-            // the CLI renders at most 50 rows — never collect the full
-            // result to the driver (a SELECT * over a large table would
-            // OOM it); take 51 to learn whether the result was truncated.
-            // rowCount == 51 therefore means "50+ rows" — a second full
-            // execution just to print an exact total is not worth it
-            val collected = df.limit(51).collect()
-            val rendered = collected.toSeq.take(50).map(row =>
-              row.toSeq.map(v => if (v == null) "NULL" else v.toString).mkString(" | "))
+            val collected = fetchRows(df)
+            val rendered = collected.toSeq.take(50).map(renderRow)
             QueryReport("SELECT", log, tree, rendered, collected.length.toLong,
               None, None, Some(df), rewritten)
           }
@@ -147,6 +143,58 @@ object QueryEngine {
         }
     }
   }
+
+  /** Rows fetched per SELECT: the CLI renders at most 50, and the 51st
+    * says the result was truncated, so `rowCount == 51` means "50+ rows".
+    * A full result is never collected to the driver (a SELECT * over a
+    * large table would OOM it), and an exact total would cost a second
+    * full run.
+    */
+  private val FetchRows = 51
+
+  /** At most [[FetchRows]] rows of `df`, executed from the same
+    * QueryExecution the report describes: one analysis, one optimization
+    * and one physical plan per statement. The rows come from
+    * `executedPlan.executeTake(51)`, or from `executeCollect()` when the
+    * optimized plan already bounds the result to ≤ 51 rows (LIMIT n ≤ 51,
+    * a global aggregate, VALUES): a limited Dataset would plan exactly
+    * that operator and collect it whole, where `executeTake` would run a
+    * root CollectLimit or TakeOrderedAndProject through its shuffle.
+    *
+    * One shape re-plans as `df.limit(51)`: an optimized root that is a
+    * global Sort (through Projects), i.e. ORDER BY without LIMIT. Only
+    * there does the limit pick a cheaper operator, a top-k
+    * TakeOrderedAndProject instead of a range-shuffle sort of the whole
+    * result.
+    */
+  private def fetchRows(df: DataFrame): Array[Row] = {
+    val qe = df.queryExecution
+    def sortRoot(p: LogicalPlan): Boolean = p match {
+      case Project(_, child) => sortRoot(child)
+      case s: Sort => s.global
+      case _ => false
+    }
+    if (sortRoot(qe.optimizedPlan)) df.limit(FetchRows).collect()
+    else {
+      val toRow = ExpressionEncoder(df.schema).resolveAndBind().createDeserializer()
+      val bounded = qe.optimizedPlan.maxRows.exists(_ <= FetchRows)
+      SQLExecution.withNewExecutionId(qe, Some("collect")) {
+        val plan = qe.executedPlan
+        (if (bounded) plan.executeCollect() else plan.executeTake(FetchRows)).map(toRow)
+      }
+    }
+  }
+
+  /** One result row as the CLI prints it (`cli.cpp:312-318`): cells
+    * joined by `" | "`, NULL for null, and BINARY as upper-case hex bytes
+    * the way Spark's `show()` prints them (`[01 FF]`), not the array's
+    * identity string, which changes from run to run.
+    */
+  private[graft] def renderRow(row: Row): String = row.toSeq.map {
+    case null => "NULL"
+    case b: Array[Byte] => b.map(x => f"$x%02X").mkString("[", " ", "]")
+    case v => v.toString
+  }.mkString(" | ")
 
   // ------------------------------------------------------------------
   // warn-and-continue semantics (reference semantic.cpp:22-26,53-58 via

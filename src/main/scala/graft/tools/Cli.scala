@@ -58,8 +58,9 @@ object Cli {
         }
         if (rep.kind == "SELECT") {
           rep.rows.take(50).foreach(println)
-          // rowCount == 51 is the truncation signal (QueryEngine collects
-          // at most 51 rows; an exact total would cost a second full run)
+          // rowCount == 51 is the truncation signal (QueryEngine fetches
+          // at most 51 rows, executeTake(51) on the plan it reports; an
+          // exact total would cost a second full run)
           if (rep.rowCount > 50) println("... (50+ rows)")
           else println(s"(${rep.rowCount} rows)")
         }

@@ -1,5 +1,16 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit, LogicalPlan, Project, Sort}
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.{GraftSession, QueryEngine}
@@ -117,6 +128,128 @@ class QueryEngineSpec extends AnyFunSuite {
       w.contains("Column 'no_such_col' not found") && w.contains("proceeding anyway")), warn.warnings)
     val hard = QueryEngine.run(spark, "SELECT c.no_such_col FROM customer c")
     assert(hard.kind == "ERROR" && hard.error.nonEmpty)
+  }
+
+  /** What `f` executed: each SQL action as (action name, QueryExecution),
+    * and the number of stages its jobs submitted. Listener delivery is
+    * asynchronous but ordered, so seeing a marker action after `f` means
+    * every action and stage of `f` has been seen too.
+    */
+  private case class Executed(actions: Seq[(String, QueryExecution)], stages: Int) {
+    def of(rep: QueryEngine.QueryReport): Int =
+      actions.count(_._2 eq rep.df.get.queryExecution)
+  }
+
+  private def executed(f: => Unit): Executed = {
+    val actions = new ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val stages = new AtomicInteger
+    val marker = spark.range(1)
+    val seen = new CountDownLatch(2)
+    val onAction = new QueryExecutionListener {
+      private def add(name: String, qe: QueryExecution): Unit =
+        if (qe eq marker.queryExecution) seen.countDown() else actions.add(name -> qe)
+      override def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit = add(name, qe)
+      override def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = add(name, qe)
+    }
+    val onStage = new SparkListener {
+      private def isMarker(p: java.util.Properties) =
+        p != null && p.getProperty("spark.job.description") == "qe-marker"
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (isMarker(e.properties)) seen.countDown()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (!isMarker(e.properties)) stages.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    spark.listenerManager.register(onAction)
+    sc.addSparkListener(onStage)
+    try {
+      f
+      sc.setJobDescription("qe-marker")
+      try marker.collect() finally sc.setJobDescription(null)
+      assert(seen.await(60, TimeUnit.SECONDS), "marker action never reached the listeners")
+    } finally {
+      spark.listenerManager.unregister(onAction)
+      sc.removeSparkListener(onStage)
+    }
+    Executed(actions.asScala.toSeq, stages.get)
+  }
+
+  /** The one shape whose rows are fetched through `df.limit(51)`. */
+  private def sortRoot(p: LogicalPlan): Boolean = p match {
+    case Project(_, child) => sortRoot(child)
+    case s: Sort => s.global
+    case _ => false
+  }
+
+  /** Rows come out in a defined order: a Sort under the root's Projects
+    * and limits.
+    */
+  private def orderedRoot(p: LogicalPlan): Boolean = p match {
+    case Project(_, child) => orderedRoot(child)
+    case GlobalLimit(_, child) => orderedRoot(child)
+    case LocalLimit(_, child) => orderedRoot(child)
+    case _: Sort => true
+    case _ => false
+  }
+
+  /** `rep` shows the rows of `spark.sql(sql).limit(51).collect()`, given
+    * as `want` (rendered): by count when truncated, else in order when
+    * `ordered`, as multisets otherwise.
+    */
+  private def assertRows(label: String, rep: QueryEngine.QueryReport, want: Seq[String],
+      ordered: Boolean): Unit = {
+    assert(rep.kind == "SELECT", s"$label: ${rep.error}")
+    if (want.size > 50) assert(rep.rowCount == 51 && rep.rows.size == 50, label)
+    else {
+      assert(rep.rowCount == want.size, label)
+      if (ordered) assert(rep.rows == want, label)
+      else assert(rep.rows.sorted == want.sorted, label)
+    }
+  }
+
+  private object aqe extends AdaptiveSparkPlanHelper
+
+  test("one execution per SELECT: the rows come from the report's own QueryExecution") {
+    var rep: QueryEngine.QueryReport = null
+    val ex = executed {
+      rep = QueryEngine.run(spark,
+        """SELECT c.c_name, o.o_orderkey, o.o_totalprice FROM customer c
+           JOIN orders o ON c.c_custkey = o.o_custkey WHERE o.o_orderstatus = 'O'""")
+    }
+    assert(rep.kind == "SELECT" && rep.rowCount == 51 && rep.rows.size == 50, rep.error)
+    assert(ex.actions.size == 1, ex.actions.map(_._1))
+    assert(ex.actions.head._1 == "collect" && ex.of(rep) == 1)
+  }
+
+  test("a plan already bounded to 51 rows is collected whole from the report's plan, in one stage") {
+    // four range partitions: executeTake(51) on the root
+    // TakeOrderedAndProject would shuffle them into one partition first
+    val sql = "SELECT id FROM range(0, 1000, 1, 4) ORDER BY id DESC LIMIT 10"
+    var rep: QueryEngine.QueryReport = null
+    val ex = executed { rep = QueryEngine.run(spark, sql) }
+    assert(rep.rows == (999 to 990 by -1).map(_.toString) && rep.rowCount == 10, rep.rows)
+    assert(ex.actions.size == 1 && ex.of(rep) == 1, ex.actions.map(_._1))
+    assert(ex.stages == 1, s"${ex.stages} stages")
+  }
+
+  test("ORDER BY without LIMIT is the one shape that re-plans: a top-k, the first 50 in order") {
+    val sql = "SELECT c_custkey, c_name FROM customer ORDER BY c_acctbal DESC, c_custkey"
+    var rep: QueryEngine.QueryReport = null
+    val ex = executed { rep = QueryEngine.run(spark, sql) }
+    assert(sortRoot(rep.df.get.queryExecution.optimizedPlan))
+    assert(rep.rowCount == 51)
+    assert(rep.rows == spark.sql(sql).collect().take(50).map(QueryEngine.renderRow).toSeq)
+    assert(ex.actions.size == 1 && ex.of(rep) == 0, ex.actions.map(_._1))
+    val plan = ex.actions.head._2.executedPlan
+    assert(aqe.collect(plan) { case t: TakeOrderedAndProjectExec => t }.nonEmpty, plan)
+    assert(aqe.collect(plan) { case s: SortExec if s.global => s }.isEmpty, plan)
+  }
+
+  test("BINARY cells render as hex bytes, the same on every run") {
+    val sql = "SELECT X'01FF0A' AS b, CAST(NULL AS BINARY) AS n, X'' AS e"
+    val first = QueryEngine.run(spark, sql)
+    assert(first.rows == Seq("[01 FF 0A] | NULL | []"), first.rows)
+    assert(QueryEngine.run(spark, sql).rows == first.rows)
   }
 
   test("NULL rendering and ' | ' separators (cli.cpp:312-318 parity)") {
@@ -386,6 +519,59 @@ class QueryEngineSpec extends AnyFunSuite {
     assert(a.sameElements(b), s"mismatch for rewritten: $rewritten")
   }
 
+  /** One registry oracle run through `QueryEngine.run` as the CLI runs it,
+    * with the full result of the same text (None when that fails at run
+    * time, as x10's DuckDB-only hex cast does).
+    */
+  private case class RegistryRun(name: String, sql: String, rep: QueryEngine.QueryReport,
+      full: Option[Array[Row]])
+
+  /** Every Spark-runnable registry oracle (its SQL parses and analyzes on
+    * Spark), run once, with what the pass executed. The coverage ratchet
+    * and the row-parity test share this one pass over the registry.
+    */
+  private lazy val registry: (Seq[RegistryRun], Executed) = {
+    var runs = Seq.empty[RegistryRun]
+    val ex = executed {
+      runs = SparkEntry.oracleSql.toSeq.sortBy(_._1).flatMap { case (name, sql) =>
+        val sparkRunnable =
+          try { spark.sql(sql).queryExecution.analyzed; true }
+          catch { case _: Throwable => false }
+        if (!sparkRunnable) None
+        else Some(RegistryRun(name, sql, QueryEngine.run(spark, sql),
+          try Some(spark.sql(sql).collect()) catch { case _: Throwable => None }))
+      }
+    }
+    (runs, ex)
+  }
+
+  test("row parity over the registry: QueryEngine.run shows the rows of spark.sql(sql).limit(51)") {
+    val (runs, ex) = registry
+    assert(runs.size >= 80, s"corpus shrank to ${runs.size}")
+    runs.foreach { r =>
+      r.full match {
+        case None => assert(r.rep.kind == "ERROR", s"${r.name} ran in the engine only")
+        case Some(full) =>
+          // LIMIT 51 of an n <= 50-row result is all of it, so the full
+          // result stands in for spark.sql(sql).limit(51).collect()
+          val want = full.toSeq.map(QueryEngine.renderRow)
+          val optimized = r.rep.df.map(_.queryExecution.optimizedPlan)
+          assertRows(r.name, r.rep, want, optimized.exists(orderedRoot))
+          assert(r.rep.rows.diff(want).isEmpty, s"${r.name}: rows outside the full result")
+          // only an ORDER BY without LIMIT re-plans; every other statement
+          // executes the report's own QueryExecution, once
+          assert(ex.of(r.rep) == (if (sortRoot(optimized.get)) 0 else 1), r.name)
+      }
+    }
+    assert(runs.exists(r => r.full.exists(_.length > 50)), "no truncated result to pin")
+    Seq("SHOW TABLES", "DESCRIBE customer", "SET spark.sql.shuffle.partitions",
+        "SELECT c_custkey FROM customer WHERE c_custkey < 0",
+        "SELECT 1 AS x WHERE 1 = 0").foreach { sql =>
+      val want = spark.sql(sql).limit(51).collect().toSeq.map(QueryEngine.renderRow)
+      assertRows(sql, QueryEngine.run(spark, sql), want, ordered = false)
+    }
+  }
+
   test("rewrittenSql coverage ratchet: every Spark-runnable SparkEntry oracle is classified, regenerators can't silently regress") {
     // The un-parser's coverage, pinned against the LIVE query registry:
     // every SparkEntry oracle whose SQL also parses+analyzes on Spark (the
@@ -524,16 +710,13 @@ class QueryEngineSpec extends AnyFunSuite {
       "y09_stream_interval_right" -> true,
       "y10_rocksdb_state_store" -> true,
       "y11_transform_with_state" -> true)
-    val results: Map[String, Option[String]] =
-      SparkEntry.oracleSql.toSeq.sortBy(_._1).flatMap { case (name, sql) =>
-        val sparkRunnable =
-          try { spark.sql(sql).queryExecution.analyzed; true }
-          catch { case _: Throwable => false }
-        if (!sparkRunnable) None
-        else Some(name -> (
-          try QueryEngine.run(spark, s"EXPLAIN $sql").rewrittenSql
-          catch { case _: Throwable => None }))
-      }.toMap
+    // a statement that fails at run time reports ERROR without its
+    // rewritten text; EXPLAIN still classifies it
+    val results: Map[String, Option[String]] = registry._1.map { r =>
+      r.name -> (
+        if (r.rep.kind == "ERROR") QueryEngine.run(spark, s"EXPLAIN ${r.sql}").rewrittenSql
+        else r.rep.rewrittenSql)
+    }.toMap
     val fmt = results.toSeq.sorted.map { case (n, v) => s""""$n" -> ${v.isDefined}""" }
       .mkString(",\n      ")
     assert(results.view.mapValues(_.isDefined).toMap == pinned,
@@ -548,14 +731,12 @@ class QueryEngineSpec extends AnyFunSuite {
     // is exactly the best-effort lie the un-parser promises never to tell.
     // Executed here over the live registry so a new entry whose oracle
     // regenerates subtly wrong can't ship green.
+    val full = registry._1.map(r => r.name -> r.full).toMap
     val mismatches = results.collect { case (name, Some(rewritten)) =>
       // analyzable-but-not-executable originals (x10's 0x-hex CAST is
       // DuckDB arithmetic that Spark's ANSI cast rejects at runtime) have
       // nothing to hold the regenerated text against — skip, don't blame
-      val origRows =
-        try Some(spark.sql(SparkEntry.oracleSql(name)).collect().map(_.toString).sorted)
-        catch { case _: Throwable => None }
-      origRows.flatMap { a =>
+      full(name).map(_.map(_.toString).sorted).flatMap { a =>
         try {
           val b = spark.sql(rewritten).collect().map(_.toString).sorted
           if (a.sameElements(b)) None else Some(s"$name: wrong rows: $rewritten")
