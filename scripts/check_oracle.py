@@ -8,6 +8,10 @@ oracle_sql.json query in DuckDB over the same parquet tables, sort columns
 by name, sort rows, normalize values, and diff against the Spark parquet
 output that graft.Verify wrote. Strictly a dev tool (driver-side python).
 
+A degraded dump fails too: every entry named in oracle_errors.json (its
+replay generator failed) and every Spark output directory without an
+oracle is a FAIL, subject to the prefix filter below.
+
 Extras over the driver gate (round 13, for the sf1 correctness run):
   - <sfDir> tables may be parquet DIRECTORIES (Spark-written, e.g.
     ScaleData's benchdata/sf1) as well as single files;
@@ -136,9 +140,27 @@ def main():
         elif os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}'){where}")
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
+    err_path = f"{out_dir}/oracle_errors.json"
+    gen_errors = json.load(open(err_path)) if os.path.exists(err_path) else {}
+
+    def selected(name):
+        return prefixes is None or any(name.startswith(p) for p in prefixes)
+
     n_ok = n_bad = n_skip = 0
+    # a degraded dump is not a pass: an entry whose replay generator failed
+    # is missing from oracle_sql.json, and so is any other entry whose
+    # Spark output has no oracle to compare against
+    for name in sorted(gen_errors):
+        if selected(name):
+            print(f"FAIL {name}: oracle generator failed: {gen_errors[name]}")
+            n_bad += 1
+    for name in sorted(os.listdir(out_dir)):
+        if (os.path.isdir(f"{out_dir}/{name}") and name not in oracles
+                and name not in gen_errors and selected(name)):
+            print(f"FAIL {name}: spark output has no oracle")
+            n_bad += 1
     for name in sorted(oracles):
-        if prefixes is not None and not any(name.startswith(p) for p in prefixes):
+        if not selected(name):
             n_skip += 1
             continue
         lint_hugeint(con, name, oracles[name])

@@ -26,7 +26,7 @@ object SparkEntry {
   /** Deterministic doc-subset replay mode (round 14, dev-only): see
     * [[GraftSession.applySubset]] — the filter lives in GraftSession so
     * every path to a table (DataFrame entries, SQL-text entries' temp
-    * views, dynamic oracle generators) is thinned uniformly; the
+    * views, replay oracle generators) is thinned uniformly; the
     * all-pairs-by-construction oracle families, quadratic in DuckDB at
     * 10× data, replay at sf1 on a bounded pair space instead of being
     * skipped. The subset is pushed into the entry INPUT (a smaller
@@ -55,12 +55,27 @@ object SparkEntry {
       "' ' || text || ' ' LIKE '% and %' OR ' ' || text || ' ' LIKE '% of %' THEN 'en' " +
       "ELSE 'und' END"
 
-  /** A query whose single SQL text runs identically in Spark and DuckDB. */
-  private def shared(q: String): (QFn, Option[String]) =
-    (((s: SparkSession, dir: String) => { GraftSession.registerFor(s, dir, q); s.sql(q) }), Some(q))
+  /** An entry's DuckDB oracle: fixed SQL text, or a generator that writes
+    * the text from the dump dir's data (the ANN entries replay their
+    * training in SQL, which needs the actual embeddings' dim).
+    */
+  sealed trait Oracle
+  final case class Static(sql: String) extends Oracle
+  final case class Replay(gen: (SparkSession, String) => String) extends Oracle
 
-  private def entry(fn: QFn, oracle: String): (QFn, Option[String]) = (fn, Some(oracle))
-  private def noOracle(fn: QFn): (QFn, Option[String]) = (fn, None)
+  /** One registry entry: the DataFrame it builds from a dump dir, and the
+    * DuckDB oracle that must return the same rows.
+    */
+  final case class Entry(name: String, build: (SparkSession, String) => DataFrame,
+      oracle: Oracle)
+
+  /** A query whose single SQL text runs identically in Spark and DuckDB. */
+  private def shared(q: String): (QFn, Oracle) =
+    (((s: SparkSession, dir: String) => { GraftSession.registerFor(s, dir, q); s.sql(q) }), Static(q))
+
+  private def entry(fn: QFn, oracle: String): (QFn, Oracle) = (fn, Static(oracle))
+  private def replay(fn: QFn)(gen: (SparkSession, String) => String): (QFn, Oracle) =
+    (fn, Replay(gen))
 
   /** Recall@k measurement on the approximate ANN entries (d08/d09) runs the
     * exact brute-force baseline inside the same job. On by default so the
@@ -545,20 +560,10 @@ object SparkEntry {
         col("asof_ts").as("click_ts"), col("asof_click_value").as("click_value"))
   }
 
-  /** Data-dependent oracle context: the ANN replays read the ACTUAL dump
-    * dir's embedding dim ([[embDim]]), so their SQL exists only once that
-    * dir is known. Verify sets this before reading [[oracleSql]]; a
-    * consumer that never does gets the static map and those entries stay
-    * rows-only.
-    */
-  @volatile private var oracleCtx: Option[(SparkSession, String)] = None
-  private[graft] def setOracleContext(spark: SparkSession, dir: String): Unit =
-    oracleCtx = Some((spark, dir))
-
   // ------------------------------------------------------------------
   // §2a/§2b relational surface — one entry per reference operator
   // ------------------------------------------------------------------
-  private lazy val relational: Vector[(String, (QFn, Option[String]))] = Vector(
+  private lazy val relational: Vector[(String, (QFn, Oracle))] = Vector(
 
     // #1 table scan + #4 projection (column pruning reaches the parquet scan)
     "q01_scan_project" -> entry(
@@ -1170,9 +1175,8 @@ object SparkEntry {
   // ------------------------------------------------------------------
   // Training-data pipeline extensions (north-star, BASELINE.json):
   // dedup, similarity search, text analysis, multimodal, event analytics.
-  // Non-SQL-expressible ops omit the oracle → driver records rows-only.
   // ------------------------------------------------------------------
-  private lazy val extensions: Vector[(String, (QFn, Option[String]))] = Vector(
+  private lazy val extensions: Vector[(String, (QFn, Oracle))] = Vector(
 
     // exact dedup — one hash aggregate on the content key
     "d01_dedup_exact" -> entry(
@@ -1839,16 +1843,15 @@ object SparkEntry {
 
     // IVF approximate top-k: spherical k-means cells + nProbe search;
     // recall@k vs the exact baseline attached per row as in d08.
-    // Oracled DYNAMICALLY: Verify injects the dump dir
-    // ([[setOracleContext]]) and [[ivfOracleSql]] replays the whole
-    // training and probe in DuckDB — noOracle here covers only a consumer
-    // that never supplies the context
-    "d09_ann_ivf" -> noOracle(
+    // Oracle is a replay: [[ivfOracleSql]] re-derives the whole training
+    // and probe in DuckDB from the dump dir's embeddings
+    "d09_ann_ivf" -> replay(
       (s, d) => {
         val emb = t(s, d, "embeddings")
         val approx = Similarity.ivfTopK(emb, "vec_id", "embedding", col("vec_id") < 10, k = 5)
         withRecall(emb, approx, k = 5)
-      }),
+      })((s, d) => ivfOracleSql(s, d, nCentroids = 16, nProbe = 2,
+        iters = 5, k = 5)),
 
     // IVF probe-budget tuning curve (round 12): per-query recall@k for
     // nProbe in {1, 2, 4} — the ANN sibling of d23's LSH banding S-curve,
@@ -1858,7 +1861,7 @@ object SparkEntry {
     // probe-only against the shared assigned frame; recall is
     // withRecallAtK's rational, so the full curve replays in the
     // generated DuckDB oracle (the same training replay as d09's)
-    "d25_ivf_nprobe_curve" -> noOracle(
+    "d25_ivf_nprobe_curve" -> replay(
       (s, d) => {
         val emb = t(s, d, "embeddings")
         // checkpoint the tiny k·|Q| exact frame (the d35/d32 discipline)
@@ -1883,7 +1886,8 @@ object SparkEntry {
             .agg(max(col("recall")).as("recall"), count(col("n_id")).as("n_returned"))
             .select(lit(np).as("n_probe"), col("q_id"), col("recall"), col("n_returned"))
         }.reduce(_ unionAll _)
-      }),
+      })((s, d) => ivfCurveOracleSql(s, d, Seq(1, 2, 4),
+        nCentroids = 16, iters = 5, k = 5)),
 
     // METADATA-FILTERED ANN (round 17): "nearest neighbors among vectors
     // WHERE label is even" — every production vector store's second query.
@@ -1892,9 +1896,9 @@ object SparkEntry {
     // probe never pays for out-of-filter vectors and recall is measured
     // against the exact FILTERED baseline — post-filtering an unfiltered
     // top-k would return short lists and miss true filtered neighbors
-    // (SimilaritySpec pins a concrete miss). Oracled dynamically like d09:
+    // (SimilaritySpec pins a concrete miss). Oracle is a replay like d09's:
     // [[ivfFilteredOracleSql]] replays training, probe, filter and recall
-    "d39_filtered_ann" -> noOracle(
+    "d39_filtered_ann" -> replay(
       (s, d) => {
         val emb = t(s, d, "embeddings")
         val q = col("vec_id") < 10
@@ -1906,7 +1910,8 @@ object SparkEntry {
         else Similarity.withRecallAtK(approx,
           Similarity.bruteForceTopKFiltered(emb, "vec_id", "embedding", q, cand, k = 5),
           k = 5)
-      }),
+      })((s, d) => ivfFilteredOracleSql(s, d, nCentroids = 16,
+        nProbe = 2, iters = 5, k = 5, cand = "l.label % 2 = 0")),
 
     // Full-corpus k-means (round 18): Lloyd's over EVERY vector, on the
     // driver while the corpus holds n·dim ≤ 10⁶ doubles, else one scan +
@@ -1918,13 +1923,13 @@ object SparkEntry {
     // bit-drift), sum-normalized centroids (mean's division cancels under
     // normalization — no engine-specific decimal rounding anywhere), and
     // the final argmax assignment with lowest-cell tie-break.
-    "d42_kmeans_distributed" -> noOracle(
+    "d42_kmeans_distributed" -> replay(
       (s, d) => {
         val emb = t(s, d, "embeddings")
         Similarity.kmeansAssign(emb, "vec_id", "embedding",
           Similarity.kmeansDistributed(emb, "vec_id", "embedding",
             nCentroids = 8, iters = 4))
-      }),
+      })((s, d) => kmeansOracleSql(s, d, k = 8, iters = 4)),
 
     // IVF-PQ with BOTH trainings in the Spark shape (round 19): coarse
     // cells from d42's full-corpus spherical Lloyd's, codebooks from the
@@ -1935,7 +1940,7 @@ object SparkEntry {
     // BOTH trainings in SQL (every Lloyd's iteration of both k-means runs
     // is unrolled CTE algebra) and replays probe/ADC/shortlist/re-rank/
     // recall on top of them.
-    "d43_ann_ivfpq_distributed" -> noOracle(
+    "d43_ann_ivfpq_distributed" -> replay(
       (s, d) => {
         val emb = t(s, d, "embeddings")
         val k = 5
@@ -1944,7 +1949,9 @@ object SparkEntry {
         val approx = Similarity.ivfPqProbe(emb, "vec_id", "embedding", model,
           col("vec_id") < 10, k = k, nProbe = 2, shortlist = 4)
         withRecall(emb, approx, k = k)
-      }),
+      })((s, d) => ivfPqOracleSql(s, d,
+        nCentroids = 8, m = 4, ksub = 8, iters = 3, nProbe = 2,
+        k = 5, shortlist = 4)),
 
     // broadcast-centroid assignment (round 19): the table shape
     // kmeansAssign picks past its plan-literal ceiling, forced here at
@@ -1953,13 +1960,13 @@ object SparkEntry {
     // struct, so nothing k-sized rides the plan or the generated code.
     // Same training as d42, same oracle SQL verbatim: the two assignment
     // shapes must be bit-identical (also pinned directly in SimilaritySpec).
-    "d44_kmeans_assign_join" -> noOracle(
+    "d44_kmeans_assign_join" -> replay(
       (s, d) => {
         val emb = t(s, d, "embeddings")
         Similarity.kmeansAssignJoin(emb, "vec_id", "embedding",
           Similarity.kmeansDistributed(emb, "vec_id", "embedding",
             nCentroids = 8, iters = 4))
-      }),
+      })((s, d) => kmeansOracleSql(s, d, k = 8, iters = 4)),
 
     // broadcast-table IVF-PQ encode + probe (round 20): the d44 shape
     // propagated to the WHOLE query stack, forced at fixture size (the
@@ -1974,7 +1981,7 @@ object SparkEntry {
     // full generated DuckDB replay of both trainings + probe/ADC/
     // re-rank), and SimilaritySpec pins literal-vs-join equality per
     // stage.
-    "d45_ann_ivfpq_join" -> noOracle(
+    "d45_ann_ivfpq_join" -> replay(
       (s, d) => {
         val emb = t(s, d, "embeddings")
         val k = 5
@@ -1988,21 +1995,23 @@ object SparkEntry {
         val approx = Similarity.ivfPqProbeJoin(emb, "vec_id", "embedding", model,
           col("vec_id") < 10, k = k, nProbe = 2, shortlist = 4)
         withRecall(emb, approx, k = k)
-      }),
+      })((s, d) => ivfPqOracleSql(s, d,
+        nCentroids = 8, m = 4, ksub = 8, iters = 3, nProbe = 2,
+        k = 5, shortlist = 4)),
 
     // product-quantization ANN (round 12): the compressed-scan path —
     // unit vectors encoded as m per-subspace centroid codes (32× smaller
     // than the floats), queries score candidates via per-query lookup
     // tables (asymmetric distance). Oracle is a FULL generated DuckDB
-    // replay of codebook training, encode and ADC ([[pqOracleSql]] via
-    // the d09 oracle-context mechanism), recall@k recomputed against the
+    // replay of codebook training, encode and ADC ([[pqOracleSql]], a
+    // replay like d09's), recall@k recomputed against the
     // d07-proven exact baseline
-    "d26_ann_pq" -> noOracle(
+    "d26_ann_pq" -> replay(
       (s, d) => {
         val emb = t(s, d, "embeddings")
         val approx = Similarity.pqTopK(emb, "vec_id", "embedding", col("vec_id") < 10, k = 5)
         withRecall(emb, approx, k = 5)
-      }),
+      })((s, d) => pqOracleSql(s, d, m = 8, ksub = 16, iters = 5, k = 5)),
 
     // PQ + exact re-rank (round 13, the standard production ANN
     // discipline): ADC keeps a 4·k shortlist, one exact cosine per
@@ -2010,7 +2019,7 @@ object SparkEntry {
     // a `variant` tag with their own recall@k (the d25 multi-config
     // pattern), so the artifact MEASURES what the re-rank buys. Oracle is
     // the generated full replay ([[pqRerankOracleSql]])
-    "d32_ann_pq_rerank" -> noOracle(
+    "d32_ann_pq_rerank" -> replay(
       (s, d) => {
         val emb = t(s, d, "embeddings")
         val k = 5
@@ -2036,21 +2045,23 @@ object SparkEntry {
             .unionByName(
               Similarity.withRecallAtK(rr, exact, k).withColumn("variant", lit("rerank")))
         }
-      }),
+      })((s, d) => pqRerankOracleSql(s, d, m = 8, ksub = 16,
+        iters = 5, k = 5, shortlist = 4)),
 
     // IVF-PQ + exact re-rank (round 13): the complete production ANN
     // stack composed from d09's cell routing, d26's ADC compression and
     // d32's shortlist re-rank — cells bound what is READ, codes bound
     // what a read COSTS, re-rank touches full vectors for |Q|·c·k ids
     // only. Oracle is the generated full replay ([[ivfPqOracleSql]])
-    "d34_ann_ivfpq" -> noOracle(
+    "d34_ann_ivfpq" -> replay(
       (s, d) => {
         val emb = t(s, d, "embeddings")
         val k = 5
         val approx = Similarity.ivfPqTopK(emb, "vec_id", "embedding",
           col("vec_id") < 10, k = k)
         withRecall(emb, approx, k = k)
-      }),
+      })((s, d) => ivfPqOracleSql(s, d, nCentroids = 16,
+        m = 8, ksub = 16, iters = 5, nProbe = 2, k = 5, shortlist = 4)),
 
     // IVF-PQ cost/recall curve (round 14): the d25 multi-config discipline
     // applied to the COMPLETE production stack — per (nProbe, shortlist)
@@ -2064,7 +2075,7 @@ object SparkEntry {
     // checkpoint pins the single corpus-encode scan the way the exact
     // baseline's does. Oracle is the generated full replay
     // ([[ivfPqCurveOracleSql]], trained once and shared)
-    "d35_ivfpq_curve" -> noOracle(
+    "d35_ivfpq_curve" -> replay(
       (s, d) => {
         val emb = t(s, d, "embeddings")
         val k = 5
@@ -2089,7 +2100,9 @@ object SparkEntry {
             .select(lit(np).as("n_probe"), lit(sl).as("shortlist"), col("q_id"),
               col("recall"), col("n_returned"))
         }.reduce(_ unionAll _)
-      }),
+      })((s, d) => ivfPqCurveOracleSql(s, d,
+        Seq((1, 4), (2, 2), (2, 4), (4, 4)), nCentroids = 16, m = 8,
+        ksub = 16, iters = 5, k = 5)),
 
     // incremental LSH band index (round 13): versioned-corpus near-dup —
     // batch-2 (doc_id ≡ 0 mod 3) dedups against batch-1's PERSISTED band
@@ -4071,7 +4084,7 @@ object SparkEntry {
     // generated oracle replays the whole composition: full k-means
     // training CTEs + the doc↔assignment join + the t01 language CASE
     // chain + both aggregates and the mode rank.
-    "p27_cluster_profile" -> noOracle(
+    "p27_cluster_profile" -> replay(
       (s, d) => {
         val emb = t(s, d, "embeddings")
         graft.operators.Profile.semanticClusterProfile(
@@ -4079,7 +4092,7 @@ object SparkEntry {
           Similarity.kmeansAssign(emb, "vec_id", "embedding",
             Similarity.kmeansDistributed(emb, "vec_id", "embedding",
               nCentroids = 8, iters = 4)))
-      }),
+      })((s, d) => clusterProfileOracleSql(s, d, k = 8, iters = 4)),
 
     "p26_functional_deps" -> entry(
       (s, d) => graft.operators.Profile.functionalDependencies(
@@ -5420,7 +5433,7 @@ object SparkEntry {
     // cluster's train fraction exact to floor(n*pct/100). Oracle replays
     // the ENTIRE composition: the full k-means training CTEs (d42's) plus
     // the md5-ranked quota cut and the (cell, split) counts.
-    "x20_cluster_split" -> noOracle(
+    "x20_cluster_split" -> replay(
       (s, d) => {
         val emb = t(s, d, "embeddings")
         graft.operators.SampleOps.stratifiedQuotaSplit(
@@ -5429,7 +5442,7 @@ object SparkEntry {
                 nCentroids = 8, iters = 4)),
             "vec_id", "cell", trainPct = 80)
           .groupBy(col("cell"), col("split")).agg(count(lit(1)).as("n"))
-      }),
+      })((s, d) => clusterSplitOracleSql(s, d, k = 8, iters = 4, trainPct = 80)),
 
     "x19_scd2_history" -> entry(
       (s, d) => graft.operators.VersionOps.scd2History(
@@ -6398,100 +6411,60 @@ object SparkEntry {
                 CAST(NULL AS BIGINT) AS n_events WHERE FALSE""")
   )
 
-  private lazy val all: Vector[(String, (QFn, Option[String]))] = relational ++ extensions
-
   // ------------------------------------------------------------------
   // driver contract
   // ------------------------------------------------------------------
+
+  /** The registry: every entry once, in declaration order. A repeated name
+    * fails here rather than one of the two silently shadowing the other in
+    * [[queries]].
+    */
+  lazy val entries: Vector[Entry] = {
+    val es = (relational ++ extensions).map { case (n, (build, oracle)) => Entry(n, build, oracle) }
+    val dups = es.groupBy(_.name).collect { case (n, xs) if xs.size > 1 => n }
+    require(dups.isEmpty, s"duplicate entry names: ${dups.toSeq.sorted.mkString(", ")}")
+    es
+  }
+
+  /** The entries whose names start with one of the comma-separated
+    * `prefixes`, or every entry when there are none.
+    */
+  def select(prefixes: Option[String]): Vector[Entry] = prefixes.fold(entries) { p =>
+    val ps = p.split(',').toSeq
+    entries.filter(e => ps.exists(e.name.startsWith))
+  }
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q29_flagship")(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    all.map { case (n, (fn, _)) => n -> fn }.toMap
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    entries.map(e => e.name -> e.build).toMap
 
-  /** Memoized dynamic-oracle generation per (spark, dir): [[oracleSql]] is
-    * a getter, and regenerating the ANN replays on every call would re-read
-    * the embeddings (one Spark job per generator) as a hidden side effect
-    * of reading a Map.
+  /** The static oracle texts; the [[Replay]] entries are absent. */
+  lazy val oracleSql: Map[String, String] =
+    entries.collect { case Entry(n, _, Static(sql)) => n -> sql }.toMap
+
+  /** Every oracle text of `of` over dump dir `dir`, and the error of each
+    * [[Replay]] generator that failed, by entry name. A failure (unreadable
+    * or empty embeddings) leaves its entry out of the texts rather than
+    * taking down the whole dump; NonFatal, so an OOM mid-collect still
+    * fails fast. Each replay reads the embeddings' dim with one Spark job,
+    * so a dump calls this once.
     */
-  @volatile private var dynOracleCache
-      : Option[((SparkSession, String), Map[String, String], Map[String, String])] = None
-
-  def oracleSql: Map[String, String] = {
-    val static = all.collect { case (n, (_, Some(sql))) => n -> sql }.toMap
-    oracleCtx match {
-      case None =>
-        oracleGenErrors = Map.empty
-        static
-      case Some(ctx @ (s, d)) =>
-        val (dyn, errs) = dynOracleCache match {
-          case Some((c, e, er)) if c == ctx => (e, er)
-          case _ =>
-            // a generator failure (unreadable or empty embeddings) must
-            // degrade ITS entry to rows-only, not take
-            // down the whole dump — the static map carries the other
-            // entries either way. NonFatal: an OOM mid-collect must still
-            // fail the dump fast, not serialize from a broken heap
-            val attempts: Seq[(String, () => String)] = Seq(
-              "d09_ann_ivf" -> (() => ivfOracleSql(s, d, nCentroids = 16, nProbe = 2,
-                iters = 5, k = 5)),
-              "d25_ivf_nprobe_curve" -> (() => ivfCurveOracleSql(s, d, Seq(1, 2, 4),
-                nCentroids = 16, iters = 5, k = 5)),
-              "d39_filtered_ann" -> (() => ivfFilteredOracleSql(s, d, nCentroids = 16,
-                nProbe = 2, iters = 5, k = 5, cand = "l.label % 2 = 0")),
-              "d26_ann_pq" -> (() => pqOracleSql(s, d, m = 8, ksub = 16,
-                iters = 5, k = 5)),
-              "d32_ann_pq_rerank" -> (() => pqRerankOracleSql(s, d, m = 8, ksub = 16,
-                iters = 5, k = 5, shortlist = 4)),
-              "d34_ann_ivfpq" -> (() => ivfPqOracleSql(s, d, nCentroids = 16,
-                m = 8, ksub = 16, iters = 5, nProbe = 2, k = 5, shortlist = 4)),
-              "d35_ivfpq_curve" -> (() => ivfPqCurveOracleSql(s, d,
-                Seq((1, 4), (2, 2), (2, 4), (4, 4)), nCentroids = 16, m = 8,
-                ksub = 16, iters = 5, k = 5)),
-              "d42_kmeans_distributed" -> (() => kmeansOracleSql(s, d,
-                k = 8, iters = 4)),
-              "d43_ann_ivfpq_distributed" -> (() => ivfPqOracleSql(s, d,
-                nCentroids = 8, m = 4, ksub = 8, iters = 3, nProbe = 2,
-                k = 5, shortlist = 4)),
-              // d45 is the broadcast-table twin of d43's literal stack:
-              // bit-identical by construction, so the SAME full replay
-              // (both trainings re-derived in SQL) is its oracle — a
-              // divergence between the two Spark shapes OR either engine
-              // flips the hash
-              "d45_ann_ivfpq_join" -> (() => ivfPqOracleSql(s, d,
-                nCentroids = 8, m = 4, ksub = 8, iters = 3, nProbe = 2,
-                k = 5, shortlist = 4)),
-              "d44_kmeans_assign_join" -> (() => kmeansOracleSql(s, d,
-                k = 8, iters = 4)),
-              "x20_cluster_split" -> (() => clusterSplitOracleSql(s, d,
-                k = 8, iters = 4, trainPct = 80)),
-              "p27_cluster_profile" -> (() => clusterProfileOracleSql(s, d,
-                k = 8, iters = 4)))
-            val results = attempts.map { case (nm, gen) =>
-              try Right(nm -> gen())
-              catch { case scala.util.control.NonFatal(ex) =>
-                System.err.println(s"[oracle] $nm generator failed, entry stays rows-only: $ex")
-                Left(nm -> s"$ex")
-              }
-            }
-            val e = results.collect { case Right(kv) => kv }.toMap
-            val er = results.collect { case Left(kv) => kv }.toMap
-            dynOracleCache = Some((ctx, e, er))
-            (e, er)
-        }
-        // error state always mirrors THIS evaluation — a failure from an
-        // earlier context must not survive a later successful call
-        oracleGenErrors = errs
-        static ++ dyn
+  def oracles(spark: SparkSession, dir: String, of: Seq[Entry] = entries)
+      : (Map[String, String], Map[String, String]) = {
+    val results = of.map { e =>
+      e.oracle match {
+        case Static(sql) => Right(e.name -> sql)
+        case Replay(gen) =>
+          try Right(e.name -> gen(spark, dir))
+          catch { case scala.util.control.NonFatal(ex) =>
+            System.err.println(s"[oracle] ${e.name} generator failed, entry stays rows-only: $ex")
+            Left(e.name -> s"$ex")
+          }
+      }
     }
+    (results.collect { case Right(kv) => kv }.toMap, results.collect { case Left(kv) => kv }.toMap)
   }
-
-  /** Generator failures behind [[oracleSql]]'s dynamic entries, keyed by
-    * query name — Verify writes these to `oracle_errors.json` so a broken
-    * generator is a visible artifact, not a silent downgrade to rows-only
-    * that every later round inherits unnoticed.
-    */
-  @volatile private[graft] var oracleGenErrors: Map[String, String] = Map.empty
 }

@@ -1,7 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each SparkEntry entry's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -9,20 +8,15 @@ object Verify {
     // dev-only: an optional 3rd arg restricts the dump (and oracle_sql.json)
     // to comma-separated entry-name prefixes for fast local iteration; the
     // driver always invokes with exactly two args -> full dump
-    val keep: String => Boolean = args.lift(2) match {
-      case Some(pfx) =>
-        val ps = pfx.split(',').toSeq
-        (name: String) => ps.exists(name.startsWith)
-      case None => (_: String) => true
-    }
+    val selected = SparkEntry.select(args.lift(2))
     val cpus = graft.engine.GraftSession.envCpus(16)
     val spark = graft.engine.GraftSession.build(cpus, "graft-verify")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    selected.foreach { e =>
+      try e.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${e.name}")
+      catch { case ex: Throwable =>
+        System.err.println(s"[verify] ${e.name} failed: ${ex.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -37,20 +31,15 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    // data-dependent oracles (d09's centroids) can only be generated once
-    // the dump dir is known
-    SparkEntry.setOracleContext(spark, sfDir)
-    val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // dynamic-generator failures become a visible artifact (the entry
-    // itself degraded to rows-only in oracle_sql.json); a CLEAN run must
-    // also delete any stale file a prior failed run left in this outDir,
-    // or it would falsely report the entry as still degraded
-    if (SparkEntry.oracleGenErrors.nonEmpty)
-      Files.writeString(Paths.get(s"$outDir/oracle_errors.json"),
-        SparkEntry.oracleGenErrors
-          .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+    def json(m: Map[String, String]): String =
+      m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val (texts, errors) = SparkEntry.oracles(spark, sfDir, selected)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json(texts))
+    // replay-generator failures become a visible artifact (the entry itself
+    // is missing from oracle_sql.json); a CLEAN run must also delete any
+    // stale file a prior failed run left in this outDir, or it would
+    // falsely report the entry as still degraded
+    if (errors.nonEmpty) Files.writeString(Paths.get(s"$outDir/oracle_errors.json"), json(errors))
     else Files.deleteIfExists(Paths.get(s"$outDir/oracle_errors.json"))
     spark.stop()
   }

@@ -188,13 +188,26 @@ object QueryEngine {
   /** One result row as the CLI prints it (`cli.cpp:312-318`): cells
     * joined by `" | "`, NULL for null, and BINARY as upper-case hex bytes
     * the way Spark's `show()` prints them (`[01 FF]`), not the array's
-    * identity string, which changes from run to run.
+    * identity string, which changes from run to run. BINARY inside an
+    * array, struct or map is hex too; every other value prints as its
+    * `toString`.
     */
   private[graft] def renderRow(row: Row): String = row.toSeq.map {
     case null => "NULL"
-    case b: Array[Byte] => b.map(x => f"$x%02X").mkString("[", " ", "]")
-    case v => v.toString
+    case v => hexBinary(v).toString
   }.mkString(" | ")
+
+  /** `v` with every `Array[Byte]` at any depth replaced by its hex string.
+    * `map` keeps each collection's class, so the rebuilt value's
+    * `toString` differs from the original's only at the binary leaves.
+    */
+  private def hexBinary(v: Any): Any = v match {
+    case b: Array[Byte] => b.map(x => f"$x%02X").mkString("[", " ", "]")
+    case s: scala.collection.Seq[_] => s.map(hexBinary)
+    case r: Row => Row.fromSeq(r.toSeq.map(hexBinary))
+    case m: scala.collection.Map[_, _] => m.map { case (k, x) => hexBinary(k) -> hexBinary(x) }
+    case other => other
+  }
 
   // ------------------------------------------------------------------
   // warn-and-continue semantics (reference semantic.cpp:22-26,53-58 via
@@ -340,8 +353,10 @@ object QueryEngine {
     * of candidate physical plans the strategy planner emits for the
     * optimized logical plan (Spark's strategies pick joins/aggregates
     * deterministically and the cost-based choices — join reorder, AQE —
-    * happen inside rules, so N is usually 1, unlike the reference's
-    * permutation enumeration); the chosen plan's cost is Catalyst's CBO
+    * happen inside rules, unlike the reference's permutation enumeration).
+    * N is still above 1, typically 2 or 3: more than one strategy can
+    * return a plan for the same node, and each child's candidates multiply
+    * into its parent's. The chosen plan's cost is Catalyst's CBO
     * statistics of the optimized plan (row estimate + size in bytes), not a
     * fabricated PostgreSQL-style constant.
     */

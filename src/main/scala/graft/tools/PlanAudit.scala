@@ -49,20 +49,14 @@ object PlanAudit extends AdaptiveSparkPlanHelper {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val keep: String => Boolean = args.lift(1) match {
-      case Some(pfx) =>
-        val ps = pfx.split(',').toSeq
-        (name: String) => ps.exists(name.startsWith)
-      case None => (_: String) => true
-    }
     val spark = GraftSession.build(graft.engine.GraftSession.envCpus(16), "plan-audit")
     println(f"${"query"}%-28s shuffles bcasts cartesian rows")
-    SparkEntry.queries.toSeq.filter(kv => keep(kv._1)).sortBy(_._1).foreach { case (name, fn) =>
+    SparkEntry.select(args.lift(1)).sortBy(_.name).foreach { e =>
       try {
-        val (shuffles, bcasts, cart, n) = counts(fn(spark, sfDir))
+        val (shuffles, bcasts, cart, n) = counts(e.build(spark, sfDir))
         val flag = if (cart > 0) "  <-- CARTESIAN" else ""
-        println(f"$name%-28s $shuffles%8d $bcasts%6d $cart%9d $n%7d$flag")
-      } catch { case e: Throwable => println(f"$name%-28s FAILED: ${e.toString.take(80)}") }
+        println(f"${e.name}%-28s $shuffles%8d $bcasts%6d $cart%9d $n%7d$flag")
+      } catch { case ex: Throwable => println(f"${e.name}%-28s FAILED: ${ex.toString.take(80)}") }
     }
     spark.stop()
   }

@@ -250,6 +250,17 @@ class QueryEngineSpec extends AnyFunSuite {
     val first = QueryEngine.run(spark, sql)
     assert(first.rows == Seq("[01 FF 0A] | NULL | []"), first.rows)
     assert(QueryEngine.run(spark, sql).rows == first.rows)
+    // nested in an array, a struct and a map: hex at any depth
+    val nested = "SELECT array(X'01', NULL) AS a, named_struct('b', X'02', 'c', array(X'03')) AS s, " +
+      "map('k', X'04') AS m"
+    val rows = QueryEngine.run(spark, nested).rows
+    assert(rows == Seq("ArraySeq([01], null) | [[02],ArraySeq([03])] | Map(k -> [04])"), rows)
+    assert(QueryEngine.run(spark, nested).rows == rows)
+    // nested values without BINARY print exactly as their toString
+    val plain = "SELECT array(1, NULL) AS a, named_struct('x', 1, 'y', array('z')) AS s, " +
+      "map('k', 1.5D) AS m"
+    assert(QueryEngine.run(spark, plain).rows ==
+      spark.sql(plain).collect().map(_.toSeq.map(String.valueOf).mkString(" | ")).toSeq)
   }
 
   test("NULL rendering and ' | ' separators (cli.cpp:312-318 parity)") {
