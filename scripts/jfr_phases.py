@@ -19,6 +19,11 @@ optimization, physical planning, `QueryEngine.transformLog`'s own planner
 pass, or none (execution inside the row fetch, the report's own code
 outside it). Each line also counts the samples inside
 `JoinEstimation.computeByHistogram`.
+
+With `--threads`, it reports instead every thread's samples inside the
+measured window, from the first to the last main-thread sample under
+`--frame`, grouped by thread name with numbers replaced by `*` (executor
+task threads drop their task and stage ids).
 """
 import argparse
 import collections
@@ -38,15 +43,20 @@ QUERY_PLANNER = re.compile(r"QueryPlanner\.plan\(")
 
 
 def samples(path, depth):
-    """Yield (thread, frames top-first) per jdk.ExecutionSample event."""
+    """Yield (start time, thread, frames top-first) per jdk.ExecutionSample
+    event. The time is `jfr print`'s text, date first when it prints one
+    (it prints none for a recording within one day), so it sorts as it ran."""
     out = subprocess.run(["jfr", "print", "--events", "jdk.ExecutionSample",
                           "--stack-depth", str(depth), path],
                          stdout=subprocess.PIPE, text=True, check=True).stdout
-    thread, frames, in_stack = None, [], False
+    time, thread, frames, in_stack = "", None, [], False
     for line in out.splitlines():
         s = line.strip()
         if s.startswith("jdk.ExecutionSample"):
-            thread, frames, in_stack = None, [], False
+            time, thread, frames, in_stack = "", None, [], False
+        elif s.startswith("startTime"):
+            m = re.search(r"= (\S+)(?: \((\S+)\))?", s)
+            time = f"{m.group(2) or ''} {m.group(1)}".strip() if m else ""
         elif s.startswith("sampledThread"):
             m = re.search(r'"([^"]*)"', s)
             thread = m.group(1) if m else None
@@ -57,8 +67,28 @@ def samples(path, depth):
         elif in_stack and s and s != "...":
             frames.append(s)
         elif s == "}" and thread is not None:
-            yield thread, frames
+            yield time, thread, frames
             thread = None
+
+
+def thread_group(name):
+    return re.sub(r"\d+", "*", re.sub(r" for task .*", "", name))
+
+
+def threads(all_samples, frame):
+    """Samples per thread group between the first and the last main-thread
+    sample under `frame`."""
+    measured = [t for t, thread, frames in all_samples
+                if thread == "main" and any(frame in f for f in frames)]
+    if not measured:
+        sys.exit(f"no main-thread samples under {frame}")
+    lo, hi = min(measured), max(measured)
+    groups = collections.Counter(thread_group(thread) for t, thread, _ in all_samples
+                                 if lo <= t <= hi)
+    total = sum(groups.values())
+    print(f"samples from {lo} to {hi}: {total} ({len(measured)} main-thread under {frame})")
+    for g, n in groups.most_common():
+        print(f"  {g}: {n} ({100.0 * n / total:.1f}%)")
 
 
 def main():
@@ -66,9 +96,14 @@ def main():
     ap.add_argument("recording")
     ap.add_argument("--frame", default="perfbench.Main$.runOp")
     ap.add_argument("--depth", type=int, default=1024)
+    ap.add_argument("--threads", action="store_true",
+                    help="samples per thread group in the measured window, not phases")
     a = ap.parse_args()
+    if a.threads:
+        threads(list(samples(a.recording, a.depth)), a.frame)
+        return
     counts, hists = collections.Counter(), collections.Counter()
-    for thread, frames in samples(a.recording, a.depth):
+    for _, thread, frames in samples(a.recording, a.depth):
         if thread != "main" or not any(a.frame in f for f in frames):
             continue
         in_fetch = any(FETCH.search(f) for f in frames)

@@ -9,9 +9,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * percentages, this measures them: for one representative query per
   * optimizer-relevant operator class, the CBO's estimated output
   * cardinality (`optimizedPlan.stats.rowCount`, fed by the ANALYZE
-  * harvest in [[GraftSession.ensureAnalyzedCatalog]] — rowCount, NDV,
-  * min/max, equi-height histograms) is compared against the executed
-  * actual.
+  * harvest in [[GraftSession.ensureAnalyzedCatalog]] — rowCount, NDV and
+  * min/max on every analyzed column, equi-height histograms on all but the
+  * declared join keys, [[GraftSession.joinKeys]]) is compared against the
+  * executed actual.
   *
   * The result row carries (op_class, actual_rows, est_band, est_ok):
   * `actual_rows` is independently replayable by any engine; `est_band`
@@ -24,7 +25,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - filter: `<=5%` — range predicates read the equi-height histogram
   *    (measured ≤0.2% where bins are populated), equality reads
   *    rowCount/NDV with HLL-approximate NDV (measured ≤2.7%);
-  *  - join: `<=3x` RATIO — |A|·|B|/max(ndv) degrades on small tables
+  *  - join: `<=3x` RATIO — |A|·|B|/max(ndv) over the keys' NDV (join
+  *    keys carry no histogram), which degrades on small tables
   *    whose FK NDV underestimates (measured 2.13× at sf0.001, ≤7%
   *    at sf0.01+) — the class where CBO error is structural, which is
   *    exactly why AQE re-plans joins at runtime;

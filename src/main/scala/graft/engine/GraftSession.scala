@@ -148,17 +148,16 @@ object GraftSession {
     * (disk-backed persisted blocks are not LRU-evicted, so a lazy return
     * would leak one cached frame per call across a long session).
     *
-    * `df.checkpoint(true)` executes the plan twice (eager count + the
-    * checkpoint-write job's recompute). Round 20 tried persisting first so
-    * the write job reads cached blocks, and MEASUREMENT REVERTED IT: a
-    * persisted plan is executed without AQE
+    * On Spark 4.1 an eager `checkpoint(true)` / `localCheckpoint(true)`
+    * runs ONE job (`internalRdd.doCheckpoint()`), which computes each
+    * partition once and writes it in the same task: one task per partition
+    * (CandidateGateSpec pins this). Do not persist first: round 20 measured
+    * that a persisted plan is executed without AQE
     * (`spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` defaults
     * false), so every round's join lost its runtime broadcast / coalescing
     * and the columnar cache build added CPU — the CC/PageRank family's
     * in-sweep task time went UP 4-15× (d31 3.5k → 60.8k ms, d05-family
-    * similar; reverting restored d31 to 4.1k same-session). The double
-    * compute is the cheaper side of that trade at every site measured; do
-    * not "fix" it back without per-family sweep-context numbers.
+    * similar; reverting restored d31 to 4.1k same-session).
     */
   def eagerPin(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
@@ -406,6 +405,34 @@ object GraftSession {
     "region", "nation", "customer", "supplier", "part", "orders", "lineitem",
     "documents", "embeddings")
 
+  /** Equi-join key columns of each ANALYZEd table: the TPC-H `*key`
+    * columns, plus the id columns that registry texts and CLI statements
+    * equi-join on. This is the Spark analog of the index list the
+    * reference's stats harvest records per table (`statistics_manager.cpp`,
+    * SHOW INDEX). [[ensureAnalyzedCatalog]] gives these columns rowCount,
+    * NDV, min/max and null count but no histogram; every other column keeps
+    * its histogram.
+    *
+    * Why: when both sides of an equi-join carry a histogram, Spark's
+    * `JoinEstimation` takes `computeByHistogram`, which re-intersects two
+    * 254-bin histograms for every candidate join that CBO join reorder,
+    * physical join selection and AQE re-planning cost, and which reads the
+    * key's whole-table histogram, so a filter on another column does not
+    * scale its estimate. Both the planning time and the estimate error are
+    * measured in BENCH_NOTES "Join keys without histograms".
+    */
+  private[graft] val joinKeys: Map[String, Seq[String]] = Map(
+    "region" -> Seq("r_regionkey"),
+    "nation" -> Seq("n_nationkey", "n_regionkey"),
+    "customer" -> Seq("c_custkey", "c_nationkey"),
+    "supplier" -> Seq("s_suppkey", "s_nationkey"),
+    "part" -> Seq("p_partkey"),
+    "orders" -> Seq("o_orderkey", "o_custkey"),
+    "lineitem" -> Seq("l_orderkey", "l_partkey", "l_suppkey"),
+    "documents" -> Seq("doc_id"),
+    "embeddings" -> Seq("vec_id"),
+    "events" -> Seq("user_id"))
+
   /** Columns safe to carry CBO ColumnStat (round 20): Spark 4.1's
     * `FilterEstimation` pattern-matches the stat'd column's type and throws
     * `MatchError: TimestampNTZType` when a range predicate meets column
@@ -416,10 +443,10 @@ object GraftSession {
     * stats-blind temp views shadowed the catalog tables so the estimator
     * never saw these stats). Complex types take no stats at all. A stat
     * that crashes planning is worse than no stat: exclude both classes and
-    * analyze everything else (rowCount + NDV + min/max + histograms are
-    * what CostBasedJoinReorder and q59 consume — none of their inputs are
-    * NTZ columns, so estimates on every previously-working path are
-    * unchanged).
+    * analyze everything else. CostBasedJoinReorder and q59 consume
+    * rowCount + NDV + min/max on every analyzed column, and histograms on
+    * the non-key ones ([[joinKeys]] carry none); none of their inputs are
+    * NTZ columns.
     */
   private def statsSafeColumns(spark: SparkSession, n: String): Seq[String] = {
     import org.apache.spark.sql.types.{ArrayType, MapType, StructType, TimestampNTZType}
@@ -432,17 +459,33 @@ object GraftSession {
       .map(f => s"`${f.name}`")
   }
 
-  private def analyzeSql(spark: SparkSession, n: String): String =
-    s"ANALYZE TABLE default.$n COMPUTE STATISTICS FOR COLUMNS " +
-      statsSafeColumns(spark, n).mkString(", ")
+  /** ANALYZE one catalog table's stats-safe columns, then strip the
+    * histograms of its [[joinKeys]] from the stored stats. ANALYZE builds
+    * every column's histogram in the same aggregate job, so the strip is a
+    * catalog-metadata write, not a second scan; the key columns end up
+    * exactly as an ANALYZE with histograms off would leave them.
+    */
+  private def analyze(spark: SparkSession, n: String): Unit = {
+    spark.sql(s"ANALYZE TABLE default.$n COMPUTE STATISTICS FOR COLUMNS " +
+      statsSafeColumns(spark, n).mkString(", "))
+    val keys = joinKeys(n).toSet
+    val cat = spark.sessionState.catalog
+    val id = org.apache.spark.sql.catalyst.TableIdentifier(n, Some("default"))
+    cat.getTableMetadata(id).stats.foreach { s =>
+      cat.alterTableStats(id, Some(s.copy(colStats = s.colStats.map {
+        case (c, st) => c -> (if (keys(c)) st.copy(histogram = None) else st)
+      })))
+    }
+  }
 
   /** Create in-memory-catalog tables over the parquet files and harvest CBO
     * statistics — the direct analog of the reference's startup stats
     * harvest (`statistics_manager.cpp:9-142`: COUNT(*), COUNT(DISTINCT),
     * MIN/MAX, histograms). Populates `rowCount`/`ColumnStat` so plan trees
     * show real row estimates and CostBasedJoinReorder has numbers to work
-    * with. Every table ends up stats-backed: embeddings takes scalar-column
-    * stats only (the array column has none), and events is materialized
+    * with; [[joinKeys]] take no histogram. Every table ends up
+    * stats-backed: embeddings takes scalar-column stats only (the array
+    * column has none), and events is materialized
     * once per sfDir as a µs-timestamp managed table (its raw
     * TIMESTAMP(NANOS) parquet needs [[eventsTsToMicros]], so a
     * LOCATION-mapped table can't serve it).
@@ -462,7 +505,7 @@ object GraftSession {
         spark.sql(s"DROP TABLE default.$n")
       if (!existsInCatalog(n)) {
         spark.sql(s"CREATE TABLE default.$n USING parquet LOCATION '$dir/$n.parquet'")
-        spark.sql(analyzeSql(spark, n))
+        analyze(spark, n)
       }
     }
     analyzableTables.foreach(ensure)
@@ -478,7 +521,7 @@ object GraftSession {
       spark.sql(s"ALTER TABLE default.events SET TBLPROPERTIES ('$eventsSrcProp' = '$dir')")
       // after the CTAS `ts` is a µs TIMESTAMP (stats kept — event queries
       // range-filter on it), but route through the same NTZ/complex guard
-      spark.sql(analyzeSql(spark, "events"))
+      analyze(spark, "events")
     }
     // registerAll/registerFor may have left same-named TEMP VIEWS for the
     // two tables whose catalog copies carry what the views lack (events'

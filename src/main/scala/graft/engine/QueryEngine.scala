@@ -358,14 +358,12 @@ object QueryEngine {
     * return a plan for the same node, and each child's candidates multiply
     * into its parent's. The chosen plan's cost is Catalyst's CBO
     * statistics of the optimized plan (row estimate + size in bytes), not a
-    * fabricated PostgreSQL-style constant.
+    * fabricated PostgreSQL-style constant. A planner failure propagates,
+    * so [[run]] reports the statement as an ERROR.
     */
   def transformLog(qe: org.apache.spark.sql.execution.QueryExecution): Seq[String] = {
     val core = transformLog(qe.analyzed, qe.optimizedPlan)
-    val nPlans =
-      try qe.sparkSession.sessionState.planner
-        .plan(ReturnAnswer(qe.optimizedPlan)).size
-      catch { case NonFatal(_) => 1 }
+    val nPlans = qe.sparkSession.sessionState.planner.plan(ReturnAnswer(qe.optimizedPlan)).size
     val stats = qe.optimizedPlan.stats
     core ++ Seq(
       s"Generated $nPlans execution plan(s)",
@@ -1554,7 +1552,9 @@ object QueryEngine {
     * used" report. Read off the scan nodes of the executed plan in the
     * order the formatted EXPLAIN lists them: the main plan's scans left to
     * right (through AQE, query-stage and cached-relation wrappers), then
-    * each subquery's, with a reused subquery or scan listed once.
+    * each subquery's, with a reused subquery or scan listed once. Under
+    * EXPLAIN nothing else plans physically, so a planning failure here
+    * propagates and [[run]] reports an ERROR.
     */
   def pushedFilterReport(qe: org.apache.spark.sql.execution.QueryExecution): Seq[String] = {
     import org.apache.spark.sql.catalyst.expressions.PlanExpression
@@ -1562,9 +1562,7 @@ object QueryEngine {
     import org.apache.spark.sql.execution.{BaseSubqueryExec, FileSourceScanExec,
       ReusedSubqueryExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    val root =
-      try qe.executedPlan
-      catch { case NonFatal(_) => return Nil }
+    val root = qe.executedPlan
     val seen = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[FileSourceScanExec, java.lang.Boolean])
     def scans(p: QueryPlan[_]): Seq[FileSourceScanExec] = p match {

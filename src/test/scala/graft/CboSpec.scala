@@ -20,6 +20,25 @@ class CboSpec extends AnyFunSuite {
     assert(!rep.planTree.split("\n").exists(_.contains("rows=?")), rep.planTree)
   }
 
+  test("declared join keys carry NDV and min/max but no histogram; c_acctbal keeps its histogram") {
+    GraftSession.ensureAnalyzedCatalog(spark, TestSpark.sfDir)
+    assert(GraftSession.joinKeys.keySet == GraftSession.tableNames.toSet)
+    def colStats(t: String) = spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t, Some("default")))
+      .stats.getOrElse(fail(s"$t has no table stats")).colStats
+    GraftSession.joinKeys.foreach { case (t, keys) =>
+      val schema = spark.table(s"default.$t").schema.fieldNames.toSet
+      keys.foreach { k =>
+        assert(schema(k), s"$t has no column $k")
+        val st = colStats(t).getOrElse(k, fail(s"$t.$k has no column stats"))
+        assert(st.distinctCount.isDefined && st.min.isDefined && st.max.isDefined, s"$t.$k: $st")
+        assert(st.histogram.isEmpty, s"$t.$k kept a histogram")
+      }
+    }
+    // filter_range's column: range selectivity still reads its histogram
+    assert(colStats("customer")("c_acctbal").histogram.nonEmpty)
+  }
+
   test("embeddings is a stats-backed catalog table (scalar columns analyzed)") {
     GraftSession.ensureAnalyzedCatalog(spark, TestSpark.sfDir)
     if (spark.catalog.tableExists("embeddings") &&

@@ -130,6 +130,19 @@ class QueryEngineSpec extends AnyFunSuite {
     assert(hard.kind == "ERROR" && hard.error.nonEmpty)
   }
 
+  test("a physical-planning failure reports ERROR under SELECT and EXPLAIN") {
+    object Boom extends org.apache.spark.sql.execution.SparkStrategy {
+      def apply(plan: LogicalPlan) = throw new IllegalStateException("planner boom")
+    }
+    val before = spark.experimental.extraStrategies
+    spark.experimental.extraStrategies = before :+ Boom
+    try Seq("", "EXPLAIN ").foreach { prefix =>
+      val rep = QueryEngine.run(spark, s"${prefix}SELECT c_custkey FROM customer WHERE c_custkey < 5")
+      assert(rep.kind == "ERROR" && rep.error.nonEmpty, s"$prefix: $rep")
+    } finally spark.experimental.extraStrategies = before
+    assert(QueryEngine.run(spark, "EXPLAIN SELECT c_custkey FROM customer").kind == "EXPLAIN")
+  }
+
   /** What `f` executed: each SQL action as (action name, QueryExecution),
     * and the number of stages its jobs submitted. Listener delivery is
     * asynchronous but ordered, so seeing a marker action after `f` means
