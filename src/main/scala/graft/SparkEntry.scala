@@ -25,8 +25,8 @@ object SparkEntry {
 
   /** Deterministic doc-subset replay mode (round 14, dev-only): see
     * [[GraftSession.applySubset]] — the filter lives in GraftSession so
-    * every path to a table (DataFrame entries, SQL-text entries' temp
-    * views, replay oracle generators) is thinned uniformly; the
+    * every path to a table (DataFrame entries, SQL-text entries, replay
+    * oracle generators) is thinned uniformly; the
     * all-pairs-by-construction oracle families, quadratic in DuckDB at
     * 10× data, replay at sf1 on a bounded pair space instead of being
     * skipped. The subset is pushed into the entry INPUT (a smaller
@@ -71,7 +71,7 @@ object SparkEntry {
 
   /** A query whose single SQL text runs identically in Spark and DuckDB. */
   private def shared(q: String): (QFn, Oracle) =
-    (((s: SparkSession, dir: String) => { GraftSession.registerFor(s, dir, q); s.sql(q) }), Static(q))
+    (((s: SparkSession, dir: String) => { GraftSession.useDir(s, dir); s.sql(q) }), Static(q))
 
   private def entry(fn: QFn, oracle: String): (QFn, Oracle) = (fn, Static(oracle))
   private def replay(fn: QFn)(gen: (SparkSession, String) => String): (QFn, Oracle) =
@@ -1014,7 +1014,7 @@ object SparkEntry {
         val q = """SELECT token, COUNT(*) AS n, COUNT(DISTINCT doc_id) AS n_docs
                    FROM documents LATERAL VIEW explode(split(text, ' ')) t AS token
                    WHERE token <> '' GROUP BY token ORDER BY n DESC, token ASC LIMIT 20"""
-        GraftSession.registerFor(s, d, q); s.sql(q)
+        GraftSession.useDir(s, d); s.sql(q)
       },
       """SELECT token, COUNT(*) AS n, COUNT(DISTINCT doc_id) AS n_docs
          FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents)

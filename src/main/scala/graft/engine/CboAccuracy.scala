@@ -46,16 +46,16 @@ object CboAccuracy {
       BigInt(actual) <= est * BigInt(math.ceil(x).toLong)
 
   private val shapes = Seq(
-    Shape("scan", "SELECT * FROM default.customer", "exact", (e, a) => e == BigInt(a)),
+    Shape("scan", "SELECT * FROM customer", "exact", (e, a) => e == BigInt(a)),
     Shape("filter_range",
-      "SELECT * FROM default.customer WHERE c_acctbal > 5000.0", "<=5%", within(0.05)),
+      "SELECT * FROM customer WHERE c_acctbal > 5000.0", "<=5%", within(0.05)),
     Shape("filter_eq",
-      "SELECT * FROM default.orders WHERE o_orderstatus = 'O'", "<=5%", within(0.05)),
+      "SELECT * FROM orders WHERE o_orderstatus = 'O'", "<=5%", within(0.05)),
     Shape("join",
-      "SELECT c.c_custkey, o.o_orderkey FROM default.customer c " +
-        "JOIN default.orders o ON c.c_custkey = o.o_custkey", "<=3x", ratio(3.0)),
+      "SELECT c.c_custkey, o.o_orderkey FROM customer c " +
+        "JOIN orders o ON c.c_custkey = o.o_custkey", "<=3x", ratio(3.0)),
     Shape("agg",
-      "SELECT o_custkey, COUNT(*) AS n FROM default.orders GROUP BY o_custkey",
+      "SELECT o_custkey, COUNT(*) AS n FROM orders GROUP BY o_custkey",
       "<=15%", within(0.15)))
 
   /** One row per operator class: (op_class, actual_rows, est_band,

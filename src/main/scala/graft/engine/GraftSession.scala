@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
 
 /** Session + catalog bootstrap (SURVEY.md §7 step 1).
   *
@@ -50,6 +51,10 @@ object GraftSession {
       .config("spark.sql.cbo.joinReorder.enabled", "true")
       .config("spark.sql.statistics.histogram.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      // TIMESTAMP(NANOS) parquet (one generation of events.ts) reads as a
+      // raw ns LONG instead of failing the scan; [[eventsTsToMicros]]
+      // converts it, for the events table and the events file stream alike
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // whole-stage-codegen class cache sized for this workload (round 19):
       // the default 100 entries is smaller than one sweep of the query
       // suite, so by the time the sf1 section re-runs an entry its
@@ -183,37 +188,32 @@ object GraftSession {
     * spread only ever under-fires: a production-scale scan — thousands of
     * splits — never pays the round-robin shuffle, and the repartition
     * target is the cluster's defaultParallelism, not a local constant.
-    * Non-file frames (views over joins, streaming sources) and any
-    * estimation failure return the frame unchanged.
+    * Non-file frames (views over joins, streaming sources) return the
+    * frame unchanged; a file that cannot be stat'ed fails the call.
     */
   def spreadScan(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val sc = spark.sparkContext
     val par = sc.defaultParallelism
     if (par <= 2) return df
-    // operational kill-switch (and the A/B lever the round-20 measurements
-    // used): -Dgraft.spread.scan=off restores the raw scan partitioning
-    if (!sys.props.getOrElse("graft.spread.scan", "on").equals("on")) return df
-    try {
-      val files = df.inputFiles
-      // 0 files: not a file scan — leave alone. Enough files that each
-      // contributes at least one split: already parallel, skip the
-      // per-file FS stats entirely.
-      if (files.isEmpty || files.length * 2 >= par) return df
-      val conf = spark.sessionState.conf
-      val openCost = conf.filesOpenCostInBytes
-      val maxPart = conf.filesMaxPartitionBytes
-      val hconf = sc.hadoopConfiguration
-      var total = 0L
-      files.foreach { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        total += p.getFileSystem(hconf).getFileStatus(p).getLen + openCost
-      }
-      val bytesPerCore = total / par
-      val maxSplit = math.min(maxPart, math.max(openCost, bytesPerCore))
-      val estSplits = math.max(1L, (total + maxSplit - 1) / maxSplit)
-      if (estSplits * 2 < par) df.repartition(par) else df
-    } catch { case _: Exception => df }
+    val files = df.inputFiles
+    // 0 files: not a file scan — leave alone. Enough files that each
+    // contributes at least one split: already parallel, skip the
+    // per-file FS stats entirely.
+    if (files.isEmpty || files.length * 2 >= par) return df
+    val conf = spark.sessionState.conf
+    val openCost = conf.filesOpenCostInBytes
+    val maxPart = conf.filesMaxPartitionBytes
+    val hconf = sc.hadoopConfiguration
+    var total = 0L
+    files.foreach { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      total += p.getFileSystem(hconf).getFileStatus(p).getLen + openCost
+    }
+    val bytesPerCore = total / par
+    val maxSplit = math.min(maxPart, math.max(openCost, bytesPerCore))
+    val estSplits = math.max(1L, (total + maxSplit - 1) / maxSplit)
+    if (estSplits * 2 < par) df.repartition(par) else df
   }
 
   /** Whether this JVM's (static) whole-stage-codegen class cache got the
@@ -224,17 +224,6 @@ object GraftSession {
     try spark.conf.get("spark.sql.codegen.cache.maxEntries") == "2000"
     catch { case _: Exception => false }
 
-  /** Read one testdata table. Filters/projections compose lazily on top, so
-    * Catalyst pushes them into the parquet scan (PushedFilters/ReadSchema).
-    *
-    * `events.ts` has shipped as two physical types across driver testdata
-    * generations — TIMESTAMP(NANOS) (which Spark's vectorized reader
-    * rejects; `nanosAsLong` surfaces it as a raw ns long) and plain
-    * TIMESTAMP(MICROS) without UTC adjustment (which Spark reads as
-    * TIMESTAMP_NTZ). [[eventsTsToMicros]] normalizes EITHER to a
-    * session-zone (UTC) microsecond timestamp, so every consumer sees one
-    * ts type regardless of which generation is on disk.
-    */
   /** Normalize `ts` to a microsecond TIMESTAMP, branching on the type the
     * scan produced:
     *  - ns-since-epoch LONG (nanos parquet under `nanosAsLong`): integral
@@ -261,18 +250,20 @@ object GraftSession {
 
   /** Deterministic doc-subset replay mode (round 14, dev-only — the
     * driver never sets it): `SPARK_GRAFT_SUBSET=documents:16,embeddings:16`
-    * thins the named tables to `key % N = 0` at the scan. Living HERE —
-    * not in SparkEntry's t() — means every path to a table is covered
-    * uniformly: DataFrame entries, SQL-text entries (registerFor's temp
-    * views), and the dynamic ANN oracle generators. `check_oracle.py`'s
-    * matching 4th argument applies the identical filter to its DuckDB
-    * views. Bench warns and stamps env.subset when this is exported.
+    * thins the named tables to `key % N = 0`. The thinned tables are
+    * CTAS copies in a catalog database of their own ([[dirDb]] keys on the
+    * spec), so every path to a table sees the same subset: DataFrame
+    * entries, SQL-text entries and the dynamic ANN oracle generators, and
+    * an unsubset run in the same JVM never meets a thinned copy.
+    * `check_oracle.py`'s matching 4th argument applies the identical
+    * filter to its DuckDB views. Bench warns and stamps env.subset when
+    * this is exported.
     */
   private val subsetKey = Map("documents" -> "doc_id", "embeddings" -> "vec_id")
   // eager validation: a malformed spec must fail loudly naming the env
   // var, and N must be >= 1 — pmod by zero yields NULL, which the filter
   // would silently drop to an EMPTY table (entries "pass" on no rows)
-  private def subsetMod(table: String): Option[Long] =
+  private def subsetSpec: Seq[(String, Long)] =
     sys.env.get("SPARK_GRAFT_SUBSET").toSeq
       .flatMap(_.split(','))
       .filter(_.trim.nonEmpty)
@@ -286,67 +277,116 @@ object GraftSession {
               "(e.g. documents:16,embeddings:16)")
         }
       }
-      .collectFirst { case (t, m) if t == table => m }
 
-  /** Apply the subset filter to ANY frame of the named table — shared by
-    * [[table]] and callers that scan a table outside it (file streams).
+  /** The subset predicate on the named table, when the spec thins it. */
+  private def subsetFilter(name: String): Option[org.apache.spark.sql.Column] =
+    for {
+      m <- subsetSpec.collectFirst { case (t, m) if t == name => m }
+      key <- subsetKey.get(name)
+    } yield org.apache.spark.sql.functions.pmod(
+      org.apache.spark.sql.functions.col(key), org.apache.spark.sql.functions.lit(m)) === 0
+
+  /** Apply the subset filter to a frame of the named table that does not
+    * come from [[table]] (file streams), so it is thinned like the
+    * catalog copy.
     */
   def applySubset(name: String, df: DataFrame): DataFrame =
-    (subsetMod(name), subsetKey.get(name)) match {
-      case (Some(m), Some(key)) =>
-        df.filter(org.apache.spark.sql.functions.pmod(
-          org.apache.spark.sql.functions.col(key),
-          org.apache.spark.sql.functions.lit(m)) === 0)
-      case _ => df
-    }
+    subsetFilter(name).fold(df)(df.filter)
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // Catalog-first read (round 20, guide §6 file-listing lesson): a bare
-    // spark.read.parquet pays a fresh file listing + footer schema read on
-    // EVERY call (~55 ms each measured at sf0.1 — tens of seconds across
-    // one bench sweep) and plans stats-blind. When ensureAnalyzedCatalog
-    // has registered THIS dir's table, serve it from the catalog instead:
-    // schema comes from catalog metadata, the file listing from the shared
-    // FileStatusCache, and the harvested rowCount/NDV/histogram statistics
-    // now reach DataFrame entries too (previously only SQL-text entries
-    // planned stats-backed). The location/src-dir checks keep a catalog
-    // from a DIFFERENT sfDir from being served — those calls fall back to
-    // the raw path unchanged, as does any session that never built the
-    // catalog (Verify, tests). Disabled under a subset replay: the events
-    // CTAS materializes from the subset-filtered frame, and serving that
-    // copy to a later unsubset call would silently thin the table (the
-    // raw path keeps the dev-only mode byte-identical to before).
-    val viaCatalog: Option[DataFrame] =
-      if (subsetMod(name).isDefined) None
-      else if (name == "events") {
-        if (eventsCatalogFresh(spark, dir)) Some(spark.table("default.events"))
-        else None
-      } else if (tableAt(spark, name, s"$dir/$name.parquet"))
-        Some(spark.table(s"default.$name"))
-      else None
-    val base = viaCatalog.getOrElse {
-      if (name == "events") {
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        eventsTsToMicros(spark.read.parquet(s"$dir/events.parquet"))
-      } else spark.read.parquet(s"$dir/$name.parquet")
-    }
-    applySubset(name, base)
+  /** Absolute, trailing-slash-free form of a data dir: catalog LOCATIONs
+    * resolve relative paths against the warehouse, not the process cwd.
+    */
+  private def absDir(dir: String): String =
+    new java.io.File(dir).getAbsoluteFile.toPath.normalize.toString
+
+  /** The catalog database that holds `dir`'s tables under this process's
+    * subset spec. Its name is derived from the (absolute dir, spec) pair,
+    * so a database never holds another dir's or another spec's tables and
+    * nothing needs a staleness check.
+    */
+  private[graft] def dirDb(dir: String): String = {
+    val abs = absDir(dir)
+    val spec = subsetSpec.sorted.map { case (t, m) => s"$t:$m" }.mkString(",")
+    val hash = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(s"$abs\u0000$spec".getBytes("UTF-8")).take(6).map(b => f"$b%02x").mkString
+    val leaf = new java.io.File(abs).getName.toLowerCase.replaceAll("[^a-z0-9]+", "_").take(24)
+    s"graft_${leaf}_$hash"
   }
 
-  /** Register every table as a temp view so `spark.sql` queries resolve —
-    * the Spark analog of the reference's catalog bootstrap.
+  /** Guards table creation: two threads resolving one name must not both
+    * create it.
     */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    tableNames.foreach(n => table(spark, dir, n).createOrReplaceTempView(n))
+  private object createLock
 
-  /** Register only the tables a SQL text references (word match) — avoids
-    * paying footer reads for all 10 tables on every ad-hoc statement.
+  /** Catalog identifier of `dir`'s table `name`, created on first use.
+    * Most tables are a LOCATION table over `dir/name.parquet`. A table
+    * whose catalog copy must differ from its file is a CTAS into the
+    * warehouse instead: `events`, whose `ts` is normalized by
+    * [[eventsTsToMicros]], and any table the subset spec thins.
     */
-  def registerFor(spark: SparkSession, dir: String, sql: String): Unit = {
-    val lower = sql.toLowerCase
-    tableNames.filter(n => s"\\b$n\\b".r.findFirstIn(lower).isDefined)
-      .foreach(n => table(spark, dir, n).createOrReplaceTempView(n))
+  private def resolve(spark: SparkSession, dir: String, name: String): TableIdentifier = {
+    val id = TableIdentifier(name, Some(dirDb(dir)))
+    val cat = spark.sessionState.catalog
+    if (!cat.tableExists(id)) createLock.synchronized {
+      if (!cat.tableExists(id)) {
+        createDb(spark, id.database.get)
+        val src = s"${absDir(dir)}/$name.parquet"
+        val subset = subsetFilter(name)
+        if (name == "events" || subset.isDefined) {
+          val raw = spark.read.parquet(src)
+          val df = if (name == "events") eventsTsToMicros(raw) else raw
+          subset.fold(df)(df.filter).write.saveAsTable(id.unquotedString)
+        } else spark.catalog.createTable(id.unquotedString, src, "parquet")
+      }
+    }
+    id
   }
+
+  /** Read one testdata table: the one way a table name reaches a relation.
+    * Filters/projections compose lazily on top, so Catalyst pushes them
+    * into the parquet scan (PushedFilters/ReadSchema).
+    *
+    * The table is served from `dir`'s catalog database ([[dirDb]]),
+    * created there on first use ([[resolve]]). Its schema comes from
+    * catalog metadata and its file listing from the shared
+    * FileStatusCache, where a bare `spark.read.parquet` paid a fresh
+    * listing and footer read on every call (~55 ms each at sf0.1, round
+    * 20). Until [[ensureAnalyzedCatalog]] has run on `dir` the table
+    * carries no statistics and plans as the bare read did; afterwards its
+    * rowCount/NDV/histogram statistics reach DataFrame entries too.
+    *
+    * `events.ts` has shipped as two physical types across driver testdata
+    * generations — TIMESTAMP(NANOS) (which Spark's vectorized reader
+    * rejects; `nanosAsLong` surfaces it as a raw ns long) and plain
+    * TIMESTAMP(MICROS) without UTC adjustment (which Spark reads as
+    * TIMESTAMP_NTZ). The events CTAS normalizes EITHER to a session-zone
+    * (UTC) microsecond timestamp, so every consumer sees one ts type
+    * regardless of which generation is on disk.
+    */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    spark.table(resolve(spark, dir, name).unquotedString)
+
+  /** Make `dir`'s database current, so SQL text resolves its unqualified
+    * table names there, creating each table whose file the dir holds (the
+    * sf10 dirs hold only documents and events).
+    */
+  def useDir(spark: SparkSession, dir: String): Unit = {
+    val cat = spark.sessionState.catalog
+    val db = dirDb(dir)
+    val hconf = spark.sparkContext.hadoopConfiguration
+    tableNames.foreach { n =>
+      if (!cat.tableExists(TableIdentifier(n, Some(db)))) {
+        val p = new org.apache.hadoop.fs.Path(s"${absDir(dir)}/$n.parquet")
+        if (p.getFileSystem(hconf).exists(p)) resolve(spark, dir, n)
+      }
+    }
+    createDb(spark, db)
+    cat.setCurrentDatabase(db)
+  }
+
+  private def createDb(spark: SparkSession, db: String): Unit =
+    if (!spark.sessionState.catalog.databaseExists(db))
+      spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
 
   /** Expose graft's native expressions to SQL users:
     * `minhash_signature(hashes, k)`, `dot_product(a, b)`,
@@ -397,14 +437,6 @@ object GraftSession {
     }
   }
 
-  /** Tables whose catalog copy is a LOCATION mapping over the source
-    * parquet (everything except events, whose ns→µs conversion forces a
-    * managed CTAS).
-    */
-  private val analyzableTables = Seq(
-    "region", "nation", "customer", "supplier", "part", "orders", "lineitem",
-    "documents", "embeddings")
-
   /** Equi-join key columns of each ANALYZEd table: the TPC-H `*key`
     * columns, plus the id columns that registry texts and CLI statements
     * equi-join on. This is the Spark analog of the index list the
@@ -439,18 +471,17 @@ object GraftSession {
     * stats on a TIMESTAMP_NTZ column — and `o_orderdate`/`l_shipdate` ship
     * as NTZ in this testdata generation, so `FOR ALL COLUMNS` made any
     * date-range query over a stats-backed relation crash AT PLANNING
-    * (surfaced by the catalog-first [[table]] routing; previously the
-    * stats-blind temp views shadowed the catalog tables so the estimator
-    * never saw these stats). Complex types take no stats at all. A stat
+    * (surfaced in round 20, when DataFrame reads first met the ANALYZEd
+    * tables). Complex types take no stats at all. A stat
     * that crashes planning is worse than no stat: exclude both classes and
     * analyze everything else. CostBasedJoinReorder and q59 consume
     * rowCount + NDV + min/max on every analyzed column, and histograms on
     * the non-key ones ([[joinKeys]] carry none); none of their inputs are
     * NTZ columns.
     */
-  private def statsSafeColumns(spark: SparkSession, n: String): Seq[String] = {
+  private def statsSafeColumns(spark: SparkSession, id: TableIdentifier): Seq[String] = {
     import org.apache.spark.sql.types.{ArrayType, MapType, StructType, TimestampNTZType}
-    spark.table(s"default.$n").schema.fields.toSeq
+    spark.sessionState.catalog.getTableMetadata(id).schema.fields.toSeq
       .filter(_.dataType match {
         case TimestampNTZType => false
         case _: ArrayType | _: MapType | _: StructType => false
@@ -465,12 +496,11 @@ object GraftSession {
     * catalog-metadata write, not a second scan; the key columns end up
     * exactly as an ANALYZE with histograms off would leave them.
     */
-  private def analyze(spark: SparkSession, n: String): Unit = {
-    spark.sql(s"ANALYZE TABLE default.$n COMPUTE STATISTICS FOR COLUMNS " +
-      statsSafeColumns(spark, n).mkString(", "))
-    val keys = joinKeys(n).toSet
+  private def analyze(spark: SparkSession, id: TableIdentifier): Unit = {
+    spark.sql(s"ANALYZE TABLE ${id.unquotedString} COMPUTE STATISTICS FOR COLUMNS " +
+      statsSafeColumns(spark, id).mkString(", "))
+    val keys = joinKeys(id.table).toSet
     val cat = spark.sessionState.catalog
-    val id = org.apache.spark.sql.catalyst.TableIdentifier(n, Some("default"))
     cat.getTableMetadata(id).stats.foreach { s =>
       cat.alterTableStats(id, Some(s.copy(colStats = s.colStats.map {
         case (c, st) => c -> (if (keys(c)) st.copy(histogram = None) else st)
@@ -478,110 +508,47 @@ object GraftSession {
     }
   }
 
-  /** Create in-memory-catalog tables over the parquet files and harvest CBO
-    * statistics — the direct analog of the reference's startup stats
-    * harvest (`statistics_manager.cpp:9-142`: COUNT(*), COUNT(DISTINCT),
-    * MIN/MAX, histograms). Populates `rowCount`/`ColumnStat` so plan trees
-    * show real row estimates and CostBasedJoinReorder has numbers to work
-    * with; [[joinKeys]] take no histogram. Every table ends up
-    * stats-backed: embeddings takes scalar-column stats only (the array
-    * column has none), and events is materialized
-    * once per sfDir as a µs-timestamp managed table (its raw
-    * TIMESTAMP(NANOS) parquet needs [[eventsTsToMicros]], so a
-    * LOCATION-mapped table can't serve it).
+  /** Make `dir`'s database current ([[useDir]]) and harvest CBO statistics
+    * on each of its tables — the direct analog of the reference's startup
+    * stats harvest (`statistics_manager.cpp:9-142`: COUNT(*),
+    * COUNT(DISTINCT), MIN/MAX, histograms). Populates `rowCount`/
+    * `ColumnStat` so plan trees show real row estimates and
+    * CostBasedJoinReorder has numbers to work with; [[joinKeys]] take no
+    * histogram, and embeddings takes scalar-column stats only (the array
+    * column has none). A table is ANALYZEd once per database: one that
+    * already carries a rowCount is left as it is, so a repeat call is a
+    * no-op.
     */
   def ensureAnalyzedCatalog(spark: SparkSession, dir: String): Unit = {
-    // a table left over from a DIFFERENT sfDir must not survive: silently
-    // serving the first directory's data (and stats) to a session that
-    // asked for another is a wrong-results bug, not a cache hit.
-    // Everything here is database-qualified — unqualified DROP/EXISTS
-    // resolve to a same-named TEMP VIEW first (registerAll creates those),
-    // which would drop the wrong object and keep the stale table alive
-    def existsInCatalog(n: String) =
-      spark.sessionState.catalog.tableExists(
-        org.apache.spark.sql.catalyst.TableIdentifier(n, Some("default")))
-    def ensure(n: String): Unit = {
-      if (existsInCatalog(n) && !tableAt(spark, n, s"$dir/$n.parquet"))
-        spark.sql(s"DROP TABLE default.$n")
-      if (!existsInCatalog(n)) {
-        spark.sql(s"CREATE TABLE default.$n USING parquet LOCATION '$dir/$n.parquet'")
-        analyze(spark, n)
-      }
-    }
-    analyzableTables.foreach(ensure)
-    // events: materialize the ns→µs-converted frame as a MANAGED table
-    // (CTAS into the warehouse) and ANALYZE it — the one table whose
-    // catalog copy cannot just point at the source parquet. Staleness is
-    // tracked via a table property carrying the source dir (tableAt's
-    // location compare sees the warehouse path, not the sfDir).
-    if (existsInCatalog("events") && !eventsCatalogFresh(spark, dir))
-      spark.sql("DROP TABLE default.events")
-    if (!existsInCatalog("events")) {
-      table(spark, dir, "events").write.saveAsTable("default.events")
-      spark.sql(s"ALTER TABLE default.events SET TBLPROPERTIES ('$eventsSrcProp' = '$dir')")
-      // after the CTAS `ts` is a µs TIMESTAMP (stats kept — event queries
-      // range-filter on it), but route through the same NTZ/complex guard
-      analyze(spark, "events")
-    }
-    // registerAll/registerFor may have left same-named TEMP VIEWS for the
-    // two tables whose catalog copies carry what the views lack (events'
-    // µs conversion is in the CTAS data; embeddings' stats): a view would
-    // silently shadow the stats-backed table for every SQL consumer. The
-    // analyzable 8 keep user temp views untouched — same data either way,
-    // and a caller's deliberate view (e.g. over a different dir) is theirs.
-    Seq("events", "embeddings").foreach { n =>
-      if (spark.sessionState.catalog.getTempView(n).isDefined)
-        spark.catalog.dropTempView(n)
+    useDir(spark, dir)
+    val cat = spark.sessionState.catalog
+    val db = dirDb(dir)
+    createLock.synchronized {
+      tableNames.map(n => TableIdentifier(n, Some(db)))
+        .filter(id => cat.tableExists(id) && cat.getTableMetadata(id).stats.forall(_.rowCount.isEmpty))
+        .foreach(analyze(spark, _))
     }
   }
 
   /** Startup catalog listing — parity with the reference CLI's table dump
     * (`engine/src/cli.cpp:167-188`: every table with its row count and its
-    * columns SORTED by name with types). Row counts come from the ANALYZEd
-    * catalog ([[ensureAnalyzedCatalog]] must have run); the reference's
-    * per-table index list has no Spark analog (parquet min/max + bloom
-    * skipping replaces indexes), so no "Indexes:" block is printed.
+    * columns SORTED by name with types), over the current database. Row
+    * counts come from the ANALYZEd catalog ([[ensureAnalyzedCatalog]] must
+    * have run); the reference's per-table index list has no Spark analog
+    * (parquet min/max + bloom skipping replaces indexes), so no "Indexes:"
+    * block is printed.
     */
   def catalogListing(spark: SparkSession): String = {
     val cat = spark.sessionState.catalog
+    val db = cat.getCurrentDatabase
     val sb = new StringBuilder("Loaded tables:\n")
-    cat.listTables("default").map(_.table).sorted.foreach { n =>
-      val meta = cat.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(n, Some("default")))
+    cat.listTables(db, "*", includeLocalTempViews = false).map(_.table).sorted.foreach { n =>
+      val meta = cat.getTableMetadata(TableIdentifier(n, Some(db)))
       val rows = meta.stats.flatMap(_.rowCount).map(_.toString).getOrElse("?")
       sb.append(s"  $n (rows: $rows)\n")
       meta.schema.fields.sortBy(_.name).foreach(f =>
         sb.append(s"    - ${f.name} (${f.dataType.simpleString})\n"))
     }
     sb.toString
-  }
-
-  /** Table property recording which sfDir the managed events CTAS was
-    * materialized from (its LOCATION is the warehouse, so [[tableAt]]'s
-    * path compare cannot serve the staleness check the other tables use).
-    */
-  private val eventsSrcProp = "graft.src.dir"
-
-  /** Is the catalog's managed `events` copy the one materialized from
-    * `dir`? Shared by [[ensureAnalyzedCatalog]] (staleness → drop and
-    * re-CTAS) and [[table]] (catalog-first routing).
-    */
-  private def eventsCatalogFresh(spark: SparkSession, dir: String): Boolean =
-    try spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier("events", Some("default")))
-      .properties.get(eventsSrcProp).contains(dir)
-    catch { case _: Exception => false }
-
-  /** Does catalog table `n` point at `location`? (path compare, scheme- and
-    * trailing-slash-insensitive)
-    */
-  private def tableAt(spark: SparkSession, n: String, location: String): Boolean = {
-    def canon(p: String): String =
-      p.stripPrefix("file:").replaceAll("/+$", "")
-    try {
-      val meta = spark.sessionState.catalog
-        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(n, Some("default")))
-      meta.storage.locationUri.exists(u => canon(u.getPath) == canon(location))
-    } catch { case _: Exception => false }
   }
 }

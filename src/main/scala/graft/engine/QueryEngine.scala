@@ -498,12 +498,7 @@ object QueryEngine {
 
   private def tableName(l: LeafNode): Option[String] = l match {
     case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-      r.catalogTable.map(_.identifier.table).orElse(r.relation match {
-        // temp views over parquet files: recover the name from the path
-        case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-          fs.location.rootPaths.headOption.map(_.getName.stripSuffix(".parquet"))
-        case _ => None
-      })
+      r.catalogTable.map(_.identifier.table)
     case r: org.apache.spark.sql.catalyst.catalog.HiveTableRelation =>
       Some(r.tableMeta.identifier.table)
     case _ => None
@@ -1552,8 +1547,9 @@ object QueryEngine {
     * used" report. Read off the scan nodes of the executed plan in the
     * order the formatted EXPLAIN lists them: the main plan's scans left to
     * right (through AQE, query-stage and cached-relation wrappers), then
-    * each subquery's, with a reused subquery or scan listed once. Under
-    * EXPLAIN nothing else plans physically, so a planning failure here
+    * each subquery's, with a reused subquery or scan listed once. A scan
+    * is named by its catalog table, `?` when it has none (a path read).
+    * Under EXPLAIN nothing else plans physically, so a planning failure here
     * propagates and [[run]] reports an ERROR.
     */
   def pushedFilterReport(qe: org.apache.spark.sql.execution.QueryExecution): Seq[String] = {
@@ -1581,16 +1577,14 @@ object QueryEngine {
           .collect { case s: BaseSubqueryExec => s +: subqueries(s) }.flatten ++
           p.children.flatMap(subqueries)
     }
-    val tableRe = "([^/\\]\\[, ]+)\\.parquet".r
     (scans(root) ++ subqueries(root).flatMap {
       case _: ReusedSubqueryExec => Nil
       case s => scans(s.child)
     }).flatMap { s =>
       val fs = s.metadata.getOrElse("PushedFilters", "[]")
-      val table = s.relation.location.rootPaths.headOption
-        .flatMap(r => tableRe.findFirstMatchIn(r.toString)).map(_.group(1))
+      val table = s.tableIdentifier.fold("?")(_.table)
       if (fs.isEmpty || fs == "[]") None
-      else Some(s"used pushed filters (${table.getOrElse("?")}): $fs")
+      else Some(s"used pushed filters ($table): $fs")
     }
   }
 

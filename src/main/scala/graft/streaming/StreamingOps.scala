@@ -24,7 +24,6 @@ object StreamingOps {
     * stream-definition time; `eventsTsToMicros` is a no-op on it.
     */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema =
       try spark.read.parquet(dir).schema
       catch {

@@ -163,8 +163,8 @@ object ScaleData {
     // events go through GraftSession.table, not a bare read: the driver
     // has shipped `ts` as both TIMESTAMP(NANOS) — where a plain
     // spark.read THROWS before any conversion can run — and NTZ micros;
-    // table() sets the legacy-nanos conf and normalizes either to a
-    // UTC-micros TIMESTAMP, which is what the scaled copy is written as
+    // table() normalizes either to a UTC-micros TIMESTAMP, which is what
+    // the scaled copy is written as
     if (want("events")) {
       val evSrc = graft.engine.GraftSession.table(spark, srcDir, "events")
       val ev = fan(evSrc)

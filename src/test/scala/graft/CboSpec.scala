@@ -12,8 +12,6 @@ class CboSpec extends AnyFunSuite {
 
   test("analyzed catalog yields rowCount estimates in the plan tree") {
     GraftSession.ensureAnalyzedCatalog(spark, TestSpark.sfDir)
-    // temp views (registered by other suites) would shadow the catalog tables
-    Seq("nation", "region").foreach(spark.catalog.dropTempView(_))
     val rep = QueryEngine.run(spark,
       "EXPLAIN SELECT n_name, r_name FROM nation JOIN region ON n_regionkey = r_regionkey")
     assert(rep.planTree.contains("rows=25"), rep.planTree)
@@ -24,10 +22,10 @@ class CboSpec extends AnyFunSuite {
     GraftSession.ensureAnalyzedCatalog(spark, TestSpark.sfDir)
     assert(GraftSession.joinKeys.keySet == GraftSession.tableNames.toSet)
     def colStats(t: String) = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t, Some("default")))
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t))
       .stats.getOrElse(fail(s"$t has no table stats")).colStats
     GraftSession.joinKeys.foreach { case (t, keys) =>
-      val schema = spark.table(s"default.$t").schema.fieldNames.toSet
+      val schema = spark.table(t).schema.fieldNames.toSet
       keys.foreach { k =>
         assert(schema(k), s"$t has no column $k")
         val st = colStats(t).getOrElse(k, fail(s"$t.$k has no column stats"))
@@ -41,10 +39,7 @@ class CboSpec extends AnyFunSuite {
 
   test("embeddings is a stats-backed catalog table (scalar columns analyzed)") {
     GraftSession.ensureAnalyzedCatalog(spark, TestSpark.sfDir)
-    if (spark.catalog.tableExists("embeddings") &&
-        spark.sessionState.catalog.getTempView("embeddings").isDefined)
-      spark.catalog.dropTempView("embeddings")
-    val stats = spark.table("default.embeddings")
+    val stats = spark.table("embeddings")
       .queryExecution.optimizedPlan.stats
     assert(stats.rowCount.exists(_.toLong > 0), s"embeddings rowCount missing: $stats")
     val df = spark.sql(
@@ -58,35 +53,35 @@ class CboSpec extends AnyFunSuite {
 
   test("events is a stats-backed catalog table serving µs timestamps") {
     GraftSession.ensureAnalyzedCatalog(spark, TestSpark.sfDir)
-    val events = spark.table("default.events")
+    val events = spark.table("events")
     val stats = events.queryExecution.optimizedPlan.stats
     assert(stats.rowCount.exists(_.toLong > 0), s"events rowCount missing: $stats")
     // the CTAS copy must carry the ns→µs conversion, not raw BIGINT nanos
     assert(events.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
-    val fromCatalog = spark.sql("SELECT MIN(ts) AS m FROM default.events").head.getTimestamp(0)
+    val fromCatalog = spark.sql("SELECT MIN(ts) AS m FROM events").head.getTimestamp(0)
     val fromReader = GraftSession.table(spark, TestSpark.sfDir, "events")
       .agg(org.apache.spark.sql.functions.min("ts").as("m")).head.getTimestamp(0)
     assert(fromCatalog == fromReader, "catalog events diverged from the read-side conversion")
   }
 
-  test("ensureAnalyzedCatalog re-points tables when the data dir changes") {
+  test("two dirs are two databases; a repeat call is a no-op") {
     GraftSession.ensureAnalyzedCatalog(spark, TestSpark.sfDir)
-    // a same-named TEMP VIEW must neither shadow the staleness check nor
-    // get dropped in the catalog table's place (unqualified DROP TABLE
-    // resolves temp-view-first)
-    GraftSession.table(spark, TestSpark.sfDir, "customer").createOrReplaceTempView("customer")
-    val n1 = spark.sql("SELECT COUNT(*) AS n FROM default.customer").collect()(0).getLong(0)
-    // point the catalog at a different scale factor: the stale table must
-    // be dropped and recreated, not silently served from the old location
+    val n1 = spark.sql("SELECT COUNT(*) AS n FROM customer").collect()(0).getLong(0)
+    // another scale factor resolves in its own database: the first dir's
+    // table is neither served nor replaced
     GraftSession.ensureAnalyzedCatalog(spark, "/root/testdata/sf0.01")
-    val n2 = spark.sql("SELECT COUNT(*) AS n FROM default.customer").collect()(0).getLong(0)
+    val n2 = spark.sql("SELECT COUNT(*) AS n FROM customer").collect()(0).getLong(0)
     assert(n2 > n1, s"sf0.01 customer ($n2) must exceed sf0.001 ($n1)")
-    assert(spark.catalog.tableExists("customer"), "temp view must survive the re-point")
-    spark.catalog.dropTempView("customer")
-    // second call with the SAME dir is a no-op (no re-analyze churn)
+    assert(GraftSession.dirDb(TestSpark.sfDir) != GraftSession.dirDb("/root/testdata/sf0.01"))
+    // a second call with the SAME dir re-creates and re-ANALYZEs nothing
+    val cat = spark.sessionState.catalog
+    val id = org.apache.spark.sql.catalyst.TableIdentifier("customer")
+    val before = cat.getTableMetadata(id)
     GraftSession.ensureAnalyzedCatalog(spark, "/root/testdata/sf0.01")
+    assert(cat.getTableMetadata(id) == before)
     // restore for other suites
     GraftSession.ensureAnalyzedCatalog(spark, TestSpark.sfDir)
+    assert(spark.sql("SELECT COUNT(*) AS n FROM customer").collect()(0).getLong(0) == n1)
   }
 
   test("startup catalog listing renders every table with row count and sorted typed columns") {
@@ -138,8 +133,6 @@ class CboSpec extends AnyFunSuite {
 
   test("CBO join estimation produces a row estimate for the join node") {
     GraftSession.ensureAnalyzedCatalog(spark, TestSpark.sfDir)
-    Seq("customer", "orders").foreach(v => if (spark.catalog.tableExists(v))
-      spark.catalog.dropTempView(v))
     val df = spark.sql(
       "SELECT c.c_name FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey WHERE c.c_acctbal > 0")
     val joinStats = df.queryExecution.optimizedPlan.collect {

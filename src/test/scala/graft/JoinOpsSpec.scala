@@ -17,7 +17,7 @@ class JoinOpsSpec extends AnyFunSuite {
     val o = orders
     val got = JoinOps.rightAnti(c, o, c("c_custkey") === o("o_custkey"))
       .select("o_orderkey").collect().map(_.getLong(0)).toSet
-    GraftSession.registerAll(spark, TestSpark.sfDir)
+    GraftSession.useDir(spark, TestSpark.sfDir)
     val want = spark.sql(
       """SELECT o_orderkey FROM orders o WHERE NOT EXISTS
         (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey AND c.c_custkey <= 50)""")

@@ -10,7 +10,7 @@ import graft.engine.GraftSession
   * naive formulations return identical result sets.
   */
 class PropertiesSpec extends AnyFunSuite {
-  lazy val spark = { val s = TestSpark.spark; GraftSession.registerAll(s, TestSpark.sfDir); s }
+  lazy val spark = { val s = TestSpark.spark; GraftSession.useDir(s, TestSpark.sfDir); s }
 
   private def assertSameResult(a: DataFrame, b: DataFrame, hint: String): Unit = {
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,

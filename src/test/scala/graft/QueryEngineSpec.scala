@@ -16,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.{GraftSession, QueryEngine}
 
 class QueryEngineSpec extends AnyFunSuite {
-  lazy val spark = { val s = TestSpark.spark; GraftSession.registerAll(s, TestSpark.sfDir); s }
+  lazy val spark = { val s = TestSpark.spark; GraftSession.useDir(s, TestSpark.sfDir); s }
 
   private val flagship =
     """SELECT c.c_name,
@@ -382,6 +382,10 @@ class QueryEngineSpec extends AnyFunSuite {
     val point = QueryEngine.run(spark,
       "EXPLAIN SELECT c_name FROM customer WHERE c_custkey = 42")
     assert(point.planTree.contains("used pushed filters (customer)"), point.planTree)
+    // events is a copy in the warehouse, not a `<name>.parquet` file: the
+    // scan is still named by its table
+    val events = QueryEngine.run(spark, "EXPLAIN SELECT event_id FROM events WHERE user_id = 7")
+    assert(events.planTree.contains("used pushed filters (events)"), events.planTree)
   }
 
   test("pushed-filter report matches the formatted EXPLAIN over the registry") {
@@ -389,12 +393,15 @@ class QueryEngineSpec extends AnyFunSuite {
     // to parse is the reference: same scans, tables, filters and order,
     // over every Spark-runnable registry oracle (the coverage-ratchet set)
     def fromExplain(qe: org.apache.spark.sql.execution.QueryExecution): Seq[String] = {
-      val tableRe = "([^/\\]\\[, ]+)\\.parquet".r
+      // each scan's header, `(n) Scan parquet spark_catalog.<db>.<table>`
+      val scanRe = "\\(\\d+\\) Scan parquet *(\\S*)".r
       var current: Option[String] = None
       qe.explainString(org.apache.spark.sql.execution.FormattedMode).linesIterator
         .map(_.trim).flatMap { t =>
-          if (t.startsWith("Location:")) {
-            current = tableRe.findFirstMatchIn(t).map(_.group(1)); None
+          if (scanRe.matches(t)) {
+            current = scanRe.findFirstMatchIn(t).map(_.group(1)).filter(_.nonEmpty)
+              .map(_.split('.').last)
+            None
           } else if (t.startsWith("PushedFilters:")) {
             val fs = t.stripPrefix("PushedFilters:").trim
             if (fs.nonEmpty && fs != "[]") Some(s"used pushed filters (${current.getOrElse("?")}): $fs")

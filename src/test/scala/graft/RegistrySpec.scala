@@ -39,4 +39,35 @@ class RegistrySpec extends AnyFunSuite {
       assert(errsEmpty.keySet == replays, errsEmpty.keySet)
     } finally empty.delete()
   }
+
+  test("running every entry leaves no temp view; an unANALYZEd table plans like a raw read") {
+    val cat = spark.sessionState.catalog
+    val before = cat.listLocalTempViews("*").map(_.table).toSet
+    SparkEntry.entries.foreach { e =>
+      e.build(spark, TestSpark.sfDir).write.format("noop").mode("overwrite").save()
+    }
+    // the only views an entry may leave are its streams' memory-sink
+    // result tables, which Structured Streaming registers itself
+    val added = cat.listLocalTempViews("*").map(_.table).toSet -- before
+    assert(added.intersect(graft.engine.GraftSession.tableNames.toSet).isEmpty, added)
+    added.foreach { v =>
+      val leaves = spark.table(v).queryExecution.analyzed.collectLeaves()
+      assert(leaves.forall(_.getClass.getSimpleName == "MemoryPlan"), s"$v: $leaves")
+    }
+    // a dir no suite ANALYZEs: its catalog table carries no statistics,
+    // so it plans with the raw read's size estimate and no row count
+    val dir = Files.createTempDirectory("graft-unanalyzed")
+    try {
+      Files.copy(java.nio.file.Paths.get(TestSpark.sfDir, "customer.parquet"),
+        dir.resolve("customer.parquet"))
+      val viaCatalog = graft.engine.GraftSession.table(spark, dir.toString, "customer")
+        .queryExecution.optimizedPlan.stats
+      val raw = spark.read.parquet(dir.resolve("customer.parquet").toString)
+        .queryExecution.optimizedPlan.stats
+      assert(viaCatalog.sizeInBytes == raw.sizeInBytes, s"$viaCatalog vs $raw")
+      assert(viaCatalog.rowCount.isEmpty && raw.rowCount.isEmpty, s"$viaCatalog vs $raw")
+    } finally {
+      Files.walk(dir).sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.delete(f))
+    }
+  }
 }
