@@ -1,8 +1,16 @@
 package graft
 
+import scala.collection.immutable.VectorMap
+
+import com.fasterxml.jackson.annotation.JsonInclude
+import com.fasterxml.jackson.annotation.JsonInclude.Include.NON_ABSENT
+import com.fasterxml.jackson.core.StreamWriteFeature
+import com.fasterxml.jackson.databind.PropertyNamingStrategies
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.SparkSession
 
-import graft.engine.GraftSession
+import graft.engine.{GraftSession, Measure, Telemetry}
 
 /** Benchmark main: runs every SparkEntry query against SPARK_GRAFT_SF_DIR,
   * forcing full materialization through the noop sink (a bare count() would
@@ -50,6 +58,31 @@ object Bench {
     spark.conf.set("spark.sql.shuffle.partitions", if (naive) "200" else cpus.toString)
   }
 
+  /** `body` under [[Telemetry.measure]], its failure reported on stderr. */
+  private def measured(spark: SparkSession, label: String)(body: => Any): Measure = {
+    val m = Telemetry.measure(spark, label)(body)
+    m.error.foreach(e => System.err.println(s"[bench] $label failed: $e"))
+    m
+  }
+
+  /** The warm-then-time protocol: the first run pays whole-stage-codegen
+    * compilation and JIT, the second is the steady state a long-running
+    * job sees. The dedup operators persist their signature frames
+    * (correct for a real job: 3 consumers, 1 compute), and a re-run of
+    * IDENTICAL data would read the warm run's cache where a production
+    * re-run sees new data; the cache is cleared between runs so the timed
+    * one keeps JIT/codegen warmth and pays one honest compute. A failed
+    * warm run is the result.
+    */
+  private def warmThenTime(spark: SparkSession, label: String)(body: => Any): Measure = {
+    val warm = measured(spark, label)(body)
+    if (!warm.ok) warm
+    else {
+      spark.catalog.clearCache()
+      measured(spark, label)(body)
+    }
+  }
+
   /** Measure the five BASELINE.md shapes, optimized vs pessimized config.
     *
     * Runs over the dir's ANALYZEd catalog database: without statistics
@@ -58,11 +91,11 @@ object Bench {
     * misattribute AQE/broadcast/pushdown wins to "CBO + ...".
     *
     * best-of-7 per shape: sub-second timings at this SF carry ±2-3x
-    * JIT/GC noise on a single sample (the r3→r5 join_3table "slide" was
-    * exactly that); min-of-N is the standard stabilizer and applies
-    * equally to both configurations. A System.gc() before each config
-    * keeps heap debris from the other config's 200-partition runs from
-    * being charged to a shape. Sub-second widening rule (BENCH_NOTES.md):
+    * JIT/GC noise on a single sample; min-of-N is the standard
+    * stabilizer and applies equally to both configurations. A
+    * System.gc() before each config keeps heap debris from the other
+    * config's 200-partition runs from being charged to a shape.
+    * Sub-second widening rule (BENCH_NOTES.md):
     * a sub-second min after best-of-7 still carries ±40% session noise,
     * and those shapes are exactly the cheap ones — widen to best-of-21.
     *
@@ -71,64 +104,67 @@ object Bench {
     * noop-write timing path executes a separate write queryExecution, so
     * the dataset's stays un-finalized — making a genuine ratio change
     * diagnosable from BENCH_NOTES.md instead of guessed at. Per-config
-    * stop-the-world GC time across the sample loop is recorded alongside.
+    * stop-the-world GC time across the samples is recorded alongside. A
+    * shape whose sample or capture fails is recorded with negative times.
     */
   private def runBaselineShapes(spark: SparkSession, sfDir: String, cpus: Int,
       failed: scala.collection.mutable.LinkedHashSet[String],
       baseSamples: Int = 7, widen: Boolean = true): Seq[ShapeRun] = {
     GraftSession.ensureAnalyzedCatalog(spark, sfDir)
-    // (min, samples, finalized plan, gcMs over the loop, wall s over the loop)
-    def runShape(sql: String): (Double, Int, String, Long, Double) = {
+    def runShape(label: String, sql: String): Either[String, ShapeConfig] = {
       System.gc()
-      val gc0 = gcMillis()
-      val w0 = System.nanoTime()
-      val first = (1 to baseSamples).map(_ => time(materialize(spark.sql(sql))))
-      val samples =
-        if (first.min >= 1.0 || !widen) first
-        else first ++ (1 to 2 * baseSamples).map(_ => time(materialize(spark.sql(sql))))
-      val wall = (System.nanoTime() - w0) / 1e9
-      val gcMs = gcMillis() - gc0
-      val df = spark.sql(sql)
-      df.queryExecution.executedPlan.execute().count()
-      (samples.min, samples.size, df.queryExecution.executedPlan.toString, gcMs, wall)
+      val runs = scala.collection.mutable.ArrayBuffer[Measure]()
+      def sample(n: Int): Unit = {
+        val stop = runs.size + n
+        while (runs.size < stop && runs.forall(_.ok))
+          runs += measured(spark, label)(materialize(spark.sql(sql)))
+      }
+      sample(baseSamples)
+      if (widen && runs.forall(_.ok) && runs.map(_.wallS).min < 1.0) sample(2 * baseSamples)
+      var plan = ""
+      val capture =
+        if (!runs.forall(_.ok)) runs.last
+        else measured(spark, label) {
+          val df = spark.sql(sql)
+          df.queryExecution.executedPlan.execute().count()
+          plan = df.queryExecution.executedPlan.toString
+        }
+      capture.error.toLeft(ShapeConfig(runs.map(_.wallS).min, runs.size, plan,
+        runs.map(_.gcMs).sum, runs.map(_.wallS).sum))
     }
     shapes.map { case (name, sql) =>
       // per-shape failure containment: one broken shape must not abort the
       // whole bench — record it (negative time, like the query loop's -1
       // convention) and move on
-      try {
-        setNaive(spark, naive = false, cpus)
-        val (opt, optN, optPlan, optGc, optWall) = runShape(sql)
-        setNaive(spark, naive = true, cpus)
-        val (naive, naiveN, naivePlan, naiveGc, naiveWall) = runShape(sql)
-        setNaive(spark, naive = false, cpus)
-        ShapeRun(name, opt, optN, naive, naiveN, optPlan, naivePlan,
-          optGc, naiveGc, optWall, naiveWall)
-      } catch { case e: Throwable =>
-        failed += s"shape:$name"
-        System.err.println(s"[bench] shape $name failed: ${e.getMessage}")
-        setNaive(spark, naive = false, cpus)
-        ShapeRun(name, -1.0, 0, -1.0, 0, s"FAILED: ${e.getMessage}", "")
+      val label = s"shape:$name"
+      setNaive(spark, naive = false, cpus)
+      val opt = runShape(label, sql)
+      val naive = opt.flatMap { _ => setNaive(spark, naive = true, cpus); runShape(label, sql) }
+      setNaive(spark, naive = false, cpus)
+      (opt, naive) match {
+        case (Right(o), Right(n)) => ShapeRun(name, o, n)
+        case _ =>
+          failed += label
+          val lost = ShapeConfig(-1.0, 0, s"FAILED: ${naive.swap.getOrElse("")}", 0L, 0.0)
+          ShapeRun(name, lost, lost)
       }
     }
   }
 
-  /** Replace the auto-generated plan-capture section at the end of
-    * BENCH_NOTES.md with this run's best-of-7 shape timings and the final
-    * (post-AQE) physical plan of both configurations — the evidence a
-    * speedup-ratio change is judged against.
+  /** One configuration of a baseline shape: best-of-N wall (N recorded —
+    * sub-second shapes widen it, see [[runBaselineShapes]]), the finalized
+    * physical plan, and the GC time and wall summed over the samples.
     */
-  /** One baseline shape's measurement: best-of-N timings per config (N
-    * recorded — sub-second shapes widen it, see [[runShape]]) plus the
-    * finalized physical plans.
-    */
-  private case class ShapeRun(name: String, opt: Double, optN: Int,
-      naive: Double, naiveN: Int, optPlan: String, naivePlan: String,
-      optGcMs: Long = 0L, naiveGcMs: Long = 0L,
-      optWall: Double = 0.0, naiveWall: Double = 0.0)
+  private[graft] case class ShapeConfig(best: Double, n: Int, plan: String,
+      gcMs: Long, wall: Double)
 
-  /** One sf1 heavy entry's measurement: best wall (of 1 or 2 runs — see
-    * the contention note at the call site), the best run's gc/task time,
+  /** One baseline shape measured in both configurations. */
+  private[graft] case class ShapeRun(name: String, opt: ShapeConfig, naive: ShapeConfig) {
+    def speedup: Double = naive.best / math.max(opt.best, 1e-9)
+  }
+
+  /** One sf1 heavy entry's measurement: best wall (of up to 4 runs — see
+    * [[needsRetime]]), the best run's gc/task time,
     * every SUCCESSFUL wall observed, and the external-CPU demand measured
     * over the best run (cores other processes kept busy — the verdict's
     * contention signal).
@@ -138,47 +174,27 @@ object Bench {
       shufReadB: Long = 0L, shufWriteB: Long = 0L)
 
   /** Recorded quiet-session sf1 bands: (wall s, executor task ms) per
-    * heavy entry, the best-evidenced cross-round position (round-13/14
-    * official artifacts where the machine was quiet, and the round-14
-    * adjudicated quiet re-run for the entries that round's loaded
-    * artifact inflated — d28 30.6 s official vs 11.3 s quiet, same
-    * build). The verdict stamp makes the artifact self-adjudicating the
-    * way the shape blocks are: wall within 1.5× of band = in_band; wall
-    * out but task time within 1.5× = load_inflated (same work, slower —
-    * machine contention, not a plan change); both out on a QUIET machine
-    * = regressed (the plan itself grew work — investigate before
-    * shipping); both out under measured external contention =
-    * suspect_load (see sf1Verdict — round 15's artifact stamped two
-    * false regressions from exactly that). New entries without a
-    * recorded band stamp no_band until a round records one. Bands update
-    * from the min-across-sessions task_ms (BENCH_NOTES protocol): a
-    * quieter later session's lower observation replaces the band; a
-    * louder one never widens it.
+    * heavy entry, from quiet-machine runs. The verdict stamp makes the
+    * artifact self-adjudicating the way the shape blocks are: wall
+    * within 1.5× of band = in_band; wall out but task time within 1.5×
+    * = load_inflated (same work, slower — machine contention, not a plan
+    * change); both out on a QUIET machine = regressed (the plan itself
+    * grew work — investigate before shipping); both out under measured
+    * external contention = suspect_load (see sf1Verdict). Entries
+    * without a band stamp no_band. Bands update from the
+    * min-across-sessions task_ms (BENCH_NOTES protocol): a quieter
+    * session's lower observation replaces the band; a louder one never
+    * widens it.
     */
   private[graft] val sf1Bands: Map[String, (Double, Long)] = Map(
-    // task band lowered 29k -> 25.7k: round-18 quiet adjudication of the
-    // r17 `regressed` stamp (walls [7.78, 1.87, 1.68], tasks [83.5k,
-    // 25.9k, 25.6k], ext_cores 0.0) — the cold first run pays the minhash
-    // expressions' JIT in TASK time (83.5k vs 25.6k warm), which is why
-    // the load-aware stamp can't excuse it; warm runs are in-band, no
-    // plan regression. The adaptive re-time below is the structural fix.
+    // quiet adjudication of a `regressed` stamp (walls [7.78, 1.87, 1.68],
+    // tasks [83.5k, 25.9k, 25.6k], ext_cores 0.0): the cold first run
+    // pays the minhash expressions' JIT in TASK time; warm runs in band
     "d03_dedup_minhash" -> (1.5, 25700L),
-    // task band lowered 144k -> 119k: the round-15 judge's quiet
-    // official-config run measured 118,987 ms (min-across-sessions rule).
-    // Wall band lowered 16.6 -> 11.7 (round 16) then 7.2 (round 17's
-    // final official run, wall 7.15): persisting the verify AND prefix
-    // frames made the single-compute structural. Round 17 also lowered
-    // twelve other bands from the same run's observations (the
-    // min-across-sessions rule; task mins don't lie downward).
-    // Wall band lowered 7.2 -> 5.1 (round-18 quiet adjudication of the
-    // r17 `regressed` stamp: walls [11.88, 6.43, 5.06] ext_cores 0.0 —
-    // cold-JIT first run, warm runs in-band; no plan regression)
-    // Lowered again 5.1 -> 4.6 / 119k -> 103k (round-19 quiet re-time of
-    // the r19 in-sweep `regressed` stamp: walls [20.51, 5.68, 4.85, 4.57],
-    // tasks [377k, 128k, 109k, 103k], ext_cores 0.0 — the identical
-    // cold-JIT signature, warm runs in-band; the sweep's 237 generated
-    // classes evict d05's codegen between the sf0.1 and sf1 runs, which
-    // is why the in-sweep samples never reach the warm plateau)
+    // quiet re-time of an in-sweep `regressed` stamp: walls [20.51, 5.68,
+    // 4.85, 4.57], tasks [377k, 128k, 109k, 103k], ext_cores 0.0 — a
+    // cold-JIT first run, warm runs in band (the sweep's generated
+    // classes evict d05's codegen between the sf0.1 and sf1 runs)
     "d05_ngram_jaccard" -> (4.6, 103000L),
     "d11_dedup_components" -> (3.3, 28000L),
     "d13_dedup_transitive" -> (4.8, 82000L),
@@ -192,37 +208,29 @@ object Bench {
     "d28_containment" -> (7.0, 178000L),
     "d30_minhash_error" -> (1.0, 15000L),
     "d31_dup_centrality" -> (3.5, 39000L),
-    // joined the heavy list in round 17 (it was the slowest non-member in
-    // the r16 sweep); band from the round-17 measured run (wall 5.44 under
-    // moderate load — re-tighten from a quiet session if it proves loose)
+    // band from a run under moderate load (wall 5.44) — re-tighten from
+    // a quiet session if it proves loose
     "d35_ivfpq_curve" -> (5.5, 64000L),
-    // joined the heavy list in round 20: the round's optimizations shrank
-    // every member's sweep wall until d43 (3.69 s) tripped the coverage
-    // audit. Band from a quiet round-20 probe (sweep-warmed protocol:
-    // cold 10.64 s / 255k task is the JIT run, warm walls
-    // [3.35, 3.35, 3.31] at [48.0k, 49.5k, 50.4k] task, ext_cores ~0)
+    // band from a quiet sweep-warmed probe: cold 10.64 s / 255k task is
+    // the JIT run, warm walls [3.35, 3.35, 3.31] at [48.0k, 49.5k, 50.4k]
+    // task, ext_cores ~0
     "d43_ann_ivfpq_distributed" -> (3.4, 48000L),
     "p15_heavy_hitters" -> (4.4, 119000L),
     "q29_flagship" -> (2.2, 59000L),
     "q53_recursive_cte" -> (0.8, 2600L),
     "x15_curriculum_pack" -> (2.1, 27000L))
 
-  /** Load-aware stamping (round 16): sustained external contention
-    * inflates TASK time too (scheduler latency, GC pressure, memory
-    * bandwidth), so "both wall and task out of band" cannot by itself
-    * distinguish a plan regression from a busy machine — the round-15
-    * artifact stamped d03/d05 `regressed` at task 64.9k/253.7k ms under
-    * load 25 while a quiet same-build run measured 37.4k/119k (in-band).
-    * A loaded observation now stamps `suspect_load` (adjudicate with a
-    * quiet re-run) and only a quiet out-of-band observation stamps
-    * `regressed`. "Loaded" is judged on extCores — the cores OTHER
-    * processes kept busy over the entry's own run — not the raw 1-min
-    * load average, which this bench's local[32] executor drives to ~30
-    * by itself on a perfectly quiet machine. Threshold cpus/4: a
-    * planted regression on a quiet box (ext ≈ 0) still stamps
-    * regressed, while the r15 scenario (another tenant holding 20+
-    * cores) stamps suspect_load. extCores < 0 = platform can't say —
-    * keep the strict stamp rather than silently excusing every miss.
+  /** Load-aware stamping: sustained external contention inflates TASK
+    * time too (scheduler latency, GC pressure, memory bandwidth), so
+    * "both wall and task out of band" cannot by itself tell a plan
+    * regression from a busy machine (d03/d05 once stamped `regressed` at
+    * task 64.9k/253.7k ms under load while a quiet same-build run was in
+    * band). A loaded observation stamps `suspect_load` (adjudicate with a
+    * quiet re-run); only a quiet out-of-band one stamps `regressed`.
+    * "Loaded" means extCores > cpus/4 — the cores OTHER processes kept
+    * busy over the entry's own run, not the load average, which the
+    * bench's own executor drives to ~cpus. extCores < 0 = platform can't
+    * say — keep the strict stamp rather than silently excusing every miss.
     */
   private[graft] def sf1Verdict(e: Sf1Entry, cpus: Int): String =
     sf1Bands.get(e.name) match {
@@ -235,17 +243,27 @@ object Bench {
         else "regressed"
     }
 
-  /** One observation of an sf1 heavy entry. */
-  /** One sf10 (copies=100) measurement: wall + settled task time +
-    * shuffle read/write volume + peak per-task execution memory — the
-    * per-entry evidence the 100×-direction scale claim rests on.
-    */
-  private[graft] case class Sf10Row(name: String, wall: Double, taskMs: Long,
-      shufReadB: Long, shufWriteB: Long, peakMemB: Long,
-      wallWarm: Double = -1.0)
+  /** The sf1 heavy tier: entries timed at sf1 against [[sf1Bands]]. */
+  private[graft] val sf1Heavy = Seq("d03_dedup_minhash", "d05_ngram_jaccard",
+    "d11_dedup_components", "d13_dedup_transitive", "d15_semantic_dedup",
+    "d22_keep_best", "d25_ivf_nprobe_curve", "d26_ann_pq",
+    "d28_containment", "d30_minhash_error", "d31_dup_centrality",
+    "d35_ivfpq_curve", "d43_ann_ivfpq_distributed", "p15_heavy_hitters",
+    "q29_flagship", "q53_recursive_cte", "x15_curriculum_pack")
 
-  private[graft] case class Sf1Run(wall: Double, gcMs: Long, taskMs: Long,
-      ok: Boolean, extCores: Double, shufReadB: Long = 0L, shufWriteB: Long = 0L)
+  /** The sf1 section: generation time, the heavy entries, the shapes at
+    * sf1 and d43's recall at sf1.
+    */
+  private[graft] case class Sf1Result(dir: String, genS: Double, entries: Seq[Sf1Entry],
+      shapes: Seq[ShapeRun], annRecall: Seq[(String, Double)])
+
+  /** One sf10 (copies=100) entry: the cold run's Measure carries the scale
+    * evidence (task time, shuffle volume, peak per-task execution memory),
+    * `warmS` the warm re-run's wall (−1.0 if it failed or did not run).
+    */
+  private[graft] case class Sf10Run(name: String, cold: Measure, warmS: Double)
+
+  private[graft] case class Sf10Result(dir: String, genS: Double, runs: Seq[Sf10Run])
 
   /** Whether a first sf1 observation warrants the single re-time.
     * Band-relative (round 16): re-time exactly when the single
@@ -268,16 +286,16 @@ object Bench {
     * failed=true only when NO run succeeded, so the artifact's failures
     * list can't contradict its own positive wall.
     */
-  private[graft] def selectSf1(name: String, runs: Seq[Sf1Run]): (Sf1Entry, Boolean) = {
+  private[graft] def selectSf1(name: String, runs: Seq[Measure]): (Sf1Entry, Boolean) = {
     val ok = runs.filter(_.ok)
     if (ok.isEmpty) {
       val b = runs.head
       (Sf1Entry(name, -1.0, b.gcMs, b.taskMs, Seq(-1.0), b.extCores,
-        b.shufReadB, b.shufWriteB), true)
+        b.shuffleReadB, b.shuffleWriteB), true)
     } else {
-      val b = ok.minBy(_.wall)
-      (Sf1Entry(name, b.wall, b.gcMs, b.taskMs, ok.map(_.wall), b.extCores,
-        b.shufReadB, b.shufWriteB), false)
+      val b = ok.minBy(_.wallS)
+      (Sf1Entry(name, b.wallS, b.gcMs, b.taskMs, ok.map(_.wallS), b.extCores,
+        b.shuffleReadB, b.shuffleWriteB), false)
     }
   }
 
@@ -303,13 +321,6 @@ object Bench {
     }
   }
 
-  /** Total stop-the-world GC time since JVM start, across all collectors. */
-  private def gcMillis(): Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(_.getCollectionTime.max(0L)).sum
-  }
-
   /** 1-minute system load average (−1.0 where the platform can't say) —
     * recorded at sweep start/end so a loaded driver machine is visible in
     * the artifact rather than inferred from inflated cheap entries.
@@ -317,70 +328,11 @@ object Bench {
   private def loadAvg(): Double =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
 
-  private val osBean: Option[com.sun.management.OperatingSystemMXBean] =
-    java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-      case b: com.sun.management.OperatingSystemMXBean => Some(b)
-      case _ => None
-    }
-
-  /** CPU demand from OTHER processes, in cores, averaged over the
-    * interval since the previous call on this bean (getCpuLoad /
-    * getProcessCpuLoad are interval-averaged between consecutive reads):
-    * call once at entry start to reset the interval, read at entry end.
-    * This is the contention signal the verdict stamps need — the 1-min
-    * load average can't serve because this bench's own local[32]
-    * executor keeps it near core count on a quiet machine. −1.0 where
-    * the platform bean can't say.
+  /** Replace the auto-generated plan-capture section at the end of
+    * BENCH_NOTES.md with this run's best-of-7 shape timings and the final
+    * (post-AQE) physical plan of both configurations — the evidence a
+    * speedup-ratio change is judged against.
     */
-  private[graft] def externalCores(): Double = osBean.map { b =>
-    val sysLoad = b.getCpuLoad
-    val selfLoad = b.getProcessCpuLoad
-    if (sysLoad < 0 || selfLoad < 0) -1.0
-    else math.max(0.0, (sysLoad - selfLoad) * Runtime.getRuntime.availableProcessors())
-  }.getOrElse(-1.0)
-
-  /** Cumulative executor task run time (ms) across all completed tasks —
-    * the per-entry CPU-attribution signal (round 14): an entry whose wall
-    * is inflated by machine load shows task-time/wall FAR below the cores
-    * a busy query keeps saturated, so contention is diagnosable from the
-    * artifact itself instead of by cross-referencing quiet-session bands.
-    */
-  private[graft] class TaskTimeListener extends org.apache.spark.scheduler.SparkListener {
-    val runTimeMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    // shuffle volume + per-task peak execution memory (round 17): the
-    // sf10 section's scale evidence — wall alone can't distinguish
-    // "linear in data" from "quadratic but still fits"; shuffle bytes can
-    val shuffleReadB = new java.util.concurrent.atomic.AtomicLong(0L)
-    val shuffleWriteB = new java.util.concurrent.atomic.AtomicLong(0L)
-    val peakTaskMemB = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        runTimeMs.addAndGet(m.executorRunTime)
-        shuffleReadB.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        shuffleWriteB.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        peakTaskMemB.accumulateAndGet(m.peakExecutionMemory, Math.max(_, _))
-      }
-    }
-  }
-
-  /** Snapshot the listener's counter once the (async) listener bus has
-    * quiesced: task-end events trail job completion by bus-dispatch
-    * latency, so read until two consecutive polls agree (bounded wait —
-    * attribution skew beats an unbounded stall if the bus stays busy).
-    */
-  private[graft] def settledTaskMs(l: TaskTimeListener, maxWaitMs: Long = 500L): Long = {
-    val deadline = System.nanoTime() + maxWaitMs * 1000000L
-    var prev = l.runTimeMs.get()
-    var cur = prev
-    do {
-      prev = cur
-      Thread.sleep(20L)
-      cur = l.runTimeMs.get()
-    } while (cur != prev && System.nanoTime() < deadline)
-    cur
-  }
-
   private def writePlanCapture(shapes: Seq[ShapeRun]): Unit = {
     val marker = "<!-- bench:plan-capture (auto-generated by graft.Bench; do not edit below) -->"
     val path = java.nio.file.Paths.get(
@@ -397,19 +349,229 @@ object Bench {
       val sb = new StringBuilder(kept)
       if (!kept.endsWith("\n") && kept.nonEmpty) sb.append('\n')
       sb.append(marker).append("\n\n## Captured baseline-shape plans (last bench run)\n")
-      def num(fmt: String, v: Double): String =
-        String.format(java.util.Locale.ROOT, fmt, Double.box(v))
       shapes.foreach { sr =>
-        import sr.{name, opt, optN, naive, naiveN, optPlan, naivePlan}
-        val speedup = naive / math.max(opt, 1e-9)
-        sb.append(s"\n### $name — optimized ${num("%.3f", opt)}s (best of $optN), naive ${num("%.3f", naive)}s (best of $naiveN), speedup ${num("%.2f", speedup)}x, gc ${sr.optGcMs}/${sr.naiveGcMs} ms\n")
-        sb.append("\nOptimized final plan:\n```\n").append(optPlan.trim).append("\n```\n")
-        sb.append("\nNaive final plan:\n```\n").append(naivePlan.trim).append("\n```\n")
+        import sr.{name, opt, naive}
+        sb.append(s"\n### $name — optimized ${dec(opt.best, 3)}s (best of ${opt.n}), naive ${dec(naive.best, 3)}s (best of ${naive.n}), speedup ${dec(sr.speedup, 2)}x, gc ${opt.gcMs}/${naive.gcMs} ms\n")
+        sb.append("\nOptimized final plan:\n```\n").append(opt.plan.trim).append("\n```\n")
+        sb.append("\nNaive final plan:\n```\n").append(naive.plan.trim).append("\n```\n")
       }
       java.nio.file.Files.write(path, sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } catch { case e: Throwable =>
       System.err.println(s"[bench] could not write plan capture to $path: ${e.getMessage}")
     }
+  }
+
+  // ---- the artifact: typed records, written by Jackson with snake_case
+  // keys. Numbers are rounded to fixed decimals (`dec`) and written plain,
+  // never in exponent form; maps keep insertion order. Optional keys of
+  // the NON_ABSENT records are left out when None.
+
+  private type Dec = java.math.BigDecimal
+
+  /** `v` rounded half-up to `digits` decimals. */
+  private def dec(v: Double, digits: Int): Dec =
+    new java.math.BigDecimal(v).setScale(digits, java.math.RoundingMode.HALF_UP)
+
+  private def ordered[K, V](kvs: Iterable[(K, V)]): Map[K, V] = VectorMap.from(kvs)
+
+  private[graft] case class ShapeVerdict(claim: Dec, status: String, reason: String)
+
+  /** A baseline shape; the compact line keeps the first three fields. */
+  @JsonInclude(NON_ABSENT)
+  private[graft] case class ShapeRecord(optimized: Dec, naive: Dec, speedup: Dec,
+      samples: Option[Seq[Int]] = None, gcMs: Option[Seq[Long]] = None,
+      verdict: Option[ShapeVerdict] = None, position: Option[String] = None,
+      preSweep: Option[ShapeRecord] = None, postSweep: Option[ShapeRecord] = None,
+      note: Option[String] = None) {
+    def slim: ShapeRecord = ShapeRecord(optimized, naive, speedup)
+  }
+
+  @JsonInclude(NON_ABSENT)
+  private[graft] case class Env(heapMaxMb: Long, sweepGcMs: Long, loadAvg: Seq[Dec],
+      heavyCoverageGaps: Seq[String], subset: String, shapesMeasured: Option[String])
+
+  @JsonInclude(NON_ABSENT)
+  private[graft] case class Sf1Verdict(walls: Seq[Dec], bandWall: Option[Dec],
+      bandTaskMs: Option[Long], extCores: Dec, verdict: String)
+
+  @JsonInclude(NON_ABSENT)
+  private[graft] case class Sf1Record(genS: Dec, queries: Map[String, Dec],
+      queryVerdict: Map[String, Sf1Verdict], shapes: Map[String, ShapeRecord],
+      annRecall: Option[Map[String, Dec]], queryGcMs: Map[String, Long],
+      queryTaskMs: Map[String, Long], queryShuffleB: Map[String, Seq[Long]], dir: String)
+
+  @JsonInclude(NON_ABSENT)
+  private[graft] case class VerdictCounts(counts: Map[String, Int],
+      exceptions: Option[Map[String, String]])
+
+  @JsonInclude(NON_ABSENT)
+  private[graft] case class Sf1Slim(genS: Dec, queries: Map[String, Dec],
+      queryVerdict: VerdictCounts, shapes: Map[String, ShapeRecord],
+      annRecall: Option[Map[String, Dec]])
+
+  private[graft] case class Sf10Query(wallS: Dec, wallWarmS: Dec, taskMs: Long,
+      shuffleReadB: Long, shuffleWriteB: Long, peakTaskMemB: Long)
+
+  private[graft] case class Sf10Record(genS: Dec, copies: Int, tables: String,
+      shufflePartitions: Int, queries: Map[String, Sf10Query], dir: String)
+
+  private[graft] case class CboRow(est: java.math.BigInteger, actual: Long, band: String, ok: Boolean)
+
+  /** bench_out.json: everything the run measured. */
+  private[graft] case class BenchRecord(metric: String, value: Dec, unit: String,
+      queries: Map[String, Dec], queryGcMs: Map[String, Long], queryTaskMs: Map[String, Long],
+      twins: Map[String, Dec], failures: Seq[String], env: Env,
+      baselineShapes: Map[String, ShapeRecord], sf1: Option[Sf1Record], sf10: Option[Sf10Record],
+      cboAccuracy: Map[String, Map[String, CboRow]], sf: String)
+
+  /** The stdout line: a projection of [[BenchRecord]] (see [[compact]]). */
+  private[graft] case class CompactRecord(metric: String, value: Dec, unit: String,
+      nQueries: Int, failures: Seq[String], env: Env, baselineShapes: Map[String, ShapeRecord],
+      sf1: Option[Sf1Slim], cbo: Map[String, Map[String, Seq[java.math.BigInteger]]],
+      sf: String, detail: String)
+
+  private val mapper = JsonMapper.builder()
+    .addModule(DefaultScalaModule)
+    .propertyNamingStrategy(PropertyNamingStrategies.SNAKE_CASE)
+    .enable(StreamWriteFeature.WRITE_BIGDECIMAL_AS_PLAIN)
+    .build()
+
+  private[graft] def toJson(record: AnyRef): String = mapper.writeValueAsString(record)
+
+  // two shapes can't honestly reproduce the reference's MySQL-vs-MySQL
+  // speedup at this SF (BENCH_NOTES.md): say so IN the JSON so a
+  // mechanical within-2x comparison doesn't read them as plan defects
+  private val shapeNotes = Map(
+    "simple_select" -> "fixed-overhead-bound at this SF: scan is sub-ms either way, nothing for the optimizer to remove",
+    "scalar_subquery" -> "Spark decorrelates in BOTH configs; the reference's 17x is MySQL N+1 round-trip elimination, unreproducible on Spark")
+  // self-adjudicating verdict block (round 14): BASELINE.md's claimed
+  // optimized/naive speedup per shape, plus BENCH_NOTES' standing judge
+  // rules — sub-second minima carry ±40% session noise (within-2x of
+  // the claim reads as "meets" there), and the two shapes with standing
+  // notes are honest misses whose reason is structural, not a plan
+  // defect. The artifact states its own adjudication instead of
+  // requiring the prose rules to be re-derived every round.
+  private val baselineClaims = Map("simple_select" -> 2.5, "join_2table" -> 3.0,
+    "join_3table" -> 8.3, "scalar_subquery" -> 17.3, "complex" -> 8.3)
+
+  private def shapeVerdict(sr: ShapeRun): ShapeVerdict = {
+    val claim = baselineClaims.getOrElse(sr.name, 1.0)
+    val sp = if (sr.opt.best <= 0) 0.0 else sr.speedup
+    val subSecond = sr.opt.best > 0 && sr.opt.best < 1.0
+    // either config crashing means NO claim comparison ran — "failed",
+    // never a plan-quality miss
+    val status =
+      if (sr.opt.best <= 0 || sr.naive.best <= 0) "failed"
+      else if (sp >= claim) "beats"
+      else if (subSecond && sp >= claim / 2) "meets-within-noise"
+      else if (shapeNotes.contains(sr.name)) "standing-honest-miss"
+      else "misses"
+    val reason = status match {
+      case "failed" => "a config crashed — no measurement ran; see failures[]"
+      case "beats" => "measured speedup at or above the reference claim"
+      case "meets-within-noise" =>
+        "sub-second optimized minimum: best-of-N still carries ±40% session noise (BENCH_NOTES sub-second rule); within 2x of the claim"
+      case "standing-honest-miss" => shapeNotes(sr.name)
+      case _ => "below the claim with no standing note — investigate the captured plans"
+    }
+    ShapeVerdict(dec(claim, 1), status, reason)
+  }
+
+  private def shapeRecord(sr: ShapeRun): ShapeRecord =
+    ShapeRecord(dec(sr.opt.best, 3), dec(sr.naive.best, 3), dec(sr.speedup, 2),
+      Some(Seq(sr.opt.n, sr.naive.n)), Some(Seq(sr.opt.gcMs, sr.naive.gcMs)))
+
+  /** The full record. `shapes` holds each shape's headline run, its
+    * position ("pre-sweep" or "post-sweep") and the other measurement;
+    * sweep and twin walls read −1 where the run failed.
+    */
+  private[graft] def record(sfDir: String, cpus: Int, sweep: Seq[(String, Measure)],
+      twins: Seq[(String, Measure)], shapes: Seq[(ShapeRun, String, ShapeRun)], env: Env,
+      sf1: Option[Sf1Result], sf10: Option[Sf10Result],
+      cbo: Seq[(String, Seq[(String, BigInt, Long, String, Boolean)])],
+      failures: Seq[String]): BenchRecord = {
+    def wall(m: Measure) = if (m.ok) m.wallS else -1.0
+    // a config that spent >25% of its sample loop in stop-the-world GC is
+    // measuring the collector, not the plan — say so IN the artifact
+    def gcBound(cfg: String, c: ShapeConfig): Option[String] =
+      if (c.wall > 0 && c.gcMs / 1000.0 / c.wall > 0.25)
+        Some(s"$cfg sampling gc-bound: ${c.gcMs} ms GC over ${dec(c.wall, 1)} s wall")
+      else None
+    val baseline = shapes.map { case (win, position, other) =>
+      val notes = shapeNotes.get(win.name).toSeq ++
+        gcBound("optimized", win.opt) ++ gcBound("naive", win.naive)
+      val (pre, post) = if (position == "pre-sweep") (win, other) else (other, win)
+      win.name -> shapeRecord(win).copy(verdict = Some(shapeVerdict(win)),
+        position = Some(position), preSweep = Some(shapeRecord(pre)),
+        postSweep = Some(shapeRecord(post)),
+        note = Option.when(notes.nonEmpty)(notes.mkString("; ")))
+    }
+    // per-entry self-adjudication: every wall observed, the recorded
+    // quiet band, the external-CPU contention signal a suspect_load
+    // stamp is grounded in, and the verdict
+    val sf1Rec = sf1.map { s =>
+      val es = s.entries
+      Sf1Record(dec(s.genS, 1),
+        ordered(es.map(e => e.name -> dec(e.wall, 2))),
+        ordered(es.map { e =>
+          val band = sf1Bands.get(e.name)
+          e.name -> Sf1Verdict(e.walls.map(dec(_, 2)), band.map(b => dec(b._1, 1)),
+            band.map(_._2), dec(e.extCores, 1), sf1Verdict(e, cpus))
+        }),
+        ordered(s.shapes.map(sr => sr.name -> shapeRecord(sr))),
+        Option.when(s.annRecall.nonEmpty)(ordered(s.annRecall.map { case (n, v) => n -> dec(v, 3) })),
+        ordered(es.map(e => e.name -> e.gcMs)),
+        ordered(es.map(e => e.name -> e.taskMs)),
+        ordered(es.map(e => e.name -> Seq(e.shufReadB, e.shufWriteB))),
+        s.dir)
+    }
+    val sf10Rec = sf10.map { s =>
+      Sf10Record(dec(s.genS, 1), 100, "documents,events", 1024,
+        ordered(s.runs.map { r =>
+          r.name -> Sf10Query(dec(wall(r.cold), 2), dec(r.warmS, 2), r.cold.taskMs,
+            r.cold.shuffleReadB, r.cold.shuffleWriteB, r.cold.peakTaskMemB)
+        }), s.dir)
+    }
+    BenchRecord("total", dec(sweep.map(r => wall(r._2)).filter(_ >= 0).sum, 3), "sec",
+      ordered(sweep.map { case (n, m) => n -> dec(wall(m), 3) }),
+      ordered(sweep.map { case (n, m) => n -> m.gcMs }),
+      ordered(sweep.map { case (n, m) => n -> m.taskMs }),
+      ordered(twins.map { case (n, m) => n -> dec(wall(m), 3) }),
+      failures, env, ordered(baseline), sf1Rec, sf10Rec,
+      ordered(cbo.map { case (label, rows) =>
+        label -> ordered(rows.map { case (op, est, actual, band, ok) =>
+          op -> CboRow(est.bigInteger, actual, band, ok)
+        })
+      }), sfDir)
+  }
+
+  /** The stdout line, projected from the full record. Its reader keeps
+    * only the LAST 2000 chars of stdout, so the line must fit in 2000
+    * chars to be machine-readable: twins, per-shape pre/post detail and
+    * notes live in the file; the line carries totals, failures, env,
+    * slim shapes, and the sf1 section. Its
+    * sf1 verdict block is exception-style: per-verdict counts always,
+    * per-entry names only for the (normally few) entries off their band.
+    * Only the BASE cbo section rides along: both sections push the line
+    * toward the cap, and truncation corrupts the whole artifact.
+    */
+  private[graft] def compact(r: BenchRecord, detail: String): CompactRecord = {
+    val sf1 = r.sf1.map { s =>
+      val verdicts = s.queryVerdict.toSeq.map { case (n, v) => n -> v.verdict }
+      val counts = verdicts.groupBy(_._2).toSeq.sortBy(_._1).map { case (k, es) => k -> es.size }
+      val excs = verdicts.filter(_._2 != "in_band")
+      Sf1Slim(s.genS, s.queries,
+        VerdictCounts(ordered(counts), Option.when(excs.nonEmpty && excs.size <= 5)(ordered(excs))),
+        ordered(s.shapes.toSeq.map { case (n, sh) => n -> sh.slim }), s.annRecall)
+    }
+    CompactRecord(r.metric, r.value, r.unit, r.queries.size, r.failures,
+      r.env.copy(shapesMeasured = None),
+      ordered(r.baselineShapes.toSeq.map { case (n, sh) => n -> sh.slim }), sf1,
+      r.cboAccuracy.filter(_._1 == "base").map { case (label, rows) =>
+        label -> ordered(rows.toSeq.map { case (op, c) =>
+          op -> Seq(c.est, java.math.BigInteger.valueOf(c.actual))
+        })
+      }, r.sf, detail)
   }
 
   def main(args: Array[String]): Unit = {
@@ -424,8 +586,6 @@ object Bench {
       "spark.sql.codegen.cache.maxEntries did not take (another SparkSession " +
         "was created first in this JVM) — bench numbers would be evicted-cold; " +
         "run Bench in a fresh JVM")
-    val taskTimes = new TaskTimeListener
-    spark.sparkContext.addSparkListener(taskTimes)
     // the subset-replay env thins every documents/embeddings scan — a
     // bench run with it exported would publish numbers for 1/N of the
     // corpus labeled as the full SF (exactly the mislabeled-instance
@@ -457,74 +617,36 @@ object Bench {
     materialize(GraftSession.table(spark, sfDir, "lineitem")
       .groupBy("l_returnflag").count())
 
-    // ---- baseline shapes FIRST, in a controlled heap. Round-11's official
-    // artifact published join_3table 3.04x / complex 3.23x on finalized
-    // plans node-identical to same-build sessions measuring 12-27x: the
-    // optimized config had absorbed the 150-query sweep's old-gen debris
-    // (opt 0.29 -> 1.56 s while the naive side got FASTER — the GC-bound
-    // signature, BENCH_NOTES round-10 caveat). Measuring the shapes before
-    // the sweep gives every session the same deterministic heap state; the
-    // per-config GC time and the pinned heap size go INTO the JSON so a
-    // GC-bound session is self-evident instead of post-hoc inferred.
-    //
-    // The shapes are then measured a SECOND time after the sweep: the two
-    // JVM states fail differently (pre-sweep lacks the deep C2/codegen
-    // warmth minutes of load build up — complex floors ~0.53 s vs 0.29 s
-    // warmed; post-sweep can be GC-bound by sweep debris — the round-11
-    // artifact), and a same-build measurement depressed by either session
-    // artifact is exactly what this bench must not publish. Per shape the
-    // headline is the better-evidenced (higher-speedup) position, with
-    // BOTH complete measurements and their GC times in the JSON.
+    // ---- baseline shapes FIRST, in a controlled heap: after the sweep the
+    // optimized config can absorb its old-gen debris (join_3table once
+    // published 3.04x on plans node-identical to sessions measuring
+    // 12-27x), so measuring before it gives every session the same heap
+    // state, and the per-config GC time and heap size go INTO the JSON.
+    // The shapes are measured a SECOND time after the sweep: pre-sweep
+    // lacks the C2/codegen warmth minutes of load build up (complex
+    // floors ~0.53 s vs 0.29 s warmed), post-sweep can be GC-bound. Per
+    // shape the headline is the higher-speedup position, with BOTH
+    // measurements and their GC times in the JSON.
     val failed = scala.collection.mutable.LinkedHashSet[String]()
     val shapeResultsPre = runBaselineShapes(spark, sfDir, cpus, failed)
 
     // d08/d09 embed an exact O(|Q|·|N|) recall@k baseline for the driver's
     // correctness dump; the TIMED bench must measure only the approximate
-    // path (SparkEntry.annRecall reads this system property — queries run
-    // in this same JVM), or the ANN numbers are incomparable across rounds
-    val prevRecall = sys.props.get("graft.ann.recall")
-    sys.props("graft.ann.recall") = "off"
-
-    // steady-state timing: first execution of each query is dominated by
-    // whole-stage-codegen compilation + JIT (measured ~85% of a small
-    // query's cold time); run once to warm, report the second run — the
-    // throughput a long-running cluster job actually sees
-    // per-entry GC delta across the TIMED run (round 13): the official
-    // r12 sweep ran ~50% over same-build builder sessions with the
-    // inflation concentrated in trivially cheap entries — a loaded/GC-
-    // bound session was indistinguishable from a regression because only
-    // the shapes carried gc_ms. Now every sweep entry carries its own.
+    // path, or the ANN numbers are incomparable across rounds.
+    // Steady-state timing (warmThenTime): first execution of each query is
+    // dominated by whole-stage-codegen compilation + JIT (measured ~85% of
+    // a small query's cold time). Every sweep entry carries its own GC
+    // delta across the TIMED run (round 13): a loaded/GC-bound session was
+    // indistinguishable from a regression when only the shapes had gc_ms.
     val sweepLoadStart = loadAvg()
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      def once(): Unit =
-        try materialize(fn(spark, sfDir))
-        catch { case e: Throwable =>
-          failed += name
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-      once()
-      // the dedup operators persist their signature frames (correct for a
-      // real job: 3 consumers, 1 compute); across the warm+timed runs of
-      // IDENTICAL data the timed run would read the warm run's cache —
-      // but a production re-run sees NEW data, so a cache hit there is a
-      // bench artifact. Clear between runs: the timed number keeps JIT/
-      // codegen warmth (the steady-state claim) and pays one honest
-      // signature compute.
-      spark.catalog.clearCache()
-      val task0 = settledTaskMs(taskTimes)
-      val gc0 = gcMillis()
-      val t = time(once())
-      val gcDelta = gcMillis() - gc0
-      val taskDelta = settledTaskMs(taskTimes) - task0
-      // a failed query must not masquerade as a fast success in the JSON
-      (name, if (failed(name)) -1.0 else t, gcDelta, taskDelta)
+    val results = SparkEntry.withoutRecall {
+      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+        val m = warmThenTime(spark, name)(materialize(fn(spark, sfDir)))
+        if (!m.ok) failed += name
+        name -> m
+      }
     }
     val sweepLoadEnd = loadAvg()
-    val sweepGcMs = results.map(_._3).sum
-    prevRecall match {
-      case Some(v) => sys.props("graft.ann.recall") = v
-      case None => sys.props.remove("graft.ann.recall")
-    }
 
     // ---- bench-only twins: production-default variants the DuckDB-oracled
     // entries can't time (d14's compressGrams=true 8-byte-gram shuffle,
@@ -535,7 +657,7 @@ object Bench {
     // Reported under "twins", NOT in the headline total, so round-over-
     // round totals stay comparable. Same warm-then-time protocol as the
     // main loop.
-    val twinResults: Seq[(String, Double)] = {
+    val twinResults: Seq[(String, Measure)] = {
       import org.apache.spark.sql.DataFrame
       import org.apache.spark.sql.functions._
       import graft.operators.{Dedup, Profile, TextOps}
@@ -662,26 +784,18 @@ object Bench {
           docs.filter(pmod(col("doc_id"), lit(7)) === 0),
           "doc_id", "text", n = 6)))
       twins.map { case (name, mk) =>
-        def once(): Unit =
-          try materialize(mk())
-          catch { case e: Throwable =>
-            failed += name
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          }
-        once()
-        spark.catalog.clearCache()
-        val tv = time(once())
-        name -> (if (failed(name)) -1.0 else tv)
+        val m = warmThenTime(spark, name)(materialize(mk()))
+        if (!m.ok) failed += name
+        name -> m
       }
     }
 
     // post-sweep re-measurement (see the pre-sweep comment); the winner's
     // finalized plans are what BENCH_NOTES gets
     val shapeResultsPost = runBaselineShapes(spark, sfDir, cpus, failed)
-    val shapePairs = shapeResultsPre.zip(shapeResultsPost)
     def speedupOf(sr: ShapeRun): Double =
-      if (sr.opt <= 0) Double.MinValue else sr.naive / math.max(sr.opt, 1e-9)
-    val shapeWinners = shapePairs.map { case (pre, post) =>
+      if (sr.opt.best <= 0) Double.MinValue else sr.speedup
+    val shapeWinners = shapeResultsPre.zip(shapeResultsPost).map { case (pre, post) =>
       if (speedupOf(post) > speedupOf(pre)) (post, "post-sweep", pre)
       else (pre, "pre-sweep", post)
     }
@@ -693,29 +807,24 @@ object Bench {
     // once per workspace, key-offset copies — see ScaleData's scaladoc for
     // why text/embeddings are perturbed), the five baseline shapes run
     // optimized-vs-naive exactly like the sf0.1 table, and the heaviest
-    // entries run ONCE each (compute-bound at this volume; JIT/codegen
-    // warmth is already built by the sf0.1 sweep — a warm+time double run
-    // would double a multi-minute section to shave single-digit %).
-    // Gated to the driver's sf0.1 bench (or SPARK_GRAFT_SF1=on) so sf0.001
-    // smoke runs stay fast; SPARK_GRAFT_SF1=off disables.
-    val sf1Heavy = Seq("d03_dedup_minhash", "d05_ngram_jaccard",
-      "d11_dedup_components", "d13_dedup_transitive", "d15_semantic_dedup",
-      "d22_keep_best", "d25_ivf_nprobe_curve", "d26_ann_pq",
-      "d28_containment", "d30_minhash_error", "d31_dup_centrality",
-      "d35_ivfpq_curve", "d43_ann_ivfpq_distributed", "p15_heavy_hitters",
-      "q29_flagship", "q53_recursive_cte", "x15_curriculum_pack")
-    // sweep-end audit (round 17): sf1Heavy is hand-maintained, so a future
+    // entries (sf1Heavy) run ONCE each (compute-bound at this volume;
+    // JIT/codegen warmth is already built by the sf0.1 sweep — a warm+time
+    // double run would double a multi-minute section to shave single-digit
+    // %). Gated to the sf0.1 bench (or SPARK_GRAFT_SF1=on) so
+    // sf0.001 smoke runs stay fast; SPARK_GRAFT_SF1=off disables.
+    // Sweep-end audit (round 17): sf1Heavy is hand-maintained, so a future
     // heavy entry could silently miss band/trend coverage. Any non-member
     // whose sweep wall exceeds 1.5x the slowest member's is a gap — loud
     // on stderr AND stamped into the artifact's env block.
-    val heavyGaps = heavyCoverageGaps(results.map(r => (r._1, r._2)), sf1Heavy)
+    val heavyGaps = heavyCoverageGaps(
+      results.map { case (n, m) => n -> (if (m.ok) m.wallS else -1.0) }, sf1Heavy)
     if (heavyGaps.nonEmpty)
       System.err.println(s"[bench] WARNING: heavy-coverage gap — ${heavyGaps.mkString(", ")} " +
         "exceed 1.5x the slowest sf1Heavy member's sweep wall; add them to sf1Heavy")
     val sf1Enabled = !sys.env.get("SPARK_GRAFT_SF1").contains("off") &&
       (sys.env.get("SPARK_GRAFT_SF1").contains("on") ||
         sfDir.stripSuffix("/").endsWith("sf0.1"))
-    val sf1Result: Option[(String, Double, Seq[Sf1Entry], Seq[ShapeRun], Seq[(String, Double)])] =
+    val sf1Result: Option[Sf1Result] =
       if (!sf1Enabled) None
       else try {
         // ABSOLUTE path: catalog table locations resolve relative paths
@@ -736,65 +845,34 @@ object Bench {
         // in the same commit. The tables are created here, untimed, so no
         // entry's wall pays the one-time events copy.
         GraftSession.useDir(spark, sf1Dir)
-        sys.props("graft.ann.recall") = "off"
-        // restore in finally: an exception from any sf1 query must not
-        // leave the recall toggle off for the rest of the process
-        val qTimes =
-          try sf1Heavy.map { name =>
+        val qTimes = SparkEntry.withoutRecall {
+          sf1Heavy.map { name =>
             val fn = SparkEntry.queries(name)
-            def runOnce(): Sf1Run = {
-              externalCores() // reset the interval-average window
-              val task0 = settledTaskMs(taskTimes)
-              val sr0 = taskTimes.shuffleReadB.get()
-              val sw0 = taskTimes.shuffleWriteB.get()
-              val gc0 = gcMillis()
-              var ok = true
-              val t = time(
-                try materialize(fn(spark, sf1Dir))
-                catch { case e: Throwable =>
-                  ok = false
-                  System.err.println(s"[bench] sf1 $name failed: ${e.getMessage}")
-                })
-              val ext = externalCores()
+            def runOnce(): Measure = {
+              val m = measured(spark, s"sf1:$name")(materialize(fn(spark, sf1Dir)))
               spark.catalog.clearCache()
-              Sf1Run(t, gcMillis() - gc0, settledTaskMs(taskTimes) - task0, ok, ext,
-                taskTimes.shuffleReadB.get() - sr0, taskTimes.shuffleWriteB.get() - sw0)
+              m
             }
-            // contention robustness (round 15): single-timed sf1 walls
-            // published 2-3x inflated under another tenant's load (r14:
-            // d28 30.6 s official vs 11.3 s quiet, same build). A first
-            // wall that would not stamp in_band gets re-timed (band-
-            // relative, round 16 — see needsRetime) and the min among
-            // SUCCESSFUL runs is the headline — samples under the same
-            // load bound the noise the one-shot can't, while in-band
-            // entries stay single-timed (re-running the whole section
-            // would double a multi-minute cost to shave noise on stable
-            // rows). Round 18: up to TWO re-times, stopping as soon as
-            // an observation lands in-band — the r17 artifact stamped
-            // d03 `regressed` at wall 2.29 vs cutoff 2.25 on its single
-            // re-time right after the 6.14 cold run (whole-stage-codegen
-            // JIT for the entry's own expressions inflates the first
-            // observation's TASK time too — 83.5k vs 25.6k ms warm on a
-            // quiet box — so the load-aware stamp can't excuse it); a
-            // still-warming second run needs a third sample before a
-            // regression is published. Round 19: up to THREE re-times —
-            // the r19 stamp showed an entry can stay JIT-cold through
-            // three in-sweep samples (d05 walls [11.25, 42.81, 13.07] vs
-            // a quiet fresh-JVM plateau of 4.6-5.7 by run 2; the sweep's
-            // generated classes evict the entry's codegen between the
-            // sf0.1 and sf1 runs). Bounded: extra ≤band-scale runs only
-            // for entries persistently outside their band.
+            // contention robustness: single-timed sf1 walls published
+            // 2-3x inflated under another tenant's load (d28 30.6 s vs
+            // 11.3 s quiet, same build). A wall that would not stamp
+            // in_band (see needsRetime) is re-timed, up to three times,
+            // stopping once an observation lands in band, and the min
+            // among SUCCESSFUL runs is the headline; in-band entries stay
+            // single-timed. Three, because an entry can stay JIT-cold
+            // through three in-sweep samples: the sweep's generated
+            // classes evict its codegen, and the first runs' TASK time is
+            // inflated too (d03 83.5k vs 25.6k ms warm), which the
+            // load-aware stamp cannot excuse.
             var runs = List(runOnce())
             while (runs.forall(_.ok) && runs.length < 4 &&
-                needsRetime(name, runs.map(_.wall).min))
+                needsRetime(name, runs.map(_.wallS).min))
               runs = runs :+ runOnce()
             val (entry, allFailed) = selectSf1(name, runs)
             if (allFailed) failed += s"sf1:$name"
             entry
-          } finally prevRecall match {
-            case Some(v) => sys.props("graft.ann.recall") = v
-            case None => sys.props.remove("graft.ann.recall")
           }
+        }
         // ANN recall at scale (round 20, verdict item 5): d43's
         // recall@k was measured at oracle SF only — here d43's stack runs
         // at sf1 against the exact brute-force baseline. Direct operator
@@ -828,7 +906,7 @@ object Bench {
         // cheap opt sides would charge minutes for noise shaving
         val sf1Shapes = runBaselineShapes(spark, sf1Dir, cpus, failed,
           baseSamples = 3, widen = false)
-        Some((sf1Dir, genS, qTimes, sf1Shapes, annRecallSf1))
+        Some(Sf1Result(sf1Dir, genS, qTimes, sf1Shapes, annRecallSf1))
       } catch { case e: Throwable =>
         failed += "sf1:section"
         System.err.println(s"[bench] sf1 section failed: ${e.getMessage}")
@@ -840,31 +918,20 @@ object Bench {
     // documents + events only (what the heavy dedup/profile family scans
     // — generating 100× lineitem would dominate the section for nothing;
     // the sentinel records the subset so the directory can't be mistaken
-    // for a full instance). Gated behind SPARK_GRAFT_SF10=on: the driver
-    // sweep never pays it; a builder runs it per round and records the
-    // table in BENCH_NOTES. Each entry runs ONCE (compute-bound at this
-    // volume) with wall, settled task time, shuffle read/write bytes and
-    // peak per-task execution memory captured — "growth ~linear in data
-    // size" is the claim under test, and shuffle bytes are what separate
-    // linear from quadratic-but-still-fits.
-    // p24/p25 joined in the continued round-17 session: the sketch-state
-    // scale claim ("bounded rows out however large the corpus") gets its
-    // measured 100×-direction point alongside the dedup family's
-    // j06/s03 joined in round 19 (verdict item 8): the heaviest as-of
-    // (union + running-last window) and sessionize (lag window) entries,
-    // so the window/union shapes carry their own 100×-direction point —
-    // both scan only the events table the sf10 subset ships
-    // m09/y13 joined in round 20 (verdict item 4): the multimodal
-    // frame-pair engine (the path the m10 gate protects) and the
-    // mid-batch-kill streaming recovery get their own 100×-direction
-    // rows — both scan only the documents/events tables the sf10 subset
-    // ships
+    // for a full instance), so every sf10Heavy entry must scan only those
+    // two tables. Gated behind SPARK_GRAFT_SF10=on: the default run
+    // never pays it, and a run's table is recorded in BENCH_NOTES.
+    // "Growth ~linear in data size" is the claim under test, and shuffle
+    // bytes are what separate linear from quadratic-but-still-fits: the
+    // dedup family, the sketch-state entries (bounded rows out however
+    // large the corpus), the as-of and sessionize windows, the multimodal
+    // frame-pair engine and the mid-batch-kill streaming recovery.
     val sf10Heavy = Seq("d03_dedup_minhash", "d05_ngram_jaccard",
       "d11_dedup_components", "d13_dedup_transitive", "d28_containment",
       "p15_heavy_hitters", "p24_hll_distinct", "p25_kmv_overlap",
       "j06_nearest", "s03_events_sessionize",
       "m09_video_frame_dedup", "y13_midbatch_kill_recovery")
-    val sf10Result: Option[(String, Double, Seq[Sf10Row])] =
+    val sf10Result: Option[Sf10Result] =
       if (!sys.env.get("SPARK_GRAFT_SF10").contains("on")) None
       else try {
         val sf10Dir = new java.io.File(
@@ -883,81 +950,50 @@ object Bench {
         val shufKey = "spark.sql.shuffle.partitions"
         val prevShuf = spark.conf.get(shufKey)
         spark.conf.set(shufKey, "1024")
-        def measureSf10(name: String)(run: => Unit): Sf10Row = {
-          val task0 = settledTaskMs(taskTimes)
-          val sr0 = taskTimes.shuffleReadB.get()
-          val sw0 = taskTimes.shuffleWriteB.get()
-          taskTimes.peakTaskMemB.set(0L)
-          var ok = true
-          val t = time(
-            try run
-            catch { case e: Throwable =>
-              ok = false
-              failed += s"sf10:$name"
-              System.err.println(s"[bench] sf10 $name failed: ${e.getMessage}")
-            })
+        def measureSf10(name: String)(run: => Unit): Sf10Run = {
+          val cold = measured(spark, s"sf10:$name")(run)
           spark.catalog.clearCache()
-          val task = settledTaskMs(taskTimes) - task0
-          val coldShufR = taskTimes.shuffleReadB.get() - sr0
-          val coldShufW = taskTimes.shuffleWriteB.get() - sw0
-          val coldPeak = taskTimes.peakTaskMemB.get()
-          // (cold, warm) pair in ONE JVM (round-20, making the round-19
-          // adjudication protocol structural): the cold wall carries this
+          if (!cold.ok) failed += s"sf10:$name"
+          // (cold, warm) pair in ONE JVM: the cold wall carries this
           // section's JIT/codegen compile for the entry's own expressions
-          // (measured up to 2.2× on d05/d28 — three rounds of manual
-          // single-measurement adjudication), the warm wall is the
-          // steady-state a long-running cluster job sees. Cache cleared
+          // (measured up to 2.2× on d05/d28), the warm wall is the
+          // steady state a long-running cluster job sees. Cache cleared
           // between runs, so the warm run pays one honest recompute; the
           // scale evidence (task/shuffle/peak-mem) is the COLD run's —
           // volume is JIT-independent.
-          val warm =
-            if (!ok) -1.0
+          val warmS =
+            if (!cold.ok) -1.0
             else {
-              var okW = true
-              val tw = time(
-                try run
-                catch { case e: Throwable =>
-                  okW = false
-                  System.err.println(s"[bench] sf10 $name warm re-run failed: ${e.getMessage}")
-                })
+              val warm = measured(spark, s"sf10:$name warm re-run")(run)
               spark.catalog.clearCache()
-              if (okW) tw else -1.0
+              if (warm.ok) warm.wallS else -1.0
             }
-          val row = Sf10Row(name, if (ok) t else -1.0, task,
-            coldShufR, coldShufW, coldPeak, warm)
           // free the entry's shuffle files BEFORE the next one runs: at
           // copies=100 each heavy entry writes 15-35 GB of shuffle, and
           // Spark only deletes them when the ShuffleDependency is GC'd —
           // without this nudge ~4 heavy entries accumulate ~100 GB and
           // the section dies on disk (observed: d28_zipf_heaps, round-18
           // probe, "No space left on device"). Untimed: runs after the
-          // entry's wall/task/shuffle deltas are captured.
+          // entry's measurements are taken.
           System.gc()
           Thread.sleep(2000L)
-          row
+          Sf10Run(name, cold, warmS)
         }
         val rows = try {
           val entryRows = sf10Heavy.map { name =>
             val fn = SparkEntry.queries(name)
             measureSf10(name)(materialize(fn(spark, sf10Dir)))
           }
-          // Heaps-law Zipf corpus at 100× the sf0.1 twin (round 18): the
-          // degenerate copies=100 fixture above is PPJoin's provable worst
-          // case (no vocabulary growth — d05 483 s / 34 GB shuffle); real
-          // corpora grow vocabulary ~√N, and this measures d05/d28 on one
-          // at the same 100× scale. Candidate bounds are read FIRST (the
-          // d37/d38 discipline) and logged, so the BENCH_NOTES table can
-          // show candidate volume next to wall/shuffle. BOTH timed rows
-          // run 16-way BLOCKED (round 19 closes the d05 hygiene gap the
-          // r18 verdict flagged): the unblocked bounds are logged as the
-          // refuse-evidence a budget gate acts on — the unblocked d05
-          // wall was a 253-366 s single-measurement that dominated the
-          // section and carried ±45% session noise; the production shape
-          // (d05's own entry blocks by source) is what gets timed.
-          // Isolated in its own try (round-19 advisor find): a zipf
-          // failure — e.g. the disk-full mode the generation can hit —
-          // must degrade to the already-measured heavy-entry rows, not
-          // discard them via the section-level catch.
+          // Heaps-law Zipf corpus at 100× the sf0.1 twin: the degenerate
+          // copies=100 fixture above is PPJoin's provable worst case (no
+          // vocabulary growth — d05 483 s / 34 GB shuffle); real corpora
+          // grow vocabulary ~√N. Candidate bounds are read FIRST and
+          // logged next to wall/shuffle; the unblocked bounds are the
+          // refuse-evidence a budget gate acts on, and BOTH timed rows run
+          // 16-way BLOCKED, the production shape (the unblocked d05 wall
+          // was a 253-366 s single measurement with ±45% session noise).
+          // Its own try: a zipf failure (e.g. the disk-full mode the
+          // generation can hit) must keep the heavy-entry rows.
           val zipfRows = try {
             import org.apache.spark.sql.functions.{col, concat, lit, pmod, sum}
             import graft.operators.Dedup
@@ -994,11 +1030,11 @@ object Bench {
             failed += "sf10:zipf"
             System.err.println(
               s"[bench] sf10 zipf sub-block failed (heavy-entry rows kept): ${e.getMessage}")
-            Seq.empty[Sf10Row]
+            Seq.empty[Sf10Run]
           }
           entryRows ++ zipfRows
         } finally spark.conf.set(shufKey, prevShuf)
-        Some((sf10Dir, genS, rows))
+        Some(Sf10Result(sf10Dir, genS, rows))
       } catch { case e: Throwable =>
         failed += "sf10:section"
         System.err.println(s"[bench] sf10 section failed: ${e.getMessage}")
@@ -1021,169 +1057,23 @@ object Bench {
           None
         }
       section("base", sfDir).toSeq ++
-        sf1Result.flatMap { case (sf1Dir, _, _, _, _) => section("sf1", sf1Dir) }
+        sf1Result.flatMap(s => section("sf1", s.dir))
     }
-
-    // Locale.ROOT formatting throughout: the f-interpolator uses the JVM
-    // default locale, and a comma-decimal locale would emit invalid JSON
-    def num(fmt: String, v: Double): String =
-      String.format(java.util.Locale.ROOT, fmt, Double.box(v))
-    // env-sourced strings are attacker-shaped from JSON's point of view:
-    // a quote/backslash/control char interpolated raw would invalidate
-    // the whole artifact at the downstream parse
-    def jesc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    val qs = results.map { case (k, v, _, _) => s""""$k":${num("%.3f", v)}""" }.mkString("{", ",", "}")
-    val qGc = results.map { case (k, _, g, _) => s""""$k":$g""" }.mkString("{", ",", "}")
-    val qTask = results.map { case (k, _, _, tm) => s""""$k":$tm""" }.mkString("{", ",", "}")
-    // two shapes can't honestly reproduce the reference's MySQL-vs-MySQL
-    // speedup at this SF (BENCH_NOTES.md): say so IN the JSON so a
-    // mechanical within-2x comparison doesn't read them as plan defects
-    val shapeNotes = Map(
-      "simple_select" -> "fixed-overhead-bound at this SF: scan is sub-ms either way, nothing for the optimizer to remove",
-      "scalar_subquery" -> "Spark decorrelates in BOTH configs; the reference's 17x is MySQL N+1 round-trip elimination, unreproducible on Spark")
-    // self-adjudicating verdict block (round 14): BASELINE.md's claimed
-    // optimized/naive speedup per shape, plus BENCH_NOTES' standing judge
-    // rules — sub-second minima carry ±40% session noise (within-2x of
-    // the claim reads as "meets" there), and the two shapes with standing
-    // notes are honest misses whose reason is structural, not a plan
-    // defect. The artifact states its own adjudication instead of
-    // requiring the prose rules to be re-derived every round.
-    val baselineClaims = Map("simple_select" -> 2.5, "join_2table" -> 3.0,
-      "join_3table" -> 8.3, "scalar_subquery" -> 17.3, "complex" -> 8.3)
-    def shapeVerdict(sr: ShapeRun): String = {
-      val claim = baselineClaims.getOrElse(sr.name, 1.0)
-      val sp = if (sr.opt <= 0) 0.0 else sr.naive / math.max(sr.opt, 1e-9)
-      val subSecond = sr.opt > 0 && sr.opt < 1.0
-      // either config crashing means NO claim comparison ran — "failed",
-      // never a plan-quality miss
-      val status =
-        if (sr.opt <= 0 || sr.naive <= 0) "failed"
-        else if (sp >= claim) "beats"
-        else if (subSecond && sp >= claim / 2) "meets-within-noise"
-        else if (shapeNotes.contains(sr.name)) "standing-honest-miss"
-        else "misses"
-      val reason = status match {
-        case "failed" => "a config crashed — no measurement ran; see failures[]"
-        case "beats" => "measured speedup at or above the reference claim"
-        case "meets-within-noise" =>
-          "sub-second optimized minimum: best-of-N still carries ±40% session noise (BENCH_NOTES sub-second rule); within 2x of the claim"
-        case "standing-honest-miss" => shapeNotes(sr.name)
-        case _ => "below the claim with no standing note — investigate the captured plans"
-      }
-      s""""verdict":{"claim":${num("%.1f", claim)},"status":"$status","reason":"$reason"}"""
-    }
-    val heapMaxMb = Runtime.getRuntime.maxMemory / (1024 * 1024)
-    // a config that spent >25% of its sample loop in stop-the-world GC is
-    // measuring the collector, not the plan — say so IN the artifact
-    def gcBound(cfg: String, gcMs: Long, wall: Double): Option[String] =
-      if (wall > 0 && gcMs / 1000.0 / wall > 0.25)
-        Some(s"$cfg sampling gc-bound: ${gcMs} ms GC over ${num("%.1f", wall)} s wall")
-      else None
-    def shapeFields(sr: ShapeRun): String =
-      s""""optimized":${num("%.3f", sr.opt)},"naive":${num("%.3f", sr.naive)},"speedup":${num("%.2f", sr.naive / math.max(sr.opt, 1e-9))},"samples":[${sr.optN},${sr.naiveN}],"gc_ms":[${sr.optGcMs},${sr.naiveGcMs}]"""
-    def shapeSlim(sr: ShapeRun): String =
-      s""""${sr.name}":{"optimized":${num("%.3f", sr.opt)},"naive":${num("%.3f", sr.naive)},"speedup":${num("%.2f", sr.naive / math.max(sr.opt, 1e-9))}}"""
-    val bs = shapeWinners.map { case (win, position, other) =>
-      val notes = shapeNotes.get(win.name).toSeq ++
-        gcBound("optimized", win.optGcMs, win.optWall) ++
-        gcBound("naive", win.naiveGcMs, win.naiveWall)
-      val note = if (notes.isEmpty) "" else s""","note":"${notes.mkString("; ")}""""
-      val (preSr, postSr) = if (position == "pre-sweep") (win, other) else (other, win)
-      s""""${win.name}":{${shapeFields(win)},${shapeVerdict(win)},"position":"$position","pre_sweep":{${shapeFields(preSr)}},"post_sweep":{${shapeFields(postSr)}}$note}"""
-    }.mkString("{", ",", "}")
-    val bsSlim = shapeWinners.map(w => shapeSlim(w._1)).mkString("{", ",", "}")
-    val total = results.filter(_._2 >= 0).map(_._2).sum
-    val fails = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val tw = twinResults.map { case (k, v) => s""""$k":${num("%.3f", v)}""" }.mkString("{", ",", "}")
-    val gapsJson = heavyGaps.map("\"" + jesc(_) + "\"").mkString("[", ",", "]")
-    val sweepEnv = s""""sweep_gc_ms":$sweepGcMs,"load_avg":[${num("%.2f", sweepLoadStart)},${num("%.2f", sweepLoadEnd)}],"heavy_coverage_gaps":$gapsJson,"subset":"${jesc(subsetEnv)}""""
-    // sf1 JSON: full carries per-entry gc too; the compact line carries
-    // times only (the scaling signal the judge grades)
-    def sf1Json(slim: Boolean): String = sf1Result match {
-      case None => "null"
-      case Some((dir, genS, qTimes, sf1Shapes, annRecallSf1)) =>
-        val q = qTimes.map(e => s""""${e.name}":${num("%.2f", e.wall)}""").mkString("{", ",", "}")
-        val g = qTimes.map(e => s""""${e.name}":${e.gcMs}""").mkString("{", ",", "}")
-        val tk = qTimes.map(e => s""""${e.name}":${e.taskMs}""").mkString("{", ",", "}")
-        // per-entry self-adjudication (round 15): every wall observed,
-        // the recorded quiet band, the external-CPU contention signal
-        // (round 16 — what a suspect_load stamp is grounded in), and the
-        // verdict the reader would otherwise derive from cross-round
-        // forensics
-        val vd = qTimes.map { e =>
-          val band = sf1Bands.get(e.name)
-            .map { case (bw, bt) => s""","band_wall":${num("%.1f", bw)},"band_task_ms":$bt""" }
-            .getOrElse("")
-          val walls = e.walls.map(num("%.2f", _)).mkString("[", ",", "]")
-          s""""${e.name}":{"walls":$walls$band,"ext_cores":${num("%.1f", e.extCores)},"verdict":"${sf1Verdict(e, cpus)}"}"""
-        }.mkString("{", ",", "}")
-        // the compact line must stay under the driver's ~2000-char tail
-        // capture, so its verdict block is exception-style: per-verdict
-        // counts always, per-entry names only for the (normally few)
-        // entries off their band — the full per-entry walls/band detail
-        // lives in bench_out.json
-        val slimVd = {
-          val counts = qTimes.groupBy(sf1Verdict(_, cpus)).toSeq.sortBy(_._1)
-            .map { case (k, es) => s""""$k":${es.size}""" }.mkString("{", ",", "}")
-          val excs = qTimes.filter(e => sf1Verdict(e, cpus) != "in_band")
-          val ex = if (excs.isEmpty || excs.size > 5) ""
-            else s""","exceptions":${excs.map(e =>
-              s""""${e.name}":"${sf1Verdict(e, cpus)}"""").mkString("{", ",", "}")}"""
-          s"""{"counts":$counts$ex}"""
-        }
-        val sh =
-          if (slim) sf1Shapes.map(shapeSlim).mkString("{", ",", "}")
-          else sf1Shapes.map(sr => s""""${sr.name}":{${shapeFields(sr)}}""").mkString("{", ",", "}")
-        val shuf = qTimes.map(e =>
-          s""""${e.name}":[${e.shufReadB},${e.shufWriteB}]""").mkString("{", ",", "}")
-        val gcPart = if (slim) ""
-          else s""","query_gc_ms":$g,"query_task_ms":$tk,"query_shuffle_b":$shuf,"dir":"${jesc(dir)}""""
-        val recall =
-          if (annRecallSf1.isEmpty) ""
-          else s""","ann_recall":${annRecallSf1.map { case (n, v) =>
-            s""""$n":${num("%.3f", v)}""" }.mkString("{", ",", "}")}"""
-        s"""{"gen_s":${num("%.1f", genS)},"queries":$q,"query_verdict":${if (slim) slimVd else vd},"shapes":$sh$recall$gcPart}"""
-    }
-    def cboJson(slim: Boolean, sections: Seq[(String, Seq[(String, BigInt, Long, String, Boolean)])] = cboAccuracy): String = sections.map { case (label, rows) =>
-      val rs = rows.map { case (op, est, actual, band, ok) =>
-        if (slim) s""""$op":[$est,$actual]"""
-        else s""""$op":{"est":$est,"actual":$actual,"band":"${jesc(band)}","ok":$ok}"""
-      }.mkString("{", ",", "}")
-      s""""$label":$rs"""
-    }.mkString("{", ",", "}")
-    val sf10Json: String = sf10Result match {
-      case None => "null"
-      case Some((dir, genS, rows)) =>
-        val q = rows.map(r =>
-          s""""${r.name}":{"wall_s":${num("%.2f", r.wall)},"wall_warm_s":${num("%.2f", r.wallWarm)},"task_ms":${r.taskMs},"shuffle_read_b":${r.shufReadB},"shuffle_write_b":${r.shufWriteB},"peak_task_mem_b":${r.peakMemB}}""")
-          .mkString("{", ",", "}")
-        s"""{"gen_s":${num("%.1f", genS)},"copies":100,"tables":"documents,events","shuffle_partitions":1024,"queries":$q,"dir":"${jesc(dir)}"}"""
-    }
-    val full = s"""{"metric":"total","value":${num("%.3f", total)},"unit":"sec","queries":$qs,"query_gc_ms":$qGc,"query_task_ms":$qTask,"twins":$tw,"failures":$fails,"env":{"heap_max_mb":$heapMaxMb,$sweepEnv,"shapes_measured":"pre+post-sweep, per-shape best-evidenced"},"baseline_shapes":$bs,"sf1":${sf1Json(slim = false)},"sf10":$sf10Json,"cbo_accuracy":${cboJson(slim = false)},"sf":"${jesc(sfDir)}"}"""
-    // the full JSON (per-query times + per-query GC) goes to a FILE only
-    // (SPARK_GRAFT_BENCH_OUT, default bench_out.json). The driver keeps
-    // only the LAST 2000 chars of stdout (BENCH_r12's "tail" — its parse
-    // came back null because the r12 compact line was longer than that),
-    // so the printed line must fit in 2000 chars to be machine-readable:
-    // twins, per-shape pre/post detail and notes live in the file; the
-    // line carries totals, failures, env, slim shapes, and the sf1 section
+    val env = Env(Runtime.getRuntime.maxMemory / (1024 * 1024), results.map(_._2.gcMs).sum,
+      Seq(dec(sweepLoadStart, 2), dec(sweepLoadEnd, 2)), heavyGaps, subsetEnv,
+      Some("pre+post-sweep, per-shape best-evidenced"))
+    val full = record(sfDir, cpus, results, twinResults, shapeWinners, env,
+      sf1Result, sf10Result, cboAccuracy, failed.toSeq)
+    // the full record goes to a FILE only (SPARK_GRAFT_BENCH_OUT, default
+    // bench_out.json); stdout gets its compact projection
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), full + "\n")
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), toJson(full) + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] could not write $outPath: ${e.getMessage}") }
-    // the compact line carries only the BASE cbo section (round-20
-    // advisor find: both sections pushed the line toward the driver's
-    // 2000-char tail cap, and truncation corrupts the whole artifact);
-    // the sf1 est/actual detail lives in the full file JSON
-    val compact = s"""{"metric":"total","value":${num("%.3f", total)},"unit":"sec","n_queries":${results.size},"failures":$fails,"env":{"heap_max_mb":$heapMaxMb,$sweepEnv},"baseline_shapes":$bsSlim,"sf1":${sf1Json(slim = true)},"cbo":${cboJson(slim = true, cboAccuracy.filter(_._1 == "base"))},"sf":"${jesc(sfDir)}","detail":"${jesc(outPath)}"}"""
-    if (compact.length > 2000)
-      System.err.println(s"[bench] compact line ${compact.length} chars > 2000 — driver tail will truncate it")
+    val line = toJson(compact(full, outPath))
+    if (line.length > 2000)
+      System.err.println(s"[bench] compact line ${line.length} chars > 2000 — a 2000-char tail capture will truncate it")
     spark.stop()
     // print AFTER spark.stop() so the JSON is the process's last stdout line
-    println(compact)
+    println(line)
   }
 }

@@ -80,11 +80,22 @@ object SparkEntry {
   /** Recall@k measurement on the approximate ANN entries (d08/d09) runs the
     * exact brute-force baseline inside the same job. On by default so the
     * driver's correctness dump carries measured accuracy; Bench turns it off
-    * (`-Dgraft.ann.recall=off`) so the timed queries measure only the
-    * approximate path.
+    * (`-Dgraft.ann.recall=off`, see [[withoutRecall]]) so the timed queries
+    * measure only the approximate path.
     */
   private def annRecall: Boolean =
     sys.props.get("graft.ann.recall").forall(_ != "off")
+
+  /** Runs `body` with [[annRecall]] off, restoring the property after. */
+  def withoutRecall[T](body: => T): T = {
+    val prev = sys.props.get("graft.ann.recall")
+    sys.props("graft.ann.recall") = "off"
+    try body
+    finally prev match {
+      case Some(v) => sys.props("graft.ann.recall") = v
+      case None => sys.props.remove("graft.ann.recall")
+    }
+  }
 
   /** `approx` with each query's recall@k against the exact top-k of the
     * shared `vec_id < 10` query set attached, while [[annRecall]] is on.
@@ -1820,10 +1831,9 @@ object SparkEntry {
     // sign-LSH bucketed approximate top-k (the scale path); each row
     // carries its query's measured recall@k vs the exact baseline run in
     // the same job, so accuracy is driver-visible, not just ScalaTested.
-    // The exact baseline is O(|Q|·|N|): Bench.main sets
-    // sys.props("graft.ann.recall") = "off" around its query loop so the
-    // TIMED number measures only the approximate search and stays
-    // comparable across rounds.
+    // The exact baseline is O(|Q|·|N|): Bench.main runs its query loop
+    // under withoutRecall so the TIMED number measures only the
+    // approximate search and stays comparable across rounds.
     // Oracle: a FULL replay of the approximate pipeline — the generated SQL
     // embeds the very hyperplane constants the Spark plan uses
     // (Similarity.hyperplanes, same seeds), buckets on sign(dot(raw,

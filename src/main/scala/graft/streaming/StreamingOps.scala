@@ -763,16 +763,23 @@ object StreamingOps {
       availableNow: Boolean = false)
       : (DataFrame, Seq[org.apache.spark.sql.streaming.StateOperatorProgress]) =
     withStatePartitions(df.sparkSession) {
+      val spark = df.sparkSession
       val writer = df.writeStream.format("memory").queryName(name).outputMode(outputMode)
       // finally: a failed query must not stay registered (it would collide
-      // with the next start() under the same name and leak its sink state)
+      // with the next start() under the same name and leak its sink state),
+      // and the sink's temp view must not outlive the call either. The
+      // returned frame is analyzed before the view is dropped, so it reads
+      // the sink's rows directly and keeps them alive only as long as it
+      // lives itself
       val q =
         if (availableNow)
           writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
         else writer.start()
-      try { if (availableNow) q.awaitTermination() else q.processAllAvailable() }
-      finally q.stop()
-      (df.sparkSession.table(name), q.recentProgress.toSeq.flatMap(_.stateOperators))
+      try {
+        try { if (availableNow) q.awaitTermination() else q.processAllAvailable() }
+        finally q.stop()
+        (spark.table(name), q.recentProgress.toSeq.flatMap(_.stateOperators))
+      } finally spark.catalog.dropTempView(name)
     }
 
   /** Run `body` (which must START and FINISH its streaming queries inside)

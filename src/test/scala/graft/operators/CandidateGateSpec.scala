@@ -1,18 +1,16 @@
 package graft.operators
 
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
-  SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.engine.GraftSession
+import graft.engine.{GraftSession, Telemetry}
 
 /** The shared contract of the five budget-gated pair generators: every
   * branch releases the frames the gate persisted (the throwing one too),
@@ -152,38 +150,11 @@ class CandidateGateSpec extends AnyFunSuite {
     assert(boundBuilt && g.columns.toSeq == Seq("candidate_pairs", "w", "budget"))
   }
 
-  /** Jobs and tasks `f` runs under its own job group. Listener delivery is
-    * asynchronous but ordered, so once a marker job run after `f` has
-    * ended, every task of `f` has been seen too.
-    */
+  /** Jobs and tasks `f` runs, counted by [[Telemetry.measure]]. */
   private def jobsAndTasks(f: => Unit): (Int, Int) = {
-    val jobs, tasks = new AtomicInteger
-    val stages = ConcurrentHashMap.newKeySet[Int]()
-    val marker = new CountDownLatch(1)
-    val listener = new SparkListener {
-      private def group(e: SparkListenerJobStart) =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-      private val markerJobs = ConcurrentHashMap.newKeySet[Int]()
-      override def onJobStart(e: SparkListenerJobStart): Unit = group(e) match {
-        case "pin-probe" => jobs.incrementAndGet(); e.stageIds.foreach(stages.add)
-        case "pin-marker" => markerJobs.add(e.jobId)
-        case _ =>
-      }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (stages.contains(e.stageId)) tasks.incrementAndGet()
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (markerJobs.contains(e.jobId)) marker.countDown()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("pin-probe", "pin-probe")
-      try f finally sc.clearJobGroup()
-      sc.setJobGroup("pin-marker", "pin-marker")
-      try spark.range(1).collect() finally sc.clearJobGroup()
-      assert(marker.await(60, TimeUnit.SECONDS), "marker job never reached the listener")
-    } finally sc.removeSparkListener(listener)
-    (jobs.get, tasks.get)
+    val m = Telemetry.measure(spark, "pin-probe")(f)
+    assert(m.ok, m.error)
+    (m.jobs.toInt, m.tasks.toInt)
   }
 
   test("eagerPin computes and writes in one job, one task per partition") {
