@@ -1,16 +1,21 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import scala.collection.immutable.VectorMap
+import scala.collection.mutable
+import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.annotation.JsonInclude
 import com.fasterxml.jackson.annotation.JsonInclude.Include.NON_ABSENT
-import com.fasterxml.jackson.core.StreamWriteFeature
-import com.fasterxml.jackson.databind.PropertyNamingStrategies
-import com.fasterxml.jackson.databind.json.JsonMapper
-import com.fasterxml.jackson.module.scala.DefaultScalaModule
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
-import graft.engine.{GraftSession, Measure, Telemetry}
+import graft.engine.{CboAccuracy, GraftSession, Measure, Telemetry}
+import graft.functions.SortedIntersectCountExpr
+import graft.operators.{Dedup, LayoutOps, Profile, Similarity, TextOps}
+import graft.tools.{ScaleData, ZipfGrowth}
+import graft.tools.ZipfGrowth.ZipfJoin
 
 /** Benchmark main: runs every SparkEntry query against SPARK_GRAFT_SF_DIR,
   * forcing full materialization through the noop sink (a bare count() would
@@ -24,17 +29,11 @@ import graft.engine.{GraftSession, Measure, Telemetry}
   */
 object Bench {
 
-  private def materialize(df: org.apache.spark.sql.DataFrame): Unit =
+  private def materialize(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
-  private def time(f: => Unit): Double = {
-    val t0 = System.nanoTime()
-    f
-    (System.nanoTime() - t0) / 1e9
-  }
-
   /** The five BASELINE.md query-class shapes on the testdata schema. */
-  private val shapes: Seq[(String, String)] = Seq(
+  private val shapeSql: Seq[(String, String)] = Seq(
     "simple_select" ->
       "SELECT c_name FROM customer WHERE c_acctbal > 9000.0",
     "join_2table" ->
@@ -56,6 +55,28 @@ object Bench {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", if (naive) "-1" else "10485760")
     spark.conf.set("spark.sql.parquet.filterPushdown", (!naive).toString)
     spark.conf.set("spark.sql.shuffle.partitions", if (naive) "200" else cpus.toString)
+  }
+
+  /** `body`'s value, or None when it throws a NonFatal exception: `label`
+    * goes into `failed`, the exception to stderr, and the run goes on to
+    * its next section. A fatal error (an OOM) ends the run.
+    */
+  private[graft] def section[T](label: String, failed: mutable.LinkedHashSet[String])
+      (body: => T): Option[T] =
+    try Some(body)
+    catch { case NonFatal(e) =>
+      failed += label
+      System.err.println(s"[bench] $label failed: $e")
+      None
+    }
+
+  /** Seconds `body` took under [[Telemetry.measure]]; its failure fails
+    * the calling section.
+    */
+  private def seconds(spark: SparkSession, label: String)(body: => Any): Double = {
+    val m = Telemetry.measure(spark, label)(body)
+    m.error.foreach(e => throw new IllegalStateException(s"$label: $e"))
+    m.wallS
   }
 
   /** `body` under [[Telemetry.measure]], its failure reported on stderr. */
@@ -107,13 +128,13 @@ object Bench {
     * stop-the-world GC time across the samples is recorded alongside. A
     * shape whose sample or capture fails is recorded with negative times.
     */
-  private def runBaselineShapes(spark: SparkSession, sfDir: String, cpus: Int,
-      failed: scala.collection.mutable.LinkedHashSet[String],
+  private def shapes(spark: SparkSession, sfDir: String, cpus: Int,
+      failed: mutable.LinkedHashSet[String],
       baseSamples: Int = 7, widen: Boolean = true): Seq[ShapeRun] = {
     GraftSession.ensureAnalyzedCatalog(spark, sfDir)
     def runShape(label: String, sql: String): Either[String, ShapeConfig] = {
       System.gc()
-      val runs = scala.collection.mutable.ArrayBuffer[Measure]()
+      val runs = mutable.ArrayBuffer[Measure]()
       def sample(n: Int): Unit = {
         val stop = runs.size + n
         while (runs.size < stop && runs.forall(_.ok))
@@ -132,7 +153,7 @@ object Bench {
       capture.error.toLeft(ShapeConfig(runs.map(_.wallS).min, runs.size, plan,
         runs.map(_.gcMs).sum, runs.map(_.wallS).sum))
     }
-    shapes.map { case (name, sql) =>
+    shapeSql.map { case (name, sql) =>
       // per-shape failure containment: one broken shape must not abort the
       // whole bench — record it (negative time, like the query loop's -1
       // convention) and move on
@@ -152,7 +173,7 @@ object Bench {
   }
 
   /** One configuration of a baseline shape: best-of-N wall (N recorded —
-    * sub-second shapes widen it, see [[runBaselineShapes]]), the finalized
+    * sub-second shapes widen it, see [[shapes]]), the finalized
     * physical plan, and the GC time and wall summed over the samples.
     */
   private[graft] case class ShapeConfig(best: Double, n: Int, plan: String,
@@ -251,6 +272,18 @@ object Bench {
     "d35_ivfpq_curve", "d43_ann_ivfpq_distributed", "p15_heavy_hitters",
     "q29_flagship", "q53_recursive_cte", "x15_curriculum_pack")
 
+  /** The sf10 tier's entries: the dedup family, the sketch-state entries
+    * (bounded rows out however large the corpus), the as-of and sessionize
+    * windows, the multimodal frame-pair engine and the mid-batch-kill
+    * streaming recovery. Each must scan only documents and events, the
+    * two tables the tier generates.
+    */
+  private[graft] val sf10Heavy = Seq("d03_dedup_minhash", "d05_ngram_jaccard",
+    "d11_dedup_components", "d13_dedup_transitive", "d28_containment",
+    "p15_heavy_hitters", "p24_hll_distinct", "p25_kmv_overlap",
+    "j06_nearest", "s03_events_sessionize",
+    "m09_video_frame_dedup", "y13_midbatch_kill_recovery")
+
   /** The sf1 section: generation time, the heavy entries, the shapes at
     * sf1 and d43's recall at sf1.
     */
@@ -335,36 +368,27 @@ object Bench {
     */
   private def writePlanCapture(shapes: Seq[ShapeRun]): Unit = {
     val marker = "<!-- bench:plan-capture (auto-generated by graft.Bench; do not edit below) -->"
-    val path = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_NOTES", "BENCH_NOTES.md"))
-    try {
-      val existing =
-        if (java.nio.file.Files.exists(path))
-          new String(java.nio.file.Files.readAllBytes(path), java.nio.charset.StandardCharsets.UTF_8)
-        else ""
-      val kept = existing.indexOf(marker) match {
-        case -1 => existing
-        case i  => existing.substring(0, i)
-      }
-      val sb = new StringBuilder(kept)
-      if (!kept.endsWith("\n") && kept.nonEmpty) sb.append('\n')
-      sb.append(marker).append("\n\n## Captured baseline-shape plans (last bench run)\n")
-      shapes.foreach { sr =>
-        import sr.{name, opt, naive}
-        sb.append(s"\n### $name — optimized ${dec(opt.best, 3)}s (best of ${opt.n}), naive ${dec(naive.best, 3)}s (best of ${naive.n}), speedup ${dec(sr.speedup, 2)}x, gc ${opt.gcMs}/${naive.gcMs} ms\n")
-        sb.append("\nOptimized final plan:\n```\n").append(opt.plan.trim).append("\n```\n")
-        sb.append("\nNaive final plan:\n```\n").append(naive.plan.trim).append("\n```\n")
-      }
-      java.nio.file.Files.write(path, sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] could not write plan capture to $path: ${e.getMessage}")
+    val path = Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_NOTES", "BENCH_NOTES.md"))
+    val existing = if (Files.exists(path)) Files.readString(path) else ""
+    val kept = existing.indexOf(marker) match {
+      case -1 => existing
+      case i  => existing.substring(0, i)
     }
+    val sb = new StringBuilder(kept)
+    if (!kept.endsWith("\n") && kept.nonEmpty) sb.append('\n')
+    sb.append(marker).append("\n\n## Captured baseline-shape plans (last bench run)\n")
+    shapes.foreach { sr =>
+      import sr.{name, opt, naive}
+      sb.append(s"\n### $name — optimized ${dec(opt.best, 3)}s (best of ${opt.n}), naive ${dec(naive.best, 3)}s (best of ${naive.n}), speedup ${dec(sr.speedup, 2)}x, gc ${opt.gcMs}/${naive.gcMs} ms\n")
+      sb.append("\nOptimized final plan:\n```\n").append(opt.plan.trim).append("\n```\n")
+      sb.append("\nNaive final plan:\n```\n").append(naive.plan.trim).append("\n```\n")
+    }
+    Files.writeString(path, sb.toString)
   }
 
-  // ---- the artifact: typed records, written by Jackson with snake_case
-  // keys. Numbers are rounded to fixed decimals (`dec`) and written plain,
-  // never in exponent form; maps keep insertion order. Optional keys of
-  // the NON_ABSENT records are left out when None.
+  // ---- the artifact: typed records, written by [[Json.compact]].
+  // Numbers are rounded to fixed decimals (`dec`); maps keep insertion
+  // order. Optional keys of the NON_ABSENT records are left out when None.
 
   private type Dec = java.math.BigDecimal
 
@@ -430,13 +454,7 @@ object Bench {
       sf1: Option[Sf1Slim], cbo: Map[String, Map[String, Seq[java.math.BigInteger]]],
       sf: String, detail: String)
 
-  private val mapper = JsonMapper.builder()
-    .addModule(DefaultScalaModule)
-    .propertyNamingStrategy(PropertyNamingStrategies.SNAKE_CASE)
-    .enable(StreamWriteFeature.WRITE_BIGDECIMAL_AS_PLAIN)
-    .build()
-
-  private[graft] def toJson(record: AnyRef): String = mapper.writeValueAsString(record)
+  private[graft] def toJson(record: AnyRef): String = Json.compact(record)
 
   // two shapes can't honestly reproduce the reference's MySQL-vs-MySQL
   // speedup at this SF (BENCH_NOTES.md): say so IN the JSON so a
@@ -574,9 +592,355 @@ object Bench {
       }, r.sf, detail)
   }
 
+  // ---- the sections. Each returns its part of the record and records
+  // its failed runs in `failed`; main runs each under [[section]].
+
+  /** Each named frame materialized under [[warmThenTime]]; a failed one is
+    * recorded in `failed`.
+    */
+  private def timeEach(spark: SparkSession, failed: mutable.LinkedHashSet[String],
+      frames: Seq[(String, () => DataFrame)]): Seq[(String, Measure)] =
+    frames.map { case (name, build) =>
+      val m = warmThenTime(spark, name)(materialize(build()))
+      if (!m.ok) failed += name
+      name -> m
+    }
+
+  /** Every registry entry, by name. d08/d09 embed an exact O(|Q|·|N|)
+    * recall@k baseline for the correctness dump; the timed sweep measures
+    * only the approximate path, or the ANN numbers are incomparable across
+    * rounds.
+    */
+  private def sweep(spark: SparkSession, sfDir: String,
+      failed: mutable.LinkedHashSet[String]): Seq[(String, Measure)] =
+    SparkEntry.withoutRecall(timeEach(spark, failed,
+      SparkEntry.entries.sortBy(_.name).map(e => e.name -> (() => e.build(spark, sfDir)))))
+
+  /** The unfiltered control of a token-set join over `docs`: every pair
+    * sharing a token and passing `pair`, verified by the same native
+    * sorted-merge intersect, WITHOUT the prefix/positional/size-ratio
+    * filters — the wall-clock cost those filters remove. `score` maps
+    * (intersection, |a|, |b|) to the similarity kept at `threshold`.
+    */
+  private def unfilteredTokenJoin(docs: DataFrame, pair: (Column, Column) => Column,
+      score: (Column, Column, Column) => Column, threshold: Double): DataFrame = {
+    val toks = docs.select(col("doc_id"),
+      explode(array_distinct(TextOps.tokens(col("text")))).as("tok"))
+    val cands = toks.select(col("tok"), col("doc_id").as("doc_a"))
+      .join(toks.select(col("tok"), col("doc_id").as("doc_b")), "tok")
+      .filter(pair(col("doc_a"), col("doc_b")))
+      .select("doc_a", "doc_b").distinct()
+    val arrs = docs.select(col("doc_id"),
+      sort_array(array_distinct(TextOps.tokens(col("text")))).as("toks"))
+    cands
+      .join(arrs.select(col("doc_id").as("doc_a"), col("toks").as("toks_a")), "doc_a")
+      .join(arrs.select(col("doc_id").as("doc_b"), col("toks").as("toks_b")), "doc_b")
+      .withColumn("inter", SortedIntersectCountExpr.sortedIntersectCount(col("toks_a"), col("toks_b")))
+      .select(col("doc_a"), col("doc_b"),
+        score(col("inter"), size(col("toks_a")), size(col("toks_b"))).as("score"))
+      .filter(col("score") >= threshold)
+  }
+
+  /** Bench-only twins: production-default variants the DuckDB-oracled
+    * entries can't time (d14's compressGrams=true 8-byte-gram shuffle,
+    * p01's HLL describe path), plus the PPJoin prefix-filter pruning claim
+    * measured as WALL CLOCK on a corpus where pruning is possible — the sf
+    * documents fixture's 31-token vocab keeps mean within-block Jaccard
+    * above threshold, where no candidate filter can help (BENCH_NOTES).
+    * Reported under "twins", NOT in the headline total, so round-over-
+    * round totals stay comparable.
+    */
+  private def twins(spark: SparkSession, sfDir: String, cpus: Int,
+      failed: mutable.LinkedHashSet[String]): Seq[(String, Measure)] = {
+    val docs = GraftSession.table(spark, sfDir, "documents")
+    // Zipfian corpus sized to this sf tier's documents table (capped at
+    // 5000 = the sf0.1 size; the cap is logged, never silent)
+    val nDocs = docs.count().toInt
+    val zipfN = math.min(nDocs, 5000)
+    if (zipfN < nDocs)
+      System.err.println(s"[bench] zipf twin corpus capped at $zipfN of $nDocs docs")
+    val zipf = {
+      val rnd = new scala.util.Random(42)
+      val vocabSize = 2000
+      var acc = 0.0
+      val cdf = (1 to vocabSize).map { r => acc += 1.0 / r; acc }.toArray
+      def zipfToken(): String = {
+        val u = rnd.nextDouble() * cdf.last
+        val i = java.util.Arrays.binarySearch(cdf, u)
+        s"tok${if (i >= 0) i else -i - 1}"
+      }
+      val rows = (1 to zipfN).map { id =>
+        val toks = mutable.LinkedHashSet[String]()
+        val target = 25 + id % 30
+        while (toks.size < target) toks += zipfToken()
+        (id.toLong, toks.mkString(" "), "blk")
+      }
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, cpus))
+        .toDF("doc_id", "text", "source")
+    }
+    val zipfThreshold = 0.8
+    // z-order scan effectiveness, measured not narrated: the same
+    // lineitem projection written once Z-ORDERED on (partkey, suppkey)
+    // and once hash-scattered (same file count), then a 2-D box
+    // predicate timed over each. Row-group min/max stats are tight on
+    // both dims only under the Z layout, so the delta IS the skipping
+    // win z01's stats table bounds. Setup (the two writes) is not timed.
+    val zdir = "/tmp/graft-zorder-bench"
+    val li = GraftSession.table(spark, sfDir, "lineitem")
+      .select(col("l_partkey"), col("l_suppkey"), col("l_extendedprice"))
+    val zb = li.agg(min(col("l_partkey")), max(col("l_partkey")),
+      min(col("l_suppkey")), max(col("l_suppkey"))).head()
+    val (pLo, pHi, sLo, sHi) = (zb.getLong(0), zb.getLong(1), zb.getLong(2), zb.getLong(3))
+    // a ~10% x 10% box from the lower-quartile corner -> ~1% of rows
+    val (pA, pB) = (pLo + (pHi - pLo) / 4, pLo + (pHi - pLo) / 4 + math.max(1L, (pHi - pLo) / 10))
+    val (sA, sB) = (sLo + (sHi - sLo) / 4, sLo + (sHi - sLo) / 4 + math.max(1L, (sHi - sLo) / 10))
+    LayoutOps.zorderLayout(li, Seq("l_partkey", "l_suppkey"), 16, cpus)
+      .drop("__z").write.mode("overwrite").parquet(s"$zdir/zorder")
+    li.repartition(cpus).write.mode("overwrite").parquet(s"$zdir/natural")
+    def boxScan(layout: String): DataFrame =
+      spark.read.parquet(s"$zdir/$layout")
+        .filter(col("l_partkey").between(pA, pB) && col("l_suppkey").between(sA, sB))
+        .agg(sum(col("l_extendedprice").cast("decimal(18,2)")).as("v"))
+    timeEach(spark, failed, Seq(
+      "twin_z01_zorder_scan" -> (() => boxScan("zorder")),
+      "twin_z01_natural_scan" -> (() => boxScan("natural")),
+      "twin_d14_compressed_grams" -> (() => Dedup.exactNgramContamination(
+        docs.filter(pmod(col("doc_id"), lit(10)) =!= 0),
+        docs.filter(pmod(col("doc_id"), lit(10)) === 0),
+        "doc_id", "text", n = 8, compressGrams = true)),
+      "twin_p01_describe_approx" -> (() => Profile.describe(
+        GraftSession.table(spark, sfDir, "orders"),
+        Seq("o_orderkey", "o_orderstatus", "o_orderdate"), exact = false)),
+      "twin_d05_zipf_ppjoin" -> (() => Dedup.ngramJaccardPairs(
+        zipf, "doc_id", "text", "source", zipfThreshold)),
+      "twin_d05_zipf_unfiltered" -> (() => unfilteredTokenJoin(zipf, _ < _,
+        (inter, a, b) => inter.cast("double") / (a + b - inter), zipfThreshold)),
+      // d28's asymmetric prefix filter vs the full directional index join:
+      // directional candidates are ~2× the symmetric count, so its control
+      // is a strictly harder baseline than d05's
+      "twin_d28_zipf_contain" -> (() => Dedup.containmentPairs(
+        zipf, "doc_id", "text", "source", 0.9)),
+      "twin_d28_zipf_contain_unfiltered" -> (() => unfilteredTokenJoin(zipf, _ =!= _,
+        (inter, a, _) => inter.cast("double") / a, 0.9)),
+      // the Bloom prefilter's pruning win vs the same join unfiltered
+      // (d24's config; includes the filter build each run — the honest
+      // end-to-end cost a pipeline pays)
+      "twin_d24_bloom_prefilter" -> (() => Dedup.bloomNgramContamination(
+        docs.filter(pmod(col("doc_id"), lit(7)) =!= 0),
+        docs.filter(pmod(col("doc_id"), lit(7)) === 0),
+        "doc_id", "text", n = 6, numBits = 1L << 20, numHashes = 7)),
+      "twin_d24_unfiltered" -> (() => Dedup.exactNgramContamination(
+        docs.filter(pmod(col("doc_id"), lit(7)) =!= 0),
+        docs.filter(pmod(col("doc_id"), lit(7)) === 0),
+        "doc_id", "text", n = 6))))
+  }
+
+  /** Per shape, the pre- or post-sweep run with the higher speedup, its
+    * position, and the other run. Pre-sweep lacks the C2/codegen warmth
+    * minutes of load build up (complex floors ~0.53 s vs 0.29 s warmed);
+    * post-sweep can be GC-bound.
+    */
+  private def bestShapes(pre: Seq[ShapeRun], post: Seq[ShapeRun])
+      : Seq[(ShapeRun, String, ShapeRun)] = {
+    def speedupOf(sr: ShapeRun): Double =
+      if (sr.opt.best <= 0) Double.MinValue else sr.speedup
+    pre.zip(post).map { case (a, b) =>
+      if (speedupOf(b) > speedupOf(a)) (b, "post-sweep", a) else (a, "pre-sweep", b)
+    }
+  }
+
+  /** The sf1 tier: the 10× data point that turns the repo's design-level
+    * scale arguments into measurements. The data is ScaleData's
+    * deterministic 10× replication of `sfDir` (generated once per
+    * workspace, key-offset copies — see ScaleData's scaladoc for why
+    * text/embeddings are perturbed). Each [[sf1Heavy]] entry runs once
+    * (compute-bound at this volume; the sf0.1 sweep already built the
+    * JIT/codegen warmth, and a warm+time double run would double a
+    * multi-minute section to shave single-digit %), then d43's recall,
+    * then the five shapes.
+    */
+  private def sf1(spark: SparkSession, sfDir: String, cpus: Int,
+      failed: mutable.LinkedHashSet[String]): Sf1Result = {
+    // ABSOLUTE path: catalog table locations resolve relative paths
+    // against the warehouse dir, not the process cwd
+    val sf1Dir = new java.io.File(
+      sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "benchdata/sf1")).getAbsolutePath
+    val genS = seconds(spark, "sf1:gen")(ScaleData.ensure(spark, sfDir, sf1Dir, copies = 10))
+    // The tier reads the sf1 dir's database before the shapes below
+    // ANALYZE it, so it plans stats-blind, as raw reads did. With stats the
+    // planner sizes d05's persisted PPJoin prefix frame past the 10 MB
+    // broadcast threshold and flips its candidate self-join to sort-merge
+    // (~9.5 s vs ~5.4 s broadcast, warm), a false `regressed` against the
+    // bands: switching the tier to stats re-ratchets them in the same
+    // commit. The tables are created here, untimed, so no entry's wall
+    // pays the one-time events copy.
+    GraftSession.useDir(spark, sf1Dir)
+    val entries = SparkEntry.withoutRecall {
+      sf1Heavy.map(SparkEntry.named).map { e =>
+        def runOnce(): Measure = {
+          val m = measured(spark, s"sf1:${e.name}")(materialize(e.build(spark, sf1Dir)))
+          spark.catalog.clearCache()
+          m
+        }
+        // A wall that would not stamp in_band (needsRetime) is re-timed up
+        // to three times, stopping once one lands in band, and the min of
+        // the SUCCESSFUL runs is the headline: another tenant's load once
+        // inflated d28 to 30.6 s vs 11.3 s quiet, and an entry can stay
+        // JIT-cold through three runs when the sweep's generated classes
+        // evict its codegen (d03 task time 83.5k vs 25.6k ms warm).
+        var runs = List(runOnce())
+        while (runs.forall(_.ok) && runs.length < 4 &&
+            needsRetime(e.name, runs.map(_.wallS).min))
+          runs = runs :+ runOnce()
+        val (entry, allFailed) = selectSf1(e.name, runs)
+        if (allFailed) failed += s"sf1:${e.name}"
+        entry
+      }
+    }
+    val annRecall = section("sf1:ann_recall", failed)(sf1AnnRecall(spark, sf1Dir))
+      .getOrElse(Seq.empty)
+    // best-of-3, no sub-second widening: at 10× volume every naive side
+    // is multi-second (stable), and 21-sample widening of the cheap opt
+    // sides would charge minutes for noise shaving
+    Sf1Result(sf1Dir, genS, entries,
+      shapes(spark, sf1Dir, cpus, failed, baseSamples = 3, widen = false), annRecall)
+  }
+
+  /** d43's recall@k at sf1 against the exact brute-force baseline (its
+    * recall was measured at the oracle SF only). Direct operator calls:
+    * the entry-level recall toggle is off for the timed sweep; the exact
+    * baseline is |Q|·|N| = 10·~50k dots.
+    */
+  private def sf1AnnRecall(spark: SparkSession, sf1Dir: String): Seq[(String, Double)] = {
+    val emb = GraftSession.table(spark, sf1Dir, "embeddings")
+    val (q, k) = (col("vec_id") < 10, 5)
+    val exact = Similarity.bruteForceTopK(emb, "vec_id", "embedding", q, k)
+      .localCheckpoint(true)
+    def mean(approx: DataFrame): Double =
+      Similarity.withRecallAtK(approx, exact, k)
+        .groupBy(col("q_id")).agg(max(col("recall")).as("recall"))
+        .agg(avg(col("recall"))).head().getDouble(0)
+    val res = Seq(
+      "d43_distributed" -> mean(Similarity.ivfPqProbe(emb, "vec_id", "embedding",
+        Similarity.ivfPqEncode(emb, "vec_id", "embedding",
+          nCentroids = 8, m = 4, ksub = 8, iters = 3),
+        q, k, nProbe = 2, shortlist = 4)))
+    spark.catalog.clearCache()
+    res
+  }
+
+  /** The sf10 tier: the 100×-direction point the sf1 tier extrapolates
+    * toward. copies=100 over `sfDir`, documents + events only (what the
+    * heavy dedup/profile family scans — generating 100× lineitem would
+    * dominate the section for nothing; the sentinel records the subset so
+    * the directory can't be mistaken for a full instance). "Growth ~linear
+    * in data size" is the claim under test, and shuffle bytes are what
+    * separate linear from quadratic-but-still-fits. Then the Zipf joins.
+    */
+  private def sf10(spark: SparkSession, sfDir: String,
+      failed: mutable.LinkedHashSet[String]): Sf10Result = {
+    val sf10Dir = new java.io.File(
+      sys.env.getOrElse("SPARK_GRAFT_SF10_DIR", "benchdata/sf10")).getAbsolutePath
+    val genS = seconds(spark, "sf10:gen")(ScaleData.ensure(spark, sfDir, sf10Dir,
+      copies = 100, tables = Seq("documents", "events")))
+    def measureSf10(name: String)(run: => Unit): Sf10Run = {
+      val cold = measured(spark, s"sf10:$name")(run)
+      spark.catalog.clearCache()
+      if (!cold.ok) failed += s"sf10:$name"
+      // (cold, warm) pair in ONE JVM: the cold wall carries this section's
+      // JIT/codegen compile for the entry's own expressions (measured up to
+      // 2.2× on d05/d28), the warm wall is the steady state a long-running
+      // cluster job sees. Cache cleared between runs, so the warm run pays
+      // one honest recompute; the scale evidence (task/shuffle/peak-mem) is
+      // the COLD run's — volume is JIT-independent.
+      val warmS =
+        if (!cold.ok) -1.0
+        else {
+          val warm = measured(spark, s"sf10:$name warm re-run")(run)
+          spark.catalog.clearCache()
+          if (warm.ok) warm.wallS else -1.0
+        }
+      // free the entry's shuffle files before the next one runs: Spark
+      // deletes them only when the ShuffleDependency is GC'd, and at
+      // copies=100 (15-35 GB of shuffle an entry) ~4 entries filled the
+      // disk. Untimed.
+      System.gc()
+      Thread.sleep(2000L)
+      Sf10Run(name, cold, warmS)
+    }
+    // Partition count must scale with data: at copies=100 the sf0.1-sized
+    // 32 shuffle partitions hold 100× the bytes each, and d28 OOMed the
+    // 8 GiB heap. 1024 initial partitions restore per-partition volume to
+    // ~3× the sf0.1 sizing; AQE coalesces the small shuffles back down.
+    // Scoped: the sweep's sizing is right for its own volume.
+    val runs = GraftSession.withConf(spark, "spark.sql.shuffle.partitions", "1024") {
+      val entryRows = sf10Heavy.map(SparkEntry.named).map { e =>
+        measureSf10(e.name)(materialize(e.build(spark, sf10Dir)))
+      }
+      // Heaps-law Zipf corpus at 100× the sf0.1 twin: the copies=100
+      // fixture above is PPJoin's provable worst case (no vocabulary
+      // growth); real corpora grow vocabulary ~√N. The unblocked bounds are
+      // logged as refuse-evidence; both timed joins run 16-way BLOCKED, the
+      // production shape. Its own section, so a zipf failure (e.g. a full
+      // disk) keeps the heavy-entry rows.
+      val zipfRows = section("sf10:zipf", failed) {
+        val zipfDir = new java.io.File(
+          sys.env.getOrElse("SPARK_GRAFT_ZIPF10_DIR", "benchdata/zipf10")).getAbsolutePath
+        val zGenS = seconds(spark, "sf10:zipf gen")(ScaleData.ensureZipfCorpus(
+          spark, zipfDir, nDocs = 500000L, partitions = 256))
+        System.err.println(f"[bench] zipf10 gen=$zGenS%.1f s")
+        val zdocs = spark.read.parquet(s"$zipfDir/documents.parquet")
+        Seq(ZipfJoin("d05_zipf_unblocked", containment = false, blocked16 = false),
+          ZipfJoin("d28_zipf_unblocked", containment = true, blocked16 = false)).foreach { j =>
+          System.err.println(s"[bench] ${j.name} candidate_bound=${j.bound(zdocs)} (refuse-evidence)")
+        }
+        ZipfGrowth.boundThenJoin(zdocs,
+          Seq(ZipfJoin("d05_zipf_blocked16", containment = false, blocked16 = true),
+            ZipfJoin("d28_zipf_blocked16", containment = true, blocked16 = true))) { (j, pairs) =>
+          measureSf10(j.name)(materialize(pairs()))
+        }.map(_._3)
+      }.getOrElse(Seq.empty)
+      entryRows ++ zipfRows
+    }
+    Sf10Result(sf10Dir, genS, runs)
+  }
+
+  /** CBO accuracy at each labelled dir: estimator error is scale-dependent
+    * (the join band's 2.13x ratio was an sf0.001 measurement), so the
+    * artifact carries measured est/actual per operator class at the bench's
+    * dir and, when the sf1 tier ran, at sf1. One execution per shape
+    * (estimate read off the optimized plan, actual one count).
+    */
+  private def cbo(spark: SparkSession, dirs: Seq[(String, String)],
+      failed: mutable.LinkedHashSet[String])
+      : Seq[(String, Seq[(String, BigInt, Long, String, Boolean)])] =
+    dirs.flatMap { case (label, dir) =>
+      section(s"cbo:$label", failed)(label -> CboAccuracy.estimatesWithVerdict(spark, dir))
+    }
+
+  /** Task-end accumulator updates for localCheckpoint-truncated lineage
+    * (dedup/CC queries) arrive after their accumulators are GC'd and log a
+    * benign ERROR mid-run. Deny ONLY that message (root-logger regex
+    * filter): a blanket DAGScheduler mute would also hide the stage-abort
+    * diagnostics a genuine mid-bench failure needs.
+    */
+  private def denyAccumulatorNoise(): Unit =
+    try {
+      val ctx = org.apache.logging.log4j.LogManager.getContext(false)
+        .asInstanceOf[org.apache.logging.log4j.core.LoggerContext]
+      ctx.getConfiguration.getRootLogger.addFilter(
+        org.apache.logging.log4j.core.filter.RegexFilter.createFilter(
+          ".*Failed to update accumulator.*", null, java.lang.Boolean.FALSE,
+          org.apache.logging.log4j.core.Filter.Result.DENY,
+          org.apache.logging.log4j.core.Filter.Result.NEUTRAL))
+      ctx.updateLoggers()
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[bench] accumulator log filter not installed: $e")
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = graft.engine.GraftSession.envCpus(32)
+    val cpus = GraftSession.envCpus(32)
     val spark = GraftSession.build(cpus, "graft-bench")
     // fail FAST if the suite-sized codegen cache didn't take (static conf,
     // first-session-wins — round-20 advisor find): a bench on the 100-entry
@@ -596,469 +960,49 @@ object Bench {
     if (subsetEnv.nonEmpty)
       System.err.println(s"[bench] WARNING: SPARK_GRAFT_SUBSET=$subsetEnv is set — " +
         "every documents/embeddings scan is thinned; these numbers are NOT full-SF results")
-    // task-end accumulator updates for localCheckpoint-truncated lineage
-    // (dedup/CC queries) arrive after their accumulators are GC'd and log a
-    // benign ERROR mid-run. Deny ONLY that message (root-logger regex
-    // filter) — a blanket DAGScheduler mute would also hide the stage-abort
-    // diagnostics a genuine mid-bench failure needs
-    try {
-      val ctx = org.apache.logging.log4j.LogManager.getContext(false)
-        .asInstanceOf[org.apache.logging.log4j.core.LoggerContext]
-      ctx.getConfiguration.getRootLogger.addFilter(
-        org.apache.logging.log4j.core.filter.RegexFilter.createFilter(
-          ".*Failed to update accumulator.*", null, java.lang.Boolean.FALSE,
-          org.apache.logging.log4j.core.Filter.Result.DENY,
-          org.apache.logging.log4j.core.Filter.Result.NEUTRAL))
-      ctx.updateLoggers()
-    } catch { case _: Throwable => () }
-
+    denyAccumulatorNoise()
     // warm the JVM/codegen/file-listing paths so the first timed query
     // isn't charged session startup
     materialize(GraftSession.table(spark, sfDir, "lineitem")
       .groupBy("l_returnflag").count())
 
-    // ---- baseline shapes FIRST, in a controlled heap: after the sweep the
+    val failed = mutable.LinkedHashSet[String]()
+    def run[T](label: String)(body: => Seq[T]): Seq[T] =
+      section(label, failed)(body).getOrElse(Seq.empty)
+    // the shapes run FIRST, in a controlled heap: after the sweep the
     // optimized config can absorb its old-gen debris (join_3table once
     // published 3.04x on plans node-identical to sessions measuring
-    // 12-27x), so measuring before it gives every session the same heap
-    // state, and the per-config GC time and heap size go INTO the JSON.
-    // The shapes are measured a SECOND time after the sweep: pre-sweep
-    // lacks the C2/codegen warmth minutes of load build up (complex
-    // floors ~0.53 s vs 0.29 s warmed), post-sweep can be GC-bound. Per
-    // shape the headline is the higher-speedup position, with BOTH
-    // measurements and their GC times in the JSON.
-    val failed = scala.collection.mutable.LinkedHashSet[String]()
-    val shapeResultsPre = runBaselineShapes(spark, sfDir, cpus, failed)
-
-    // d08/d09 embed an exact O(|Q|·|N|) recall@k baseline for the driver's
-    // correctness dump; the TIMED bench must measure only the approximate
-    // path, or the ANN numbers are incomparable across rounds.
-    // Steady-state timing (warmThenTime): first execution of each query is
-    // dominated by whole-stage-codegen compilation + JIT (measured ~85% of
-    // a small query's cold time). Every sweep entry carries its own GC
-    // delta across the TIMED run (round 13): a loaded/GC-bound session was
-    // indistinguishable from a regression when only the shapes had gc_ms.
+    // 12-27x), and a SECOND time after it (see bestShapes)
+    val pre = run("shapes:pre-sweep")(shapes(spark, sfDir, cpus, failed))
     val sweepLoadStart = loadAvg()
-    val results = SparkEntry.withoutRecall {
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val m = warmThenTime(spark, name)(materialize(fn(spark, sfDir)))
-        if (!m.ok) failed += name
-        name -> m
-      }
-    }
+    val results = run("sweep:section")(sweep(spark, sfDir, failed))
     val sweepLoadEnd = loadAvg()
+    val twinResults = run("twins:section")(twins(spark, sfDir, cpus, failed))
+    val shapeWinners = bestShapes(pre, run("shapes:post-sweep")(shapes(spark, sfDir, cpus, failed)))
+    section("plan_capture", failed)(writePlanCapture(shapeWinners.map(_._1)))
 
-    // ---- bench-only twins: production-default variants the DuckDB-oracled
-    // entries can't time (d14's compressGrams=true 8-byte-gram shuffle,
-    // p01's HLL describe path), plus the PPJoin prefix-filter pruning claim
-    // measured as WALL CLOCK on a corpus where pruning is possible — the sf
-    // documents fixture's 31-token vocab keeps mean within-block Jaccard
-    // above threshold, where no candidate filter can help (BENCH_NOTES).
-    // Reported under "twins", NOT in the headline total, so round-over-
-    // round totals stay comparable. Same warm-then-time protocol as the
-    // main loop.
-    val twinResults: Seq[(String, Measure)] = {
-      import org.apache.spark.sql.DataFrame
-      import org.apache.spark.sql.functions._
-      import graft.operators.{Dedup, Profile, TextOps}
-      val docs = GraftSession.table(spark, sfDir, "documents")
-      // Zipfian corpus sized to this sf tier's documents table (capped at
-      // 5000 = the sf0.1 size; the cap is logged, never silent)
-      val nDocs = docs.count().toInt
-      val zipfN = math.min(nDocs, 5000)
-      if (zipfN < nDocs)
-        System.err.println(s"[bench] zipf twin corpus capped at $zipfN of $nDocs docs")
-      val zipf = {
-        val rnd = new scala.util.Random(42)
-        val vocabSize = 2000
-        var acc = 0.0
-        val cdf = (1 to vocabSize).map { r => acc += 1.0 / r; acc }.toArray
-        def zipfToken(): String = {
-          val u = rnd.nextDouble() * cdf.last
-          val i = java.util.Arrays.binarySearch(cdf, u)
-          s"tok${if (i >= 0) i else -i - 1}"
-        }
-        val rows = (1 to zipfN).map { id =>
-          val toks = scala.collection.mutable.LinkedHashSet[String]()
-          val target = 25 + id % 30
-          while (toks.size < target) toks += zipfToken()
-          (id.toLong, toks.mkString(" "), "blk")
-        }
-        spark.createDataFrame(spark.sparkContext.parallelize(rows, cpus))
-          .toDF("doc_id", "text", "source")
-      }
-      val zipfThreshold = 0.8
-      // the unfiltered control: same inverted-index candidate join and the
-      // same native sorted-merge verify, WITHOUT the prefix/positional/
-      // size-ratio filters — the wall-clock cost the PPJoin filters remove
-      def zipfUnfiltered(): DataFrame = {
-        val toks = zipf.select(col("doc_id"),
-          explode(array_distinct(TextOps.tokens(col("text")))).as("tok"))
-        val cands = toks.select(col("tok"), col("doc_id").as("doc_a"))
-          .join(toks.select(col("tok"), col("doc_id").as("doc_b")), "tok")
-          .filter(col("doc_a") < col("doc_b"))
-          .select("doc_a", "doc_b").distinct()
-        val arrs = zipf.select(col("doc_id"),
-          sort_array(array_distinct(TextOps.tokens(col("text")))).as("toks"))
-        cands
-          .join(arrs.select(col("doc_id").as("doc_a"), col("toks").as("toks_a")), "doc_a")
-          .join(arrs.select(col("doc_id").as("doc_b"), col("toks").as("toks_b")), "doc_b")
-          .withColumn("inter", graft.functions.SortedIntersectCountExpr
-            .sortedIntersectCount(col("toks_a"), col("toks_b")))
-          .select(col("doc_a"), col("doc_b"),
-            (col("inter").cast("double") /
-              (size(col("toks_a")) + size(col("toks_b")) - col("inter"))).as("jaccard"))
-          .filter(col("jaccard") >= zipfThreshold)
-      }
-      // the unfiltered DIRECTIONAL control for d28's asymmetric prefix
-      // filter: full inverted-index join (every token of every probe),
-      // same native sorted-merge verify — what the rare-token prefix cut
-      // removes. Directional candidates are ~2× the symmetric count, so
-      // this is a strictly harder baseline than zipfUnfiltered
-      def zipfContainUnfiltered(): DataFrame = {
-        val toks = zipf.select(col("doc_id"),
-          explode(array_distinct(TextOps.tokens(col("text")))).as("tok"))
-        val cands = toks.select(col("tok"), col("doc_id").as("doc_a"))
-          .join(toks.select(col("tok"), col("doc_id").as("doc_b")), "tok")
-          .filter(col("doc_a") =!= col("doc_b"))
-          .select("doc_a", "doc_b").distinct()
-        val arrs = zipf.select(col("doc_id"),
-          sort_array(array_distinct(TextOps.tokens(col("text")))).as("toks"))
-        cands
-          .join(arrs.select(col("doc_id").as("doc_a"), col("toks").as("toks_a")), "doc_a")
-          .join(arrs.select(col("doc_id").as("doc_b"), col("toks").as("toks_b")), "doc_b")
-          .withColumn("inter", graft.functions.SortedIntersectCountExpr
-            .sortedIntersectCount(col("toks_a"), col("toks_b")))
-          .select(col("doc_a"), col("doc_b"),
-            (col("inter").cast("double") / size(col("toks_a"))).as("containment"))
-          .filter(col("containment") >= 0.9)
-      }
-      // z-order scan effectiveness, measured not narrated: the same
-      // lineitem projection written once Z-ORDERED on (partkey, suppkey)
-      // and once hash-scattered (same file count), then a 2-D box
-      // predicate timed over each. Row-group min/max stats are tight on
-      // both dims only under the Z layout, so the delta IS the skipping
-      // win z01's stats table bounds. Setup (the two writes) is not timed.
-      val zdir = "/tmp/graft-zorder-bench"
-      val li = GraftSession.table(spark, sfDir, "lineitem")
-        .select(col("l_partkey"), col("l_suppkey"), col("l_extendedprice"))
-      val zb = li.agg(min(col("l_partkey")), max(col("l_partkey")),
-        min(col("l_suppkey")), max(col("l_suppkey"))).head()
-      val (pLo, pHi, sLo, sHi) = (zb.getLong(0), zb.getLong(1), zb.getLong(2), zb.getLong(3))
-      // a ~10% x 10% box from the lower-quartile corner -> ~1% of rows
-      val (pA, pB) = (pLo + (pHi - pLo) / 4, pLo + (pHi - pLo) / 4 + math.max(1L, (pHi - pLo) / 10))
-      val (sA, sB) = (sLo + (sHi - sLo) / 4, sLo + (sHi - sLo) / 4 + math.max(1L, (sHi - sLo) / 10))
-      graft.operators.LayoutOps.zorderLayout(li, Seq("l_partkey", "l_suppkey"), 16, cpus)
-        .drop("__z").write.mode("overwrite").parquet(s"$zdir/zorder")
-      li.repartition(cpus).write.mode("overwrite").parquet(s"$zdir/natural")
-      def boxScan(layout: String): DataFrame =
-        spark.read.parquet(s"$zdir/$layout")
-          .filter(col("l_partkey").between(pA, pB) && col("l_suppkey").between(sA, sB))
-          .agg(sum(col("l_extendedprice").cast("decimal(18,2)")).as("v"))
-      val twins: Seq[(String, () => DataFrame)] = Seq(
-        "twin_z01_zorder_scan" -> (() => boxScan("zorder")),
-        "twin_z01_natural_scan" -> (() => boxScan("natural")),
-        "twin_d14_compressed_grams" -> (() => Dedup.exactNgramContamination(
-          docs.filter(pmod(col("doc_id"), lit(10)) =!= 0),
-          docs.filter(pmod(col("doc_id"), lit(10)) === 0),
-          "doc_id", "text", n = 8, compressGrams = true)),
-        "twin_p01_describe_approx" -> (() => Profile.describe(
-          GraftSession.table(spark, sfDir, "orders"),
-          Seq("o_orderkey", "o_orderstatus", "o_orderdate"), exact = false)),
-        "twin_d05_zipf_ppjoin" -> (() => Dedup.ngramJaccardPairs(
-          zipf, "doc_id", "text", "source", zipfThreshold)),
-        "twin_d05_zipf_unfiltered" -> (() => zipfUnfiltered()),
-        // d28's asymmetric prefix filter vs the full directional index join
-        "twin_d28_zipf_contain" -> (() => Dedup.containmentPairs(
-          zipf, "doc_id", "text", "source", 0.9)),
-        "twin_d28_zipf_contain_unfiltered" -> (() => zipfContainUnfiltered()),
-        // the Bloom prefilter's pruning win vs the same join unfiltered
-        // (d24's config; includes the filter build each run — the honest
-        // end-to-end cost a pipeline pays)
-        "twin_d24_bloom_prefilter" -> (() => Dedup.bloomNgramContamination(
-          docs.filter(pmod(col("doc_id"), lit(7)) =!= 0),
-          docs.filter(pmod(col("doc_id"), lit(7)) === 0),
-          "doc_id", "text", n = 6, numBits = 1L << 20, numHashes = 7)),
-        "twin_d24_unfiltered" -> (() => Dedup.exactNgramContamination(
-          docs.filter(pmod(col("doc_id"), lit(7)) =!= 0),
-          docs.filter(pmod(col("doc_id"), lit(7)) === 0),
-          "doc_id", "text", n = 6)))
-      twins.map { case (name, mk) =>
-        val m = warmThenTime(spark, name)(materialize(mk()))
-        if (!m.ok) failed += name
-        name -> m
-      }
-    }
-
-    // post-sweep re-measurement (see the pre-sweep comment); the winner's
-    // finalized plans are what BENCH_NOTES gets
-    val shapeResultsPost = runBaselineShapes(spark, sfDir, cpus, failed)
-    def speedupOf(sr: ShapeRun): Double =
-      if (sr.opt.best <= 0) Double.MinValue else sr.speedup
-    val shapeWinners = shapeResultsPre.zip(shapeResultsPost).map { case (pre, post) =>
-      if (speedupOf(post) > speedupOf(pre)) (post, "post-sweep", pre)
-      else (pre, "pre-sweep", post)
-    }
-    writePlanCapture(shapeWinners.map(_._1))
-
-    // ---- sf1 scale section (round 13): the 10× data point that converts
-    // the repo's design-level scale arguments into measurements. Data is
-    // ScaleData's deterministic 10× replication of THIS sfDir (generated
-    // once per workspace, key-offset copies — see ScaleData's scaladoc for
-    // why text/embeddings are perturbed), the five baseline shapes run
-    // optimized-vs-naive exactly like the sf0.1 table, and the heaviest
-    // entries (sf1Heavy) run ONCE each (compute-bound at this volume;
-    // JIT/codegen warmth is already built by the sf0.1 sweep — a warm+time
-    // double run would double a multi-minute section to shave single-digit
-    // %). Gated to the sf0.1 bench (or SPARK_GRAFT_SF1=on) so
-    // sf0.001 smoke runs stay fast; SPARK_GRAFT_SF1=off disables.
-    // Sweep-end audit (round 17): sf1Heavy is hand-maintained, so a future
-    // heavy entry could silently miss band/trend coverage. Any non-member
-    // whose sweep wall exceeds 1.5x the slowest member's is a gap — loud
-    // on stderr AND stamped into the artifact's env block.
+    // sf1Heavy is hand-maintained, so a future heavy entry could silently
+    // miss band/trend coverage: loud on stderr AND stamped into the env
     val heavyGaps = heavyCoverageGaps(
       results.map { case (n, m) => n -> (if (m.ok) m.wallS else -1.0) }, sf1Heavy)
     if (heavyGaps.nonEmpty)
       System.err.println(s"[bench] WARNING: heavy-coverage gap — ${heavyGaps.mkString(", ")} " +
         "exceed 1.5x the slowest sf1Heavy member's sweep wall; add them to sf1Heavy")
+    // sf1 runs with the sf0.1 bench or SPARK_GRAFT_SF1=on, so sf0.001
+    // smoke runs stay fast; SPARK_GRAFT_SF1=off disables it. sf10 runs
+    // only with SPARK_GRAFT_SF10=on, and a run's table is recorded in
+    // BENCH_NOTES.
     val sf1Enabled = !sys.env.get("SPARK_GRAFT_SF1").contains("off") &&
       (sys.env.get("SPARK_GRAFT_SF1").contains("on") ||
         sfDir.stripSuffix("/").endsWith("sf0.1"))
-    val sf1Result: Option[Sf1Result] =
-      if (!sf1Enabled) None
-      else try {
-        // ABSOLUTE path: catalog table locations resolve relative paths
-        // against the warehouse dir, not the process cwd
-        val sf1Dir = new java.io.File(
-          sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "benchdata/sf1")).getAbsolutePath
-        val genS = time(graft.tools.ScaleData.ensure(spark, sfDir, sf1Dir, copies = 10))
-        // The sf1 tier reads the sf1 dir's catalog database before it is
-        // ANALYZEd (runBaselineShapes below does that), so its tables
-        // carry no statistics and plan as raw reads did (measured round
-        // 20): with stats the planner honestly sizes d05's persisted
-        // PPJoin prefix frame past the 10 MB broadcast threshold and flips
-        // its candidate self-join BroadcastHashJoin -> SortMergeJoin (SHJ
-        // no better: smj/shj ~9.5 s vs broadcast ~5.4 s warm on this box),
-        // stamping a false `regressed` against bands ratcheted across
-        // seven rounds on the stats-blind plans. If a future round
-        // switches the tier to stats-backed planning, re-ratchet the bands
-        // in the same commit. The tables are created here, untimed, so no
-        // entry's wall pays the one-time events copy.
-        GraftSession.useDir(spark, sf1Dir)
-        val qTimes = SparkEntry.withoutRecall {
-          sf1Heavy.map { name =>
-            val fn = SparkEntry.queries(name)
-            def runOnce(): Measure = {
-              val m = measured(spark, s"sf1:$name")(materialize(fn(spark, sf1Dir)))
-              spark.catalog.clearCache()
-              m
-            }
-            // contention robustness: single-timed sf1 walls published
-            // 2-3x inflated under another tenant's load (d28 30.6 s vs
-            // 11.3 s quiet, same build). A wall that would not stamp
-            // in_band (see needsRetime) is re-timed, up to three times,
-            // stopping once an observation lands in band, and the min
-            // among SUCCESSFUL runs is the headline; in-band entries stay
-            // single-timed. Three, because an entry can stay JIT-cold
-            // through three in-sweep samples: the sweep's generated
-            // classes evict its codegen, and the first runs' TASK time is
-            // inflated too (d03 83.5k vs 25.6k ms warm), which the
-            // load-aware stamp cannot excuse.
-            var runs = List(runOnce())
-            while (runs.forall(_.ok) && runs.length < 4 &&
-                needsRetime(name, runs.map(_.wallS).min))
-              runs = runs :+ runOnce()
-            val (entry, allFailed) = selectSf1(name, runs)
-            if (allFailed) failed += s"sf1:$name"
-            entry
-          }
-        }
-        // ANN recall at scale (round 20, verdict item 5): d43's
-        // recall@k was measured at oracle SF only — here d43's stack runs
-        // at sf1 against the exact brute-force baseline. Direct operator
-        // calls (the entry-level recall toggle is off for the timed
-        // sweep); the exact baseline is |Q|·|N| = 10·~50k dots.
-        val annRecallSf1: Seq[(String, Double)] = try {
-          import org.apache.spark.sql.functions.{avg, col, max}
-          import graft.operators.Similarity
-          val emb = GraftSession.table(spark, sf1Dir, "embeddings")
-          val (q, k) = (col("vec_id") < 10, 5)
-          val exact = Similarity.bruteForceTopK(emb, "vec_id", "embedding", q, k)
-            .localCheckpoint(true)
-          def mean(approx: org.apache.spark.sql.DataFrame): Double =
-            Similarity.withRecallAtK(approx, exact, k)
-              .groupBy(col("q_id")).agg(max(col("recall")).as("recall"))
-              .agg(avg(col("recall"))).head().getDouble(0)
-          val res = Seq(
-            "d43_distributed" -> mean(Similarity.ivfPqProbe(emb, "vec_id", "embedding",
-              Similarity.ivfPqEncode(emb, "vec_id", "embedding",
-                nCentroids = 8, m = 4, ksub = 8, iters = 3),
-              q, k, nProbe = 2, shortlist = 4)))
-          spark.catalog.clearCache()
-          res
-        } catch { case e: Throwable =>
-          failed += "sf1:ann_recall"
-          System.err.println(s"[bench] sf1 ann_recall failed: ${e.getMessage}")
-          Seq.empty
-        }
-        // best-of-3, no sub-second widening: at 10× volume every naive
-        // side is multi-second (stable), and 21-sample widening of the
-        // cheap opt sides would charge minutes for noise shaving
-        val sf1Shapes = runBaselineShapes(spark, sf1Dir, cpus, failed,
-          baseSamples = 3, widen = false)
-        Some(Sf1Result(sf1Dir, genS, qTimes, sf1Shapes, annRecallSf1))
-      } catch { case e: Throwable =>
-        failed += "sf1:section"
-        System.err.println(s"[bench] sf1 section failed: ${e.getMessage}")
-        None
-      }
+    val sf1Result =
+      if (sf1Enabled) section("sf1:section", failed)(sf1(spark, sfDir, cpus, failed)) else None
+    val sf10Result =
+      if (sys.env.get("SPARK_GRAFT_SF10").contains("on"))
+        section("sf10:section", failed)(sf10(spark, sfDir, failed))
+      else None
+    val cboAccuracy = cbo(spark, ("base" -> sfDir) +: sf1Result.map("sf1" -> _.dir).toSeq, failed)
 
-    // ---- sf10 scale section (round 17): the 100×-direction point the
-    // sf1 section extrapolates toward. copies=100 over THIS sfDir,
-    // documents + events only (what the heavy dedup/profile family scans
-    // — generating 100× lineitem would dominate the section for nothing;
-    // the sentinel records the subset so the directory can't be mistaken
-    // for a full instance), so every sf10Heavy entry must scan only those
-    // two tables. Gated behind SPARK_GRAFT_SF10=on: the default run
-    // never pays it, and a run's table is recorded in BENCH_NOTES.
-    // "Growth ~linear in data size" is the claim under test, and shuffle
-    // bytes are what separate linear from quadratic-but-still-fits: the
-    // dedup family, the sketch-state entries (bounded rows out however
-    // large the corpus), the as-of and sessionize windows, the multimodal
-    // frame-pair engine and the mid-batch-kill streaming recovery.
-    val sf10Heavy = Seq("d03_dedup_minhash", "d05_ngram_jaccard",
-      "d11_dedup_components", "d13_dedup_transitive", "d28_containment",
-      "p15_heavy_hitters", "p24_hll_distinct", "p25_kmv_overlap",
-      "j06_nearest", "s03_events_sessionize",
-      "m09_video_frame_dedup", "y13_midbatch_kill_recovery")
-    val sf10Result: Option[Sf10Result] =
-      if (!sys.env.get("SPARK_GRAFT_SF10").contains("on")) None
-      else try {
-        val sf10Dir = new java.io.File(
-          sys.env.getOrElse("SPARK_GRAFT_SF10_DIR", "benchdata/sf10")).getAbsolutePath
-        val genS = time(graft.tools.ScaleData.ensure(spark, sfDir, sf10Dir,
-          copies = 100, tables = Seq("documents", "events")))
-        // Partition count must SCALE WITH DATA — the first 100 TB lesson
-        // this section taught (round 17): at copies=100 the session's
-        // sf0.1-sized 32 shuffle partitions hold 100× the bytes each, and
-        // d28 OOMed the 8 GiB heap (JVM exit 52, GCLocker alloc failures)
-        // exactly as an undersized production job would. 1024 initial
-        // partitions restore per-partition volume to ~3× the sf0.1 sizing;
-        // AQE coalesces the small shuffles back down, so cheap stages pay
-        // nothing. Restored in finally — the sf0.1 sweep's sizing is
-        // correct for its own volume.
-        val shufKey = "spark.sql.shuffle.partitions"
-        val prevShuf = spark.conf.get(shufKey)
-        spark.conf.set(shufKey, "1024")
-        def measureSf10(name: String)(run: => Unit): Sf10Run = {
-          val cold = measured(spark, s"sf10:$name")(run)
-          spark.catalog.clearCache()
-          if (!cold.ok) failed += s"sf10:$name"
-          // (cold, warm) pair in ONE JVM: the cold wall carries this
-          // section's JIT/codegen compile for the entry's own expressions
-          // (measured up to 2.2× on d05/d28), the warm wall is the
-          // steady state a long-running cluster job sees. Cache cleared
-          // between runs, so the warm run pays one honest recompute; the
-          // scale evidence (task/shuffle/peak-mem) is the COLD run's —
-          // volume is JIT-independent.
-          val warmS =
-            if (!cold.ok) -1.0
-            else {
-              val warm = measured(spark, s"sf10:$name warm re-run")(run)
-              spark.catalog.clearCache()
-              if (warm.ok) warm.wallS else -1.0
-            }
-          // free the entry's shuffle files BEFORE the next one runs: at
-          // copies=100 each heavy entry writes 15-35 GB of shuffle, and
-          // Spark only deletes them when the ShuffleDependency is GC'd —
-          // without this nudge ~4 heavy entries accumulate ~100 GB and
-          // the section dies on disk (observed: d28_zipf_heaps, round-18
-          // probe, "No space left on device"). Untimed: runs after the
-          // entry's measurements are taken.
-          System.gc()
-          Thread.sleep(2000L)
-          Sf10Run(name, cold, warmS)
-        }
-        val rows = try {
-          val entryRows = sf10Heavy.map { name =>
-            val fn = SparkEntry.queries(name)
-            measureSf10(name)(materialize(fn(spark, sf10Dir)))
-          }
-          // Heaps-law Zipf corpus at 100× the sf0.1 twin: the degenerate
-          // copies=100 fixture above is PPJoin's provable worst case (no
-          // vocabulary growth — d05 483 s / 34 GB shuffle); real corpora
-          // grow vocabulary ~√N. Candidate bounds are read FIRST and
-          // logged next to wall/shuffle; the unblocked bounds are the
-          // refuse-evidence a budget gate acts on, and BOTH timed rows run
-          // 16-way BLOCKED, the production shape (the unblocked d05 wall
-          // was a 253-366 s single measurement with ±45% session noise).
-          // Its own try: a zipf failure (e.g. the disk-full mode the
-          // generation can hit) must keep the heavy-entry rows.
-          val zipfRows = try {
-            import org.apache.spark.sql.functions.{col, concat, lit, pmod, sum}
-            import graft.operators.Dedup
-            val zipfDir = new java.io.File(
-              sys.env.getOrElse("SPARK_GRAFT_ZIPF10_DIR", "benchdata/zipf10")).getAbsolutePath
-            val zGenS = time(graft.tools.ScaleData.ensureZipfCorpus(
-              spark, zipfDir, nDocs = 500000L, partitions = 256))
-            val zdocs = spark.read.parquet(s"$zipfDir/documents.parquet")
-            // the unblocked 500k-doc containment bound reads 515M
-            // pre-join pairs — measured to exceed local disk (>73 GB
-            // spill, "No space left on device", round-18 probe); the
-            // unblocked d05 bound is the same cliff one size down
-            val zBlocked = zdocs.withColumn("source",
-              concat(lit("blk"), pmod(col("doc_id"), lit(16L)).cast("string")))
-            val jB = Dedup.ppjoinCandidateBound(zdocs, "doc_id", "text", "source", 0.8)
-              .agg(sum(col("candidate_pairs"))).head().getLong(0)
-            val jBblk = Dedup.ppjoinCandidateBound(zBlocked, "doc_id", "text", "source", 0.8)
-              .agg(sum(col("candidate_pairs"))).head().getLong(0)
-            val cB = Dedup.containmentCandidateBound(zdocs, "doc_id", "text", "source", 0.9)
-              .agg(sum(col("candidate_pairs"))).head().getLong(0)
-            val cBblk = Dedup.containmentCandidateBound(zBlocked, "doc_id", "text", "source", 0.9)
-              .agg(sum(col("candidate_pairs"))).head().getLong(0)
-            System.err.println(f"[bench] zipf10 gen=$zGenS%.1f s " +
-              s"jaccard_candidate_bound_unblocked=$jB (refuse-evidence) " +
-              s"jaccard_candidate_bound_blocked16=$jBblk " +
-              s"containment_candidate_bound_unblocked=$cB (refuse-evidence) " +
-              s"containment_candidate_bound_blocked16=$cBblk")
-            Seq(
-              measureSf10("d05_zipf_blocked16")(materialize(
-                Dedup.ngramJaccardPairs(zBlocked, "doc_id", "text", "source", 0.8))),
-              measureSf10("d28_zipf_blocked16")(materialize(
-                Dedup.containmentPairs(zBlocked, "doc_id", "text", "source", 0.9))))
-          } catch { case e: Throwable =>
-            failed += "sf10:zipf"
-            System.err.println(
-              s"[bench] sf10 zipf sub-block failed (heavy-entry rows kept): ${e.getMessage}")
-            Seq.empty[Sf10Run]
-          }
-          entryRows ++ zipfRows
-        } finally spark.conf.set(shufKey, prevShuf)
-        Some(Sf10Result(sf10Dir, genS, rows))
-      } catch { case e: Throwable =>
-        failed += "sf10:section"
-        System.err.println(s"[bench] sf10 section failed: ${e.getMessage}")
-        None
-      }
-
-    // ---- CBO accuracy at bench scale (round 19): the q59 entry pins the
-    // estimator at the oracle SF, but estimator error is scale-dependent
-    // (the join band's 2.13x ratio was an sf0.001 measurement), so the
-    // artifact carries measured est/actual per operator class at THIS
-    // sfDir and — when the sf1 section ran — at sf1, next to the shape
-    // tables those bands contextualize. One execution per shape
-    // (estimate read off the optimized plan, actual one count).
-    val cboAccuracy: Seq[(String, Seq[(String, BigInt, Long, String, Boolean)])] = {
-      def section(label: String, dir: String) =
-        try Some(label -> graft.engine.CboAccuracy.estimatesWithVerdict(spark, dir))
-        catch { case e: Throwable =>
-          failed += s"cbo:$label"
-          System.err.println(s"[bench] cbo_accuracy $label failed: ${e.getMessage}")
-          None
-        }
-      section("base", sfDir).toSeq ++
-        sf1Result.flatMap(s => section("sf1", s.dir))
-    }
     val env = Env(Runtime.getRuntime.maxMemory / (1024 * 1024), results.map(_._2.gcMs).sum,
       Seq(dec(sweepLoadStart, 2), dec(sweepLoadEnd, 2)), heavyGaps, subsetEnv,
       Some("pre+post-sweep, per-shape best-evidenced"))
@@ -1067,8 +1011,8 @@ object Bench {
     // the full record goes to a FILE only (SPARK_GRAFT_BENCH_OUT, default
     // bench_out.json); stdout gets its compact projection
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), toJson(full) + "\n")
-    catch { case e: Throwable => System.err.println(s"[bench] could not write $outPath: ${e.getMessage}") }
+    try Files.writeString(Paths.get(outPath), toJson(full) + "\n")
+    catch { case NonFatal(e) => System.err.println(s"[bench] could not write $outPath: ${e.getMessage}") }
     val line = toJson(compact(full, outPath))
     if (line.length > 2000)
       System.err.println(s"[bench] compact line ${line.length} chars > 2000 — a 2000-char tail capture will truncate it")

@@ -6444,6 +6444,10 @@ object SparkEntry {
     entries.filter(e => ps.exists(e.name.startsWith))
   }
 
+  /** The entry called `name`; an unknown name fails loudly. */
+  def named(name: String): Entry =
+    entries.find(_.name == name).getOrElse(throw new NoSuchElementException(s"unknown entry $name"))
+
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q29_flagship")(spark, "/root/testdata/sf0.001")

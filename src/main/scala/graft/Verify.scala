@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry entry's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -12,34 +13,22 @@ object Verify {
     val cpus = graft.engine.GraftSession.envCpus(16)
     val spark = graft.engine.GraftSession.build(cpus, "graft-verify")
     new java.io.File(outDir).mkdirs()
+    // a failed entry leaves no spark output, which check_oracle.py counts
+    // as a FAIL; a fatal error (an OOM) ends the dump instead
     selected.foreach { e =>
       try e.build(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/${e.name}")
-      catch { case ex: Throwable =>
+      catch { case NonFatal(ex) =>
         System.err.println(s"[verify] ${e.name} failed: ${ex.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    def json(m: Map[String, String]): String =
-      m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     val (texts, errors) = SparkEntry.oracles(spark, sfDir, selected)
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json(texts))
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), Json.spaced(texts))
     // replay-generator failures become a visible artifact (the entry itself
     // is missing from oracle_sql.json); a CLEAN run must also delete any
     // stale file a prior failed run left in this outDir, or it would
     // falsely report the entry as still degraded
-    if (errors.nonEmpty) Files.writeString(Paths.get(s"$outDir/oracle_errors.json"), json(errors))
+    if (errors.nonEmpty) Files.writeString(Paths.get(s"$outDir/oracle_errors.json"), Json.spaced(errors))
     else Files.deleteIfExists(Paths.get(s"$outDir/oracle_errors.json"))
     spark.stop()
   }

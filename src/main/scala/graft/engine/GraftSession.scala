@@ -216,6 +216,17 @@ object GraftSession {
     if (estSplits * 2 < par) df.repartition(par) else df
   }
 
+  /** `body` with session conf `key` set to `value`. In finally the key
+    * gets its previous value back, or is unset if it had none, so the
+    * setting cannot leak into the rest of a sweep.
+    */
+  def withConf[T](spark: SparkSession, key: String, value: String)(body: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   /** Whether this JVM's (static) whole-stage-codegen class cache got the
     * suite-sized 2000-entry setting [[build]] asks for — false when some
     * other session was created first and the 100-entry default won.

@@ -347,27 +347,17 @@ object QueryEngine {
     }
   }
 
-  /** Full transform log including the reference's closing summary lines
-    * (`optimizer.cpp:314-318`: "Generated N execution plans" / "Selected
-    * best plan with cost: C"). The honest Catalyst mapping: N is the number
-    * of candidate physical plans the strategy planner emits for the
-    * optimized logical plan (Spark's strategies pick joins/aggregates
-    * deterministically and the cost-based choices — join reorder, AQE —
-    * happen inside rules, unlike the reference's permutation enumeration).
-    * N is still above 1, typically 2 or 3: more than one strategy can
-    * return a plan for the same node, and each child's candidates multiply
-    * into its parent's. The chosen plan's cost is Catalyst's CBO
-    * statistics of the optimized plan (row estimate + size in bytes), not a
-    * fabricated PostgreSQL-style constant. A planner failure propagates,
-    * so [[run]] reports the statement as an ERROR.
+  /** Full transform log including the reference's closing summary line
+    * (`optimizer.cpp:318`: "Selected best plan with cost: C"), the cost
+    * being Catalyst's CBO statistics of the optimized plan (row estimate +
+    * size in bytes). Its "Generated N execution plans" line has no
+    * Catalyst counterpart: CBO join reorder keeps no count of the orders
+    * it weighed.
     */
   def transformLog(qe: org.apache.spark.sql.execution.QueryExecution): Seq[String] = {
-    val core = transformLog(qe.analyzed, qe.optimizedPlan)
-    val nPlans = qe.sparkSession.sessionState.planner.plan(ReturnAnswer(qe.optimizedPlan)).size
     val stats = qe.optimizedPlan.stats
-    core ++ Seq(
-      s"Generated $nPlans execution plan(s)",
-      s"Selected best plan with cost: rows=${stats.rowCount.getOrElse("?")}, size=${stats.sizeInBytes} bytes")
+    transformLog(qe.analyzed, qe.optimizedPlan) :+
+      s"Selected best plan with cost: rows=${stats.rowCount.getOrElse("?")}, size=${stats.sizeInBytes} bytes"
   }
 
   // ------------------------------------------------------------------

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.engine.GraftSession
+
 /** Structured Streaming surface (north-star extension; the reference has no
   * streaming — SURVEY.md §2c). Transforms are written batch/stream
   * agnostic: the same column algebra applied to `readStream` inputs runs
@@ -41,7 +43,7 @@ object StreamingOps {
     // directory and never hits this branch.
     val f = new java.io.File(dir)
     val streamPath = if (f.isFile) stagedDir(spark, f) else dir
-    graft.engine.GraftSession.eventsTsToMicros(
+    GraftSession.eventsTsToMicros(
       spark.readStream.schema(schema).parquet(streamPath))
   }
 
@@ -805,12 +807,9 @@ object StreamingOps {
     */
   private def withStatePartitions[T](spark: SparkSession)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
     val target = spark.conf.getOption("spark.graft.streaming.statePartitions")
       .map(_.toInt).getOrElse(8)
-    val effective = math.min(prev.toInt, target)
-    spark.conf.set(key, effective.toString)
-    try body finally spark.conf.set(key, prev)
+    GraftSession.withConf(spark, key, math.min(spark.conf.get(key).toInt, target).toString)(body)
   }
 
   /** Spark's RocksDB state-store provider (public class, Spark 3.2+) —
@@ -832,16 +831,8 @@ object StreamingOps {
     * under the driver gate; this helper keeps the swap scoped so one
     * entry's provider choice can't leak into the rest of a sweep.
     */
-  def withStateStoreProvider[T](spark: SparkSession, providerClass: String)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, providerClass)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  def withStateStoreProvider[T](spark: SparkSession, providerClass: String)(body: => T): T =
+    GraftSession.withConf(spark, "spark.sql.streaming.stateStore.providerClass", providerClass)(body)
 
   /** Exactly-once THROUGH A RESTART (round 18) — the recovery contract the
     * single-run y-entries can't see: production streams die and resume

@@ -1,5 +1,7 @@
 package graft.tools
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -56,7 +58,7 @@ object PlanAudit extends AdaptiveSparkPlanHelper {
         val (shuffles, bcasts, cart, n) = counts(e.build(spark, sfDir))
         val flag = if (cart > 0) "  <-- CARTESIAN" else ""
         println(f"${e.name}%-28s $shuffles%8d $bcasts%6d $cart%9d $n%7d$flag")
-      } catch { case ex: Throwable => println(f"${e.name}%-28s FAILED: ${ex.toString.take(80)}") }
+      } catch { case NonFatal(ex) => println(f"${e.name}%-28s FAILED: ${ex.toString.take(80)}") }
     }
     spark.stop()
   }

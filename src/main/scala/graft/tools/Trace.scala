@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.SparkEntry
-import graft.engine.{GraftSession, Telemetry}
+import graft.engine.{GraftSession, Measure, Telemetry}
 
 /** Dev tool: for each named SparkEntry entry, print its formatted physical
   * plan, then one [[graft.engine.Measure]] line per run under the bench's
@@ -13,26 +13,30 @@ import graft.engine.{GraftSession, Telemetry}
   * (dir defaults to benchdata/sf1, runs to 3)
   */
 object Trace {
+
+  /** `m`'s fields as `key=value` pairs, its error last when it failed. */
+  def fields(m: Measure): String =
+    f"wall_s=${m.wallS}%.3f jobs=${m.jobs} stages=${m.stages} tasks=${m.tasks} " +
+      s"task_ms=${m.taskMs} shuffle_read_b=${m.shuffleReadB} " +
+      s"shuffle_write_b=${m.shuffleWriteB} spill_b=${m.spillB} " +
+      s"peak_task_mem_b=${m.peakTaskMemB} gc_ms=${m.gcMs} " +
+      f"ext_cores=${m.extCores}%.1f" + m.error.fold("")(e => s" error=$e")
+
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: Trace <entry>[,<entry>...] [dir] [runs]")
-    val names = args(0).split(',').map(_.trim).filter(_.nonEmpty).toSeq
+    val entries = args(0).split(',').map(_.trim).filter(_.nonEmpty).toSeq.map(SparkEntry.named)
     val dir = new java.io.File(args.lift(1).getOrElse("benchdata/sf1")).getAbsolutePath
     val runs = args.lift(2).map(_.toInt).getOrElse(3)
     val spark = GraftSession.build(GraftSession.envCpus(32), "graft-trace")
     SparkEntry.withoutRecall {
-      names.foreach { name =>
-        val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown entry $name"))
-        fn(spark, dir).explain("formatted")
+      entries.foreach { e =>
+        e.build(spark, dir).explain("formatted")
         spark.catalog.clearCache()
         (1 to runs).foreach { i =>
-          val m = Telemetry.measure(spark, name)(
-            fn(spark, dir).write.format("noop").mode("overwrite").save())
+          val m = Telemetry.measure(spark, e.name)(
+            e.build(spark, dir).write.format("noop").mode("overwrite").save())
           spark.catalog.clearCache()
-          println(f"TRACE ${m.label} run=$i wall_s=${m.wallS}%.3f jobs=${m.jobs} " +
-            s"stages=${m.stages} tasks=${m.tasks} task_ms=${m.taskMs} " +
-            s"shuffle_read_b=${m.shuffleReadB} shuffle_write_b=${m.shuffleWriteB} " +
-            s"spill_b=${m.spillB} peak_task_mem_b=${m.peakTaskMemB} gc_ms=${m.gcMs} " +
-            f"ext_cores=${m.extCores}%.1f" + m.error.fold("")(e => s" error=$e"))
+          println(s"TRACE ${m.label} run=$i ${fields(m)}")
         }
       }
     }

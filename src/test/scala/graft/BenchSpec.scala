@@ -132,6 +132,25 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.heavyCoverageGaps(Seq("a" -> -1.0, "c" -> 9.0), heavy).isEmpty)
   }
 
+  test("a throwing section records its label and the next section still runs") {
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
+    val first = Bench.section("sf1:section", failed)(throw new IllegalStateException("boom"))
+    val second = Bench.section("cbo:base", failed)(42)
+    assert(first.isEmpty && second.contains(42))
+    assert(failed.toSeq == Seq("sf1:section"))
+  }
+
+  test("a fatal throwable propagates out of a section") {
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
+    intercept[OutOfMemoryError](Bench.section("sf10:section", failed)(
+      throw new OutOfMemoryError("fatal")))
+    assert(failed.isEmpty)
+  }
+
+  test("every sf1Heavy, sf10Heavy and sf1Bands name is a registry entry") {
+    (Bench.sf1Heavy ++ Bench.sf10Heavy ++ Bench.sf1Bands.keys).foreach(SparkEntry.named)
+  }
+
   // ---- the artifact's shape, on a fully populated record
 
   private val shapeNames =

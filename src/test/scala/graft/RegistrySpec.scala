@@ -64,4 +64,18 @@ class RegistrySpec extends AnyFunSuite {
       Files.walk(dir).sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.delete(f))
     }
   }
+
+  test("named finds an entry and fails loudly on an unknown name") {
+    assert(SparkEntry.named("q29_flagship").name == "q29_flagship")
+    val e = intercept[NoSuchElementException](SparkEntry.named("zz_not_an_entry"))
+    assert(e.getMessage.contains("zz_not_an_entry"))
+  }
+
+  test("Json.spaced writes the oracle files' layout: one line, a space after each colon") {
+    val texts = scala.collection.immutable.VectorMap(
+      "a" -> "SELECT 1\n\tFROM t WHERE s = 'x\"y\\z'", "b" -> "\u0001")
+    assert(Json.spaced(texts) ==
+      "{\"a\": \"SELECT 1\\n\\tFROM t WHERE s = 'x\\\"y\\\\z'\",\"b\": \"\\u0001\"}")
+    assert(Json.spaced(Map.empty[String, String]) == "{}")
+  }
 }

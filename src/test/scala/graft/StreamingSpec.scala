@@ -757,4 +757,27 @@ class StreamingSpec extends AnyFunSuite {
         r.getTimestamp(2).getTime, r.getLong(3))).toSeq.sorted
     assert(op == twin, s"operator $op != twin $twin")
   }
+
+  test("withConf restores a set key and unsets an unset one, also when the body throws") {
+    val (set, unset) = ("spark.graft.test.setKey", "spark.graft.test.unsetKey")
+    spark.conf.set(set, "before")
+    try {
+      GraftSession.withConf(spark, set, "inside") {
+        assert(spark.conf.get(set) == "inside")
+      }
+      assert(spark.conf.get(set) == "before")
+      intercept[IllegalStateException](GraftSession.withConf(spark, set, "inside") {
+        throw new IllegalStateException("body failed")
+      })
+      assert(spark.conf.get(set) == "before")
+      GraftSession.withConf(spark, unset, "inside") {
+        assert(spark.conf.get(unset) == "inside")
+      }
+      assert(spark.conf.getOption(unset).isEmpty)
+      intercept[IllegalStateException](GraftSession.withConf(spark, unset, "inside") {
+        throw new IllegalStateException("body failed")
+      })
+      assert(spark.conf.getOption(unset).isEmpty)
+    } finally spark.conf.unset(set)
+  }
 }
