@@ -399,11 +399,6 @@ object GraftSession {
     if (!spark.sessionState.catalog.databaseExists(db))
       spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
 
-  /** Expose graft's native expressions to SQL users:
-    * `minhash_signature(hashes, k)`, `dot_product(a, b)`,
-    * `rolling_minhash(text, window)` become callable from any `spark.sql`
-    * text and the CLI.
-    */
   /** The native-function catalog shared by [[registerFunctions]] (per-
     * session temp registration) and [[GraftExtensions]] (the
     * `spark.sql.extensions` injection path a library user configures at
@@ -441,6 +436,11 @@ object GraftSession {
         graft.functions.MatchFractionExpr(es.head, es(1)) }))
   }
 
+  /** Expose graft's native expressions to SQL users:
+    * `minhash_signature(hashes, k)`, `dot_product(a, b)`,
+    * `rolling_minhash(text, window)` become callable from any `spark.sql`
+    * text and the CLI.
+    */
   def registerFunctions(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     nativeFunctions.foreach { case (name, builder) =>

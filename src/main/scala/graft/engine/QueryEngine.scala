@@ -4,7 +4,8 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.{Expression, ScalarSubquery}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression,
+  NamedExpression, ScalarSubquery}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.SQLExecution
 
@@ -494,10 +495,6 @@ object QueryEngine {
     case _ => None
   }
 
-  /** FROM-clause rendering of a join subtree: base tables, inline views for
-    * pushed-down filters/projections, JOIN … ON chains. None for any node
-    * outside the supported family.
-    */
   /** Render a projection list; a ZERO-column project (COUNT(*) prunes every
     * column) must emit valid SQL — `SELECT 1`, preserving row count — not
     * the unparseable `SELECT  FROM`.
@@ -505,21 +502,23 @@ object QueryEngine {
   private def selectList(cols: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): String =
     if (cols.isEmpty) "1" else cols.map(exprSql).mkString(", ")
 
-  /** Inline-table name for a LocalRelation (the optimizer's folded VALUES):
-    * deterministic per relation so `unambiguous` and `fromSql` agree.
+  /** Alias of a relation the regenerated SQL names itself: a prefix plus
+    * its first output's exprId, deterministic per relation so the FROM
+    * clause that renders it and the qualifier map that addresses it
+    * ([[scopeRels]]) agree.
     */
-  private def valuesName(lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation): String =
-    s"__values_${lr.output.headOption.map(_.exprId.id).getOrElse(0L)}"
+  private def viewName(prefix: String, out: Seq[NamedExpression]): String =
+    s"$prefix${out.headOption.map(_.exprId.id).getOrElse(0L)}"
 
-  /** `VALUES (…), (…) AS name(cols)` for a small all-atomic LocalRelation —
+  /** `VALUES (…), (…) AS alias(cols)` for a small all-atomic LocalRelation —
     * the faithful rendering of an inline table the optimizer has folded to
     * rows (q47's VALUES, a recursive CTE's edge list). An EMPTY relation
-    * (round 17: what a provably-false filter folds to — the y-family's
-    * `WHERE FALSE` schema oracles) has no VALUES form, so it renders as a
-    * typed-null FROM-less SELECT under LIMIT 0 — same schema, zero rows,
-    * valid in FROM position. None for non-atomic or oversized relations.
+    * (what a provably-false filter folds to — the y-family's `WHERE FALSE`
+    * schema oracles) has no VALUES form, so it renders as a typed-null
+    * FROM-less SELECT under LIMIT 0 — same schema, zero rows, valid in FROM
+    * position. None for non-atomic or oversized relations.
     */
-  private def valuesSql(lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation): Option[String] = {
+  private def valuesSql(lr: LocalRelation, alias: String): Option[String] = {
     import org.apache.spark.sql.catalyst.util.quoteIfNeeded
     import org.apache.spark.sql.types._
     val atomic = lr.schema.forall(_.dataType match {
@@ -531,7 +530,7 @@ object QueryEngine {
     else if (lr.data.isEmpty) {
       val cols = lr.output.map(a =>
         s"CAST(NULL AS ${a.dataType.sql}) AS ${quoteIfNeeded(a.name)}").mkString(", ")
-      Some(s"(SELECT $cols LIMIT 0) AS ${valuesName(lr)}")
+      Some(s"(SELECT $cols LIMIT 0) AS $alias")
     }
     else {
       val rows = lr.data.map { r =>
@@ -541,275 +540,134 @@ object QueryEngine {
         }.mkString("(", ", ", ")")
       }.mkString(", ")
       val cols = lr.output.map(a => quoteIfNeeded(a.name)).mkString(", ")
-      Some(s"(VALUES $rows) AS ${valuesName(lr)}($cols)")
+      Some(s"(VALUES $rows) AS $alias($cols)")
     }
   }
 
-  /** Inline-view name for an Aggregate rendered in FROM position:
-    * deterministic per aggregate (first output's exprId) so
-    * [[unambiguous]] and [[fromSql]] agree.
-    */
-  private def aggViewName(agg: Aggregate): String =
-    s"__agg${agg.output.headOption.map(_.exprId.id).getOrElse(0L)}"
-
-  /** Inline-view name for a window-stack subtree rendered in FROM
-    * position — same exprId-derived determinism as [[aggViewName]]. */
-  private def winViewName(p: LogicalPlan): String =
-    s"__win${p.output.headOption.map(_.exprId.id).getOrElse(0L)}"
-
-  /** Inline-view name for a recognized INTERSECT ALL / EXCEPT ALL rewrite
-    * (a ReplicateRows Generate) rendered in FROM position. */
-  private def setOpViewName(g: org.apache.spark.sql.catalyst.plans.logical.Generate): String =
-    s"__setop${g.generatorOutput.headOption.map(_.exprId.id).getOrElse(0L)}"
-
-  /** Inline-view name for a COMPUTED Project over a join subtree rendered
-    * in FROM position (round 17) — same exprId determinism as the others. */
-  private def prjViewName(p: LogicalPlan): String =
-    s"__prj${p.output.headOption.map(_.exprId.id).getOrElse(0L)}"
-
-  /** Inline-view name for a set operation rendered in FROM position
-    * (round 17: an Aggregate over a UNION ALL of two sources). */
-  private def unionViewName(p: LogicalPlan): String =
-    s"__union${p.output.headOption.map(_.exprId.id).getOrElse(0L)}"
-
-  /** Relation name for a Range leaf (Spark's `range(...)` table-valued
-    * function — what `FROM range(0, 15)` optimizes to). */
-  private def rangeName(r: org.apache.spark.sql.catalyst.plans.logical.Range): String =
-    s"__range${r.output.headOption.map(_.exprId.id).getOrElse(0L)}"
-
-  /** `range(start, end, step) AS name` — the TVF text a Range leaf
-    * re-parses from; numSlices is a parallelism hint, not semantics. */
-  private def rangeSql(r: org.apache.spark.sql.catalyst.plans.logical.Range): String =
-    s"range(${r.start}, ${r.end}, ${r.step}) AS ${rangeName(r)}"
-
   /** The ReplicateRows Generate produced by Catalyst's RewriteIntersectAll
-    * / RewriteExceptAll — recognized as a set-operation scope boundary by
-    * [[unambiguous]] (both branches legally read the same table; each
-    * branch is its own SELECT scope, checked when it renders). */
+    * / RewriteExceptAll — a set-operation scope boundary: both branches
+    * legally read the same table, and each branch is its own SELECT scope,
+    * checked when it renders. */
   private def isReplicateSetOp(p: LogicalPlan): Boolean = p match {
-    case g: org.apache.spark.sql.catalyst.plans.logical.Generate =>
+    case g: Generate =>
       g.generator.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ReplicateRows]
     case _ => false
   }
 
-  /** [Project]* over Window — the FROM-position twin of rewrittenSql's
-    * internal isWindowStack (that one lives in the closure; this is the
-    * plan-shape test [[fromSql]]/[[unambiguous]] need). */
-  private def isWindowStackPlan(p: LogicalPlan): Boolean = p match {
+  /** [Project]* over Window. */
+  private def isWindowStack(p: LogicalPlan): Boolean = p match {
     case _: Window => true
-    case Project(_, c) => isWindowStackPlan(c)
+    case Project(_, c) => isWindowStack(c)
     case _ => false
   }
 
-  /** @param loop rendering hook for recursive-CTE nodes (UnionLoop /
-    *        UnionLoopRef): supplied by [[rewrittenSql]], which collects the
-    *        WITH RECURSIVE definitions as a side effect. Default: reject.
+  /** A pure column-pruning projection: every column passes through. */
+  private def isPruning(cols: Seq[NamedExpression]): Boolean =
+    cols.forall(_.isInstanceOf[AttributeReference])
+
+  /** `[Project] [Filter] child`, as (projection, condition, child): a
+    * subtree under its pushed-down projection and filter. Matches any plan.
     */
-  private def fromSql(p: LogicalPlan,
-      loop: LogicalPlan => Option[String] = _ => None): Option[String] = p match {
-    case ul: org.apache.spark.sql.catalyst.plans.logical.UnionLoop => loop(ul)
-    // a renaming Project over a recursive loop (round 17: re-aliasing the
-    // loop's synthesized __c<i> columns back to the user's names) renders
-    // as a subselect over the loop name, the leaf-project convention
-    case Project(cols, ul: org.apache.spark.sql.catalyst.plans.logical.UnionLoop) =>
-      loop(ul).map(t => s"(SELECT ${selectList(cols)} FROM $t) AS $t")
-    case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => valuesSql(lr)
-    // Range leaves re-parse as the range() TVF (round 17); they must
-    // precede the generic LeafNode cases, whose tableName has no name
-    // for them
-    case r: org.apache.spark.sql.catalyst.plans.logical.Range => Some(rangeSql(r))
-    case Project(cols, r: org.apache.spark.sql.catalyst.plans.logical.Range) =>
-      Some(s"(SELECT ${selectList(cols)} FROM ${rangeSql(r)}) AS ${rangeName(r)}")
-    case Filter(cond, r: org.apache.spark.sql.catalyst.plans.logical.Range) =>
-      Some(s"(SELECT * FROM ${rangeSql(r)} WHERE ${exprSql(cond)}) AS ${rangeName(r)}")
-    case l: LeafNode => loop(l).orElse(tableName(l))
-    case Filter(cond, lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation) =>
-      valuesSql(lr).map(v =>
-        s"(SELECT * FROM $v WHERE ${exprSql(cond)}) AS ${valuesName(lr)}")
-    case Filter(cond, l: LeafNode) =>
-      loop(l).orElse(tableName(l))
-        .map(t => s"(SELECT * FROM $t WHERE ${exprSql(cond)}) AS $t")
-    case Project(cols, l: LeafNode) =>
-      loop(l).orElse(tableName(l))
-        .map(t => s"(SELECT ${selectList(cols)} FROM $t) AS $t")
-    case Project(cols, Filter(cond, l: LeafNode)) =>
-      loop(l).orElse(tableName(l)).map(t =>
-        s"(SELECT ${selectList(cols)} FROM $t WHERE ${exprSql(cond)}) AS $t")
-    case Join(left, right, joinType, cond, _) =>
-      // LeftSemi/LeftAnti (round 15): Catalyst lowers IN-subquery, EXISTS
-      // and NOT IN to these, and Spark SQL has native LEFT SEMI / LEFT
-      // ANTI JOIN syntax — so the subquery families regenerate as the
-      // join the optimizer actually chose, which is the transform-log
-      // story told in SQL. ExistenceJoin (EXISTS inside a disjunction)
-      // has no SQL join form and stays None.
-      val kw = joinType match {
-        case org.apache.spark.sql.catalyst.plans.Inner => Some("JOIN")
-        case org.apache.spark.sql.catalyst.plans.LeftOuter => Some("LEFT JOIN")
-        case org.apache.spark.sql.catalyst.plans.RightOuter => Some("RIGHT JOIN")
-        case org.apache.spark.sql.catalyst.plans.FullOuter => Some("FULL JOIN")
-        case org.apache.spark.sql.catalyst.plans.Cross => Some("CROSS JOIN")
-        case org.apache.spark.sql.catalyst.plans.LeftSemi => Some("LEFT SEMI JOIN")
-        case org.apache.spark.sql.catalyst.plans.LeftAnti => Some("LEFT ANTI JOIN")
-        // LeftSingle is what a decorrelated scalar subquery becomes: a
-        // LEFT JOIN whose right side the engine additionally PROVES has
-        // at most one match per row (erroring otherwise). SQL has no
-        // SINGLE syntax; LEFT JOIN is row-identical on every input where
-        // the original query runs at all (a duplicate match would have
-        // failed it), so this is the join the optimizer chose told in
-        // SQL — the semi/anti precedent — and the ratchet executes the
-        // regenerated text for row equality as with every rendering.
-        // Documented trade-off: ERROR semantics differ — on data where
-        // the right side has >1 match the original errors while the
-        // regenerated LEFT JOIN silently duplicates rows; row equality
-        // holds on every input where the original succeeds.
-        case org.apache.spark.sql.catalyst.plans.LeftSingle => Some("LEFT JOIN")
-        case _ => None
+  private object ProjectFilter {
+    def unapply(p: LogicalPlan): Some[(Option[Seq[NamedExpression]], Option[Expression], LogicalPlan)] = {
+      val (cols, below) = p match {
+        case Project(c, child) => (Some(c), child)
+        case _ => (None, p)
       }
-      for {
-        k <- kw
-        ls <- fromSql(left, loop)
-        rs <- fromSql(right, loop)
-        // a condition-less OUTER join must not degrade to CROSS (a LEFT
-        // JOIN of an empty right side keeps rows; CROSS returns none);
-        // condition-less semi/anti (uncorrelated EXISTS) render bare —
-        // Spark's grammar makes joinCriteria optional
-        rendered <- cond match {
-          case Some(c) => Some(s"$ls $k $rs ON ${exprSql(c)}")
-          case None if k == "JOIN" || k == "CROSS JOIN" => Some(s"$ls CROSS JOIN $rs")
-          case None if k == "LEFT SEMI JOIN" || k == "LEFT ANTI JOIN" =>
-            Some(s"$ls $k $rs")
-          case None => None
-        }
-      } yield rendered
-    // pure column-pruning Project INSIDE the join tree (Catalyst inserts
-    // one below every join): the outer SELECT governs the output, so the
-    // node needs no SQL of its own — round 16, unlocks >2-relation trees
-    case Project(cols, child: Join)
-        if cols.forall(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.AttributeReference]) =>
-      fromSql(child, loop)
-    // COMPUTED Project over a join subtree in FROM position (round 17):
-    // what decorrelating a correlated COUNT leaves between two LeftOuter
-    // joins (`if(isnull(alwaysTrue)) 0 else cnt` computed over the inner
-    // join, consumed by the outer one — q26's shape). An inline view
-    // through the full recursion — its own naming scope, the round-16
-    // aggregate-view precedent. Pure-pruning projects keep the
-    // transparent path above.
-    case pr @ Project(_, _: Join) =>
-      rewrittenSql(pr).map(s => s"($s) AS ${prjViewName(pr)}")
-    case pr @ Project(_, Filter(_, _: Join)) =>
-      rewrittenSql(pr).map(s => s"($s) AS ${prjViewName(pr)}")
-    // Aggregate in FROM position (a decorrelated COUNT/SUM subquery, a
-    // pre-aggregated CTE branch): an inline view through the full
-    // un-parser recursion — its own naming scope, like a set-op branch
-    // (round 16). Filter-over-Aggregate renders as the HAVING family.
-    case agg: Aggregate =>
-      rewrittenSql(agg).map(s => s"($s) AS ${aggViewName(agg)}")
-    case f @ Filter(_, agg: Aggregate) =>
-      rewrittenSql(f).map(s => s"($s) AS ${aggViewName(agg)}")
-    // window stacks in FROM position (a windowed derivation joined,
-    // filtered, or re-aggregated — medians, streak anchors): inline view
-    // through the full recursion; rewrittenSql's window family renders
-    // the inner SELECT, so none of these re-enter fromSql on the same
-    // node (round 16)
-    case f @ Filter(_, stack) if isWindowStackPlan(stack) =>
-      rewrittenSql(f).map(s => s"($s) AS ${winViewName(f)}")
-    case pr @ Project(_, Filter(_, stack)) if isWindowStackPlan(stack) =>
-      rewrittenSql(pr).map(s => s"($s) AS ${winViewName(pr)}")
-    case pr @ Project(_, stack) if isWindowStackPlan(stack) =>
-      rewrittenSql(pr).map(s => s"($s) AS ${winViewName(pr)}")
-    case w: Window =>
-      rewrittenSql(w).map(s => s"($s) AS ${winViewName(w)}")
+      below match {
+        case Filter(c, child) => Some((cols, Some(c), child))
+        case _ => Some((cols, None, below))
+      }
+    }
+  }
+
+  /** Where a subtree sits relative to the SELECT that renders it: that
+    * SELECT's own head, the top of its FROM clause, or a join operand
+    * below the top.
+    */
+  private sealed trait Pos
+  private case object Head extends Pos
+  private case object Top extends Pos
+  private case object Operand extends Pos
+
+  /** The one FROM-position rule: Some((alias, exposed columns)) when `p`
+    * renders as its own `(SELECT …) AS alias` scope where it sits. Both
+    * the FROM-clause renderer (rewrittenSql's `fromSql`) and the qualifier
+    * map ([[scopeRels]]) ask it, so they cannot disagree.
+    *
+    * A set operation is one scope wherever it sits: its branches legally
+    * re-read the same tables and are checked per branch. At a SELECT's head
+    * every other node renders as that SELECT itself. In FROM position an
+    * inline view is its own naming scope, rendered through the full
+    * recursion: an aggregate (a decorrelated COUNT/SUM subquery, a
+    * pre-aggregated CTE branch; a Filter over it is the HAVING family), a
+    * window stack under its filter and projection (a windowed derivation
+    * joined, filtered or re-aggregated), and a computed Project over a join
+    * subtree (what decorrelating a correlated COUNT leaves between two
+    * LeftOuter joins, q26's shape). A pure column-pruning Project over a
+    * join stays transparent, and so does one over a filtered join at the
+    * top of a FROM clause, whose WHERE it renders; as a join operand a
+    * filtered join has no WHERE to land in, so there it is a view too.
+    */
+  private def inlineView(p: LogicalPlan, at: Pos): Option[(String, Seq[Attribute])] = {
+    def view(prefix: String, out: Seq[Attribute] = p.output) = Some((viewName(prefix, out), out))
+    p match {
+      case g: Generate if isReplicateSetOp(g) => view("__setop", g.generatorOutput)
+      case _: Union => view("__union")
+      case _ if at == Head => None
+      case Project(cols, _: Join) if !isPruning(cols) => view("__prj")
+      case Project(cols, Filter(_, _: Join)) if at == Operand || !isPruning(cols) => view("__prj")
+      case _: Aggregate | Filter(_, _: Aggregate) => view("__agg")
+      case ProjectFilter(_, _, stack) if isWindowStack(stack) => view("__win")
+      case _ => None
+    }
+  }
+
+  /** A FROM leaf's alias: the table's name, `__loop<id>` for a recursive
+    * loop and its refs, an exprId-suffixed name for VALUES and Range.
+    * OneRowRelation is no FROM leaf: it names and exposes nothing.
+    */
+  private def leafAlias(l: LogicalPlan): Option[String] = l match {
+    case ul: UnionLoop => Some(s"__loop${ul.id}")
+    case ref: UnionLoopRef => Some(s"__loop${ref.loopId}")
+    case lr: LocalRelation => Some(viewName("__values_", lr.output))
+    case r: Range => Some(viewName("__range", r.output))
+    case l: LeafNode => tableName(l)
     case _ => None
+  }
+
+  /** A relation a FROM clause names: a leaf with or without an alias
+    * ([[leafAlias]]), or a recursive loop. */
+  private def isFromLeaf(p: LogicalPlan): Boolean = p match {
+    case _: OneRowRelation => false
+    case _: UnionLoop | _: LeafNode => true
+    case _ => false
   }
 
   /** The relations a rendered FROM clause exposes to its SELECT scope:
     * (relation alias, exposed (column name, exprId) pairs) — the shared
     * walk behind [[unambiguous]] (name-collision policy) and
-    * [[fromTreeMap]] (qualified rendering).
-    *
-    * Scope-aware: a UnionLoop (recursive CTE body) is its OWN naming
-    * scope — it participates here as one relation named __loop<id>, and
-    * its anchor/recursion branches are checked when they render.
-    * OneRowRelation has no name and no columns — nothing to collide with.
-    * `inFrom` marks join-subtree positions: an Aggregate there renders
-    * as an inline view (round 16) — its own scope, exposing its NAME
-    * and aggregate-output columns, with its internals checked by the
-    * recursive rewrittenSql call; an Aggregate at the plan head stays
-    * transparent (body renders it directly over its child's relations).
+    * [[fromTreeMap]] (qualified rendering). Inline views come from
+    * [[inlineView]]; their internals are checked by the recursive call
+    * that renders them. A leaf under a pushed-down projection exposes the
+    * projected (possibly aliased) names, not the leaf's: NATURAL JOIN
+    * aliases both sides' keys to one name (q18).
     */
-  private def scopeRels(pl: LogicalPlan, inFrom: Boolean)
+  private def scopeRels(pl: LogicalPlan, at: Pos)
       : Seq[(Option[String], Seq[(String, Long)])] = {
-    def expose(attrs: Seq[org.apache.spark.sql.catalyst.expressions.NamedExpression]) =
+    def expose(attrs: Seq[NamedExpression]) =
       attrs.map { a =>
         val id = a.toAttribute.exprId.id
         renameScope.value.getOrElse(id, a.name) -> id
       }
-    pl match {
-      case Project(cols, ul: org.apache.spark.sql.catalyst.plans.logical.UnionLoop) =>
-        Seq((Some(s"__loop${ul.id}"), expose(cols)))
-      case ul: org.apache.spark.sql.catalyst.plans.logical.UnionLoop =>
-        Seq((Some(s"__loop${ul.id}"), expose(ul.output)))
-      case ref: org.apache.spark.sql.catalyst.plans.logical.UnionLoopRef =>
-        Seq((Some(s"__loop${ref.loopId}"), expose(ref.output)))
-      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        Seq((Some(valuesName(lr)), expose(lr.output)))
-      case _: org.apache.spark.sql.catalyst.plans.logical.OneRowRelation => Seq.empty
-      case agg: Aggregate if inFrom =>
-        Seq((Some(aggViewName(agg)), expose(agg.output)))
-      case Filter(_, agg: Aggregate) if inFrom =>
-        Seq((Some(aggViewName(agg)), expose(agg.output)))
-      // computed Project over a join subtree in FROM position (round 17):
-      // a scope boundary exposing the projection's names — the fromSql
-      // case renders it as an inline view; pure-pruning projects stay
-      // transparent via the generic fall-through
-      case pr @ Project(cols, _: Join) if inFrom &&
-          !cols.forall(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.AttributeReference]) =>
-        Seq((Some(prjViewName(pr)), expose(cols)))
-      case pr @ Project(cols, Filter(_, _: Join)) if inFrom &&
-          !cols.forall(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.AttributeReference]) =>
-        Seq((Some(prjViewName(pr)), expose(cols)))
-      // window-stack inline views (round 16): scope boundaries exactly
-      // like in-FROM aggregates; what the view EXPOSES is its outermost
-      // projection's names
-      case f @ Filter(_, stack) if inFrom && isWindowStackPlan(stack) =>
-        Seq((Some(winViewName(f)), expose(f.output)))
-      case pr @ Project(cols, Filter(_, stack)) if inFrom && isWindowStackPlan(stack) =>
-        Seq((Some(winViewName(pr)), expose(cols)))
-      case pr @ Project(cols, stack) if inFrom && isWindowStackPlan(stack) =>
-        Seq((Some(winViewName(pr)), expose(cols)))
-      case w: Window if inFrom =>
-        Seq((Some(winViewName(w)), expose(w.output)))
-      // INTERSECT ALL / EXCEPT ALL rewrites (round 17): one scope named
-      // like a set operation's result — its branches legally re-read the
-      // same table and are ambiguity-checked per branch when rendered
-      case g: org.apache.spark.sql.catalyst.plans.logical.Generate if isReplicateSetOp(g) =>
-        Seq((Some(setOpViewName(g)), expose(g.generatorOutput)))
-      // pushed-down projections render as inline views, so what a relation
-      // EXPOSES to the outer scope is its projected (possibly aliased)
-      // names, not the leaf's — NATURAL JOIN aliases both sides' keys to
-      // one name, and the leaf-level check read right past the collision
-      // (round 15: q18 regenerated ambiguous SQL until the ratchet
-      // executed it)
-      // the relation NAME still comes from the leaf's own case (loop refs,
-      // VALUES and OneRowRelation name themselves), only the exposed
-      // column set is the projection's
-      case Project(cols, l: LeafNode) => scopeRels(l, inFrom) match {
-        case Seq((name, _)) => Seq((name, expose(cols)))
-        case other => other
+    inlineView(pl, at) match {
+      case Some((alias, cols)) => Seq((Some(alias), expose(cols)))
+      case None => pl match {
+        case ProjectFilter(cols, _, leaf) if isFromLeaf(leaf) =>
+          Seq((leafAlias(leaf), expose(cols.getOrElse(leaf.output))))
+        case j: Join => j.children.flatMap(scopeRels(_, Operand))
+        case other => other.children.flatMap(scopeRels(_, at))
       }
-      case Project(cols, Filter(_, l: LeafNode)) => scopeRels(l, inFrom) match {
-        case Seq((name, _)) => Seq((name, expose(cols)))
-        case other => other
-      }
-      // a set operation is ONE scope wherever it sits (round 17): its
-      // branches legally re-read the same tables and are checked per
-      // branch when setOpSql renders them
-      case u: Union => Seq((Some(unionViewName(u)), expose(u.output)))
-      case r: org.apache.spark.sql.catalyst.plans.logical.Range =>
-        Seq((Some(rangeName(r)), expose(r.output)))
-      case l: LeafNode => Seq((tableName(l), expose(l.output)))
-      case j: Join => j.children.flatMap(scopeRels(_, inFrom = true))
-      case other => other.children.flatMap(scopeRels(_, inFrom))
     }
   }
 
@@ -817,11 +675,11 @@ object QueryEngine {
     * are unique in their scope (a self-join rendered as `orders JOIN
     * orders` has no way to qualify), and no single relation exposes the
     * same column name twice (qualification cannot split those apart).
-    * Cross-RELATION column collisions are fine since round 17: references
-    * render qualified by their relation's alias ([[fromTreeMap]]).
+    * Cross-RELATION column collisions are fine: references render
+    * qualified by their relation's alias ([[fromTreeMap]]).
     */
   private def unambiguous(p: LogicalPlan): Boolean = {
-    val leaves = scopeRels(p, inFrom = false)
+    val leaves = scopeRels(p, Head)
     val names = leaves.flatMap(_._1)
     names.distinct.size == leaves.size && leaves.forall { case (_, cols) =>
       cols.map(_._1).distinct.size == cols.size
@@ -829,16 +687,16 @@ object QueryEngine {
   }
 
   /** exprId → relation-alias map for the SELECT scope whose FROM clause
-    * renders plan `p` (round 17): every attribute a relation exposes
-    * renders qualified by that relation's alias, which is what lets two
-    * relations legally expose the same column name (NATURAL JOIN's
-    * coalesced keys, two distinct-aggregate views over the same table).
-    * Installed via [[qualScope]] by each SELECT renderer right where its
-    * FROM subtree is known; nested inline views install their own scope
-    * and the DynamicVariable restores the outer one on return.
+    * renders plan `p`: every attribute a relation exposes renders
+    * qualified by that relation's alias, which is what lets two relations
+    * legally expose the same column name (NATURAL JOIN's coalesced keys,
+    * two distinct-aggregate views over the same table). Installed via
+    * [[qualScope]] by each SELECT renderer right where its FROM subtree is
+    * known; nested inline views install their own scope and the
+    * DynamicVariable restores the outer one on return.
     */
   private def fromTreeMap(p: LogicalPlan): Map[Long, String] =
-    scopeRels(p, inFrom = true).flatMap {
+    scopeRels(p, Top).flatMap {
       case (Some(name), cols) => cols.map { case (_, id) => id -> name }
       case _ => Nil
     }.toMap
@@ -889,87 +747,56 @@ object QueryEngine {
     * (and the CLI says so) for shapes with no faithful SQL rendering —
     * never a best-effort lie.
     *
-    * Round-11 additions mirror what the optimizer actually produces for
-    * the OLAP family (q35–q38): Window nodes un-parse to OVER clauses
-    * (staged `_w` projection columns are inlined back), Expand+Aggregate
-    * un-parses to GROUP BY GROUPING SETS with `shiftright(spark_grouping_id,
-    * k) & 1` bit extractions mapped back to GROUPING(col), and the
-    * semi/anti-join + distinct shapes Catalyst rewrites set operations
-    * into render back as INTERSECT / EXCEPT / UNION [ALL]. Set-op branches
-    * are independent SELECT scopes, so the ambiguity check applies per
-    * branch, not to the whole tree (q38 reads `orders` three times,
-    * legally).
-    *
-    * Round-12 additions close the two newest families: PIVOT regenerates
-    * from the analyzer's Project-over-pivotfirst-over-partial-Aggregate
-    * lowering, recursive CTEs regenerate from UnionLoop/UnionLoopRef as a
-    * `WITH RECURSIVE` prefix (loop branches are independent SELECT
-    * scopes; loops with duplicate column names have no name-addressable
-    * rendering and stay None), and folded inline tables (LocalRelation)
-    * render as `VALUES … AS name(cols)`.
+    * It renders what the optimizer actually produces: Window nodes
+    * un-parse to OVER clauses (staged `_w` projection columns are inlined
+    * back), Expand+Aggregate un-parses to GROUP BY GROUPING SETS with
+    * `shiftright(spark_grouping_id, k) & 1` bit extractions mapped back to
+    * GROUPING(col), and the semi/anti-join + distinct shapes Catalyst
+    * rewrites set operations into render back as INTERSECT / EXCEPT /
+    * UNION [ALL]. PIVOT regenerates from the analyzer's
+    * Project-over-pivotfirst-over-partial-Aggregate lowering, recursive
+    * CTEs from UnionLoop/UnionLoopRef as a `WITH RECURSIVE` prefix, and
+    * folded inline tables (LocalRelation) as `VALUES … AS name(cols)`.
+    * Set-op branches and loop branches are independent SELECT scopes, so
+    * the ambiguity check applies per branch, not to the whole tree (q38
+    * reads `orders` three times, legally).
     */
   def rewrittenSql(optimized: LogicalPlan): Option[String] = qualScope.withValue(Map.empty) {
     renameScope.withValue(renameScope.value ++ loopRenames(optimized)) {
-    // fresh qualification scope per SELECT-tree render (round 17): an
-    // inline view's internals must never see — or qualify by — the
-    // ENCLOSING scope's relation aliases; each renderer below installs
-    // its own map right where its FROM subtree is known.
-    // uncorrelated scalar subqueries render inline (round 16); anything
-    // the inliner could not render keeps its PlanExpression and declines
+    // fresh qualification scope per SELECT-tree render: an inline view's
+    // internals must never see — or qualify by — the ENCLOSING scope's
+    // relation aliases; each renderer below installs its own map right
+    // where its FROM subtree is known.
+    // uncorrelated scalar subqueries render inline; anything the inliner
+    // could not render keeps its PlanExpression and declines
     val inlined = inlineScalarSubqueries(optimized)
     if (hasSubqueryExpr(inlined)) return None
-    // peel LIMIT (and OFFSET: `LIMIT n OFFSET m` optimizes to
-    // GlobalLimit n over Offset m over LocalLimit n+m — the LocalLimit is
-    // the pushed prefetch bound, not user syntax, so only n and m render)
-    val (limitSql, p1) = inlined match {
-      case GlobalLimit(org.apache.spark.sql.catalyst.expressions.Literal(n, _),
-          org.apache.spark.sql.catalyst.plans.logical.Offset(
-            org.apache.spark.sql.catalyst.expressions.Literal(m, _),
-            LocalLimit(_, child))) => (s" LIMIT $n OFFSET $m", child)
-      case GlobalLimit(org.apache.spark.sql.catalyst.expressions.Literal(n, _),
-          LocalLimit(_, child)) => (s" LIMIT $n", child)
-      case org.apache.spark.sql.catalyst.plans.logical.Offset(
-          org.apache.spark.sql.catalyst.expressions.Literal(m, _), child) =>
-        (s" OFFSET $m", child)
-      case other => ("", other)
-    }
-    // peel ORDER BY
-    val (orderSql, p2) = p1 match {
-      case Sort(order, true, child, _) =>
-        (s" ORDER BY ${order.map(exprSql).mkString(", ")}", child)
-      case other => ("", other)
-    }
 
-    // recursive-CTE support (round 12): the optimizer keeps a recursive
-    // CTE as UnionLoop(anchor, recursion)/UnionLoopRef. Rendering one
-    // contributes a `__loop<id> (cols) AS ((anchor) UNION ALL (recursion))`
-    // definition HERE (insertion-ordered, so a loop nested inside another
-    // loop's branch is defined before its user), and the node renders as
-    // the bare name; the final SQL is prefixed WITH RECURSIVE. Anchor and
-    // recursion are independent SELECT scopes, like set-op branches.
+    // the optimizer keeps a recursive CTE as UnionLoop(anchor,
+    // recursion)/UnionLoopRef. Rendering one contributes a `__loop<id>
+    // (cols) AS ((anchor) UNION ALL (recursion))` definition HERE
+    // (insertion-ordered, so a loop nested inside another loop's branch is
+    // defined before its user), and the node renders as the bare name; the
+    // final SQL is prefixed WITH RECURSIVE.
     val cteDefs = scala.collection.mutable.LinkedHashMap[Long, String]()
-    def loopHandler(n: LogicalPlan): Option[String] = n match {
-      case ref: org.apache.spark.sql.catalyst.plans.logical.UnionLoopRef =>
-        Some(s"__loop${ref.loopId}")
-      case ul: org.apache.spark.sql.catalyst.plans.logical.UnionLoop =>
-        val name = s"__loop${ul.id}"
-        if (!cteDefs.contains(ul.id)) {
-          val rendered = for {
-            a <- branchSql(ul.anchor)
-            r <- branchSql(ul.recursion)
-          } yield {
+    // a FROM leaf's relation text and alias
+    def leafRel(l: LogicalPlan): Option[(String, String)] = leafAlias(l).flatMap { alias =>
+      val rel = l match {
+        case ul: UnionLoop if !cteDefs.contains(ul.id) =>
+          for (a <- branchSql(ul.anchor); r <- branchSql(ul.recursion)) yield {
             val cols = ul.output.map(o =>
               org.apache.spark.sql.catalyst.util.quoteIfNeeded(
                 renameScope.value.getOrElse(o.exprId.id, o.name))).mkString(", ")
-            s"$name ($cols) AS (($a) UNION ALL ($r))"
+            cteDefs(ul.id) = s"$alias ($cols) AS (($a) UNION ALL ($r))"
+            alias
           }
-          rendered match {
-            case Some(d) => cteDefs(ul.id) = d
-            case None => return None
-          }
-        }
-        Some(name)
-      case _ => None
+        case lr: LocalRelation => valuesSql(lr, alias)
+        // Spark's range() TVF, which `FROM range(0, 15)` optimizes to;
+        // numSlices is a parallelism hint, not semantics
+        case r: Range => Some(s"range(${r.start}, ${r.end}, ${r.step}) AS $alias")
+        case _ => Some(alias)
+      }
+      rel.map(_ -> alias)
     }
     def branchSql(pl: LogicalPlan): Option[String] =
       setOpSql(pl).orElse(if (unambiguous(pl)) body(pl) else None)
@@ -990,10 +817,10 @@ object QueryEngine {
         child: LogicalPlan, having: Option[Expression]): Option[String] = child match {
       // the optimizer stages computed group keys (`year(o_orderdate) AS
       // yr`) in a Project below the Aggregate; inline the definitions
-      // back into the grouping/aggregate/having expressions and recurse
-      // (round 16) — the rendered SQL is the single SELECT the user
-      // wrote. Alias exprIds are preserved so HAVING's alias expansion
-      // still matches. Pure-pruning projects keep the selectFrom path.
+      // back into the grouping/aggregate/having expressions and recurse —
+      // the rendered SQL is the single SELECT the user wrote. Alias
+      // exprIds are preserved so HAVING's alias expansion still matches.
+      // Pure-pruning projects keep the fromSql path.
       case Project(pcols, pchild)
           if pcols.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.Alias]) =>
         import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, NamedExpression}
@@ -1011,7 +838,7 @@ object QueryEngine {
         }
         aggregateSql(groups.map(subst), selectAggs.map(substNamed),
           allAggs.map(substNamed), pchild, having.map(subst))
-      case _ => qualScope.withValue(fromTreeMap(child)) { selectFrom(child).map { f =>
+      case _ => qualScope.withValue(fromTreeMap(child)) { fromSql(child, Top).map { f =>
         val g = if (groups.isEmpty) "" else s" GROUP BY ${groups.map(exprSql).mkString(", ")}"
         val byId = allAggs.collect {
           case a: org.apache.spark.sql.catalyst.expressions.Alias => a.toAttribute.exprId -> a.child
@@ -1024,22 +851,14 @@ object QueryEngine {
           s" HAVING ${exprSql(expanded)}"
         }.getOrElse("")
         // a ZERO-output aggregate (outer consumer pruned every column but
-        // still counts its rows — one per group) must emit valid SQL:
-        // SELECT 1 preserves the per-group row, like selectList's rule
-        val sel = if (selectAggs.isEmpty) "1" else selectAggs.map(exprSql).mkString(", ")
-        s"SELECT $sel FROM $f$g$h"
+        // still counts its rows — one per group) renders SELECT 1
+        s"SELECT ${selectList(selectAggs)} FROM $f$g$h"
       } }
     }
     import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, BitwiseAnd,
       Cast, EqualNullSafe, ExprId, Grouping, Lag, Lead, Literal, NTile, NamedExpression,
       ShiftRight, SortOrder, SpecifiedWindowFrame, WindowExpression, WindowSpecDefinition}
     import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
-
-    def isWindowStack(p: LogicalPlan): Boolean = p match {
-      case _: Window => true
-      case Project(_, c) => isWindowStack(c)
-      case _ => false
-    }
 
     /** One OVER clause. Ranking/offset functions must NOT re-emit their
       * implied frame (the parser rejects an explicit frame there), and
@@ -1139,7 +958,7 @@ object QueryEngine {
           case _ => None
         }
         if (rendered.exists(_.isEmpty)) None
-        else selectFrom(bottom).map(f => s"SELECT ${rendered.flatten.mkString(", ")} FROM $f")
+        else fromSql(bottom, Top).map(f => s"SELECT ${rendered.flatten.mkString(", ")} FROM $f")
       }
     }
 
@@ -1198,7 +1017,7 @@ object QueryEngine {
           if (leaked) None else Some(exprSql(replaced))
         }
         if (renderedAggs.exists(_.isEmpty)) None
-        else selectFrom(ex.child).map { f =>
+        else fromSql(ex.child, Top).map { f =>
           val setsSql = sets.map(s =>
             s"(${s.map(ga => exprSql(sources(ga.exprId))).mkString(", ")})").mkString(", ")
           s"SELECT ${renderedAggs.flatten.mkString(", ")} FROM $f GROUP BY GROUPING SETS ($setsSql)"
@@ -1297,7 +1116,7 @@ object QueryEngine {
           case _ => None
         }
         if (rendered.exists(_.isEmpty)) return None
-        selectFrom(child).map { f =>
+        fromSql(child, Top).map { f =>
           s"SELECT ${rendered.flatten.mkString(", ")} FROM (SELECT ${inputs.values.map(exprSql).mkString(", ")} FROM $f) PIVOT ($pivotItems FOR ${quoteIfNeeded(pivotAttr.name)} IN ($inSql))"
         }
       case _ => None
@@ -1324,16 +1143,12 @@ object QueryEngine {
       // filter ON a window column (latest-per-key's `rn = 1`): SQL can't
       // reference a window function in WHERE of the same SELECT, so the
       // stack renders as a subquery and the condition applies outside
-      // (round 16) — the shape the optimizer leaves for QUALIFY-style
-      // queries, with any WindowGroupLimit pushdown skipped by peel
-      case Project(cols, Filter(cond, stack)) if isWindowStack(stack) =>
+      // — the shape the optimizer leaves for QUALIFY-style queries, with
+      // any WindowGroupLimit pushdown skipped by peel
+      case ProjectFilter(cols, Some(cond), stack) if isWindowStack(stack) =>
         windowSql(stack).map(inner => qualScope.withValue(
             stack.output.map(a => a.exprId.id -> "__win").toMap)(
-          s"SELECT ${selectList(cols)} FROM ($inner) AS __win WHERE ${exprSql(cond)}"))
-      case Filter(cond, stack) if isWindowStack(stack) =>
-        windowSql(stack).map(inner => qualScope.withValue(
-            stack.output.map(a => a.exprId.id -> "__win").toMap)(
-          s"SELECT * FROM ($inner) AS __win WHERE ${exprSql(cond)}"))
+          s"SELECT ${cols.fold("*")(selectList)} FROM ($inner) AS __win WHERE ${exprSql(cond)}"))
       case Filter(cond, Aggregate(groups, aggs, child, _)) =>
         aggregateSql(groups, aggs, aggs, child, Some(cond))
       case Project(cols, Filter(cond, Aggregate(groups, aggs, child, _)))
@@ -1348,10 +1163,10 @@ object QueryEngine {
       case Aggregate(groups, aggs, child, _) =>
         aggregateSql(groups, aggs, aggs, child, None)
       case Project(cols, child) => qualScope.withValue(fromTreeMap(child)) {
-        selectFrom(child).map(f => s"SELECT ${selectList(cols)} FROM $f")
+        fromSql(child, Top).map(f => s"SELECT ${selectList(cols)} FROM $f")
       }
       case other => qualScope.withValue(fromTreeMap(other)) {
-        selectFrom(other).map(f => s"SELECT * FROM $f")
+        fromSql(other, Top).map(f => s"SELECT * FROM $f")
       }
     }
     /** Un-parse Catalyst's RewriteIntersectAll / RewriteExceptAll output
@@ -1366,8 +1181,7 @@ object QueryEngine {
       * because the rewrite PREPENDS). Row equality of the regenerated text
       * is executed by the coverage ratchet, as everywhere.
       */
-    def replicateRowsSetOp(g: org.apache.spark.sql.catalyst.plans.logical.Generate)
-        : Option[String] = {
+    def replicateRowsSetOp(g: Generate): Option[String] = {
       if (!isReplicateSetOp(g)) return None
       def unionOf(pl: LogicalPlan): Option[Union] = pl match {
         case u: Union => Some(u)
@@ -1401,25 +1215,83 @@ object QueryEngine {
         }
       }
     }
-    def selectFrom(n: LogicalPlan): Option[String] = n match {
-      // a recognized INTERSECT ALL / EXCEPT ALL rewrite in FROM position
-      // renders as an inline view (the outer SELECT may carry computed
-      // columns CollapseProject pushed above the Generate)
-      case g: org.apache.spark.sql.catalyst.plans.logical.Generate if isReplicateSetOp(g) =>
-        replicateRowsSetOp(g).map(s => s"($s) AS ${setOpViewName(g)}")
-      // a set operation in FROM position (round 17: an aggregation over a
-      // UNION ALL of two sources) renders as an inline view; per-branch
-      // scoping comes with setOpSql
-      case u: Union => setOpSql(u).map(s => s"($s) AS ${unionViewName(u)}")
-      case Filter(cond, child @ (_: Join)) =>
-        fromSql(child, loopHandler).map(f => s"$f WHERE ${exprSql(cond)}")
-      case Project(cols, child @ (_: Join | Filter(_, _: Join)))
-          if cols.forall(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.AttributeReference]) =>
+    /** FROM-clause text for `n` at `at` (the top of a FROM clause or a join
+      * operand): an inline view where [[inlineView]] says so, else a leaf
+      * under its pushed-down projection and filter, a JOIN … ON chain, or
+      * (at the top) a join under its WHERE. None for any node outside the
+      * supported family.
+      */
+    def fromSql(n: LogicalPlan, at: Pos): Option[String] = inlineView(n, at) match {
+      case Some((alias, _)) =>
+        val view = n match {
+          // the outer SELECT may carry computed columns CollapseProject
+          // pushed above an INTERSECT ALL / EXCEPT ALL rewrite
+          case g: Generate => replicateRowsSetOp(g)
+          case u: Union => setOpSql(u)
+          case _ => rewrittenSql(n)
+        }
+        view.map(s => s"($s) AS $alias")
+      case None => n match {
+        case ProjectFilter(cols, cond, leaf) if isFromLeaf(leaf) => leafRel(leaf).map { case (rel, alias) =>
+          if (cols.isEmpty && cond.isEmpty) rel
+          else s"(SELECT ${cols.fold("*")(selectList)} FROM $rel" +
+            s"${cond.fold("")(c => s" WHERE ${exprSql(c)}")}) AS $alias"
+        }
+        case Join(left, right, joinType, cond, _) =>
+          // Catalyst lowers IN-subquery, EXISTS and NOT IN to LeftSemi /
+          // LeftAnti, and Spark SQL has native LEFT SEMI / LEFT ANTI JOIN
+          // syntax — so the subquery families regenerate as the join the
+          // optimizer actually chose, which is the transform-log story told
+          // in SQL. ExistenceJoin (EXISTS inside a disjunction) has no SQL
+          // join form and stays None.
+          val kw = joinType match {
+            case org.apache.spark.sql.catalyst.plans.Inner => Some("JOIN")
+            case org.apache.spark.sql.catalyst.plans.LeftOuter => Some("LEFT JOIN")
+            case org.apache.spark.sql.catalyst.plans.RightOuter => Some("RIGHT JOIN")
+            case org.apache.spark.sql.catalyst.plans.FullOuter => Some("FULL JOIN")
+            case org.apache.spark.sql.catalyst.plans.Cross => Some("CROSS JOIN")
+            case org.apache.spark.sql.catalyst.plans.LeftSemi => Some("LEFT SEMI JOIN")
+            case org.apache.spark.sql.catalyst.plans.LeftAnti => Some("LEFT ANTI JOIN")
+            // LeftSingle is what a decorrelated scalar subquery becomes: a
+            // LEFT JOIN whose right side the engine additionally PROVES has
+            // at most one match per row (erroring otherwise). SQL has no
+            // SINGLE syntax; LEFT JOIN is row-identical on every input where
+            // the original query runs at all (a duplicate match would have
+            // failed it), so this is the join the optimizer chose told in
+            // SQL — the semi/anti precedent — and the ratchet executes the
+            // regenerated text for row equality as with every rendering.
+            // Documented trade-off: ERROR semantics differ — on data where
+            // the right side has >1 match the original errors while the
+            // regenerated LEFT JOIN silently duplicates rows; row equality
+            // holds on every input where the original succeeds.
+            case org.apache.spark.sql.catalyst.plans.LeftSingle => Some("LEFT JOIN")
+            case _ => None
+          }
+          for {
+            k <- kw
+            ls <- fromSql(left, Operand)
+            rs <- fromSql(right, Operand)
+            // a condition-less OUTER join must not degrade to CROSS (a LEFT
+            // JOIN of an empty right side keeps rows; CROSS returns none);
+            // condition-less semi/anti (uncorrelated EXISTS) render bare —
+            // Spark's grammar makes joinCriteria optional
+            rendered <- cond match {
+              case Some(c) => Some(s"$ls $k $rs ON ${exprSql(c)}")
+              case None if k == "JOIN" || k == "CROSS JOIN" => Some(s"$ls CROSS JOIN $rs")
+              case None if k == "LEFT SEMI JOIN" || k == "LEFT ANTI JOIN" =>
+                Some(s"$ls $k $rs")
+              case None => None
+            }
+          } yield rendered
         // a pure column-pruning Project over the join tree (Catalyst inserts
-        // one below every Aggregate): the SELECT list above governs the
-        // output, so the pruning node needs no SQL of its own
-        selectFrom(child)
-      case other => fromSql(other, loopHandler)
+        // one below every join and aggregate): the SELECT list above governs
+        // the output, so the node needs no SQL of its own
+        case Project(cols, child @ (_: Join | Filter(_, _: Join))) if isPruning(cols) =>
+          fromSql(child, at)
+        case Filter(cond, j: Join) if at == Top =>
+          fromSql(j, at).map(f => s"$f WHERE ${exprSql(cond)}")
+        case _ => None
+      }
     }
     /** Set operations, as the optimizer leaves them: UNION [ALL] as
       * [Distinct-]Union, INTERSECT/EXCEPT as distinct over a left-semi/
@@ -1457,72 +1329,74 @@ object QueryEngine {
           }
         }
       }
-      // a set-op branch may carry its OWN ORDER BY / LIMIT (a per-leg
-      // top-k unioned with another): peel them like the top level does
-      // and re-attach inside the branch's parentheses (round 16)
-      def branch(pl: LogicalPlan): Option[String] = {
-        val (limitSql, b1) = pl match {
-          case GlobalLimit(Literal(n, _), LocalLimit(_, c)) => (s" LIMIT $n", c)
-          case other => ("", other)
-        }
-        val (orderSql, b2) = b1 match {
-          case Sort(order, true, c, _) =>
-            (s" ORDER BY ${order.map(exprSql).mkString(", ")}", c)
-          // a projection ABOVE the sort (branch-tagging aliases like
-          // `'nf' AS leg`): ORDER BY binds to the outer select, which is
-          // row-identical — but only when every sort reference passes
-          // through the projection unrenamed, else the rendered ORDER BY
-          // names a column the outer scope no longer has
-          case Project(cols, Sort(order, true, c, _))
-              if order.flatMap(_.references.toSeq).forall(r => cols.exists {
-                case ar: AttributeReference => ar.exprId == r.exprId
-                case _ => false
-              }) =>
-            (s" ORDER BY ${order.map(exprSql).mkString(", ")}", Project(cols, c))
-          case other => ("", other)
-        }
-        setOpSql(b2).orElse(if (unambiguous(b2)) body(b2) else None)
-          .map(b => s"$b$orderSql$limitSql")
-      }
       def setOp(l: LogicalPlan, r: LogicalPlan, kw: String): Option[String] =
-        for { ls <- branch(l); rs <- branch(r) } yield s"($ls) $kw ($rs)"
+        for { ls <- peeledSql(l); rs <- peeledSql(r) } yield s"($ls) $kw ($rs)"
+      def union(u: Union, kw: String): Option[String] = {
+        val bs = u.children.map(peeledSql)
+        Option.when(bs.forall(_.isDefined))(bs.flatten.map(b => s"($b)").mkString(kw))
+      }
+      def wholeRow(j: Join): Option[String] = j.condition.filter(pairsAllColumns(_, j.left, j.right))
+        .flatMap(_ => j.joinType match {
+          case org.apache.spark.sql.catalyst.plans.LeftSemi => Some("INTERSECT")
+          case org.apache.spark.sql.catalyst.plans.LeftAnti => Some("EXCEPT")
+          case _ => None
+        })
       p match {
-        case DistinctOf(u: Union) if !u.byName =>
-          val bs = u.children.map(branch)
-          if (bs.exists(_.isEmpty)) None
-          else Some(bs.flatten.map(b => s"($b)").mkString(" UNION "))
-        case u: Union if !u.byName =>
-          val bs = u.children.map(branch)
-          if (bs.exists(_.isEmpty)) None
-          else Some(bs.flatten.map(b => s"($b)").mkString(" UNION ALL "))
-        case DistinctOf(Join(l, r, org.apache.spark.sql.catalyst.plans.LeftSemi,
-            Some(cond), _)) if pairsAllColumns(cond, l, r) =>
-          setOp(l, r, "INTERSECT")
-        case DistinctOf(Join(l, r, org.apache.spark.sql.catalyst.plans.LeftAnti,
-            Some(cond), _)) if pairsAllColumns(cond, l, r) =>
-          setOp(l, r, "EXCEPT")
+        case DistinctOf(u: Union) if !u.byName => union(u, " UNION ")
+        case u: Union if !u.byName => union(u, " UNION ALL ")
+        case DistinctOf(j: Join) => wholeRow(j).flatMap(setOp(j.left, j.right, _))
         // the branch-aliasing Project (e.g. `o_custkey AS k`) sits between
         // the distinct and the join; re-apply it to the LEFT side, whose
         // attributes it references
-        case DistinctOf(Project(cols, Join(l, r, org.apache.spark.sql.catalyst.plans.LeftSemi,
-            Some(cond), _))) if pairsAllColumns(cond, l, r) =>
-          setOp(Project(cols, l), r, "INTERSECT")
-        case DistinctOf(Project(cols, Join(l, r, org.apache.spark.sql.catalyst.plans.LeftAnti,
-            Some(cond), _))) if pairsAllColumns(cond, l, r) =>
-          setOp(Project(cols, l), r, "EXCEPT")
+        case DistinctOf(Project(cols, j: Join)) =>
+          wholeRow(j).flatMap(setOp(Project(cols, j.left), j.right, _))
         // a pure pass-through Project over a recognized INTERSECT ALL /
-        // EXCEPT ALL rewrite IS the set operation (round 17)
-        case Project(cols, g: org.apache.spark.sql.catalyst.plans.logical.Generate)
-            if isReplicateSetOp(g) && cols.forall(_.isInstanceOf[AttributeReference]) =>
-          replicateRowsSetOp(g)
-        case g: org.apache.spark.sql.catalyst.plans.logical.Generate if isReplicateSetOp(g) =>
-          replicateRowsSetOp(g)
+        // EXCEPT ALL rewrite IS the set operation
+        case Project(cols, g: Generate) if isPruning(cols) => replicateRowsSetOp(g)
+        case g: Generate => replicateRowsSetOp(g)
         case _ => None
       }
     }
 
-    branchSql(p2)
-      .map(b => s"$b$orderSql$limitSql")
+    /** A SELECT with its own [ORDER BY] [LIMIT n [OFFSET m] | OFFSET m]
+      * tail, peeled off and re-attached after the rendered body: the top
+      * level, and each set-op branch (a per-leg top-k unioned with
+      * another), where it lands inside the branch's parentheses. `LIMIT n
+      * OFFSET m` optimizes to GlobalLimit n over Offset m over LocalLimit
+      * n+m; the LocalLimit is the pushed prefetch bound, not user syntax,
+      * so only n and m render.
+      */
+    def peeledSql(pl: LogicalPlan): Option[String] = {
+      val (limitSql, p1) = pl match {
+        case GlobalLimit(Literal(n, _), Offset(Literal(m, _), LocalLimit(_, c))) =>
+          (s" LIMIT $n OFFSET $m", c)
+        case GlobalLimit(Literal(n, _), LocalLimit(_, c)) => (s" LIMIT $n", c)
+        case Offset(Literal(m, _), c) => (s" OFFSET $m", c)
+        case other => ("", other)
+      }
+      // sort keys bind to this SELECT's own columns, never to the aliases
+      // of a scope enclosing a set-op branch (a UNION in FROM position)
+      def orderBy(order: Seq[SortOrder]) =
+        qualScope.withValue(Map.empty)(s" ORDER BY ${order.map(exprSql).mkString(", ")}")
+      val (orderSql, p2) = p1 match {
+        case Sort(order, true, c, _) => (orderBy(order), c)
+        // a projection ABOVE the sort (branch-tagging aliases like `'nf' AS
+        // leg`): ORDER BY binds to the outer select, which is row-identical
+        // — but only when every sort reference passes through the
+        // projection unrenamed, else the rendered ORDER BY names a column
+        // the outer scope no longer has
+        case Project(cols, Sort(order, true, c, _))
+            if order.flatMap(_.references.toSeq).forall(r => cols.exists {
+              case ar: AttributeReference => ar.exprId == r.exprId
+              case _ => false
+            }) =>
+          (orderBy(order), Project(cols, c))
+        case other => ("", other)
+      }
+      branchSql(p2).map(b => s"$b$orderSql$limitSql")
+    }
+
+    peeledSql(inlined)
       .map(sql => if (cteDefs.isEmpty) sql
         else s"WITH RECURSIVE ${cteDefs.values.mkString(", ")} $sql")
     }

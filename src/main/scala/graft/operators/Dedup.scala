@@ -745,11 +745,6 @@ object Dedup {
       maxHamming: Int = 3): DataFrame =
     simhashPairs(simhash(spread(docs), idCol, textCol), blockBits = 16, maxHamming)
 
-  /** Pigeonhole block join + exact hamming verify over a (doc_id, simhash)
-    * frame: signatures are split into 4 blocks of `blockBits`; any pair
-    * within hamming <= 3 must agree on at least one block. Shuffles on
-    * (block id, block value) only.
-    */
   /** The 4-block pigeonhole explosion shared by [[simhashPairs]] and
     * [[hammingCandidateBound]]: (doc_id, simhash, blk, blkval), one row
     * per (doc, block). Factored out (round 19) so the budget gate reads
@@ -762,6 +757,11 @@ object Dedup {
         shiftright(col("simhash"), j * blockBits).bitwiseAND(mask)): _*)).as(Seq("blk", "blkval")))
   }
 
+  /** Pigeonhole block join + exact hamming verify over a (doc_id, simhash)
+    * frame: signatures are split into 4 blocks of `blockBits`; any pair
+    * within hamming <= 3 must agree on at least one block. Shuffles on
+    * (block id, block value) only.
+    */
   private def simhashPairs(sh: DataFrame, blockBits: Int, maxHamming: Int): DataFrame = {
     require(maxHamming < 4, "block trick with 4 blocks covers hamming <= 3")
     val blocks = simhashBlocks(sh, blockBits)
@@ -1149,8 +1149,8 @@ object Dedup {
     *
     * Two shuffles total (fingerprint groupBy + LSH band join) — the shape
     * a 100 TB corpus dedup actually runs.
-    */
-  /** @param transitive greedy mode (false) drops every pair's doc_b — one
+    *
+    * @param transitive greedy mode (false) drops every pair's doc_b — one
     *        pass, but a doc that only ever appears as doc_a survives even
     *        when it is transitively a duplicate (pairs (2,10),(1,10) keep
     *        BOTH 1 and 2). Transitive mode (true) runs
@@ -1193,26 +1193,6 @@ object Dedup {
 
   // ------------------------------------------------------- exact jaccard
 
-  /** Exact token-set Jaccard pairs >= threshold, blocked by `blockCol` —
-    * PPJoin-style prefix filtering (Xiao et al., WWW'08):
-    *
-    *  1. Rank every token by GLOBAL document frequency (rare first; token
-    *     string as tiebreak — any total order works).
-    *  2. A pair with J >= t shares at least ceil(t·|A|) tokens, so its
-    *     smallest-ranked common token must sit within the first
-    *     |d| − ceil(t·|d|) + 1 tokens of BOTH docs. Only those prefix
-    *     tokens enter the inverted-index candidate join: stopwords fall
-    *     out of most prefixes, killing the O(df²) hot-token blowup that
-    *     dominates at corpus scale.
-    *  3. Size-ratio prune (J <= min/max ⇒ min >= t·max), then exact verify
-    *     by a native sorted-merge intersection
-    *     ([[graft.functions.SortedIntersectCountExpr]]) over per-doc sorted
-    *     token arrays computed straight from the text (zero extra shuffle).
-    *
-    * Same exact result set as the full inverted-index join (the d05 DuckDB
-    * oracle checks this); candidate volume drops from Σ df² over ALL
-    * tokens to Σ df² over prefix tokens.
-    */
   /** The PPJoin candidate stage of [[ngramJaccardPairs]] — exposed so the
     * prefix filter's pruning claim is MEASURABLE (DedupSpec compares its
     * candidate count against the unfiltered inverted-index join on a
@@ -1373,6 +1353,26 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
+  /** Exact token-set Jaccard pairs >= threshold, blocked by `blockCol` —
+    * PPJoin-style prefix filtering (Xiao et al., WWW'08):
+    *
+    *  1. Rank every token by GLOBAL document frequency (rare first; token
+    *     string as tiebreak — any total order works).
+    *  2. A pair with J >= t shares at least ceil(t·|A|) tokens, so its
+    *     smallest-ranked common token must sit within the first
+    *     |d| − ceil(t·|d|) + 1 tokens of BOTH docs. Only those prefix
+    *     tokens enter the inverted-index candidate join: stopwords fall
+    *     out of most prefixes, killing the O(df²) hot-token blowup that
+    *     dominates at corpus scale.
+    *  3. Size-ratio prune (J <= min/max ⇒ min >= t·max), then exact verify
+    *     by a native sorted-merge intersection
+    *     ([[graft.functions.SortedIntersectCountExpr]]) over per-doc sorted
+    *     token arrays computed straight from the text (zero extra shuffle).
+    *
+    * Same exact result set as the full inverted-index join (the d05 DuckDB
+    * oracle checks this); candidate volume drops from Σ df² over ALL
+    * tokens to Σ df² over prefix tokens.
+    */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
       blockCol: String, threshold: Double): DataFrame =
     ngramJaccardPairsBudgeted(docs, idCol, textCol, blockCol, threshold,

@@ -121,18 +121,6 @@ object EventOps {
         (col("n_correct").cast("double") / col("n_obs")).as("accuracy"))
   }
 
-  /** Per-user funnel depth over an ordered step list: depth d means the
-    * user's FIRST occurrences of steps 0..d-1 happen in strictly
-    * increasing time order (a purchase before the first click does not
-    * count as a completed click→purchase).
-    *
-    * ONE aggregation pass: min-timestamp-per-step via conditional
-    * aggregation (no per-step joins, no window), then a codegen'd chained
-    * comparison — one shuffle on the user key regardless of step count,
-    * the shape that holds at 100 TB of events.
-    *
-    * @return (userCol, funnel_depth) — depth in 0..steps.length
-    */
   /** Time-series resampling with forward fill: per key, a dense hourly
     * grid from the key's first to last observed hour, each grid hour
     * carrying the hour's event count (0 in gaps) and the most recent
@@ -195,6 +183,17 @@ object EventOps {
       sum(col("n")).over(w).as("n_window"))
   }
 
+  /** Distinct (user, epoch-day) frame — the shared first stage of every
+    * sliding-active-window derivation: ONE shuffle with map-side partials
+    * reduces the raw event stream to its per-user activity calendar.
+    */
+  private def distinctUserDays(events: DataFrame, userCol: String,
+      tsCol: String): DataFrame =
+    events.filter(col(tsCol).isNotNull)
+      .select(col(userCol).as("__u"),
+        datediff(date_trunc("day", col(tsCol)), to_date(lit("1970-01-01"))).as("__d"))
+      .distinct()
+
   /** Sliding `windowDays`-day distinct active users per day (the WAU/MAU
     * curve, exactly). Distinct-over-a-sliding-frame has no window-function
     * form, and per-day COUNT(DISTINCT) over a self-joined range is an
@@ -210,17 +209,6 @@ object EventOps {
     *
     * @return (day, n_active) for every day in the stream's [min, max] span
     */
-  /** Distinct (user, epoch-day) frame — the shared first stage of every
-    * sliding-active-window derivation: ONE shuffle with map-side partials
-    * reduces the raw event stream to its per-user activity calendar.
-    */
-  private def distinctUserDays(events: DataFrame, userCol: String,
-      tsCol: String): DataFrame =
-    events.filter(col(tsCol).isNotNull)
-      .select(col(userCol).as("__u"),
-        datediff(date_trunc("day", col(tsCol)), to_date(lit("1970-01-01"))).as("__d"))
-      .distinct()
-
   def slidingActiveUsers(events: DataFrame, userCol: String, tsCol: String,
       windowDays: Int = 7): DataFrame = {
     require(windowDays >= 1, s"windowDays must be >= 1, got $windowDays")
@@ -281,6 +269,18 @@ object EventOps {
         (col("n_short").cast("double") / col("n_long")).as("stickiness"))
   }
 
+  /** Per-user funnel depth over an ordered step list: depth d means the
+    * user's FIRST occurrences of steps 0..d-1 happen in strictly
+    * increasing time order (a purchase before the first click does not
+    * count as a completed click→purchase).
+    *
+    * ONE aggregation pass: min-timestamp-per-step via conditional
+    * aggregation (no per-step joins, no window), then a codegen'd chained
+    * comparison — one shuffle on the user key regardless of step count,
+    * the shape that holds at 100 TB of events.
+    *
+    * @return (userCol, funnel_depth) — depth in 0..steps.length
+    */
   def funnel(events: DataFrame, userCol: String, typeCol: String, tsCol: String,
       steps: Seq[String]): DataFrame = {
     require(steps.nonEmpty, "funnel needs at least one step")
@@ -384,25 +384,6 @@ object EventOps {
         (col("__cr").cast("double") / col("n_users")).as("ltv"))
   }
 
-  /** Inter-arrival time distribution: the gap in WHOLE SECONDS between a
-    * user's consecutive events, bucketed into fixed human-scale bands —
-    * the latency histogram behind bot detection (sub-second bursts),
-    * session-timeout calibration, and engagement profiling.
-    *
-    * Determinism: gaps are `unix_timestamp` floor-of-seconds differences
-    * (≡ any engine's second-boundary-crossing datediff), the ordering
-    * within a user breaks ts ties on the unique event id, and buckets are
-    * integer CASE bands — no floating point anywhere, so the whole result
-    * is bit-identical across engines.
-    *
-    * Scale shape: one hash-partitioned window per user (the same shuffle
-    * a sessionize needs — users are independent, the window parallelizes
-    * across them), then one small aggregate over at most six bucket rows
-    * with map-side partials. No global sort, no self-join.
-    *
-    * @return (bucket, n_gaps, n_users) — n_users = distinct users with a
-    *         gap in that band, deduped via a two-level aggregate
-    */
   /** Event-type co-occurrence lift within users: for each unordered pair
     * of event types, `lift = P(a,b) / (P(a)·P(b))` over the per-user
     * presence sets — the association-rules primitive ("users who do a
@@ -554,6 +535,25 @@ object EventOps {
       .agg((count(lit(1)) / 2).cast("long").as("n_events"), max(col("c")).cast("long").as("peak"))
   }
 
+  /** Inter-arrival time distribution: the gap in WHOLE SECONDS between a
+    * user's consecutive events, bucketed into fixed human-scale bands —
+    * the latency histogram behind bot detection (sub-second bursts),
+    * session-timeout calibration, and engagement profiling.
+    *
+    * Determinism: gaps are `unix_timestamp` floor-of-seconds differences
+    * (≡ any engine's second-boundary-crossing datediff), the ordering
+    * within a user breaks ts ties on the unique event id, and buckets are
+    * integer CASE bands — no floating point anywhere, so the whole result
+    * is bit-identical across engines.
+    *
+    * Scale shape: one hash-partitioned window per user (the same shuffle
+    * a sessionize needs — users are independent, the window parallelizes
+    * across them), then one small aggregate over at most six bucket rows
+    * with map-side partials. No global sort, no self-join.
+    *
+    * @return (bucket, n_gaps, n_users) — n_users = distinct users with a
+    *         gap in that band, deduped via a two-level aggregate
+    */
   def interArrivalBuckets(events: DataFrame, userCol: String, tsCol: String,
       idCol: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window

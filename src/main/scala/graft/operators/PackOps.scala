@@ -20,22 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object PackOps {
 
-  /** Assign every doc its (shard, seq_no, seq_offset) in the packed layout.
-    *
-    * Deterministic: order within a shard is (orderHash(id), id) — stable
-    * under repartitioning and re-runs, never arrival order. Docs with NULL
-    * text pack as zero-length (they occupy no budget but keep their slot,
-    * so ids never silently vanish from the layout).
-    *
-    * @param tokenBudget tokens per training sequence (e.g. 2048)
-    * @param shards      independent packing streams; at scale set to
-    *                    O(cluster parallelism) — each shard is one window
-    *                    partition
-    * @param orderHash   id→order-key hash (xxhash64 default;
-    *                    [[SampleOps.md5OrderHash]] for oracle-replayable
-    *                    layouts)
-    * @return (idCol, shard, seq_no, seq_offset, n_tokens)
-    */
   /** Shared layout pass: every doc with its `__oh` order key, `shard`,
     * token array `__toks` (tokenized exactly once, NULL text → NULL),
     * `n_tokens`, and cumulative starting offset `__off` in its shard's
@@ -55,6 +39,22 @@ object PackOps {
       .withColumn("__off", coalesce(sum(col("n_tokens").cast("long")).over(w), lit(0L)))
   }
 
+  /** Assign every doc its (shard, seq_no, seq_offset) in the packed layout.
+    *
+    * Deterministic: order within a shard is (orderHash(id), id) — stable
+    * under repartitioning and re-runs, never arrival order. Docs with NULL
+    * text pack as zero-length (they occupy no budget but keep their slot,
+    * so ids never silently vanish from the layout).
+    *
+    * @param tokenBudget tokens per training sequence (e.g. 2048)
+    * @param shards      independent packing streams; at scale set to
+    *                    O(cluster parallelism) — each shard is one window
+    *                    partition
+    * @param orderHash   id→order-key hash (xxhash64 default;
+    *                    [[SampleOps.md5OrderHash]] for oracle-replayable
+    *                    layouts)
+    * @return (idCol, shard, seq_no, seq_offset, n_tokens)
+    */
   def packSequences(docs: DataFrame, idCol: String, textCol: String,
       tokenBudget: Int, shards: Int = 256,
       orderHash: Column => Column = xxhash64(_)): DataFrame = {

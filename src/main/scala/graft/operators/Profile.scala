@@ -757,14 +757,6 @@ object Profile {
         col("n"))
   }
 
-  /** Equi-width histogram: `nBuckets` buckets spanning [min, max], each row
-    * counted into `least(nBuckets-1, floor((v-min)/(max-min)·nBuckets))`
-    * (the max value folds into the last bucket; a constant column lands
-    * entirely in bucket 0). One stats pass + one aggregation shuffle on the
-    * bucket id — the scan dominates at any scale. Bucket bounds are derived
-    * from (bucket, min, width) with the same fp expression the assignment
-    * used, so bounds and counts can never disagree.
-    */
   /** Numeric drift between two labeled slices as a binned two-sample
     * Kolmogorov–Smirnov curve: shared equal-width bins over the combined
     * domain, per-bin counts per slice, cumulative shares, and the per-bin
@@ -819,6 +811,14 @@ object Profile {
       .withColumn("ecdf_gap", abs(col("cum_share_a") - col("cum_share_b")))
   }
 
+  /** Equi-width histogram: `nBuckets` buckets spanning [min, max], each row
+    * counted into `least(nBuckets-1, floor((v-min)/(max-min)·nBuckets))`
+    * (the max value folds into the last bucket; a constant column lands
+    * entirely in bucket 0). One stats pass + one aggregation shuffle on the
+    * bucket id — the scan dominates at any scale. Bucket bounds are derived
+    * from (bucket, min, width) with the same fp expression the assignment
+    * used, so bounds and counts can never disagree.
+    */
   def histogram(df: DataFrame, valueCol: String, nBuckets: Int): DataFrame = {
     require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
     val v = col(s"`$valueCol`").cast("double")

@@ -118,8 +118,8 @@ object SampleOps {
     * indistinguishable to every id-derived sort key, so if the cap
     * boundary falls between two of them the pick depends on physical row
     * order — determinism holds only up to id uniqueness.
-    */
-  /** @param orderHash the id→order-key hash (xxhash64 default;
+    *
+    * @param orderHash the id→order-key hash (xxhash64 default;
     *        [[md5OrderHash]] for oracle-replayable caps)
     */
   def stratifiedCap(df: DataFrame, stratumCol: String, idCol: String,
@@ -132,28 +132,6 @@ object SampleOps {
       .drop("__rn")
   }
 
-  /** Resample to a target stratum mix (domain/language mixing weights):
-    * return the LARGEST without-replacement subsample whose stratum
-    * proportions are `targets` — total T = floor(min over strata of
-    * available/weight), per-stratum quota = floor(weight·T), rows picked
-    * in id-hash order (deterministic, see [[stratifiedCap]]'s id-
-    * uniqueness contract). Strata absent from `targets` are dropped; a
-    * target stratum with no rows forces T = 0 (a mix you cannot honor is
-    * an empty sample, not a silently skewed one). Weights are relative —
-    * quota proportions are w/Σw by construction, so no explicit
-    * normalization happens (and none should: dividing by a fp Σw would
-    * perturb every weight by an ulp and move floor boundaries).
-    *
-    * Scale shape: stratum counts are one tiny aggregate; T and the
-    * quotas live on the strata-count frame (rows = |targets|) and
-    * broadcast back onto the corpus; the pick is [[stratifiedCap]]'s
-    * one stratum-partitioned window. Nothing driver-side, nothing
-    * proportional to corpus size but the scan and the window shuffle.
-    *
-    * Quota arithmetic is replayable: available/weight and weight·T are
-    * single correctly-rounded double ops on integer counts and literal
-    * weights, so any engine computes identical quotas.
-    */
   /** Near-duplicate-closed train/test split: compute MinHash near-dup
     * connected components and hash the COMPONENT REPRESENTATIVE into the
     * split, so a document and all its near-duplicates land on the same
@@ -288,6 +266,28 @@ object SampleOps {
         col("__w").as(weightCol), col("cum_weight"))
   }
 
+  /** Resample to a target stratum mix (domain/language mixing weights):
+    * return the LARGEST without-replacement subsample whose stratum
+    * proportions are `targets` — total T = floor(min over strata of
+    * available/weight), per-stratum quota = floor(weight·T), rows picked
+    * in id-hash order (deterministic, see [[stratifiedCap]]'s id-
+    * uniqueness contract). Strata absent from `targets` are dropped; a
+    * target stratum with no rows forces T = 0 (a mix you cannot honor is
+    * an empty sample, not a silently skewed one). Weights are relative —
+    * quota proportions are w/Σw by construction, so no explicit
+    * normalization happens (and none should: dividing by a fp Σw would
+    * perturb every weight by an ulp and move floor boundaries).
+    *
+    * Scale shape: stratum counts are one tiny aggregate; T and the
+    * quotas live on the strata-count frame (rows = |targets|) and
+    * broadcast back onto the corpus; the pick is [[stratifiedCap]]'s
+    * one stratum-partitioned window. Nothing driver-side, nothing
+    * proportional to corpus size but the scan and the window shuffle.
+    *
+    * Quota arithmetic is replayable: available/weight and weight·T are
+    * single correctly-rounded double ops on integer counts and literal
+    * weights, so any engine computes identical quotas.
+    */
   def resampleToMix(df: DataFrame, stratumCol: String, idCol: String,
       targets: Seq[(String, Double)],
       orderHash: Column => Column = xxhash64(_)): DataFrame = {

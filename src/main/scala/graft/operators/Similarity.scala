@@ -240,21 +240,6 @@ object Similarity {
       .join(dropped, Seq(idCol), "left_anti")
   }
 
-  /** Embedding-space train/eval contamination: cosine near-duplicates
-    * ACROSS two corpora, never within one — the semantic sibling of
-    * [[Dedup.crossCorpusContamination]]'s MinHash text path ("is a
-    * paraphrase of my benchmark in my training set?", which token-level
-    * methods miss). Returns (train_id, eval_id, cos >= threshold).
-    *
-    * Same blocking discipline as [[cosineNearDupPairs]], with the
-    * sub-bucket rule driven by the COMBINED per-block population (both
-    * sides must split identically or cross-bucket pairs are lost): exact
-    * within blocks up to `maxBlockSize`, axis-sign-LSH subdivision above
-    * it (documented approximation). The join is train×eval only — shuffles
-    * on (block, sub), never an all-pairs product; both keyed frames
-    * persist across their two consumers (count derivation + join) and are
-    * released once the (tiny, threshold-filtered) pair set checkpoints.
-    */
   /** Embedding-space diversity sampling: cap the rows kept per
     * axis-sign-LSH cell (2^bits buckets over the embedding's leading
     * component signs), so over-represented regions of embedding space are
@@ -274,6 +259,21 @@ object Similarity {
     SampleOps.stratifiedCap(b, "bucket", "vec_id", perBucket, SampleOps.md5OrderHash)
   }
 
+  /** Embedding-space train/eval contamination: cosine near-duplicates
+    * ACROSS two corpora, never within one — the semantic sibling of
+    * [[Dedup.crossCorpusContamination]]'s MinHash text path ("is a
+    * paraphrase of my benchmark in my training set?", which token-level
+    * methods miss). Returns (train_id, eval_id, cos >= threshold).
+    *
+    * Same blocking discipline as [[cosineNearDupPairs]], with the
+    * sub-bucket rule driven by the COMBINED per-block population (both
+    * sides must split identically or cross-bucket pairs are lost): exact
+    * within blocks up to `maxBlockSize`, axis-sign-LSH subdivision above
+    * it (documented approximation). The join is train×eval only — shuffles
+    * on (block, sub), never an all-pairs product; both keyed frames
+    * persist across their two consumers (count derivation + join) and are
+    * released once the (tiny, threshold-filtered) pair set checkpoints.
+    */
   def crossCorpusSemanticContamination(train: DataFrame, eval: DataFrame,
       idCol: String, vecCol: String, blockCol: String, threshold: Double,
       maxBlockSize: Long = 1000000L): DataFrame = {

@@ -784,6 +784,9 @@ object StreamingOps {
       } finally spark.catalog.dropTempView(name)
     }
 
+  /** The shuffle-partition cap for a stream started by [[withStatePartitions]]. */
+  private val StatePartitions = 8
+
   /** Run `body` (which must START and FINISH its streaming queries inside)
     * with `spark.sql.shuffle.partitions` scoped DOWN to the streaming
     * state-partition count, restoring the caller's value in finally.
@@ -797,19 +800,19 @@ object StreamingOps {
     * core-count partitions just multiply per-batch file commits by
     * cores/8 for nothing (guide §2.2's many-tiny-blocks lesson applied to
     * checkpoint I/O — measured 107k -> 16k task-ms on the y09 entry at 32
-    * cores). A production deployment with real state volume raises
-    * `spark.graft.streaming.statePartitions` (or pre-sets a larger
-    * shuffle-partition conf at query start; the checkpoint then carries
-    * it). Scoped, never global: the conf is restored after the query
-    * stops, so batch-side plans in the same entry keep the session's
-    * sizing. Results are partition-count-independent (the batch twins
-    * and DuckDB oracles pin that every round).
+    * cores). The cap is [[StatePartitions]]; a session whose shuffle
+    * conf is already lower keeps its own value. A checkpoint carries the
+    * partition count it first started with, so a stream resumed from an
+    * older checkpoint keeps that count. Scoped, never global: the conf is
+    * restored after the query stops, so batch-side plans in the same
+    * entry keep the session's sizing. Results are
+    * partition-count-independent (the batch twins and DuckDB oracles pin
+    * that).
     */
   private def withStatePartitions[T](spark: SparkSession)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
-    val target = spark.conf.getOption("spark.graft.streaming.statePartitions")
-      .map(_.toInt).getOrElse(8)
-    GraftSession.withConf(spark, key, math.min(spark.conf.get(key).toInt, target).toString)(body)
+    GraftSession.withConf(spark, key,
+      math.min(spark.conf.get(key).toInt, StatePartitions).toString)(body)
   }
 
   /** Spark's RocksDB state-store provider (public class, Spark 3.2+) —

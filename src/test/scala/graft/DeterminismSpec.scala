@@ -41,7 +41,7 @@ class DeterminismSpec extends AnyFunSuite {
     val before = spark.conf.get("spark.sql.shuffle.partitions")
     def run(n: String): Map[String, Seq[Seq[Any]]] = {
       spark.conf.set("spark.sql.shuffle.partitions", n)
-      entries.map(e => e -> SparkEntry.queries(e)(spark, TestSpark.sfDir)
+      entries.map(e => e -> SparkEntry.named(e).build(spark, TestSpark.sfDir)
         .collect().map(_.toSeq).sortBy(_.toString).toSeq).toMap
     }
     try {

@@ -605,8 +605,9 @@ class PlanAuditSpec extends AnyFunSuite {
     "p26_functional_deps" -> (9, 0))
 
   test("budget table covers exactly the SparkEntry query set") {
-    assert(budgets.keySet == SparkEntry.queries.keySet,
-      s"missing=${SparkEntry.queries.keySet -- budgets.keySet} stale=${budgets.keySet -- SparkEntry.queries.keySet}")
+    val names = SparkEntry.entries.map(_.name).toSet
+    assert(budgets.keySet == names,
+      s"missing=${names -- budgets.keySet} stale=${budgets.keySet -- names}")
   }
 
   test("COVERAGE.md's entry count matches SparkEntry.queries (docs can't drift)") {
@@ -618,9 +619,9 @@ class PlanAuditSpec extends AnyFunSuite {
       java.nio.charset.StandardCharsets.UTF_8)
     val m = "ALL (\\d+) entries".r.findFirstMatchIn(doc)
     assert(m.isDefined, "COVERAGE.md lost its 'ALL <n> entries' header claim")
-    assert(m.get.group(1).toInt == SparkEntry.queries.size,
+    assert(m.get.group(1).toInt == SparkEntry.entries.size,
       s"COVERAGE.md claims ${m.get.group(1)} entries, " +
-        s"SparkEntry.queries has ${SparkEntry.queries.size}")
+        s"SparkEntry.entries has ${SparkEntry.entries.size}")
   }
 
   test("d05 internal: verify and candidate joins read their persisted frames, reuse OFF") {
@@ -695,7 +696,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("every query: cartesian-free, within shuffle budget, broadcasts kept (finalized AQE plan)") {
     val failures = scala.collection.mutable.ArrayBuffer[String]()
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    SparkEntry.entries.sortBy(_.name).foreach { case SparkEntry.Entry(name, fn, _) =>
       try {
         // shared with graft.tools.PlanAudit (which prints re-pin values):
         // executes through the dataset's OWN queryExecution so the audited

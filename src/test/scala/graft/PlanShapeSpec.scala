@@ -15,7 +15,7 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private val sf = TestSpark.sfDir
 
   private def executedPlanString(name: String): String = {
-    val df = SparkEntry.queries(name)(spark, sf)
+    val df = SparkEntry.named(name).build(spark, sf)
     df.collect() // finalize AQE
     df.queryExecution.executedPlan.toString
   }
@@ -114,7 +114,7 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("q29 flagship: no cartesian product, subqueries decorrelated") {
-    val df = SparkEntry.queries("q29_flagship")(spark, sf)
+    val df = SparkEntry.named("q29_flagship").build(spark, sf)
     val optimized = df.queryExecution.optimizedPlan
     val subqueries = optimized.expressions.flatMap(_.collect {
       case s: org.apache.spark.sql.catalyst.expressions.ScalarSubquery => s
@@ -126,7 +126,7 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("q11: aggregation is partial+final (map-side combine)") {
-    val df = SparkEntry.queries("q11_agg_group")(spark, sf)
+    val df = SparkEntry.named("q11_agg_group").build(spark, sf)
     df.collect()
     val aggs = collect(df.queryExecution.executedPlan) {
       case h: org.apache.spark.sql.execution.aggregate.HashAggregateExec => h
@@ -144,7 +144,7 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val byFlag = li.groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(sum(dec(col("l_quantity"))).cast("double").as("qty"), count(lit(1)).as("n"))
       .collect().map(r => (r.getString(0), r.getString(1)) -> ((r.getDouble(2), r.getLong(3)))).toMap
-    val piv = SparkEntry.queries("q39_pivot")(spark, sf).collect()
+    val piv = SparkEntry.named("q39_pivot").build(spark, sf).collect()
     assert(piv.length == byFlag.keySet.map(_._1).size && piv.nonEmpty)
     piv.foreach { r =>
       val f = r.getString(0)
@@ -156,7 +156,7 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .agg(sum(dec(col("l_quantity"))).cast("double").as("qty"),
         sum(dec(col("l_extendedprice"))).cast("double").as("price"))
       .collect().map(r => r.getString(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
-    val unp = SparkEntry.queries("q40_unpivot")(spark, sf).collect()
+    val unp = SparkEntry.named("q40_unpivot").build(spark, sf).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
     assert(unp.size == 2 * tot.size)
     tot.foreach { case (f, (q, p)) =>
@@ -165,7 +165,7 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("whole-stage codegen covers the scan-filter-project pipeline") {
-    val df = SparkEntry.queries("q02_filter_pushdown")(spark, sf)
+    val df = SparkEntry.named("q02_filter_pushdown").build(spark, sf)
     df.collect()
     assert(df.queryExecution.executedPlan.toString.contains("*("), "expected WholeStageCodegen span")
   }
@@ -181,7 +181,7 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("m02 frame sampling: no shuffle — explode stays in the scan stage") {
-    val df = SparkEntry.queries("m02_frame_sample")(spark, sf)
+    val df = SparkEntry.named("m02_frame_sample").build(spark, sf)
     df.collect()
     val exchanges = collect(df.queryExecution.executedPlan) {
       case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
@@ -212,7 +212,7 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // window consumers may regress into it
     for (name <- Seq("x11_budget_select", "s12_peak_concurrency",
         "s14_longest_streak", "p09_mad", "x12_temperature_mix", "p02_quantiles")) {
-      val df = SparkEntry.queries(name)(spark, sf)
+      val df = SparkEntry.named(name).build(spark, sf)
       df.collect()
       val unpartitioned = collect(df.queryExecution.executedPlan) {
         case w: org.apache.spark.sql.execution.window.WindowExec

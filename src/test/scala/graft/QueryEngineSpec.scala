@@ -305,7 +305,12 @@ class QueryEngineSpec extends AnyFunSuite {
       "SELECT o_orderkey, o_totalprice FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 5",
       // COUNT(*) prunes every column — the zero-column Project must render
       // as SELECT 1 (runnable), not "SELECT  FROM"
-      "SELECT COUNT(*) AS n FROM nation")
+      "SELECT COUNT(*) AS n FROM nation",
+      // a pruning Project over a filtered join as a join operand is its own
+      // inline view: the outer SELECT must qualify by the view's alias,
+      // pure projection and computed alike
+      "SELECT n.n_name, x.c_custkey FROM nation n JOIN (SELECT c.c_nationkey, c.c_custkey FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey WHERE o.o_orderkey IS NULL) x ON n.n_nationkey = x.c_nationkey",
+      "SELECT n.n_name, x.c_custkey, x.k2 FROM nation n JOIN (SELECT c.c_nationkey, c.c_custkey, c.c_custkey + 1 AS k2 FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey WHERE o.o_orderkey IS NULL) x ON n.n_nationkey = x.c_nationkey")
     queries.foreach { q =>
       val rep = QueryEngine.run(spark, s"EXPLAIN $q")
       val rewritten = rep.rewrittenSql.getOrElse(fail(s"no rewritten sql for: $q\n${rep.planTree}"))
@@ -452,6 +457,10 @@ class QueryEngineSpec extends AnyFunSuite {
           EXCEPT SELECT o_custkey FROM orders WHERE o_orderpriority LIKE '1%')""",
       // UNION ALL keeps duplicates
       "SELECT n_name FROM nation UNION ALL SELECT r_name FROM region",
+      // a branch's own ORDER BY … LIMIT … OFFSET stays inside its parentheses
+      "(SELECT n_name FROM nation ORDER BY n_name LIMIT 3 OFFSET 1) UNION ALL (SELECT r_name FROM region)",
+      // … and its sort keys stay unqualified when the union is a FROM view
+      "SELECT n_name, COUNT(*) AS c FROM ((SELECT n_name FROM nation ORDER BY n_name LIMIT 3) UNION ALL (SELECT r_name FROM region)) t GROUP BY n_name",
       // aggregate window function keeps its frame
       """SELECT o_orderkey, SUM(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderdate
            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run FROM orders WHERE o_custkey < 100""")

@@ -155,7 +155,7 @@ class StreamingSpec extends AnyFunSuite {
       StreamingOps.sessionCounts(stream).toDF(), "sess_counts", OutputMode.Update())
       .groupBy(col("user_id")).agg(max(col("n_sessions")).as("n_sessions"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val want = SparkEntry.queries("s03_events_sessionize")(spark, TestSpark.sfDir)
+    val want = SparkEntry.named("s03_events_sessionize").build(spark, TestSpark.sfDir)
       .groupBy(col("user_id")).agg(max(col("session_id")).as("n_sessions"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.nonEmpty && got == want)
