@@ -441,10 +441,30 @@ object Bench {
 
   private[graft] case class CboRow(est: java.math.BigInteger, actual: Long, band: String, ok: Boolean)
 
+  /** One table's part of the catalog harvest; no `analyze_ms` when the
+    * table already carried statistics.
+    */
+  @JsonInclude(NON_ABSENT)
+  private[graft] case class TableSetup(resolveMs: Dec, analyzeMs: Option[Dec])
+
+  /** Cold set-up: [[GraftSession.build]]'s wall, then the catalog harvest
+    * ([[GraftSession.ensureAnalyzedCatalog]]) measured by
+    * [[Telemetry.measure]] (−1 when it failed), with its job count and
+    * each table's resolve and ANALYZE time.
+    */
+  private[graft] case class SetupRecord(buildMs: Dec, catalogMs: Dec, jobs: Long,
+      tables: Map[String, TableSetup])
+
+  private[graft] def setupRecord(buildMs: Double, harvest: Measure,
+      tables: Seq[GraftSession.Harvested]): SetupRecord =
+    SetupRecord(dec(buildMs, 1), dec(if (harvest.ok) harvest.wallS * 1000 else -1.0, 1),
+      harvest.jobs, ordered(tables.map(h =>
+        h.table -> TableSetup(dec(h.resolveMs, 1), h.analyzeMs.map(dec(_, 1))))))
+
   /** bench_out.json: everything the run measured. */
   private[graft] case class BenchRecord(metric: String, value: Dec, unit: String,
       queries: Map[String, Dec], queryGcMs: Map[String, Long], queryTaskMs: Map[String, Long],
-      twins: Map[String, Dec], failures: Seq[String], env: Env,
+      twins: Map[String, Dec], failures: Seq[String], env: Env, setup: SetupRecord,
       baselineShapes: Map[String, ShapeRecord], sf1: Option[Sf1Record], sf10: Option[Sf10Record],
       cboAccuracy: Map[String, Map[String, CboRow]], sf: String)
 
@@ -505,6 +525,7 @@ object Bench {
     */
   private[graft] def record(sfDir: String, cpus: Int, sweep: Seq[(String, Measure)],
       twins: Seq[(String, Measure)], shapes: Seq[(ShapeRun, String, ShapeRun)], env: Env,
+      setup: SetupRecord,
       sf1: Option[Sf1Result], sf10: Option[Sf10Result],
       cbo: Seq[(String, Seq[(String, BigInt, Long, String, Boolean)])],
       failures: Seq[String]): BenchRecord = {
@@ -555,7 +576,7 @@ object Bench {
       ordered(sweep.map { case (n, m) => n -> m.gcMs }),
       ordered(sweep.map { case (n, m) => n -> m.taskMs }),
       ordered(twins.map { case (n, m) => n -> dec(wall(m), 3) }),
-      failures, env, ordered(baseline), sf1Rec, sf10Rec,
+      failures, env, setup, ordered(baseline), sf1Rec, sf10Rec,
       ordered(cbo.map { case (label, rows) =>
         label -> ordered(rows.map { case (op, est, actual, band, ok) =>
           op -> CboRow(est.bigInteger, actual, band, ok)
@@ -941,7 +962,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.envCpus(32)
+    val buildStart = System.nanoTime()
     val spark = GraftSession.build(cpus, "graft-bench")
+    val buildMs = (System.nanoTime() - buildStart) / 1e6
     // fail FAST if the suite-sized codegen cache didn't take (static conf,
     // first-session-wins — round-20 advisor find): a bench on the 100-entry
     // default publishes evicted-cold walls as steady-state, the condition
@@ -961,12 +984,19 @@ object Bench {
       System.err.println(s"[bench] WARNING: SPARK_GRAFT_SUBSET=$subsetEnv is set — " +
         "every documents/embeddings scan is thinned; these numbers are NOT full-SF results")
     denyAccumulatorNoise()
+    val failed = mutable.LinkedHashSet[String]()
+    // the cold catalog harvest, before anything else touches the dir
+    var harvested = Seq.empty[GraftSession.Harvested]
+    val harvest = measured(spark, "setup:catalog") {
+      harvested = GraftSession.ensureAnalyzedCatalog(spark, sfDir)
+    }
+    if (!harvest.ok) failed += "setup:catalog"
+    val setup = setupRecord(buildMs, harvest, harvested)
     // warm the JVM/codegen/file-listing paths so the first timed query
     // isn't charged session startup
     materialize(GraftSession.table(spark, sfDir, "lineitem")
       .groupBy("l_returnflag").count())
 
-    val failed = mutable.LinkedHashSet[String]()
     def run[T](label: String)(body: => Seq[T]): Seq[T] =
       section(label, failed)(body).getOrElse(Seq.empty)
     // the shapes run FIRST, in a controlled heap: after the sweep the
@@ -1006,7 +1036,7 @@ object Bench {
     val env = Env(Runtime.getRuntime.maxMemory / (1024 * 1024), results.map(_._2.gcMs).sum,
       Seq(dec(sweepLoadStart, 2), dec(sweepLoadEnd, 2)), heavyGaps, subsetEnv,
       Some("pre+post-sweep, per-shape best-evidenced"))
-    val full = record(sfDir, cpus, results, twinResults, shapeWinners, env,
+    val full = record(sfDir, cpus, results, twinResults, shapeWinners, env, setup,
       sf1Result, sf10Result, cboAccuracy, failed.toSeq)
     // the full record goes to a FILE only (SPARK_GRAFT_BENCH_OUT, default
     // bench_out.json); stdout gets its compact projection

@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.execution.datasources.parquet.graftbridge.ParquetSchemaBridge
 
 /** Session + catalog bootstrap (SURVEY.md §7 step 1).
   *
@@ -324,30 +325,38 @@ object GraftSession {
     s"graft_${leaf}_$hash"
   }
 
-  /** Guards table creation: two threads resolving one name must not both
-    * create it.
+  /** One guard per catalog table: two threads resolving one name must not
+    * both create it, and two harvests of one dir must not both ANALYZE it.
+    * A thread holds at most one table's guard, so guards cannot deadlock.
     */
-  private object createLock
+  private val tableGuards = new java.util.concurrent.ConcurrentHashMap[TableIdentifier, AnyRef]()
+  private def guard(id: TableIdentifier): AnyRef =
+    tableGuards.computeIfAbsent(id, _ => new Object)
 
   /** Catalog identifier of `dir`'s table `name`, created on first use.
     * Most tables are a LOCATION table over `dir/name.parquet`. A table
     * whose catalog copy must differ from its file is a CTAS into the
     * warehouse instead: `events`, whose `ts` is normalized by
-    * [[eventsTsToMicros]], and any table the subset spec thins.
+    * [[eventsTsToMicros]], and any table the subset spec thins. Either
+    * way the schema comes from the file's parquet footer, read on the
+    * driver (`ParquetSchemaBridge.footerSchema`), so creating a table runs
+    * no schema-inference job.
     */
   private def resolve(spark: SparkSession, dir: String, name: String): TableIdentifier = {
     val id = TableIdentifier(name, Some(dirDb(dir)))
     val cat = spark.sessionState.catalog
-    if (!cat.tableExists(id)) createLock.synchronized {
+    if (!cat.tableExists(id)) guard(id).synchronized {
       if (!cat.tableExists(id)) {
         createDb(spark, id.database.get)
         val src = s"${absDir(dir)}/$name.parquet"
+        val schema = ParquetSchemaBridge.footerSchema(spark, src).getOrElse(
+          throw new IllegalStateException(s"$src holds no parquet file"))
         val subset = subsetFilter(name)
         if (name == "events" || subset.isDefined) {
-          val raw = spark.read.parquet(src)
+          val raw = spark.read.schema(schema).parquet(src)
           val df = if (name == "events") eventsTsToMicros(raw) else raw
           subset.fold(df)(df.filter).write.saveAsTable(id.unquotedString)
-        } else spark.catalog.createTable(id.unquotedString, src, "parquet")
+        } else spark.catalog.createTable(id.unquotedString, "parquet", schema, Map("path" -> src))
       }
     }
     id
@@ -358,12 +367,13 @@ object GraftSession {
     * into the parquet scan (PushedFilters/ReadSchema).
     *
     * The table is served from `dir`'s catalog database ([[dirDb]]),
-    * created there on first use ([[resolve]]). Its schema comes from
+    * created there on first use ([[resolve]]) with the schema its parquet
+    * footer gives, read on the driver. Afterwards its schema comes from
     * catalog metadata and its file listing from the shared
     * FileStatusCache, where a bare `spark.read.parquet` paid a fresh
-    * listing and footer read on every call (~55 ms each at sf0.1, round
-    * 20). Until [[ensureAnalyzedCatalog]] has run on `dir` the table
-    * carries no statistics and plans as the bare read did; afterwards its
+    * listing and a footer-reading job on every call (~55 ms each at
+    * sf0.1, round 20). Until [[ensureAnalyzedCatalog]] has run on `dir`
+    * the table carries no statistics and plans as the bare read did; afterwards its
     * rowCount/NDV/histogram statistics reach DataFrame entries too.
     *
     * `events.ts` has shipped as two physical types across driver testdata
@@ -382,17 +392,25 @@ object GraftSession {
     * sf10 dirs hold only documents and events).
     */
   def useDir(spark: SparkSession, dir: String): Unit = {
+    val db = dirDb(dir)
+    presentTables(spark, dir).foreach(resolve(spark, dir, _))
+    createDb(spark, db)
+    spark.sessionState.catalog.setCurrentDatabase(db)
+  }
+
+  /** The [[tableNames]] whose file `dir` holds, or whose table `dir`'s
+    * database already has.
+    */
+  private def presentTables(spark: SparkSession, dir: String): Seq[String] = {
     val cat = spark.sessionState.catalog
     val db = dirDb(dir)
     val hconf = spark.sparkContext.hadoopConfiguration
-    tableNames.foreach { n =>
-      if (!cat.tableExists(TableIdentifier(n, Some(db)))) {
+    tableNames.filter { n =>
+      cat.tableExists(TableIdentifier(n, Some(db))) || {
         val p = new org.apache.hadoop.fs.Path(s"${absDir(dir)}/$n.parquet")
-        if (p.getFileSystem(hconf).exists(p)) resolve(spark, dir, n)
+        p.getFileSystem(hconf).exists(p)
       }
     }
-    createDb(spark, db)
-    cat.setCurrentDatabase(db)
   }
 
   private def createDb(spark: SparkSession, db: String): Unit =
@@ -519,25 +537,78 @@ object GraftSession {
     }
   }
 
-  /** Make `dir`'s database current ([[useDir]]) and harvest CBO statistics
-    * on each of its tables — the direct analog of the reference's startup
-    * stats harvest (`statistics_manager.cpp:9-142`: COUNT(*),
-    * COUNT(DISTINCT), MIN/MAX, histograms). Populates `rowCount`/
-    * `ColumnStat` so plan trees show real row estimates and
-    * CostBasedJoinReorder has numbers to work with; [[joinKeys]] take no
-    * histogram, and embeddings takes scalar-column stats only (the array
-    * column has none). A table is ANALYZEd once per database: one that
-    * already carries a rowCount is left as it is, so a repeat call is a
-    * no-op.
+  /** What [[ensureAnalyzedCatalog]] spent on one table: `resolveMs` to
+    * find or create it ([[resolve]]), `analyzeMs` to ANALYZE it, None when
+    * it already carried a rowCount.
     */
-  def ensureAnalyzedCatalog(spark: SparkSession, dir: String): Unit = {
-    useDir(spark, dir)
-    val cat = spark.sessionState.catalog
+  final case class Harvested(table: String, resolveMs: Double, analyzeMs: Option[Double])
+
+  /** Make `dir`'s database current and harvest CBO statistics on each of
+    * its tables — the direct analog of the reference's startup stats
+    * harvest (`statistics_manager.cpp:9-142`: COUNT(*), COUNT(DISTINCT),
+    * MIN/MAX, histograms). Populates `rowCount`/`ColumnStat` so plan trees
+    * show real row estimates and CostBasedJoinReorder has numbers to work
+    * with; [[joinKeys]] take no histogram, and embeddings takes
+    * scalar-column stats only (the array column has none).
+    *
+    * Each table present in `dir` is one task: resolve it, then ANALYZE it
+    * unless it already carries a rowCount. The tasks run concurrently on
+    * `min(tables, defaultParallelism)` threads ([[onPool]]), so one table's
+    * footer read, catalog write or one-task stats job overlaps the
+    * others'. A table is ANALYZEd once per database: its guard makes a
+    * concurrent harvest of the same dir wait and then skip it, and a
+    * repeat call is a no-op. The first failing table fails the call.
+    * Returns each table's timings, in [[tableNames]] order.
+    */
+  def ensureAnalyzedCatalog(spark: SparkSession, dir: String): Seq[Harvested] = {
     val db = dirDb(dir)
-    createLock.synchronized {
-      tableNames.map(n => TableIdentifier(n, Some(db)))
-        .filter(id => cat.tableExists(id) && cat.getTableMetadata(id).stats.forall(_.rowCount.isEmpty))
-        .foreach(analyze(spark, _))
+    createDb(spark, db)
+    val cat = spark.sessionState.catalog
+    val harvested = onPool(spark, presentTables(spark, dir)) { n =>
+      val t0 = System.nanoTime()
+      val id = resolve(spark, dir, n)
+      val t1 = System.nanoTime()
+      val analyzeMs = guard(id).synchronized {
+        Option.when(cat.getTableMetadata(id).stats.forall(_.rowCount.isEmpty)) {
+          val t = System.nanoTime()
+          analyze(spark, id)
+          (System.nanoTime() - t) / 1e6
+        }
+      }
+      Harvested(n, (t1 - t0) / 1e6, analyzeMs)
+    }
+    cat.setCurrentDatabase(db)
+    harvested
+  }
+
+  /** `f` over `xs` on `min(xs, defaultParallelism)` daemon threads, the
+    * results in `xs` order. The first task to fail fails the call: the
+    * tasks not yet started are cancelled, the running ones are awaited,
+    * and its exception is rethrown. The pool is shut down and its threads
+    * have ended before the call returns or throws.
+    */
+  private def onPool[A, B](spark: SparkSession, xs: Seq[A])(f: A => B): Seq[B] = {
+    import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
+    if (xs.isEmpty) return Seq.empty
+    val threads = new java.util.concurrent.atomic.AtomicInteger()
+    val size = math.min(xs.size, spark.sparkContext.defaultParallelism)
+    val pool = Executors.newFixedThreadPool(size, (r: Runnable) => {
+      val t = new Thread(r, s"graft-harvest-${threads.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    })
+    try {
+      val done = new ExecutorCompletionService[B](pool)
+      val futures = xs.map(x => done.submit(() => f(x)))
+      try xs.foreach(_ => done.take().get())
+      catch { case e: ExecutionException =>
+        futures.foreach(_.cancel(false))
+        throw e.getCause
+      }
+      futures.map(_.get())
+    } finally {
+      pool.shutdown()
+      while (!pool.awaitTermination(1, TimeUnit.MINUTES)) ()
     }
   }
 

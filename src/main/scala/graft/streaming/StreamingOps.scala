@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.graftbridge.ParquetSchemaBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -14,26 +15,24 @@ import graft.engine.GraftSession
 object StreamingOps {
 
   /** File-stream source over an events parquet directory. Schema must be
-    * explicit for file streams; it is taken from a batch footer read of the
-    * same directory (driver testdata generations have shipped `ts` as both
+    * explicit for file streams; it is read from the parquet footers of the
+    * same directory on the driver (`ParquetSchemaBridge.footerSchema`, no
+    * Spark job; driver testdata generations have shipped `ts` as both
     * TIMESTAMP(NANOS) and TIMESTAMP(MICROS) — see GraftSession.table), then
     * `ts` is normalized to a microsecond timestamp exactly as batch reads
     * are, so stream and batch schemas cannot drift apart.
     *
-    * An EMPTY directory is a normal state for a file-stream source (files
-    * arrive after the stream starts), so a failed footer read falls back to
-    * the generator's published micros schema instead of throwing at
-    * stream-definition time; `eventsTsToMicros` is a no-op on it.
+    * A directory that holds no data file yet is a normal state for a
+    * file-stream source (files arrive after the stream starts), so it gets
+    * the generator's published micros schema; `eventsTsToMicros` is a
+    * no-op on it. Any other read failure (a missing directory, a corrupt
+    * file) throws at stream-definition time.
     */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema =
-      try spark.read.parquet(dir).schema
-      catch {
-        case _: org.apache.spark.sql.AnalysisException =>
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
-              "event_type STRING, value DOUBLE, props STRING")
-      }
+    val schema = ParquetSchemaBridge.footerSchema(spark, dir).getOrElse(
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
+          "event_type STRING, value DOUBLE, props STRING"))
     // the file-stream source requires a DIRECTORY (its base path must be
     // listable for new-file discovery; a bare file is rejected even with
     // an explicit basePath option). The driver's testdata layout is one
@@ -103,12 +102,14 @@ object StreamingOps {
 
   /** Generic file-stream over any parquet table path (directory, or a
     * single file staged exactly like [[eventsStream]]); schema comes from
-    * a batch footer read. No column normalization — use [[eventsStream]]
-    * for the events table, whose `ts` physical type drifts across
-    * testdata generations.
+    * its footers (`ParquetSchemaBridge.footerSchema`), and a path with no
+    * parquet file to take it from fails. No column normalization — use
+    * [[eventsStream]] for the events table, whose `ts` physical type
+    * drifts across testdata generations.
     */
   def tableStream(spark: SparkSession, path: String): DataFrame = {
-    val schema = spark.read.parquet(path).schema
+    val schema = ParquetSchemaBridge.footerSchema(spark, path).getOrElse(
+      throw new IllegalArgumentException(s"$path holds no parquet file to take a schema from"))
     val f = new java.io.File(path)
     val streamPath = if (f.isFile) stagedDir(spark, f) else path
     spark.readStream.schema(schema).parquet(streamPath)

@@ -19,7 +19,9 @@ object Cli {
     // ≙ reference startup stats harvest (statistics_manager.cpp): CBO row
     // counts + column stats make the plan tree print real row estimates
     println("harvesting table statistics (ANALYZE) ...")
-    GraftSession.ensureAnalyzedCatalog(spark, sfDir)
+    val t0 = System.nanoTime()
+    val harvested = GraftSession.ensureAnalyzedCatalog(spark, sfDir)
+    println(f"harvested ${harvested.size} tables in ${(System.nanoTime() - t0) / 1e9}%.2f s")
     GraftSession.registerFunctions(spark)
     // ≙ cli.cpp:167-188: the startup table dump with row counts and
     // name-sorted columns + types, from the just-ANALYZEd catalog

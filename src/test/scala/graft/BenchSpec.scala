@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.Measure
+import graft.engine.{GraftSession, Measure}
 
 /** Pins for the sf1 bench verdict machinery (Bench.scala), the part of
   * the artifact a judge adjudicates without re-running anything. Round 15
@@ -184,6 +184,8 @@ class BenchSpec extends AnyFunSuite {
       shapes = shapes,
       env = Bench.Env(8192L, 5400L, Seq(1.5, 30.25).map(BigDecimal(_).bigDecimal),
         Seq("new_heavy_entry"), "", Some("pre+post-sweep, per-shape best-evidenced")),
+      setup = Bench.setupRecord(2345.6, Measure(wallS = 5.4, jobs = 41L),
+        GraftSession.tableNames.map(GraftSession.Harvested(_, 12.5, Some(480.25)))),
       sf1 = Some(Bench.Sf1Result("/data/sf1", 12.5, sf1,
         shapeNames.map(shapeRun(_, 1.0)), Seq("d43_distributed" -> 0.92))),
       sf10 = Some(Bench.Sf10Result("/data/sf10", 300.0, Seq(Bench.Sf10Run("d05_ngram_jaccard",
@@ -206,8 +208,9 @@ class BenchSpec extends AnyFunSuite {
     walk(new ObjectMapper().readTree(json), "").toSet
   }
 
-  private val dataKeys = (shapeNames ++ cboOps ++ Bench.sf1Heavy ++ Seq("q01_scan",
-    "x99_broken", "twin_d05_zipf_ppjoin", "d43_distributed", "in_band", "load_inflated")).toSet
+  private val dataKeys = (shapeNames ++ cboOps ++ Bench.sf1Heavy ++ GraftSession.tableNames ++
+    Seq("q01_scan", "x99_broken", "twin_d05_zipf_ppjoin", "d43_distributed", "in_band",
+      "load_inflated")).toSet
 
   private def shapeKeys(p: String) = Seq("optimized", "naive", "speedup").map(p + "." + _)
   private def shapeFieldKeys(p: String) = shapeKeys(p) ++ Seq(p + ".samples.[]", p + ".gc_ms.[]")
@@ -215,7 +218,9 @@ class BenchSpec extends AnyFunSuite {
   test("bench_out.json keeps the key paths of the string-built writer") {
     val expected = Seq("metric", "value", "unit", "queries.*", "query_gc_ms.*",
       "query_task_ms.*", "twins.*", "failures.[]", "env.heap_max_mb", "env.sweep_gc_ms",
-      "env.load_avg.[]", "env.heavy_coverage_gaps.[]", "env.subset", "env.shapes_measured") ++
+      "env.load_avg.[]", "env.heavy_coverage_gaps.[]", "env.subset", "env.shapes_measured",
+      "setup.build_ms", "setup.catalog_ms", "setup.jobs", "setup.tables.*.resolve_ms",
+      "setup.tables.*.analyze_ms") ++
       shapeFieldKeys("baseline_shapes.*") ++
       Seq("verdict.claim", "verdict.status", "verdict.reason", "position", "note")
         .map("baseline_shapes.*." + _) ++

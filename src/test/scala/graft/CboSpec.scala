@@ -1,5 +1,10 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.CatalogStatistics
+import org.apache.spark.sql.execution.datasources.parquet.graftbridge.ParquetSchemaBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.{GraftSession, QueryEngine}
@@ -9,6 +14,122 @@ import graft.engine.{GraftSession, QueryEngine}
   */
 class CboSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+
+  private def cat = spark.sessionState.catalog
+
+  /** A fresh temp data dir holding copies of `tables`' files from `from`. */
+  private def copyDir(from: String, tables: Seq[String]): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-cbo-dir")
+    tables.foreach(n => java.nio.file.Files.copy(
+      java.nio.file.Paths.get(s"$from/$n.parquet"), dir.resolve(s"$n.parquet")))
+    dir.toString
+  }
+
+  /** `body` with a fresh scratch database, dropped with its tables after. */
+  private def withScratchDb[T](body: String => T): T = {
+    val db = s"graft_cbospec_${java.util.UUID.randomUUID.toString.take(8)}"
+    spark.sql(s"CREATE DATABASE $db")
+    try body(db) finally spark.sql(s"DROP DATABASE $db CASCADE")
+  }
+
+  /** `dir`'s table `name` created by parquet schema inference (one Spark
+    * job) in `db`, as the catalog did before schemas came from footers.
+    */
+  private def inferredTable(db: String, dir: String, name: String) = {
+    val id = TableIdentifier(name, Some(db))
+    spark.catalog.createTable(id.unquotedString,
+      new java.io.File(s"$dir/$name.parquet").getAbsolutePath, "parquet")
+    cat.getTableMetadata(id)
+  }
+
+  private def locationTables = GraftSession.tableNames.filter(_ != "events")
+
+  test("a footer-schema catalog table equals the inferred one, on every table and a two-file dir") {
+    val twoFile = java.nio.file.Files.createTempDirectory("graft-cbo-two-file").toString
+    spark.read.parquet(s"${TestSpark.sfDir}/region.parquet").repartition(2)
+      .write.parquet(s"$twoFile/region.parquet")
+    assert(new java.io.File(s"$twoFile/region.parquet").listFiles
+      .count(_.getName.startsWith("part-")) == 2)
+    val dirs = Seq(TestSpark.sfDir -> locationTables, twoFile -> Seq("region")) ++
+      Option.when(TestSpark.hasOracleSf)(TestSpark.oracleSfDir -> locationTables)
+    withScratchDb { db =>
+      dirs.foreach { case (dir, tables) =>
+        tables.foreach { n =>
+          GraftSession.table(spark, dir, n)
+          val footer = cat.getTableMetadata(TableIdentifier(n, Some(GraftSession.dirDb(dir))))
+          val inferred = inferredTable(db, dir, n)
+          cat.dropTable(inferred.identifier, ignoreIfNotExists = false, purge = false)
+          // statistics are compared on their own below; ANALYZE may have run
+          assert(footer.copy(identifier = inferred.identifier, createTime = 0L, stats = None) ==
+            inferred.copy(createTime = 0L), s"$dir $n")
+        }
+      }
+      // the events CTAS reads its source under the footer schema
+      dirs.map(_._1).filter(_ != twoFile).foreach { dir =>
+        val src = s"$dir/events.parquet"
+        val footer = ParquetSchemaBridge.footerSchema(spark, src).get
+        assert(spark.read.schema(footer).parquet(src).schema == spark.read.parquet(src).schema)
+      }
+    }
+  }
+
+  test("harvested statistics equal a serial ANALYZE into a fresh database, histogram bins included") {
+    val harvested = GraftSession.ensureAnalyzedCatalog(spark, TestSpark.sfDir)
+    assert(harvested.map(_.table) == GraftSession.tableNames)
+    val db = GraftSession.dirDb(TestSpark.sfDir)
+    var bins = 0
+    withScratchDb { ref =>
+      GraftSession.tableNames.foreach { n =>
+        val got = cat.getTableMetadata(TableIdentifier(n, Some(db)))
+        val refId = TableIdentifier(n, Some(ref))
+        // events is a CTAS copy: the reference reads the same copy's files
+        spark.catalog.createTable(refId.unquotedString, got.location.toString, "parquet")
+        val gotStats = got.stats.getOrElse(fail(s"$n has no statistics"))
+        spark.sql(s"ANALYZE TABLE ${refId.unquotedString} COMPUTE STATISTICS FOR COLUMNS " +
+          gotStats.colStats.keys.map(c => s"`$c`").mkString(", "))
+        val keys = GraftSession.joinKeys(n).toSet
+        val want = cat.getTableMetadata(refId).stats.get
+        def render(s: CatalogStatistics, strip: Set[String]) =
+          (s.sizeInBytes, s.rowCount, s.colStats.toSeq.sortBy(_._1).map { case (c, st) =>
+            val h = if (strip(c)) None else st.histogram
+            (c, st.copy(histogram = None), h.map(h => (h.height, h.bins.toSeq)))
+          })
+        bins += gotStats.colStats.values.flatMap(_.histogram).map(_.bins.length).sum
+        assert(render(gotStats, Set.empty) == render(want, keys), n)
+      }
+    }
+    assert(bins > 0, "no histogram bin was compared")
+  }
+
+  test("two concurrent harvests of one dir ANALYZE each table once and finish") {
+    val dir = copyDir(TestSpark.sfDir, GraftSession.tableNames)
+    try {
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val calls = Seq.fill(2)(Future(GraftSession.ensureAnalyzedCatalog(spark, dir)))
+      val results = calls.map(Await.result(_, scala.concurrent.duration.Duration(10, "min")))
+      GraftSession.tableNames.foreach { n =>
+        val analyzed = results.flatten.filter(_.table == n).count(_.analyzeMs.isDefined)
+        assert(analyzed == 1, s"$n ANALYZEd $analyzed times")
+      }
+      assert(GraftSession.tableNames.forall(n => cat.getTableMetadata(
+        TableIdentifier(n, Some(GraftSession.dirDb(dir)))).stats.exists(_.rowCount.isDefined)))
+    } finally GraftSession.useDir(spark, TestSpark.sfDir)
+  }
+
+  test("an unreadable parquet file fails the harvest loudly and leaves no pool thread") {
+    val dir = copyDir(TestSpark.sfDir, GraftSession.tableNames.filter(_ != "part"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/part.parquet"),
+      "not a parquet file".getBytes("UTF-8"))
+    try {
+      val e = intercept[Exception](GraftSession.ensureAnalyzedCatalog(spark, dir))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("part.parquet")), e.toString)
+      val alive = Thread.getAllStackTraces.keySet.asScala
+        .filter(t => t.isAlive && t.getName.startsWith("graft-harvest"))
+      assert(alive.isEmpty, alive.map(_.getName).toString)
+    } finally GraftSession.useDir(spark, TestSpark.sfDir)
+  }
 
   test("analyzed catalog yields rowCount estimates in the plan tree") {
     GraftSession.ensureAnalyzedCatalog(spark, TestSpark.sfDir)

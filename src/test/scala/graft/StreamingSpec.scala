@@ -32,6 +32,28 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("an events stream over a dir with no data file yet takes the published schema") {
+    val empty = Files.createTempDirectory("graft-events-empty")
+    val schema = StreamingOps.eventsStream(spark, empty.toString).schema
+    assert(schema.map(f => f.name -> f.dataType.simpleString) == Seq("event_id" -> "bigint",
+      "ts" -> "timestamp", "user_id" -> "bigint", "event_type" -> "string",
+      "value" -> "double", "props" -> "string"))
+    // a stream over the real file serves the same columns and types
+    assert(StreamingOps.eventsStream(spark, streamDir).schema.map(f => f.name -> f.dataType) ==
+      schema.map(f => f.name -> f.dataType))
+  }
+
+  test("a stream over a dir holding a non-parquet file fails at definition") {
+    val dir = Files.createTempDirectory("graft-events-bad")
+    Files.write(dir.resolve("part-0.parquet"), "not a parquet file".getBytes("UTF-8"))
+    val e = intercept[Exception](StreamingOps.eventsStream(spark, dir.toString))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("part-0.parquet")), e.toString)
+    intercept[Exception](StreamingOps.tableStream(spark, dir.toString))
+    intercept[IllegalArgumentException](
+      StreamingOps.tableStream(spark, Files.createTempDirectory("graft-table-empty").toString))
+  }
+
   test("streaming dedup drops at-least-once duplicates within the watermark") {
     // duplicate the whole input: every event_id arrives twice
     val dir = Files.createTempDirectory("graft-events-dup")
